@@ -364,7 +364,7 @@ def test_stream_static_enrichment_matches_batch(spark, events_dir):
 
 
 def test_stream_ivm_state_equals_batch_recompute(spark, tmp_path):
-    """write_stream_ivm folded across MULTIPLE micro-batches must equal
+    """The IVM fold drained across MULTIPLE micro-batches must equal
     the one-shot batch aggregate exactly (integer cents), and a rerun
     with the same checkpoint must be a no-op (exactly-once fold)."""
     from pyspark.sql import functions as F
@@ -380,7 +380,9 @@ def test_stream_ivm_state_equals_batch_recompute(spark, tmp_path):
     # genuinely separate foreachBatch folds
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_ivm(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.IVM
+    )
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in SK.read_ivm_state(spark, state).collect()
@@ -401,7 +403,9 @@ def test_stream_ivm_state_equals_batch_recompute(spark, tmp_path):
     assert got == expect
 
     # restart with the same checkpoint: no re-fold, state unchanged
-    SK.write_stream_ivm(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.IVM
+    )
     got2 = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in SK.read_ivm_state(spark, state).collect()
@@ -430,10 +434,10 @@ def test_stream_ivm_replayed_batch_is_not_double_counted(spark, tmp_path):
     first = ev.where(F.col("event_id") % 2 == 0)
     second = ev.where(F.col("event_id") % 2 == 1)
 
-    SK._ivm_fold(first, 0, state)
-    SK._ivm_fold(first, 0, state)  # REPLAY of epoch 0 — must be a no-op
-    SK._ivm_fold(second, 1, state)
-    SK._ivm_fold(second, 1, state)  # REPLAY of epoch 1 — must be a no-op
+    SK.fold_batch(first, 0, state, SK.IVM)
+    SK.fold_batch(first, 0, state, SK.IVM)  # REPLAY of epoch 0 — must be a no-op
+    SK.fold_batch(second, 1, state, SK.IVM)
+    SK.fold_batch(second, 1, state, SK.IVM)  # REPLAY of epoch 1 — must be a no-op
 
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
@@ -463,7 +467,7 @@ def test_stream_ivm_replayed_batch_is_not_double_counted(spark, tmp_path):
 
 
 def test_stream_ivm_fold_via_public_drain_uses_fence(spark, tmp_path):
-    """End-to-end drain through write_stream_ivm with the NEW versioned
+    """End-to-end drain through write_stream_fold (IVM) with the versioned
     layout: multi-batch fold equals batch recompute and the pointer
     records the last batch_id (exactly-once bookkeeping is visible)."""
     import os
@@ -475,8 +479,10 @@ def test_stream_ivm_fold_via_public_drain_uses_fence(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     ev = batch_events(spark)
     ev.repartition(3).write.mode("overwrite").parquet(src)
-    SK.write_stream_ivm(stream_events(spark, src, max_files=1), state, ckpt)
-    ptr = SK._read_ivm_pointer(state)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.IVM
+    )
+    ptr = SK._read_pointer(state)
     assert ptr is not None and ptr["batch_id"] >= 1  # multiple epochs folded
     assert SK.read_ivm_state(spark, state).count() == (
         ev.select("user_id").distinct().count()
@@ -501,7 +507,7 @@ def test_stream_ivm_crash_between_state_write_and_pointer_commit(spark, tmp_path
     first = ev.where(F.col("event_id") % 2 == 0)
     second = ev.where(F.col("event_id") % 2 == 1)
 
-    SK._ivm_fold(first, 0, state)
+    SK.fold_batch(first, 0, state, SK.IVM)
     before = {tuple(r) for r in SK.read_ivm_state(spark, state).collect()}
 
     # simulate the dying fold: write v1's parquet WITHOUT committing CURRENT
@@ -512,11 +518,11 @@ def test_stream_ivm_crash_between_state_write_and_pointer_commit(spark, tmp_path
     delta.write.mode("overwrite").parquet(os.path.join(state, "v1"))
     # reader still sees the committed v0 state, untouched
     assert {tuple(r) for r in SK.read_ivm_state(spark, state).collect()} == before
-    assert SK._read_ivm_pointer(state)["batch_id"] == 0
+    assert SK._read_pointer(state)["batch_id"] == 0
 
     # restart re-delivers batch 1; the fence allows it (0 < 1) and the
     # fold overwrites the orphan dir and commits
-    SK._ivm_fold(second, 1, state)
+    SK.fold_batch(second, 1, state, SK.IVM)
     got = {
         r["user_id"]: (r["n_events"], r["total_value"])
         for r in SK.read_ivm_state(spark, state).collect()
@@ -533,7 +539,7 @@ def test_stream_ivm_crash_between_state_write_and_pointer_commit(spark, tmp_path
         .collect()
     }
     assert got == expect
-    assert SK._read_ivm_pointer(state)["batch_id"] == 1
+    assert SK._read_pointer(state)["batch_id"] == 1
 
 
 def test_rowdir_stream_writer_exactly_once(spark, tmp_path):
@@ -635,7 +641,8 @@ def test_ivm_fold_null_user_key_merges_not_duplicates(spark, tmp_path):
     from datetime import datetime
 
     from tp1_distribuidos_mapreduce_spark.streaming.sinks import (
-        _ivm_fold,
+        IVM,
+        fold_batch,
         read_ivm_state,
     )
 
@@ -647,9 +654,9 @@ def test_ivm_fold_null_user_key_merges_not_duplicates(spark, tmp_path):
             "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
         )
 
-    _ivm_fold(batch(1, None, 10.0), 0, state)
-    _ivm_fold(batch(2, None, 2.5), 1, state)
-    _ivm_fold(batch(3, 7, 1.0), 2, state)
+    fold_batch(batch(1, None, 10.0), 0, state, IVM)
+    fold_batch(batch(2, None, 2.5), 1, state, IVM)
+    fold_batch(batch(3, 7, 1.0), 2, state, IVM)
 
     rows = read_ivm_state(spark, state).collect()
     nulls = [r for r in rows if r["user_id"] is None]
@@ -708,7 +715,7 @@ def test_rowdir_stream_complete_mode_overwrites_per_batch(spark, tmp_path):
 
 
 def test_stream_hll_sketches_equal_batch_build_exactly(spark, tmp_path):
-    """write_stream_hll_sketches folded across multiple micro-batches
+    """The HLL fold drained across multiple micro-batches
     must produce rolling estimates IDENTICAL to the one-shot batch
     rolling_hll_active_users (register max-merge is associative,
     commutative, idempotent — micro-batch boundaries cannot change a
@@ -723,7 +730,9 @@ def test_stream_hll_sketches_equal_batch_build_exactly(spark, tmp_path):
     ev = batch_events(spark)
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_hll_sketches(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.HLL
+    )
     got = {
         str(r["window_end"]): r["approx_users"]
         for r in SK.read_hll_rolling(spark, state).collect()
@@ -734,7 +743,9 @@ def test_stream_hll_sketches_equal_batch_build_exactly(spark, tmp_path):
     }
     assert got == want
 
-    SK.write_stream_hll_sketches(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.HLL
+    )
     got2 = {
         str(r["window_end"]): r["approx_users"]
         for r in SK.read_hll_rolling(spark, state).collect()
@@ -751,13 +762,13 @@ def test_stream_hll_replayed_batch_fenced_and_harmless(spark, tmp_path):
     state = str(tmp_path / "hll_state2")
     ev = batch_events(spark).where(F.col("event_id") < 40)
 
-    SK._hll_fold(ev, 0, state)
+    SK.fold_batch(ev, 0, state, SK.HLL)
     after_first = sorted(
         (str(r["day"]), tuple(r["regs"]))
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
-    SK._hll_fold(ev, 0, state)  # replayed epoch — fenced no-op
-    ptr = SK._read_ivm_pointer(state)
+    SK.fold_batch(ev, 0, state, SK.HLL)  # replayed epoch — fenced no-op
+    ptr = SK._read_pointer(state)
     assert ptr == {"dir": "v0", "batch_id": 0}
     after_replay = sorted(
         (str(r["day"]), tuple(r["regs"]))
@@ -767,7 +778,7 @@ def test_stream_hll_replayed_batch_fenced_and_harmless(spark, tmp_path):
 
 
 def test_stream_kmv_sketches_equal_batch_build_exactly(spark, tmp_path):
-    """write_stream_kmv_sketches folded across micro-batches must yield
+    """The KMV fold drained across micro-batches must yield
     overlap estimates IDENTICAL to the one-shot batch
     kmv_event_user_overlap (bottom-K union-truncate is associative,
     commutative, idempotent), and a same-checkpoint rerun is a no-op."""
@@ -781,12 +792,16 @@ def test_stream_kmv_sketches_equal_batch_build_exactly(spark, tmp_path):
     ev = batch_events(spark)
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_kmv_sketches(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.KMV
+    )
     got = sorted(tuple(r) for r in SK.read_kmv_overlap(spark, state).collect())
     want = sorted(tuple(r) for r in AX.kmv_event_user_overlap(ev).collect())
     assert got == want
 
-    SK.write_stream_kmv_sketches(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.KMV
+    )
     got2 = sorted(tuple(r) for r in SK.read_kmv_overlap(spark, state).collect())
     assert got2 == want
 
@@ -799,13 +814,13 @@ def test_stream_kmv_replayed_batch_fenced_and_harmless(spark, tmp_path):
     state = str(tmp_path / "kmv_state2")
     ev = batch_events(spark).where(F.col("event_id") < 40)
 
-    SK._kmv_fold(ev, 0, state)
+    SK.fold_batch(ev, 0, state, SK.KMV)
     first = sorted(
         (r["event_type"], tuple(r["sk"]))
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
-    SK._kmv_fold(ev, 0, state)
-    assert SK._read_ivm_pointer(state) == {"dir": "v0", "batch_id": 0}
+    SK.fold_batch(ev, 0, state, SK.KMV)
+    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["event_type"], tuple(r["sk"]))
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -814,7 +829,7 @@ def test_stream_kmv_replayed_batch_fenced_and_harmless(spark, tmp_path):
 
 
 def test_stream_dd_buckets_equal_batch_build_exactly(spark, tmp_path):
-    """write_stream_dd_buckets folded across micro-batches must yield
+    """The DD fold drained across micro-batches must yield
     quantiles IDENTICAL to the one-shot batch ddsketch_event_quantiles
     (bucket-count addition over a partition of the events is exact),
     and a same-checkpoint rerun is a no-op — the checkpoint, not the
@@ -829,12 +844,16 @@ def test_stream_dd_buckets_equal_batch_build_exactly(spark, tmp_path):
     ev = batch_events(spark)
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_dd_buckets(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.DD
+    )
     got = sorted(tuple(r) for r in SK.read_dd_quantiles(spark, state).collect())
     want = sorted(tuple(r) for r in AX.ddsketch_event_quantiles(ev).collect())
     assert got == want and len(got) == len(AX.DD_PERCENTS)
 
-    SK.write_stream_dd_buckets(stream_events(spark, src, max_files=1), state, ckpt)
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.DD
+    )
     got2 = sorted(tuple(r) for r in SK.read_dd_quantiles(spark, state).collect())
     assert got2 == want
 
@@ -850,12 +869,12 @@ def test_stream_dd_replayed_batch_fenced(spark, tmp_path):
     state = str(tmp_path / "dd_state2")
     ev = batch_events(spark).where(F.col("event_id") < 40)
 
-    SK._dd_fold(ev, 0, state)
+    SK.fold_batch(ev, 0, state, SK.DD)
     first = sorted(
         (r["idx"], r["cnt"]) for r in spark.read.parquet(f"{state}/v0").collect()
     )
-    SK._dd_fold(ev, 0, state)  # replay: fenced, NOT re-added
-    assert SK._read_ivm_pointer(state) == {"dir": "v0", "batch_id": 0}
+    SK.fold_batch(ev, 0, state, SK.DD)  # replay: fenced, NOT re-added
+    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["idx"], r["cnt"]) for r in spark.read.parquet(f"{state}/v0").collect()
     )
@@ -863,7 +882,7 @@ def test_stream_dd_replayed_batch_fenced(spark, tmp_path):
 
     # a new batch_id with the SAME rows must fold (counts double) —
     # proving the fence keys on the epoch, not the data
-    SK._dd_fold(ev, 1, state)
+    SK.fold_batch(ev, 1, state, SK.DD)
     doubled = sorted(
         (r["idx"], r["cnt"]) for r in spark.read.parquet(f"{state}/v1").collect()
     )
@@ -887,8 +906,8 @@ def test_stream_dd_by_type_equal_batch_build_exactly(spark, tmp_path):
     ev = batch_events(spark)
     ev.repartition(4).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_dd_buckets_by_type(
-        stream_events(spark, src, max_files=1), state, ckpt
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.DD_BY_TYPE
     )
     got = sorted(
         tuple(r) for r in SK.read_dd_quantiles_by_type(spark, state).collect()
@@ -896,8 +915,8 @@ def test_stream_dd_by_type_equal_batch_build_exactly(spark, tmp_path):
     want = sorted(tuple(r) for r in AX.ddsketch_quantiles_by_type(ev).collect())
     assert got == want and got
 
-    SK.write_stream_dd_buckets_by_type(
-        stream_events(spark, src, max_files=1), state, ckpt
+    SK.write_stream_fold(
+        stream_events(spark, src, max_files=1), state, ckpt, SK.DD_BY_TYPE
     )
     got2 = sorted(
         tuple(r) for r in SK.read_dd_quantiles_by_type(spark, state).collect()
@@ -907,19 +926,19 @@ def test_stream_dd_by_type_equal_batch_build_exactly(spark, tmp_path):
     # composite-key replay fence on the raw fold
     state2 = str(tmp_path / "ddt_state2")
     small = batch_events(spark).where(F.col("event_id") < 40)
-    SK._dd_fold_by_type(small, 0, state2)
+    SK.fold_batch(small, 0, state2, SK.DD_BY_TYPE)
     first = sorted(
         (r["event_type"], r["idx"], r["cnt"])
         for r in spark.read.parquet(f"{state2}/v0").collect()
     )
-    SK._dd_fold_by_type(small, 0, state2)  # replay: fenced, NOT re-added
-    assert SK._read_ivm_pointer(state2) == {"dir": "v0", "batch_id": 0}
+    SK.fold_batch(small, 0, state2, SK.DD_BY_TYPE)  # replay: fenced, NOT re-added
+    assert SK._read_pointer(state2) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["event_type"], r["idx"], r["cnt"])
         for r in spark.read.parquet(f"{state2}/v0").collect()
     )
     assert again == first
-    SK._dd_fold_by_type(small, 1, state2)
+    SK.fold_batch(small, 1, state2, SK.DD_BY_TYPE)
     doubled = sorted(
         (r["event_type"], r["idx"], r["cnt"])
         for r in spark.read.parquet(f"{state2}/v1").collect()
@@ -928,7 +947,7 @@ def test_stream_dd_by_type_equal_batch_build_exactly(spark, tmp_path):
 
 
 def test_stream_cms_cells_equal_batch_build_exactly(spark, tmp_path):
-    """write_stream_cms_cells folded across micro-batches must yield
+    """The CMS fold drained across micro-batches must yield
     heavy hitters IDENTICAL to the one-shot batch cms_heavy_hitters
     (cell-count addition over a partition of the documents is exact,
     and the read path probes the persisted grid through the batch
@@ -936,9 +955,7 @@ def test_stream_cms_cells_equal_batch_build_exactly(spark, tmp_path):
     checkpoint, not the fold algebra, carries that (addition is NOT
     idempotent)."""
     from tp1_distribuidos_mapreduce_spark.plans import approx as AX
-    from tp1_distribuidos_mapreduce_spark.sources.tables import (
-        stream_documents,
-    )
+    from tp1_distribuidos_mapreduce_spark.sources.tables import stream_parquet
     from tp1_distribuidos_mapreduce_spark.streaming import sinks as SK
 
     src = str(tmp_path / "cms_src")
@@ -950,15 +967,15 @@ def test_stream_cms_cells_equal_batch_build_exactly(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents")
     docs.repartition(2).write.mode("overwrite").parquet(src)
 
-    SK.write_stream_cms_cells(
-        stream_documents(spark, src, max_files_per_trigger=1), state, ckpt
+    SK.write_stream_fold(
+        stream_parquet(spark, src, max_files_per_trigger=1), state, ckpt, SK.CMS
     )
     got = norm(SK.read_cms_heavy_hitters(spark, state, docs).collect())
     want = norm(AX.cms_heavy_hitters(docs).collect())
     assert got == want and got  # non-vacuous: the fixture has heavy words
 
-    SK.write_stream_cms_cells(
-        stream_documents(spark, src, max_files_per_trigger=1), state, ckpt
+    SK.write_stream_fold(
+        stream_parquet(spark, src, max_files_per_trigger=1), state, ckpt, SK.CMS
     )
     assert norm(SK.read_cms_heavy_hitters(spark, state, docs).collect()) == want
 
@@ -975,13 +992,13 @@ def test_stream_cms_replayed_batch_fenced(spark, tmp_path):
     state = str(tmp_path / "cms_state2")
     docs = load_table(spark, SF_SMOKE, "documents").limit(40)
 
-    SK._cms_fold(docs, 0, state)
+    SK.fold_batch(docs, 0, state, SK.CMS)
     first = sorted(
         (r["d"], r["pos"], r["n"])
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
-    SK._cms_fold(docs, 0, state)  # replay: fenced, NOT re-added
-    assert SK._read_ivm_pointer(state) == {"dir": "v0", "batch_id": 0}
+    SK.fold_batch(docs, 0, state, SK.CMS)  # replay: fenced, NOT re-added
+    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["d"], r["pos"], r["n"])
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -990,7 +1007,7 @@ def test_stream_cms_replayed_batch_fenced(spark, tmp_path):
 
     # a new batch_id with the SAME rows must fold (counts double) —
     # proving the fence keys on the epoch, not the data
-    SK._cms_fold(docs, 1, state)
+    SK.fold_batch(docs, 1, state, SK.CMS)
     doubled = sorted(
         (r["d"], r["pos"], r["n"])
         for r in spark.read.parquet(f"{state}/v1").collect()
@@ -999,7 +1016,7 @@ def test_stream_cms_replayed_batch_fenced(spark, tmp_path):
 
 
 def test_stream_bloom_words_equal_batch_join_exactly(spark, tmp_path):
-    """write_stream_bloom_words folded across micro-batches must yield a
+    """The Bloom fold drained across micro-batches must yield a
     pruned-join result IDENTICAL to the one-shot batch bloom_pruned_join
     (bit OR over a partition of the key set builds the same filter, and
     the read path probes the persisted words through the batch query's
@@ -1020,13 +1037,13 @@ def test_stream_bloom_words_equal_batch_join_exactly(spark, tmp_path):
     orders.repartition(2).write.mode("overwrite").parquet(src)
 
     def drain():
-        SK.write_stream_bloom_words(
+        SK.write_stream_fold(
             stream_parquet(spark, src, max_files_per_trigger=1)
             .where(F.col("o_orderpriority") == "1-URGENT")
             .select("o_orderkey"),
-            "o_orderkey",
             state,
             ckpt,
+            SK.bloom("o_orderkey"),
         )
 
     drain()
@@ -1058,15 +1075,15 @@ def test_stream_bloom_refold_idempotent_past_fence(spark, tmp_path):
         .limit(200)
     )
 
-    SK._bloom_fold(keys, "o_orderkey", 0, state)
+    SK.fold_batch(keys, 0, state, SK.bloom("o_orderkey"))
     first = sorted(
         (r["word"], r["bits"])
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
     assert first  # non-vacuous
 
-    SK._bloom_fold(keys, "o_orderkey", 0, state)  # replay: fenced no-op
-    assert SK._read_ivm_pointer(state) == {"dir": "v0", "batch_id": 0}
+    SK.fold_batch(keys, 0, state, SK.bloom("o_orderkey"))  # replay: fenced no-op
+    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
     assert sorted(
         (r["word"], r["bits"])
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -1074,8 +1091,57 @@ def test_stream_bloom_refold_idempotent_past_fence(spark, tmp_path):
 
     # new epoch, SAME keys, past the fence: OR idempotence keeps every
     # word bit-identical (the CMS twin DOUBLES here — additive contrast)
-    SK._bloom_fold(keys, "o_orderkey", 1, state)
+    SK.fold_batch(keys, 1, state, SK.bloom("o_orderkey"))
     assert sorted(
         (r["word"], r["bits"])
         for r in spark.read.parquet(f"{state}/v1").collect()
     ) == first
+
+
+@pytest.mark.parametrize(
+    "family,null_col",
+    [("DD_BY_TYPE", "event_type"), ("KMV", "event_type"), ("HLL", "ts")],
+)
+def test_null_group_key_across_batches_folds_like_one_shot(
+    spark, tmp_path, family, null_col
+):
+    """A NULL group key present in two micro-batches must fold into the
+    same state as the one-shot kernel over both batches: ONE NULL-key row
+    (SQL GROUP BY's NULL group), not one per batch. HLL's key is the day
+    of ``ts``, so a NULL ts is its NULL key."""
+    from tp1_distribuidos_mapreduce_spark.streaming import sinks as SK
+
+    fold = getattr(SK, family)
+    state = str(tmp_path / "state")
+    ev = batch_events(spark).where(F.col("event_id") < 40)
+    # the NULL-key rows share one value, so DD's (event_type, idx) key
+    # collides across the two batches too
+    is_null_key = F.col("event_id") % 3 == 0
+    ev = ev.withColumns(
+        {
+            null_col: F.when(is_null_key, F.lit(None)).otherwise(F.col(null_col)),
+            "value": F.when(is_null_key, F.lit(1.0)).otherwise(F.col("value")),
+        }
+    )
+    SK.fold_batch(ev.where(F.col("event_id") % 2 == 0), 0, state, fold)
+    SK.fold_batch(ev.where(F.col("event_id") % 2 == 1), 1, state, fold)
+
+    def rows(df):
+        return sorted(
+            (tuple(tuple(v) if isinstance(v, list) else v for v in r)
+             for r in df.collect()),
+            key=repr,
+        )
+
+    assert rows(SK.read_state(spark, state)) == rows(fold.delta(ev))
+
+
+def test_stream_query_result_survives_a_second_call(spark):
+    """The streaming fold queries return frames that are lazy over their
+    state dir, so a second call must not delete the first call's state."""
+    from tp1_distribuidos_mapreduce_spark.registry import queries
+
+    q = queries()["stream_ivm_user_totals"]
+    first = q(spark, SF_SMOKE)
+    second = q(spark, SF_SMOKE)
+    assert first.count() == second.count() > 0

@@ -167,7 +167,7 @@ def _cms_cell_counts(
     aggregate, shuffle bounded at depth × width rows per upstream
     partition regardless of key cardinality. Shared by the batch
     prune (_cms_pruned_exact_counts) and the streaming fold's per-batch
-    delta (streaming/sinks.py _cms_fold), so the two builds cannot
+    delta (streaming/sinks.py CMS fold), so the two builds cannot
     desynchronize; the hash layout itself lives in _cms_cell_structs."""
     keys = [F.col(c) for c in key_cols]
     return (
@@ -467,7 +467,7 @@ def daily_hll_sketches(events: DataFrame) -> DataFrame:
     a single Arrow-batched pass over (day, user) rows — partial
     registers per (day, partition), per-day register-max reduce. This
     is the piece a streaming ingest folds incrementally
-    (streaming/sinks.py write_stream_hll_sketches): register max-merge
+    (streaming/sinks.py HLL fold): register max-merge
     is associative, commutative, and IDEMPOTENT, so daily sketches
     built from any partitioning of the stream — including replayed
     micro-batches — are bit-identical to the one-shot build."""
@@ -778,7 +778,7 @@ def kmv_type_sketches(events: DataFrame) -> DataFrame:
     type. Like the HLL daily build, bottom-K union-then-truncate is
     associative, commutative, and IDEMPOTENT, so sketches built from
     any partitioning of the stream — including replayed micro-batches
-    (streaming/sinks.py write_stream_kmv_sketches) — are bit-identical
+    (streaming/sinks.py KMV fold) — are bit-identical
     to the one-shot build."""
     hashed = events.select(
         "event_type", _kmv_hash(F.col("user_id")).alias("h")
@@ -891,7 +891,7 @@ def kmv_merge_proof(events: DataFrame) -> DataFrame:
 # over a 1-cent..10^7-cent domain) — the property rank sketches (GK /
 # percentile_approx) do not give. Bucket counts are ADDITIVE, so the
 # map-side partial aggregate IS the merge, and a streaming fold is a
-# per-bucket count sum (streaming/sinks.py write_stream_dd_buckets; that
+# per-bucket count sum (streaming/sinks.py DD fold; that
 # fold is NOT idempotent, so the batch-id fence there is load-bearing,
 # unlike the HLL/KMV max-merge folds).
 # --------------------------------------------------------------------------

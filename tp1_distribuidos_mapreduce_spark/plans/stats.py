@@ -39,6 +39,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import default_parallelism
+
 # Anchor for the day index: inside the fixture's date range so the
 # centered x values (and thus Σx² and the slope denominator) stay far
 # from BIGINT limits even at a 100 TB row count. Any fixed date works —
@@ -1377,7 +1379,9 @@ def theil_sen_revenue_trend(orders: DataFrame) -> DataFrame:
         # calendar-bounded rows, once, at build. Selection is
         # partitioning-invariant (the k-th element of the sorted
         # multiset — see _selected_lower_median), verified hash-
-        # identical vs the oracle.
+        # identical vs the oracle. Adjacent A/B against the same plan
+        # without it, sf0.1 on 4 cores, 3-repeat medians: it won 5 of 6
+        # pairs, 3.94s vs 4.54s median.
         .repartition(default_parallelism(), "x")
         # checkpoint the calendar-bounded collapse (~2.4k rows): the
         # median selection's three passes then rebuild the pair frame

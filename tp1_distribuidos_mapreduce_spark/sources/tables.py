@@ -243,30 +243,12 @@ def stream_events(
     return _normalize_ts(reader.parquet(src))
 
 
-def stream_documents(
-    spark: SparkSession, path: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over a documents parquet path (file or
-    directory) — the ingest side of the streaming CMS fold
-    (streaming/sinks.py write_stream_cms_cells). Documents carry no
-    timestamp column, so unlike stream_events there is no NANOS
-    conversion or watermark dtype concern; the schema is read from the
-    batch footer so batch and streaming plans see an identical shape.
-    ``max_files_per_trigger`` splits a bounded replay into micro-batches
-    (tests use it to exercise the cross-batch fold)."""
-    schema = read_parquet_cached_schema(spark, path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
 def stream_parquet(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over any NANOS-free parquet path — the generic
-    ingest reader for tables without a timestamp column (orders feeds the
-    streaming Bloom fold, streaming/sinks.py write_stream_bloom_words).
+    ingest reader for tables without a timestamp column (orders and
+    documents feed the streaming Bloom and CMS folds, streaming/sinks.py).
     events must keep going through stream_events (NANOS→micros handling);
     the schema is read from the batch footer so batch and streaming plans
     see an identical shape. ``max_files_per_trigger`` splits a bounded

@@ -16,11 +16,45 @@ combined with maxFilesPerTrigger, backlog drains under bounded memory
 FOR THE APPEND SINK. The restatement sink must NOT be combined with
 micro-batch splitting that can scatter one logical partition across
 batches — see write_stream_restatement's contract.
+
+The second half of the module is the versioned-state fold
+(write_stream_fold) behind streaming IVM and the sketch-ingest family:
+one commit protocol, seven Fold specs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+import shutil
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..functions.tokenize import words_from
+from ..plans.approx import (
+    CMS_DEPTH,
+    CMS_WIDTH,
+    KMV_K,
+    ROLLING_HLL_DAYS,
+    _cms_cell_counts,
+    _cms_exact_counts_from_grid,
+    _cms_grid_from_cells,
+    _hll_zero,
+    _hll_zipmax,
+    daily_hll_sketches,
+    dd_value_buckets,
+    dd_value_buckets_by_type,
+    kmv_type_sketches,
+    overlap_from_kmv_sketches,
+    quantiles_from_dd_buckets,
+    quantiles_from_dd_buckets_by_type,
+    rolling_estimates_from_sketches,
+)
+from ..plans.bloom import M_BITS, _bloom_words, bloom_prune, urgent_pruned_revenue
 
 
 def write_stream_parquet(
@@ -96,45 +130,99 @@ def write_stream_restatement(
     )
 
 
-def write_stream_ivm(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
+# --------------------------------------------------------------------------
+# Versioned-state folds: streaming IVM and the sketch-ingest family.
+#
+# One commit protocol serves all seven sinks. A drain folds each
+# micro-batch into a persisted state table under ``state_path``:
+#
+# * **Replay fence**: the pointer file ``CURRENT`` carries the last folded
+#   batch_id. foreachBatch is at-least-once, so a replayed epoch (crash
+#   after the state commit, before the checkpoint's epoch commit) sees
+#   ``batch_id <= committed`` and returns without folding. The fence is
+#   load-bearing for additive merges (a re-fold would double-count) and
+#   keeps the pointer truthful for idempotent ones.
+# * **Delta + merge**: only the batch is scanned. The family's kernel
+#   turns it into a delta keyed like the state; the merge is state UNION
+#   delta grouped by the keys, one merge aggregate per value column.
+#   GROUP BY puts all NULL keys in one group, as the one-shot build does
+#   (a plain equi-join never pairs NULL keys, so a NULL group would
+#   re-enter as a new row on every fold). A null-safe (<=>) full-outer
+#   join gives the same rows but costs one more job per fold: its join
+#   keys are coalesce(k)/isnull(k), which the delta aggregate's hash
+#   partitioning does not satisfy, so the delta is shuffled again.
+# * **Atomic commit**: the merged state is written to a fresh ``v{batch_id}``
+#   dir, then ``CURRENT`` is replaced atomically (temp file + os.replace).
+#   Readers follow the pointer, so they always see a complete version.
+# * **Retention**: the current and the previous version are kept (a reader
+#   that resolved the pointer before this commit holds a lazy plan over
+#   the previous dir); older versions are deleted.
+# --------------------------------------------------------------------------
+
+
+class Fold(NamedTuple):
+    """What one state family adds to the shared protocol: the kernel that
+    turns a batch into a delta, the state's key columns, and one merge
+    aggregate per value column (it combines the state row and the delta
+    row of a key)."""
+
+    delta: Callable[[DataFrame], DataFrame]
+    keys: tuple[str, ...]
+    merge: dict[str, Callable[[Column], Column]]
+
+
+def _ivm_delta(batch_df: DataFrame) -> DataFrame:
+    return batch_df.groupBy("user_id").agg(
+        F.count("*").cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
+    )
+
+
+def _hll_max(regs: Column) -> Column:
+    return F.aggregate(F.collect_list(regs), _hll_zero(), _hll_zipmax)
+
+
+def _bottom_k(sk: Column) -> Column:
+    union = F.array_distinct(F.flatten(F.collect_list(sk)))
+    return F.slice(F.array_sort(union), 1, KMV_K)
+
+
+# Per-user (n_events, value cents): integer cents keep the fold exact.
+IVM = Fold(_ivm_delta, ("user_id",), {"n_events": F.sum, "cents": F.sum})
+HLL = Fold(daily_hll_sketches, ("day",), {"regs": _hll_max})
+KMV = Fold(kmv_type_sketches, ("event_type",), {"sk": _bottom_k})
+DD = Fold(dd_value_buckets, ("idx",), {"cnt": F.sum})
+DD_BY_TYPE = Fold(dd_value_buckets_by_type, ("event_type", "idx"), {"cnt": F.sum})
+CMS = Fold(
+    lambda batch_df: _cms_cell_counts(
+        words_from(batch_df, "text"), ["word"], CMS_DEPTH, CMS_WIDTH
+    ),
+    ("d", "pos"),
+    {"n": F.sum},
+)
+
+
+def bloom(key_col: str) -> Fold:
+    """Sparse (word, bits) Bloom table over the batch's ``key_col``."""
+    return Fold(
+        lambda batch_df: _bloom_words(batch_df.select(key_col), key_col),
+        ("word",),
+        {"bits": F.bit_or},
+    )
+
+
+def write_stream_fold(
+    stream_df: DataFrame, state_path: str, checkpoint: str, family: Fold
 ) -> None:
-    """Streaming incremental view maintenance: fold each micro-batch of
-    events into a persisted per-user aggregate state table — the
-    streaming twin of plans/ivm.py's batch combine, and the shape of
-    every 'keep a running aggregate fresh off the firehose' pipeline.
-
-    Per batch: aggregate ONLY the batch delta (n_events, value cents —
-    both algebraic), full-outer-combine it with the current state
-    parquet, and commit via versioned-dir + atomic pointer swap. Only
-    the delta is ever scanned per epoch; the combine join is
-    state-cardinality. Integer cents keep the fold exact, so the final
-    state equals the one-shot batch aggregate bit-for-bit regardless of
-    micro-batch boundaries (pinned in tests/test_streaming.py across a
-    multi-batch replay).
-
-    Restart contract — foreachBatch is AT-LEAST-ONCE, so exactly-once
-    is built here, not assumed from the checkpoint:
-
-    * **Replay fence**: the committed batch_id travels inside the
-      pointer file. A replayed epoch (crash after state commit, before
-      the checkpoint's epoch commit) sees ``batch_id <= committed`` and
-      returns without folding — no double count.
-    * **Atomic commit**: each fold writes a fresh versioned state dir
-      ``v{batch_id}`` and then atomically replaces the single pointer
-      file ``CURRENT`` (write temp + os.replace). There is no window
-      with no valid state: readers follow the pointer, which always
-      names a fully-written version; the previous version is deleted
-      only after the pointer swap.
-    """
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _ivm_fold(batch_df, batch_id, state_path)
-
+    """Drain everything currently available (availableNow) into the
+    family's versioned state under ``state_path``, one fold_batch per
+    micro-batch."""
     (
-        stream_df.writeStream.foreachBatch(fold)
+        stream_df.writeStream.foreachBatch(
+            lambda batch_df, batch_id: fold_batch(
+                batch_df, batch_id, state_path, family
+            )
+        )
         .option("checkpointLocation", checkpoint)
         .outputMode("update")
         .trigger(availableNow=True)
@@ -143,77 +231,38 @@ def write_stream_ivm(
     )
 
 
-def _ivm_fold(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One idempotent IVM fold: fence on the committed batch_id, merge the
-    delta into the current version, commit a new version atomically.
-    Module-level (not a closure) so tests can drive an injected replay
-    through the exact production path."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    spark = batch_df.sparkSession
+def fold_batch(
+    batch_df: DataFrame, batch_id: int, state_path: str, family: Fold
+) -> None:
+    """Fold one micro-batch: fence, delta, keyed merge, versioned write,
+    pointer commit, GC. Module-level so tests can drive injected replays
+    through the production path."""
     os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
+    committed = _read_pointer(state_path)
     if committed is not None and batch_id <= committed["batch_id"]:
         return  # replayed epoch — already folded into the state
-    delta = batch_df.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-    )
+    merged = family.delta(batch_df)
     if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(
-            "user_id",
-            F.col("n_events").alias("b_n"),
-            F.col("cents").alias("b_c"),
+        merged = (
+            read_state(batch_df.sparkSession, state_path)
+            .unionByName(merged)
+            .groupBy(*family.keys)
+            .agg(*[agg(c).alias(c) for c, agg in family.merge.items()])
         )
-        d = delta.select(
-            "user_id",
-            F.col("n_events").alias("d_n"),
-            F.col("cents").alias("d_c"),
-        )
-        # NULL-SAFE combine key: a plain equi-join never matches NULL ==
-        # NULL, so a NULL-user group (user_id is nullable in the events
-        # schema) would re-enter the state as a fresh row on every fold
-        # and multiply — eqNullSafe pairs the two at-most-one NULL-key
-        # rows exactly like SQL GROUP BY treats the NULL group.
-        merged = b.join(
-            d, b["user_id"].eqNullSafe(d["user_id"]), "full_outer"
-        ).select(
-            F.coalesce(b["user_id"], d["user_id"]).alias("user_id"),
-            (F.coalesce("b_n", F.lit(0)) + F.coalesce("d_n", F.lit(0)))
-            .cast("long")
-            .alias("n_events"),
-            (F.coalesce("b_c", F.lit(0)) + F.coalesce("d_c", F.lit(0)))
-            .cast("long")
-            .alias("cents"),
-        )
-    else:
-        merged = delta
     new_dir = f"v{batch_id}"
     merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    # Retention: keep the CURRENT and the PREVIOUS committed version. A
-    # reader that resolved the pointer before this commit holds a lazy
-    # plan over the previous dir — deleting it immediately would fail
-    # that reader's later action (read_ivm_state's contract). Versions
-    # older than the previous one are unreachable by any pointer a live
-    # reader could have seen across one fold, and are GC'd here.
-    import shutil
-
+    _STATE_SCHEMA_CACHE[state_path] = StructType(
+        [StructField(f.name, f.dataType, True) for f in merged.schema.fields]
+    )
+    _commit_pointer(state_path, new_dir, batch_id)
     keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for d in os.listdir(state_path):
-        if d.startswith("v") and d not in keep:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
+    for v in os.listdir(state_path):
+        if v.startswith("v") and v not in keep:
+            shutil.rmtree(os.path.join(state_path, v), ignore_errors=True)
 
 
-def _read_ivm_pointer(state_path: str) -> dict | None:
-    """Read the CURRENT pointer: {"dir": "v3", "batch_id": 3} or None."""
-    import json
-    import os
-
+def _read_pointer(state_path: str) -> dict | None:
+    """The CURRENT pointer: {"dir": "v3", "batch_id": 3}, or None."""
     ptr = os.path.join(state_path, "CURRENT")
     if not os.path.exists(ptr):
         return None
@@ -221,12 +270,9 @@ def _read_ivm_pointer(state_path: str) -> dict | None:
         return json.load(f)
 
 
-def _commit_ivm_pointer(state_path: str, version_dir: str, batch_id: int) -> None:
-    """Atomically replace CURRENT (temp file + os.replace — POSIX-atomic,
-    so readers always see either the old or the new complete pointer)."""
-    import json
-    import os
-
+def _commit_pointer(state_path: str, version_dir: str, batch_id: int) -> None:
+    """Replace CURRENT atomically, so readers see the old or the new
+    complete pointer, never a partial one."""
     tmp = os.path.join(state_path, "CURRENT.tmp")
     with open(tmp, "w") as f:
         json.dump({"dir": version_dir, "batch_id": batch_id}, f)
@@ -235,651 +281,67 @@ def _commit_ivm_pointer(state_path: str, version_dir: str, batch_id: int) -> Non
     os.replace(tmp, os.path.join(state_path, "CURRENT"))
 
 
-# state_path → the written state frame's schema, nullability normalized to
-# the parquet reader's all-nullable convention (r22, guide §6 / the r21
-# schema-cache discipline): every fold and every read path re-opened its
-# versioned state dir with footer schema inference (~110 ms per read, the
-# r21-measured constant) even though the schema is a fixed constant per
-# sink and the SAME process just wrote it. Recording the schema at write
-# time and passing it explicitly on read removes one inference job per
-# fold + one per read path, value-identically (the normalized schema is
-# exactly what inference returns for a Spark-written parquet dir). Pure
-# METADATA caching — no data, no results; a fresh read-only process falls
-# back to inference on its first read.
-_STATE_SCHEMA_CACHE: dict[str, object] = {}
+# state_path → the state's schema, as the parquet reader would infer it
+# (all fields nullable). Recorded by the fold that wrote the state, so
+# reads skip footer inference (~110 ms each); the file bytes are still
+# read fresh every time. A process that never folded infers on its first
+# read and records the result.
+_STATE_SCHEMA_CACHE: dict[str, StructType] = {}
 
 
-def _record_state_schema(state_path: str, df: DataFrame) -> None:
-    from pyspark.sql.types import StructField, StructType
-
-    _STATE_SCHEMA_CACHE[state_path] = StructType(
-        [StructField(f.name, f.dataType, True) for f in df.schema.fields]
-    )
-
-
-def _read_state(spark: SparkSession, state_path: str, version_dir: str) -> DataFrame:
-    """Read a committed versioned state dir, passing the schema recorded
-    at the last write under this state_path when available (the file
-    bytes are still read fresh every time — only the footer-inference
-    pass is skipped)."""
-    import os
-
-    path = os.path.join(state_path, version_dir)
+def read_state(spark: SparkSession, state_path: str) -> DataFrame:
+    """The committed state version CURRENT points to. The frame stays
+    readable across ONE later fold (the previous version is retained);
+    collect it before a second fold lands. Raises FileNotFoundError when
+    nothing has been committed under ``state_path``."""
+    committed = _read_pointer(state_path)
+    if committed is None:
+        raise FileNotFoundError(f"no committed state under {state_path}")
+    path = os.path.join(state_path, committed["dir"])
     schema = _STATE_SCHEMA_CACHE.get(state_path)
     if schema is None:
         df = spark.read.parquet(path)
-        # the reader's inferred schema is already all-nullable — safe to
-        # reuse for later reads of the same sink's state
         _STATE_SCHEMA_CACHE[state_path] = df.schema
         return df
     return spark.read.schema(schema).parquet(path)
 
 
 def read_ivm_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Final IVM state as (user_id, n_events, total_value) with cents
-    divided once at the edge. Follows the CURRENT pointer, so a reader
-    concurrent with a fold always sees a complete committed version;
-    the returned frame stays readable across ONE subsequent fold (the
-    sink retains the previous version) — collect before a second fold
-    lands, or re-resolve via a fresh read_ivm_state call."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed IVM state under {state_path}")
+    """IVM state as (user_id, n_events, total_value), cents divided once
+    at the edge."""
     return (
-        _read_state(spark, state_path, committed["dir"])
-        .select(
-            "user_id",
-            "n_events",
-            (F.col("cents") / 100.0).alias("total_value"),
-        )
+        read_state(spark, state_path)
+        .select("user_id", "n_events", (F.col("cents") / 100.0).alias("total_value"))
         .orderBy("user_id")
     )
-
-
-def write_stream_hll_sketches(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming SKETCH-AT-INGEST: fold each micro-batch of events into
-    a persisted per-day HyperLogLog register table — the streaming half
-    of the mergeable-sketch pattern (plans/approx.py). At 100 TB the
-    sketch table is built exactly like this: the firehose is folded
-    into fixed-1KB daily registers as it lands, and rolling-distinct
-    dashboards read the tiny sketch table (read_hll_rolling), never the
-    raw events.
-
-    Per batch: the batch delta becomes per-day partial registers (the
-    same Arrow-batched kernel as the batch build), then a day-keyed
-    full-outer register-max merge with the current state — the combine
-    join is sketch-table-cardinality (days), the only data-sized work
-    is the delta's own pass. Commit is the IVM sink's versioned-dir +
-    atomic pointer swap with the same batch-id replay fence.
-
-    Exactness of the composition: register max-merge is associative,
-    commutative, and IDEMPOTENT, so the final sketch table is
-    BIT-IDENTICAL to the one-shot batch build regardless of micro-batch
-    boundaries — and unlike the additive IVM fold, even a hypothetical
-    double-fold could not corrupt it (max(a, a) = a); the fence is
-    still kept so the pointer's batch_id stays truthful. Pinned in
-    tests/test_streaming.py: a 3-batch replay's rolling estimates equal
-    rolling_hll_active_users over the same events exactly.
-    """
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _hll_fold(batch_df, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _hll_fold(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One idempotent sketch fold: fence, register-max merge, atomic
-    versioned commit. Module-level so tests can drive injected replays
-    through the exact production path (the IVM sink's convention)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..plans.approx import HLL_M, daily_hll_sketches
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — already folded (and max-merge is
-        # idempotent anyway; the fence keeps the pointer truthful)
-    delta = daily_hll_sketches(batch_df)
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(F.col("day").alias("b_day"), F.col("regs").alias("b_regs"))
-        d = delta.select(
-            F.col("day").alias("d_day"), F.col("regs").alias("d_regs")
-        )
-        zero = F.array_repeat(F.lit(0), HLL_M)
-        merged = b.join(
-            d, b["b_day"] == d["d_day"], "full_outer"
-        ).select(
-            F.coalesce(b["b_day"], d["d_day"]).alias("day"),
-            F.zip_with(
-                F.coalesce("b_regs", zero),
-                F.coalesce("d_regs", zero),
-                lambda x, y: F.greatest(x, y),
-            ).alias("regs"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for d in os.listdir(state_path):
-        if d.startswith("v") and d not in keep:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
 
 
 def read_hll_rolling(
     spark: SparkSession, state_path: str, days: int | None = None
 ) -> DataFrame:
-    """Rolling-distinct estimates from the PERSISTED sketch table: the
-    dashboard read path — merges ≤``days`` 1KB register rows per window
-    and never touches raw events. The max-day cut comes from the sketch
-    table itself (every event day has a sketch row, so this equals the
-    batch build's event-derived max day)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from ..plans.approx import ROLLING_HLL_DAYS, rolling_estimates_from_sketches
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    daily = _read_state(spark, state_path, committed["dir"])
+    """Rolling-distinct estimates from the persisted per-day HLL table.
+    The max-day cut comes from the sketch table itself (every event day
+    has a sketch row, so it equals the batch build's max event day)."""
+    daily = read_state(spark, state_path)
     max_day = daily.agg(F.max("day").alias("max_day"))
     return rolling_estimates_from_sketches(
         daily, max_day, days if days is not None else ROLLING_HLL_DAYS
     )
 
 
-def write_stream_kmv_sketches(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming KMV sketch-at-ingest: fold each micro-batch of events
-    into a persisted per-type bottom-K hash table — the set-operation
-    half of the sketch-ingest pair (write_stream_hll_sketches is the
-    rolling-distinct half). Audience-overlap dashboards then read the
-    types-cardinality sketch table (read_kmv_overlap), never the raw
-    events.
-
-    Per batch: the delta's per-type bottom-K arrays (plans/approx.py
-    kmv_type_sketches — the same kernel as the batch build) merge into
-    the current state with a type-keyed full-outer union-truncate; the
-    commit is the IVM sink's versioned-dir + atomic pointer + batch-id
-    fence. Bottom-K union-then-truncate is associative, commutative,
-    and IDEMPOTENT, so the folded sketch table is BIT-IDENTICAL to the
-    one-shot batch build across any micro-batch boundaries or replays
-    (pinned in tests/test_streaming.py).
-    """
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _kmv_fold(batch_df, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _kmv_fold(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One idempotent bottom-K fold: fence, union-truncate merge,
-    atomic versioned commit (the _hll_fold/_ivm_fold convention)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..plans.approx import KMV_K, kmv_type_sketches
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — fenced (and the merge is idempotent)
-    delta = kmv_type_sketches(batch_df)
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(
-            F.col("event_type").alias("b_t"), F.col("sk").alias("b_sk")
-        )
-        d = delta.select(
-            F.col("event_type").alias("d_t"), F.col("sk").alias("d_sk")
-        )
-        empty = F.array().cast("array<long>")
-        merged = b.join(d, b["b_t"] == d["d_t"], "full_outer").select(
-            F.coalesce(b["b_t"], d["d_t"]).alias("event_type"),
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(
-                        F.concat(
-                            F.coalesce("b_sk", empty),
-                            F.coalesce("d_sk", empty),
-                        )
-                    )
-                ),
-                1,
-                KMV_K,
-            ).alias("sk"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for d in os.listdir(state_path):
-        if d.startswith("v") and d not in keep:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
-
-
 def read_kmv_overlap(spark: SparkSession, state_path: str) -> DataFrame:
-    """Pairwise audience-overlap estimates from the PERSISTED bottom-K
-    sketch table — the dashboard read path (types-cardinality frame,
-    raw events never touched)."""
-    import os
-
-    from ..plans.approx import overlap_from_kmv_sketches
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    return overlap_from_kmv_sketches(
-        _read_state(spark, state_path, committed["dir"])
-    )
-
-
-def write_stream_dd_buckets(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming DDSketch-at-ingest: fold each micro-batch of events
-    into a persisted log-domain bucket-count table (plans/approx.py
-    dd_value_buckets) — the QUANTILE member of the sketch-ingest family
-    (HLL = rolling distinct, KMV = set operations). Value-distribution
-    dashboards then read the ≤ ~800-row bucket table
-    (read_dd_quantiles), never the raw events.
-
-    Per batch: the delta's bucket counts merge into the current state
-    with an idx-keyed full-outer count SUM; the commit is the IVM
-    sink's versioned-dir + atomic pointer + batch-id fence. UNLIKE the
-    HLL/KMV folds, count addition is NOT idempotent — a double-fold
-    would double-count — so the fence is load-bearing here, exactly as
-    in the additive IVM sink: tests/test_streaming.py pins both the
-    multi-batch == one-shot bit-identity AND that an injected replay of
-    an already-committed batch_id leaves the state byte-identical.
-    """
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _dd_fold(batch_df, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _dd_fold(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One FENCED additive bucket fold: fence (load-bearing — addition
-    is not idempotent), idx-keyed count-sum merge, atomic versioned
-    commit (the _ivm_fold convention)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..plans.approx import dd_value_buckets
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — MUST skip: a re-fold would double-count
-    delta = dd_value_buckets(batch_df)
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(F.col("idx").alias("b_idx"), F.col("cnt").alias("b_cnt"))
-        d = delta.select(F.col("idx").alias("d_idx"), F.col("cnt").alias("d_cnt"))
-        merged = b.join(d, b["b_idx"] == d["d_idx"], "full_outer").select(
-            F.coalesce(b["b_idx"], d["d_idx"]).alias("idx"),
-            (
-                F.coalesce("b_cnt", F.lit(0)) + F.coalesce("d_cnt", F.lit(0))
-            ).cast("long").alias("cnt"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for d in os.listdir(state_path):
-        if d.startswith("v") and d not in keep:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
+    """Pairwise audience-overlap estimates from the persisted KMV table."""
+    return overlap_from_kmv_sketches(read_state(spark, state_path))
 
 
 def read_dd_quantiles(spark: SparkSession, state_path: str) -> DataFrame:
-    """Quantile estimates from the PERSISTED DDSketch bucket table —
-    the dashboard read path (log-domain-bounded frame, raw events never
-    touched)."""
-    import os
-
-    from ..plans.approx import quantiles_from_dd_buckets
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    return quantiles_from_dd_buckets(
-        _read_state(spark, state_path, committed["dir"])
-    )
-
-
-def write_stream_dd_buckets_by_type(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """GROUPED streaming DDSketch-at-ingest (r14): the per-event-type
-    fold of the quantile sketch — one persisted (event_type, idx, cnt)
-    table, per batch a composite-key full-outer count SUM. Same
-    versioned-dir + atomic pointer + batch-id fence as the global fold,
-    and the fence is equally load-bearing (addition is not idempotent).
-    This is the production shape of the grouped family: per-batch
-    builds folded by addition, quantile reads per group off the
-    ≤ types × ~800-row state — the streaming counterpart of what
-    ddsketch_merge_proof pins for the batch merge law."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _dd_fold_by_type(batch_df, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _dd_fold_by_type(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One FENCED additive fold keyed (event_type, idx) — the _dd_fold
-    convention with the group key added to the merge join."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..plans.approx import dd_value_buckets_by_type
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — MUST skip: a re-fold would double-count
-    delta = dd_value_buckets_by_type(batch_df)
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(
-            F.col("event_type").alias("b_t"),
-            F.col("idx").alias("b_idx"),
-            F.col("cnt").alias("b_cnt"),
-        )
-        d = delta.select(
-            F.col("event_type").alias("d_t"),
-            F.col("idx").alias("d_idx"),
-            F.col("cnt").alias("d_cnt"),
-        )
-        merged = b.join(
-            d,
-            (b["b_t"] == d["d_t"]) & (b["b_idx"] == d["d_idx"]),
-            "full_outer",
-        ).select(
-            F.coalesce(b["b_t"], d["d_t"]).alias("event_type"),
-            F.coalesce(b["b_idx"], d["d_idx"]).alias("idx"),
-            (
-                F.coalesce("b_cnt", F.lit(0)) + F.coalesce("d_cnt", F.lit(0))
-            ).cast("long").alias("cnt"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for d in os.listdir(state_path):
-        if d.startswith("v") and d not in keep:
-            shutil.rmtree(os.path.join(state_path, d), ignore_errors=True)
+    """Quantile estimates from the persisted DDSketch bucket table."""
+    return quantiles_from_dd_buckets(read_state(spark, state_path))
 
 
 def read_dd_quantiles_by_type(spark: SparkSession, state_path: str) -> DataFrame:
-    """Per-group quantile estimates from the PERSISTED grouped sketch
-    state — the grouped dashboard read path."""
-    import os
-
-    from ..plans.approx import quantiles_from_dd_buckets_by_type
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    return quantiles_from_dd_buckets_by_type(
-        _read_state(spark, state_path, committed["dir"])
-    )
-
-
-def write_stream_cms_cells(
-    stream_df: DataFrame,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming count-min-at-ingest (r16, VERDICT r15 #6): fold each
-    micro-batch of DOCUMENTS into a persisted (d, pos, n) cell table —
-    the FREQUENCY member of the sketch-ingest family (HLL = rolling
-    distinct, KMV = set operations, DDSketch = quantiles). Heavy-hitter
-    reads then probe the depth×width cell state (read_cms_heavy_hitters)
-    instead of re-tokenizing the landed corpus.
-
-    Per batch: the batch's cell counts (plans/approx.py _cms_cell_counts
-    — the SAME kernel as the batch prune, so the fold and the one-shot
-    build cannot desynchronize) merge into the current state with a
-    (d, pos)-keyed full-outer count SUM; the commit is the IVM sink's
-    versioned-dir + atomic pointer + batch-id fence. Like the DD fold
-    and UNLIKE the HLL/KMV folds, count addition is NOT idempotent — a
-    double-fold would double-count — so the fence is LOAD-BEARING:
-    tests/test_streaming.py pins multi-batch == one-shot bit-identity,
-    that an injected replay of a committed batch_id leaves the state
-    byte-identical, and that a genuinely new epoch still folds (counts
-    double). This is the sketch's 100 TB ingest shape: per-slice
-    depth×width cell frames folded by addition, never the vocabulary
-    crossing the wire — the batch-side merge law is pinned by
-    plans/approx.py cms_merge_proof; this fold is its production
-    deployment with the fence the batch proof cannot exercise."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _cms_fold(batch_df, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _cms_fold(batch_df: DataFrame, batch_id: int, state_path: str) -> None:
-    """One FENCED additive cell fold: fence (load-bearing — addition is
-    not idempotent), (d, pos)-keyed count-sum merge, atomic versioned
-    commit (the _dd_fold convention with the composite grid key)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..functions.tokenize import words_from
-    from ..plans.approx import CMS_DEPTH, CMS_WIDTH, _cms_cell_counts
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — MUST skip: a re-fold would double-count
-    delta = _cms_cell_counts(
-        words_from(batch_df, "text"), ["word"], CMS_DEPTH, CMS_WIDTH
-    )
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(
-            F.col("d").alias("b_d"),
-            F.col("pos").alias("b_pos"),
-            F.col("n").alias("b_n"),
-        )
-        d = delta.select(
-            F.col("d").alias("d_d"),
-            F.col("pos").alias("d_pos"),
-            F.col("n").alias("d_n"),
-        )
-        merged = b.join(
-            d,
-            (b["b_d"] == d["d_d"]) & (b["b_pos"] == d["d_pos"]),
-            "full_outer",
-        ).select(
-            F.coalesce(b["b_d"], d["d_d"]).alias("d"),
-            F.coalesce(b["b_pos"], d["d_pos"]).alias("pos"),
-            (
-                F.coalesce("b_n", F.lit(0)) + F.coalesce("d_n", F.lit(0))
-            ).cast("long").alias("n"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for dd in os.listdir(state_path):
-        if dd.startswith("v") and dd not in keep:
-            shutil.rmtree(os.path.join(state_path, dd), ignore_errors=True)
-
-
-def write_stream_bloom_words(
-    stream_df: DataFrame,
-    key_col: str,
-    state_path: str,
-    checkpoint: str,
-) -> None:
-    """Streaming membership-sketch-at-ingest (r16, completing the
-    sketch-ingest family: HLL = rolling distinct, KMV = set operations,
-    DDSketch = quantiles, CMS = frequency, Bloom = MEMBERSHIP): fold
-    each micro-batch of join keys into a persisted sparse (word, bits)
-    Bloom table. Join-pruning reads then probe facts against the
-    persisted filter (read_bloom_pruned_revenue) instead of rebuilding
-    it from the landed dimension.
-
-    Per batch: the batch's word table (plans/bloom.py _bloom_words —
-    the SAME kernel as the batch build, so the fold and the one-shot
-    bitmap cannot desynchronize) merges into the current state with a
-    word-keyed full-outer bitwise OR; the commit is the IVM sink's
-    versioned-dir + atomic pointer + batch-id fence. bit OR is
-    associative, commutative, and IDEMPOTENT, so like the HLL/KMV folds
-    (and unlike the additive DD/CMS ones) the fence only keeps the
-    pointer's batch_id truthful — a double-fold would be a no-op on the
-    bits (pinned in tests/test_streaming.py by forcing a re-fold past
-    the fence). This is the filter's 100 TB ingest shape: per-slice
-    word tables folded by OR, ≤ M_BITS/64 = 4,096 rows per fold
-    crossing the wire, never the key set."""
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        _bloom_fold(batch_df, key_col, batch_id, state_path)
-
-    (
-        stream_df.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _bloom_fold(
-    batch_df: DataFrame, key_col: str, batch_id: int, state_path: str
-) -> None:
-    """One idempotent OR fold: fence (pointer truthfulness only — the
-    merge algebra tolerates replays), word-keyed bitwise-OR merge,
-    atomic versioned commit (the _kmv_fold convention)."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from ..plans.bloom import _bloom_words
-
-    spark = batch_df.sparkSession
-    os.makedirs(state_path, exist_ok=True)
-    committed = _read_ivm_pointer(state_path)
-    if committed is not None and batch_id <= committed["batch_id"]:
-        return  # replayed epoch — fenced (and the OR merge is idempotent)
-    delta = _bloom_words(batch_df.select(key_col), key_col)
-    if committed is not None:
-        cur = _read_state(spark, state_path, committed["dir"])
-        b = cur.select(
-            F.col("word").alias("b_w"), F.col("bits").alias("b_bits")
-        )
-        d = delta.select(
-            F.col("word").alias("d_w"), F.col("bits").alias("d_bits")
-        )
-        merged = b.join(d, b["b_w"] == d["d_w"], "full_outer").select(
-            F.coalesce(b["b_w"], d["d_w"]).alias("word"),
-            F.expr(
-                "coalesce(b_bits, 0L) | coalesce(d_bits, 0L)"
-            ).alias("bits"),
-        )
-    else:
-        merged = delta
-    new_dir = f"v{batch_id}"
-    merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _record_state_schema(state_path, merged)
-    _commit_ivm_pointer(state_path, new_dir, batch_id)
-    keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
-    for dd in os.listdir(state_path):
-        if dd.startswith("v") and dd not in keep:
-            shutil.rmtree(os.path.join(state_path, dd), ignore_errors=True)
+    """Per-type quantile estimates from the persisted grouped buckets."""
+    return quantiles_from_dd_buckets_by_type(read_state(spark, state_path))
 
 
 def read_bloom_pruned_revenue(
@@ -888,33 +350,16 @@ def read_bloom_pruned_revenue(
     lineitem: DataFrame,
     orders: DataFrame,
 ) -> DataFrame:
-    """Urgent-order revenue with the lineitem scan pruned by the
-    PERSISTED streaming Bloom state: the committed word table (≤ 4,096
-    rows — the filter, never the key set) densifies driver-side exactly
-    as plans/bloom.py build_bloom_bitmap does, the probe runs through
-    the identical bloom_prune kernel, and the exact semi-join against
-    the landed urgent orders removes the false positives — so a
-    fully-drained fold answers EXACTLY like the one-shot batch
-    bloom_pruned_join (equality pinned in tests/test_streaming.py; the
-    differential's independent reference is that query's own DuckDB
-    oracle at sf0.1). The semi-join + revenue rollup is the SHARED
-    plans/bloom.py urgent_pruned_revenue kernel (unified in r17 per
-    VERDICT r16 #3 — the batch query and this reader can no longer
-    drift textually; the equality pin now guards fold-state semantics
-    alone)."""
-    import os
-
-    from ..plans.bloom import M_BITS, bloom_prune, urgent_pruned_revenue
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    words = _read_state(spark, state_path, committed["dir"]).collect()
+    """Urgent-order revenue with the lineitem scan pruned by the persisted
+    Bloom state. The word table (≤ M_BITS/64 rows) densifies driver-side
+    as plans/bloom.py build_bloom_bitmap does, the probe is the batch
+    query's bloom_prune, and the exact semi-join in urgent_pruned_revenue
+    removes false positives, so a fully drained fold answers exactly like
+    the one-shot bloom_pruned_join."""
     bitmap = [0] * (M_BITS // 64)
-    for r in words:
+    for r in read_state(spark, state_path).collect():
         bitmap[r["word"]] = r["bits"]
-    pruned = bloom_prune(lineitem, "l_orderkey", bitmap)
-    return urgent_pruned_revenue(pruned, orders)
+    return urgent_pruned_revenue(bloom_prune(lineitem, "l_orderkey", bitmap), orders)
 
 
 def read_cms_heavy_hitters(
@@ -923,31 +368,14 @@ def read_cms_heavy_hitters(
     documents: DataFrame,
     threshold: int = 100,
 ) -> DataFrame:
-    """Heavy-hitter words from the PERSISTED streaming cell state: the
-    depth×width grid is read from the committed fold state (bounded
-    collect — the grid, never data), and candidate pruning + exact
-    verification run through the IDENTICAL probe kernel as the batch
-    query (plans/approx.py _cms_exact_counts_from_grid), so a
-    fully-drained fold answers EXACTLY like the one-shot batch
-    cms_heavy_hitters. ``documents`` is the landed corpus the exact
-    verify counts over — the sketch state prunes the candidate set, the
-    corpus supplies the exact counts, the same division of labor as the
-    batch prune."""
-    import os
-
-    from ..functions.tokenize import words_from
-    from ..plans.approx import (
-        CMS_DEPTH,
-        CMS_WIDTH,
-        _cms_exact_counts_from_grid,
-        _cms_grid_from_cells,
+    """Heavy-hitter words from the persisted count-min cells: the
+    depth×width grid (a bounded collect) prunes the candidates and the
+    landed ``documents`` supply exact counts, through the batch
+    cms_heavy_hitters probe kernel, so a fully drained fold answers
+    exactly like the one-shot query."""
+    grid = _cms_grid_from_cells(
+        read_state(spark, state_path).collect(), CMS_DEPTH, CMS_WIDTH
     )
-
-    committed = _read_ivm_pointer(state_path)
-    if committed is None:
-        raise FileNotFoundError(f"no committed sketch state under {state_path}")
-    cells = _read_state(spark, state_path, committed["dir"]).collect()
-    grid = _cms_grid_from_cells(cells, CMS_DEPTH, CMS_WIDTH)
     return _cms_exact_counts_from_grid(
         words_from(documents, "text"), ["word"], grid, threshold,
         CMS_DEPTH, CMS_WIDTH,
