@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import glob
 import os
+import re
+
+import pytest
 
 from tp1_distribuidos_mapreduce_spark.operators.mapreduce import (
     II_JOB,
@@ -13,6 +16,7 @@ from tp1_distribuidos_mapreduce_spark.operators.mapreduce import (
 )
 from tp1_distribuidos_mapreduce_spark.operators.wordcount import word_count
 from tp1_distribuidos_mapreduce_spark.sinks import read_kv_text, write_sorted_kv_text
+from tp1_distribuidos_mapreduce_spark.sources.text import read_text_corpus
 
 
 def corpus(spark, rows):
@@ -42,12 +46,73 @@ def test_mr_ii_sorted_distinct(spark):
     assert got["jose"] == "pg-1,pg-2"
 
 
+def without_combiner(job: MapReduceJob) -> MapReduceJob:
+    return MapReduceJob(map_fn=job.map_fn, reduce_fn=job.reduce_fn)
+
+
 def test_mr_combiner_equivalence(spark):
     df = corpus(spark, ROWS)
-    no_comb = MapReduceJob(map_fn=WC_JOB.map_fn, reduce_fn=WC_JOB.reduce_fn)
-    a = sorted(map(tuple, run_mapreduce(df, WC_JOB).collect()))
-    b = sorted(map(tuple, run_mapreduce(df, no_comb).collect()))
-    assert a == b
+    for job in (WC_JOB, II_JOB):
+        a = sorted(map(tuple, run_mapreduce(df, job).collect()))
+        b = sorted(map(tuple, run_mapreduce(df, without_combiner(job)).collect()))
+        assert a == b
+
+
+BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def test_mr_key_runs_straddling_arrow_batches(spark, tmp_path):
+    # Two-row Arrow batches split nearly every run of equal keys across
+    # batches on the reduce side; the run carried over a boundary must
+    # still reach Reduce as one group. Checked against a sequential
+    # pure-Python wc/ii (the reference's cmd/seq).
+    docs = {
+        "pg-0.txt": "chau chau chau\nhola DON don\ndon chau\nx",
+        "pg-1.txt": "hola hola\nchau, don; y\ny y y\nhola",
+        "pg-2.txt": "y\ndon don\nchau hola y\nzeta zeta",
+    }
+    for name, text in docs.items():
+        (tmp_path / name).write_text(text)
+    words = {name: re.findall(r"[^\W\d_]+", text.lower()) for name, text in docs.items()}
+    want_wc: dict[str, str] = {}
+    want_ii: dict[str, str] = {}
+    for w in sorted({w for ws in words.values() for w in ws}):
+        want_wc[w] = str(sum(ws.count(w) for ws in words.values()))
+        want_ii[w] = ",".join(sorted(n for n, ws in words.items() if w in ws))
+
+    old = spark.conf.get(BATCH_CONF)
+    spark.conf.set(BATCH_CONF, "2")
+    try:
+        df = read_text_corpus(spark, str(tmp_path / "*.txt"))
+        for job, want in ((WC_JOB, want_wc), (II_JOB, want_ii), (without_combiner(WC_JOB), want_wc)):
+            got = [tuple(r) for r in run_mapreduce(df, job).collect()]
+            assert got == sorted(want.items())
+    finally:
+        spark.conf.set(BATCH_CONF, old)
+
+
+def test_mr_null_key_is_one_group_with_and_without_combiner(spark):
+    def join_docs(key, values):
+        return ",".join(sorted(d for v in values for d in v.split(",")))
+
+    job = MapReduceJob(
+        map_fn=lambda doc, text: [(None if text == "x" else text, doc)],
+        reduce_fn=join_docs,
+        combine_fn=join_docs,
+    )
+    df = corpus(spark, [("d1", "x"), ("d2", "x"), ("d3", "y")])
+    for j in (job, without_combiner(job)):
+        got = [tuple(r) for r in run_mapreduce(df, j).collect()]
+        assert got == [(None, "d1,d2"), ("y", "d3")]
+
+
+def test_mr_plan_is_one_python_stage_per_side(spark):
+    # A per-group reduce (FlatMapGroupsInPandas) or a separate combine
+    # stage (a third MapInPandas) must not come back.
+    df = run_mapreduce(corpus(spark, ROWS), WC_JOB)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInPandas") == 2
 
 
 def test_mr_partitions_default_matches_reference_r2(spark):
@@ -92,3 +157,28 @@ def test_kv_text_sink_roundtrip(spark, tmp_path):
 
     back = {r.key: r.value for r in read_kv_text(spark, path).collect()}
     assert back == {r.key: r.value for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "key,value",
+    [
+        (None, "1"),
+        ("k", None),
+        ("two words", "1"),
+        ("line\nbreak", "1"),
+        ("k", "line\nbreak"),
+        ("k", "carriage\rreturn"),
+    ],
+    ids=["null_key", "null_value", "space_in_key", "newline_in_key", "newline_in_value", "cr_in_value"],
+)
+def test_kv_text_sink_rejects_rows_it_cannot_read_back(spark, tmp_path, key, value):
+    df = spark.createDataFrame([("ok", "1"), (key, value)], "key string, value string")
+    with pytest.raises(Exception, match="KV text sink"):
+        write_sorted_kv_text(df, str(tmp_path / "out"))
+
+
+def test_kv_text_sink_keeps_spaces_in_values(spark, tmp_path):
+    df = spark.createDataFrame([("k", "a b  c"), ("", "empty key")], "key string, value string")
+    path = str(tmp_path / "out")
+    write_sorted_kv_text(df, path)
+    assert sorted(map(tuple, read_kv_text(spark, path).collect())) == [("", "empty key"), ("k", "a b  c")]

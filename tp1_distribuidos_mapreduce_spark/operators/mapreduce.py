@@ -10,21 +10,27 @@ Here the same contract is a pair of Python callables executed with Arrow
 batching; everything between them — shuffle, grouping, barriers, retries,
 the whole of the reference's cmd/ tree — is Spark.
 
-Execution shape (the reference's exact 2-stage plan, §3.4):
+Execution shape (the reference's exact 2-stage plan, §3.4), one Python
+stage per side:
 
-    mapInPandas(map)  →  repartition(R, key)  →  applyInPandas(reduce)
+    mapInPandas(map [+ combine])  →  repartition(R, key)
+      →  sortWithinPartitions(key)  →  mapInPandas(reduce over key runs)
 
 Scale notes:
 - Map runs per Arrow batch, never whole-file-in-memory like worker.go:42-47.
-- ``applyInPandas`` materializes one group per executor — the same limit as
-  the reference's map[string][]string (worker.go:194-198). That is inherent
-  to the holistic ``Reduce(key, values)`` contract; jobs whose reduce is
-  algebraic should use the DataFrame API directly and get partial
-  aggregation for free (see operators/wordcount.py).
-- When ``combine_fn`` is provided (an associative pre-reduce), we run it
-  map-side via applyInPandas on the *input* partitioning before the
-  shuffle — the combiner the reference lacks (SURVEY.md §4.2) — so shuffle
-  volume drops from O(records) to O(distinct keys per partition).
+- The reduce walks the sorted partition and calls ``Reduce(key, values)``
+  once per run of equal keys, as the reference's reduce worker does after
+  its sort (Dean & Ghemawat, OSDI 2004, §3.1). There is no per-group
+  pandas frame: the per-group cost is one Python call. It holds one
+  group's values at a time — the same limit as the reference's
+  map[string][]string (worker.go:194-198), inherent to the holistic
+  ``Reduce(key, values)`` contract; jobs whose reduce is algebraic should
+  use the DataFrame API directly and get partial aggregation for free (see
+  operators/wordcount.py). A NULL key sorts into one run like any other.
+- When ``combine_fn`` is provided (an associative pre-reduce), the map
+  stage also runs it over each Arrow batch's output before the shuffle —
+  the combiner the reference lacks (SURVEY.md §4.2) — so shuffle volume
+  drops from O(records) to O(distinct keys per batch).
 """
 
 from __future__ import annotations
@@ -35,9 +41,9 @@ from dataclasses import dataclass
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 KV_SCHEMA = "key string, value string"
+KV_COLUMNS = ["key", "value"]
 
 MapFunc = Callable[[str, str], Iterable[tuple[str, str]]]
 ReduceFunc = Callable[[str, list[str]], str]
@@ -86,52 +92,44 @@ def run_mapreduce(
 
     def run_map(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
         for pdf in batches:
-            keys: list[str] = []
-            vals: list[str] = []
-            for doc, text in zip(pdf[doc_col], pdf[text_col]):
-                for k, v in map_fn(doc, text):
-                    keys.append(k)
-                    vals.append(v)
-            yield pd.DataFrame({"key": keys, "value": vals})
+            kvs = [kv for doc, text in zip(pdf[doc_col], pdf[text_col]) for kv in map_fn(doc, text)]
+            if combine_fn is not None:
+                # Map-side combine inside the same stage: one dict pass per
+                # Arrow batch. A dict keeps a None key as its own group, as
+                # the reduce side does.
+                groups: dict[str, list[str]] = {}
+                for k, v in kvs:
+                    groups.setdefault(k, []).append(v)
+                kvs = [(k, combine_fn(k, vs)) for k, vs in groups.items()]
+            yield pd.DataFrame(kvs, columns=KV_COLUMNS)
 
-    def make_reducer(fn: ReduceFunc) -> Callable[[pd.DataFrame], pd.DataFrame]:
-        def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-            key = pdf["key"].iloc[0]
-            return pd.DataFrame({"key": [key], "value": [fn(key, list(pdf["value"]))]})
-
-        return run_reduce
-
-    kv = corpus.select(doc_col, text_col).mapInPandas(run_map, schema=KV_SCHEMA)
-
-    if combine_fn is not None:
-        # Map-side combine, genuinely narrow: pandas-groupby inside each
-        # Arrow batch via mapInPandas. (A groupBy(partition_id, key).
-        # applyInPandas formulation still hash-exchanges on the group key —
-        # an extra full shuffle of the uncombined stream, the exact cost a
-        # combiner exists to avoid.)
-        def run_combine(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-            for pdf in batches:
-                rows = [
-                    (k, combine_fn(k, list(vs)))
-                    # dropna=False: pandas' default silently discards
-                    # null keys, which Spark's reduce-side groupBy keeps —
-                    # an optimization-only combiner must not change the
-                    # result set.
-                    for k, vs in pdf.groupby("key", sort=False, dropna=False)[
-                        "value"
-                    ]
-                ]
-                yield pd.DataFrame(rows, columns=["key", "value"])
-
-        kv = kv.mapInPandas(run_combine, schema=KV_SCHEMA)
+    def run_reduce(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        # Input is sorted by key, so each key is one run of rows. The open
+        # run is carried across Arrow batch boundaries and closed when the
+        # key changes or the input ends.
+        key, values = None, None
+        for pdf in batches:
+            out = []
+            for k, v in zip(pdf["key"], pdf["value"]):
+                if values is not None and k == key:
+                    values.append(v)
+                    continue
+                if values is not None:
+                    out.append((key, reduce_fn(key, values)))
+                key, values = k, [v]
+            yield pd.DataFrame(out, columns=KV_COLUMNS)
+        if values is not None:
+            yield pd.DataFrame([(key, reduce_fn(key, values))], columns=KV_COLUMNS)
 
     R = resolve_num_partitions(corpus.sparkSession, job)
-    reduced = (
-        kv.repartition(R, "key")
-        .groupBy("key")
-        .applyInPandas(make_reducer(reduce_fn), schema=KV_SCHEMA)
+    return (
+        corpus.select(doc_col, text_col)
+        .mapInPandas(run_map, schema=KV_SCHEMA)
+        .repartition(R, "key")
+        .sortWithinPartitions("key")
+        .mapInPandas(run_reduce, schema=KV_SCHEMA)
+        .orderBy("key")
     )
-    return reduced.orderBy("key")
 
 
 # --------------------------------------------------------------------------

@@ -26,11 +26,30 @@ from pyspark.sql import functions as F
 
 
 def write_sorted_kv_text(df: DataFrame, path: str, num_partitions: int = 2) -> None:
-    """Write (key, value) rows as R hash-partitioned, key-sorted text files."""
+    """Write (key, value) rows as R hash-partitioned, key-sorted text files.
+
+    A row that ``read_kv_text`` would read back differently fails the write
+    instead: a NULL key or value (``concat_ws`` drops it), a key holding a
+    space, or a line break in either. The guard is part of the projection,
+    so it costs no extra Spark job.
+    """
+    key, value = F.col("key"), F.col("value")
+
+    def fail(why: str):
+        shown = F.coalesce(key, F.lit("NULL"))
+        return F.raise_error(F.concat(F.lit(f"KV text sink: {why}; key="), shown))
+
+    line = (
+        F.when(key.isNull(), fail("NULL key"))
+        .when(value.isNull(), fail("NULL value"))
+        .when(key.contains(" "), fail("space in key"))
+        .when(key.rlike(r"[\r\n]") | value.rlike(r"[\r\n]"), fail("line break"))
+        .otherwise(F.concat_ws(" ", key, value))
+    )
     (
         df.repartition(num_partitions, "key")
         .sortWithinPartitions("key")
-        .select(F.concat_ws(" ", F.col("key"), F.col("value")).alias("line"))
+        .select(line.alias("line"))
         .write.mode("overwrite")
         .text(path)
     )
@@ -39,7 +58,8 @@ def write_sorted_kv_text(df: DataFrame, path: str, num_partitions: int = 2) -> N
 def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
     """Read the sink format back into (key string, value string) rows —
     the reference's intermediate/output scan (worker.go:142-159), with the
-    same first-space split semantics (value may contain no spaces)."""
+    same first-space split semantics (the value may hold spaces, the key
+    may not)."""
     lines = spark.read.text(path).where(F.col("value") != "")
     return lines.select(
         F.substring_index("value", " ", 1).alias("key"),
