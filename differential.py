@@ -3,13 +3,12 @@ hash-compared against its DuckDB oracle at a chosen scale factor, written
 as a committed per-round artifact (DIFFERENTIAL_r{N}.json — VERDICT r12
 "Next round" #2).
 
-Why this exists: the driver's per-round correctness pass covers only the
-first 50 registry entries (the _WINDOW), so 3/4 of the oracled registry
-is re-proven each round only by builder-side runs that used to live in
-prose. This harness makes that compensating signal a machine-checkable
-artifact: per-query rows/schema/hash matches at sf0.1 — the 32-partition
-scale where float partial-sum order actually varies — for EVERY oracled
-query, committed alongside BENCH_r{N}.json.
+Why this exists: tests/test_relational.py checks every oracled query
+against DuckDB on every pytest run, but only at sf0.001. This harness
+repeats the check at sf0.1 — the 32-partition scale where float
+partial-sum order actually varies — for EVERY oracled query, and
+records per-query rows/schema/hash matches as a committed artifact
+alongside BENCH_r{N}.json.
 
 Usage:
     python differential.py [OUT.json]

@@ -23,6 +23,8 @@ DOCS = {
     "pg-1.txt": "HOla don pepito,,\ny don JOSE!",
     "pg-2.txt": "hola don jose",
     "pg-3.txt": "chau chau\nchau",
+    # '+' in a file name; numerals (No/Nl) that are not letters
+    "pg+4.txt": "hola x² Ⅻ half½",
 }
 
 
@@ -30,7 +32,7 @@ def _write_corpus(tmp_path):
     d = tmp_path / "pg"
     d.mkdir()
     for name, text in DOCS.items():
-        (d / name).write_text(text)
+        (d / name).write_text(text, encoding="utf-8")
     return str(d / "*.txt")
 
 
@@ -86,6 +88,7 @@ def test_cli_ii_end_to_end(spark, tmp_path):
     # twice in pg-1 but is listed once), sorted, comma-joined
     assert got["don"] == "pg-1.txt,pg-2.txt"
     assert got["chau"] == "pg-3.txt"
+    assert got["hola"] == "pg+4.txt,pg-1.txt,pg-2.txt"
     native = {
         r.word: r.docs
         for r in inverted_index(read_text_corpus(spark, in_glob)).collect()

@@ -73,7 +73,8 @@ def test_mr_key_runs_straddling_arrow_batches(spark, tmp_path):
     }
     for name, text in docs.items():
         (tmp_path / name).write_text(text)
-    words = {name: re.findall(r"[^\W\d_]+", text.lower()) for name, text in docs.items()}
+    # The corpus is ASCII, so [a-z] runs are exactly its letter runs.
+    words = {name: re.findall(r"[a-z]+", text.lower()) for name, text in docs.items()}
     want_wc: dict[str, str] = {}
     want_ii: dict[str, str] = {}
     for w in sorted({w for ws in words.values() for w in ws}):

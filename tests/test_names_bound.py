@@ -22,7 +22,6 @@ FILES = sorted(
         *(ROOT / "tp1_distribuidos_mapreduce_spark").rglob("*.py"),
         ROOT / "bench.py",
         ROOT / "differential.py",
-        ROOT / "freshness.py",
     ]
 )
 ALWAYS_BOUND = set(dir(builtins)) | {

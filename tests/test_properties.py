@@ -5,16 +5,20 @@ generalized from fixed strings to generated ones."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from tp1_distribuidos_mapreduce_spark.operators.mapreduce import _wc_map
 from tp1_distribuidos_mapreduce_spark.operators.wordcount import word_count
 
-# text with letters (several scripts), digits, punctuation, whitespace
+# text with letters (several scripts), digits, numerals that are not
+# letters (No/Nl), a combining mark, punctuation, whitespace
 _ALPHABET = st.sampled_from(
-    list("abcXYZñÑüÜßλΩ日本語0123456789 \t\n.,;:!?¡¿'\"-_()[]{}@#$%&*+=/\\|~`^")
+    list("abcXYZñÑüÜßλΩ日本語0123456789²½Ⅻ\u0301 \t\n.,;:!?¡¿'\"-_()[]{}@#$%&*+=/\\|~`^")
 )
 # r12 suite-time rework: fewer hypothesis examples, each carrying MORE
 # docs (1 Spark job per example is the fixed cost; doc count is ~free),
@@ -51,6 +55,9 @@ def test_wordcount_matches_duckdb_on_arbitrary_text(spark, texts):
     )
     con.close()
     assert got == want
+    # The plugin tokenizer (pure Python) must split exactly as DuckDB does.
+    plugin = Counter(w for t in texts for w, _ in _wc_map("d", t))
+    assert set(plugin.items()) == want
 
 
 def test_bench_emits_driver_contract_json(spark, monkeypatch, capsys):
@@ -154,7 +161,6 @@ def test_repetition_fold_matches_python_reference(spark, texts):
     equal a plain Python Counter on arbitrary unicode text — the fold is
     the one piece of clever expression logic in the module."""
     import re
-    from collections import Counter
 
     from tp1_distribuidos_mapreduce_spark.operators.textclean import repetition_stats
 

@@ -86,19 +86,14 @@ def test_readme_query_counts_match_registry():
     assert int(m.group(2)) == len(registry.oracle_sql())
 
 
-def test_window_names_all_registered_and_sized():
-    """Round-2 regression guard: _WINDOW once carried names with no
-    implementation (ghost entries the driver silently skipped). Every
-    window name must resolve to a registered query, the window must be
-    exactly the driver's 50-slot cap with no duplicates, and every
-    oracle-backed query registered this round must appear in it or have
-    had a green row in a prior round (enforced socially — this test pins
-    the mechanical parts)."""
-    w = registry._WINDOW
-    assert len(w) == 50
-    assert len(set(w)) == 50
-    missing = [n for n in w if n not in registry.queries()]
-    assert not missing, f"ghost window entries: {missing}"
+def test_driver_order_starts_with_parity_queries_then_oracled():
+    """The driver compares the first 50 entries of queries() against
+    their oracles, so those entries must all carry one, and the five
+    reference-parity queries lead."""
+    names = list(registry.queries())
+    assert names[:5] == ["wc", "wc_textfiles", "ii", "mr_wc", "mr_ii"]
+    rows_only = [n for n in names[:50] if n not in registry.oracle_sql()]
+    assert not rows_only, f"rows-only queries in the first 50: {rows_only}"
 
 
 # The rows_only_results fixture lives in conftest.py (r15: shared with
@@ -179,26 +174,3 @@ def test_rows_only_reference_tier_is_complete():
         f"missing reference checks: {sorted(rows_only - checks)}; "
         f"stale check keys: {sorted(checks - rows_only)}"
     )
-
-
-def test_freshness_audit_passes(monkeypatch, capsys):
-    """freshness.py is the committed form of the judge's per-round
-    freshness recomputation (VERDICT r17 #1 'the judge will recompute
-    the freshness map'); its window-composition audit (50 unique
-    oracled slots, parity pins first, no oracled query unreachable by
-    union(driver rows, window)) must hold at every tree. Runs
-    IN-PROCESS (r19, VERDICT r18 suite-duration item): main(argv=[])
-    replaced the subprocess spawn — the CORRECTNESS glob is cwd-bound,
-    so chdir to the repo root for the call."""
-    import importlib.util
-    from pathlib import Path
-
-    repo = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "freshness", repo / "freshness.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    monkeypatch.chdir(repo)
-    rc = mod.main(argv=[])
-    assert rc == 0, capsys.readouterr().out

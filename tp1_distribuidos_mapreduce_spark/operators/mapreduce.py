@@ -139,14 +139,24 @@ def run_mapreduce(
 
 import re
 
-# Python re lacks \p{L}; [^\W\d_] == "word char minus digits/underscore"
-# == Unicode letters, matching Go's unicode.IsLetter tokenization.
+# Python re lacks \p{L}. [^\W\d_] is letters plus the non-decimal
+# numerals (No/Nl: '²', '½', 'Ⅻ'), so the rare run that is not all
+# letters is split again on its non-letters: str.isalpha is exactly
+# category L, as Go's unicode.IsLetter and the native [^\p{L}]+ split.
 _LETTER_RUN = re.compile(r"[^\W\d_]+", re.UNICODE)
+
+
+def _letter_runs(contents: str) -> Iterable[str]:
+    for w in _LETTER_RUN.findall(contents.lower()):
+        if w.isalpha():
+            yield w
+        else:
+            yield from "".join(c if c.isalpha() else " " for c in w).split()
 
 
 def _wc_map(doc_id: str, contents: str) -> Iterable[tuple[str, str]]:
     # plugins/wc/wc.go:11-21 — emit (word, "1") per token
-    return ((w, "1") for w in _LETTER_RUN.findall(contents.lower()))
+    return ((w, "1") for w in _letter_runs(contents))
 
 
 def _wc_reduce(key: str, values: list[str]) -> str:
@@ -157,7 +167,7 @@ def _wc_reduce(key: str, values: list[str]) -> str:
 
 def _ii_map(doc_id: str, contents: str) -> Iterable[tuple[str, str]]:
     # plugins/ii/ii.go:12-23 — emit (word, doc_id) per token
-    return ((w, str(doc_id)) for w in _LETTER_RUN.findall(contents.lower()))
+    return ((w, str(doc_id)) for w in _letter_runs(contents))
 
 
 # Internal combiner-partial delimiter: the final output comma-joins per

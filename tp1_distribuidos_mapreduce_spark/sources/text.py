@@ -26,11 +26,13 @@ def read_text_corpus(spark: SparkSession, path_or_glob: str) -> DataFrame:
     ``doc_id`` is the source file basename (SURVEY.md §7.4: the reference
     uses the full path, plugins/ii/ii.go:20, but ``input_file_name()``
     returns a URI — basename keeps doc IDs stable across filesystems).
-    The URI is percent-encoded, so the basename is url-decoded back to
-    the literal filename ('pg 1.txt', not 'pg%201.txt' — the reference
-    emits raw names). Caveat: files sharing a basename across
-    subdirectories of one glob map to the same doc_id and their postings
-    merge; pass a flat directory (as the reference's pg/ corpus is).
+    The URI is percent-encoded, so the basename's percent-escapes are
+    decoded back to the literal filename ('pg 1.txt', not 'pg%201.txt' —
+    the reference emits raw names). ``url_decode`` form-decodes, so a
+    literal '+' is escaped first or 'pg+1.txt' would read as 'pg 1.txt'.
+    Caveat: files sharing a basename across subdirectories of one glob
+    map to the same doc_id and their postings merge; pass a flat
+    directory (as the reference's pg/ corpus is).
     One row per line; a "document" is the union of its lines, which is
     exactly what a tokenizing query observes since newlines are non-letters.
     """
@@ -38,7 +40,11 @@ def read_text_corpus(spark: SparkSession, path_or_glob: str) -> DataFrame:
         spark.read.text(path_or_glob)
         .select(
             F.url_decode(
-                F.element_at(F.split(F.input_file_name(), "/"), -1)
+                F.replace(
+                    F.element_at(F.split(F.input_file_name(), "/"), -1),
+                    F.lit("+"),
+                    F.lit("%2B"),
+                )
             ).alias("doc_id"),
             F.col("value"),
         )
