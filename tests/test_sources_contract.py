@@ -632,3 +632,85 @@ def test_load_table_view_reuse_fresh_ids_and_regeneration(spark, tmp_path):
     os.utime(os.path.join(sf2, "nation.parquet"))
     again = load_table(spark, sf2, "nation")
     assert again.count() == 3 != n_first
+
+
+def _package_tmp_entries() -> set[str]:
+    import os
+
+    return {n for n in os.listdir("/tmp") if n.startswith(("tp1_spark_", "spark_graft_"))}
+
+
+def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
+    """An events parquet whose ts is timestamp[ns] (Spark's vectorized
+    reader rejects it) loads and streams as ts: timestamp, truncated
+    ns→µs, through the one-time converted copy; the legacy nanosAsLong
+    conf is restored after the conversion; a deleted copy is rebuilt on
+    the next load; and the test leaves no package entry behind in /tmp."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from tp1_distribuidos_mapreduce_spark.sources.tables import _NANOS_CONF
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999, 1_700_086_400_999_999_001]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns", tz="UTC")),
+                "user_id": pa.array([10, 11, 10], pa.int64()),
+                "event_type": ["view", "click", "view"],
+                "value": [1.5, 2.25, 3.0],
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    expected = sorted((i + 1, n // 1000) for i, n in enumerate(ns))
+    before = _package_tmp_entries()
+    prev_conf = spark.conf.get(_NANOS_CONF, None)
+
+    def micros(df):
+        return sorted(
+            (r[0], r[1]) for r in df.select("event_id", F.unix_micros("ts")).collect()
+        )
+
+    def streamed(tag):
+        sdf = stream_events(spark, str(tmp_path / "events.parquet"))
+        assert dict(sdf.dtypes)["ts"] == "timestamp"
+        name = f"nanos_{tag}"
+        q = (
+            sdf.writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{tag}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        return micros(spark.table(name))
+
+    try:
+        batch = load_table(spark, str(tmp_path), "events")
+        assert dict(batch.dtypes)["ts"] == "timestamp"
+        assert micros(batch) == expected
+        assert streamed("a") == expected
+        assert spark.conf.get(_NANOS_CONF, None) == prev_conf
+
+        copies = [
+            os.path.join("/tmp", n)
+            for n in _package_tmp_entries() - before
+            if "events_us_" in n and os.path.isdir(os.path.join("/tmp", n))
+        ]
+        assert len(copies) == 1, copies
+        shutil.rmtree(copies[0])
+        assert streamed("b") == expected  # rebuilt on the next load
+        assert os.path.exists(os.path.join(copies[0], "_SUCCESS"))
+        assert spark.conf.get(_NANOS_CONF, None) == prev_conf
+    finally:
+        for n in _package_tmp_entries() - before:
+            if "events_us_" in n:
+                p = os.path.join("/tmp", n)
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    assert _package_tmp_entries() == before
