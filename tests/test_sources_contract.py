@@ -652,6 +652,11 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from tp1_distribuidos_mapreduce_spark.sources.artifacts import (
+        artifact_path,
+        content_tag,
+        lock_path,
+    )
     from tp1_distribuidos_mapreduce_spark.sources.tables import _NANOS_CONF
 
     ns = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999, 1_700_086_400_999_999_001]
@@ -668,6 +673,8 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
         ),
         tmp_path / "events.parquet",
     )
+    source = str(tmp_path / "events.parquet")
+    copy = artifact_path(f"events_us_{content_tag(source, 'us-v1')}")
     expected = sorted((i + 1, n // 1000) for i, n in enumerate(ns))
     before = _package_tmp_entries()
     prev_conf = spark.conf.get(_NANOS_CONF, None)
@@ -678,7 +685,7 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
         )
 
     def streamed(tag):
-        sdf = stream_events(spark, str(tmp_path / "events.parquet"))
+        sdf = stream_events(spark, source)
         assert dict(sdf.dtypes)["ts"] == "timestamp"
         name = f"nanos_{tag}"
         q = (
@@ -698,19 +705,16 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
         assert streamed("a") == expected
         assert spark.conf.get(_NANOS_CONF, None) == prev_conf
 
-        copies = [
-            os.path.join("/tmp", n)
-            for n in _package_tmp_entries() - before
-            if "events_us_" in n and os.path.isdir(os.path.join("/tmp", n))
-        ]
-        assert len(copies) == 1, copies
-        shutil.rmtree(copies[0])
+        assert _package_tmp_entries() - before == {
+            os.path.basename(copy),
+            os.path.basename(lock_path(copy)),
+        }
+        shutil.rmtree(copy)
         assert streamed("b") == expected  # rebuilt on the next load
-        assert os.path.exists(os.path.join(copies[0], "_SUCCESS"))
+        assert os.path.exists(os.path.join(copy, "_SUCCESS"))
         assert spark.conf.get(_NANOS_CONF, None) == prev_conf
     finally:
-        for n in _package_tmp_entries() - before:
-            if "events_us_" in n:
-                p = os.path.join("/tmp", n)
-                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+        shutil.rmtree(copy, ignore_errors=True)
+        if os.path.exists(lock_path(copy)):
+            os.remove(lock_path(copy))
     assert _package_tmp_entries() == before

@@ -56,6 +56,21 @@ def events_dir(spark, tmp_path_factory):
     return d
 
 
+def pointer_without_schema(spark, state):
+    """The CURRENT pointer minus its schema, after checking that schema is
+    the committed version's as the parquet reader infers it (every field
+    nullable)."""
+    from pyspark.sql.types import StructType
+
+    from tp1_distribuidos_mapreduce_spark.streaming import sinks as SK
+
+    ptr = SK._read_pointer(state)
+    schema = StructType.fromJson(ptr.pop("schema"))
+    assert schema == spark.read.parquet(f"{state}/{ptr['dir']}").schema
+    assert all(f.nullable for f in schema)
+    return ptr
+
+
 def norm(rows):
     return sorted(tuple(r) for r in rows)
 
@@ -768,8 +783,7 @@ def test_stream_hll_replayed_batch_fenced_and_harmless(spark, tmp_path):
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
     SK.fold_batch(ev, 0, state, SK.HLL)  # replayed epoch — fenced no-op
-    ptr = SK._read_pointer(state)
-    assert ptr == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state) == {"dir": "v0", "batch_id": 0}
     after_replay = sorted(
         (str(r["day"]), tuple(r["regs"]))
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -820,7 +834,7 @@ def test_stream_kmv_replayed_batch_fenced_and_harmless(spark, tmp_path):
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
     SK.fold_batch(ev, 0, state, SK.KMV)
-    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["event_type"], tuple(r["sk"]))
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -874,7 +888,7 @@ def test_stream_dd_replayed_batch_fenced(spark, tmp_path):
         (r["idx"], r["cnt"]) for r in spark.read.parquet(f"{state}/v0").collect()
     )
     SK.fold_batch(ev, 0, state, SK.DD)  # replay: fenced, NOT re-added
-    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["idx"], r["cnt"]) for r in spark.read.parquet(f"{state}/v0").collect()
     )
@@ -932,7 +946,7 @@ def test_stream_dd_by_type_equal_batch_build_exactly(spark, tmp_path):
         for r in spark.read.parquet(f"{state2}/v0").collect()
     )
     SK.fold_batch(small, 0, state2, SK.DD_BY_TYPE)  # replay: fenced, NOT re-added
-    assert SK._read_pointer(state2) == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state2) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["event_type"], r["idx"], r["cnt"])
         for r in spark.read.parquet(f"{state2}/v0").collect()
@@ -998,7 +1012,7 @@ def test_stream_cms_replayed_batch_fenced(spark, tmp_path):
         for r in spark.read.parquet(f"{state}/v0").collect()
     )
     SK.fold_batch(docs, 0, state, SK.CMS)  # replay: fenced, NOT re-added
-    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state) == {"dir": "v0", "batch_id": 0}
     again = sorted(
         (r["d"], r["pos"], r["n"])
         for r in spark.read.parquet(f"{state}/v0").collect()
@@ -1083,7 +1097,7 @@ def test_stream_bloom_refold_idempotent_past_fence(spark, tmp_path):
     assert first  # non-vacuous
 
     SK.fold_batch(keys, 0, state, SK.bloom("o_orderkey"))  # replay: fenced no-op
-    assert SK._read_pointer(state) == {"dir": "v0", "batch_id": 0}
+    assert pointer_without_schema(spark, state) == {"dir": "v0", "batch_id": 0}
     assert sorted(
         (r["word"], r["bits"])
         for r in spark.read.parquet(f"{state}/v0").collect()

@@ -2,10 +2,10 @@
 PageRank over the part co-purchase graph — the influence/centrality
 measure a recommender or curation pipeline runs over an item graph.
 
-Graph construction reuses the market-basket shape (plans/retail.py):
-per-order distinct part sets built with ONE groupBy (basket sizes are
-bounded), pairs expanded IN-ROW, deduplicated to an undirected edge
-list. PageRank then iterates rank ← (1−d)/N + d·Σ rank/out_degree over
+Graph construction reuses the market-basket shape (plans/retail.py
+part_baskets): per-order distinct part sets built with ONE groupBy
+(basket sizes are bounded), pairs expanded IN-ROW, deduplicated to an
+undirected edge list. PageRank then iterates rank ← (1−d)/N + d·Σ rank/out_degree over
 the edge list:
 
 - Each round is one edge⨝ranks join (ranks are node-cardinality; edges
@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.retail import part_baskets
 from .dedup import _pairs_within
 
 PAGERANK_DAMPING = 0.85
@@ -61,12 +62,7 @@ def undirected_copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Distinct undirected co-purchase edges with src < dst (one row per
     edge): the basket build → in-row pair expansion → distinct pipeline.
     Lazy — callers decide whether to checkpoint."""
-    baskets = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .where(F.size("parts") >= 2)
-    )
+    baskets = part_baskets(lineitem).where(F.size("parts") >= 2)
     return (
         baskets.select(F.explode(_pairs_within("parts")).alias("p"))
         .select(F.col("p.a").alias("src"), F.col("p.b").alias("dst"))
@@ -212,14 +208,10 @@ def copurchase_jaccard(lineitem: DataFrame, top_k: int = 50) -> DataFrame:
     Jaccard itself is an exact integer ratio evaluated identically by
     both engines, so ordering and rounding are deterministic.
     """
-    baskets = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        # NOT checkpointed (r21 A/B: 1.83→2.15s) — the two consumers
-        # evaluate as parallel subtrees of one job at this scale; see
-        # copurchase_edges.
-    )
+    # NOT checkpointed (r21 A/B: 1.83→2.15s) — the two consumers
+    # evaluate as parallel subtrees of one job at this scale; see
+    # copurchase_edges.
+    baskets = part_baskets(lineitem)
     pair_counts = (
         baskets.where(F.size("parts") >= 2)
         .select(F.explode(_pairs_within("parts")).alias("p"))

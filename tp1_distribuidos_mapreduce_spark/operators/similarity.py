@@ -394,15 +394,14 @@ def ensure_ivf_index(
     ensure_bucketed_fixture: catalog hit → metadata-only re-register →
     full build. Returns (inverted_table_name, centroids_path).
     """
-    from ..sources.artifacts import pathlock
-    from ..sources.tables import fixture_cache_tag
+    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
 
     tag = fixture_cache_tag(
         sf_dir, "embeddings", "ivf", IVF_INDEX_VERSION, n_lists, sample_size, num_buckets
     )
 
     table = f"ivf_inverted_{tag}"
-    base = f"/tmp/tp1_spark_ivf_{tag}"
+    base = artifact_path(f"ivf_{tag}")
     cpath = f"{base}/centroids"
     ipath = f"{base}/inverted"
     with pathlock(base):
@@ -624,8 +623,7 @@ def ensure_ivf_pq_index(
     Content-addressed and three-tier cached like ensure_ivf_index.
     Returns (inverted_table_name, index_base_path).
     """
-    from ..sources.artifacts import pathlock
-    from ..sources.tables import fixture_cache_tag
+    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
 
     tag = fixture_cache_tag(
         sf_dir, "embeddings", "ivfpq", IVF_PQ_INDEX_VERSION,
@@ -633,7 +631,7 @@ def ensure_ivf_pq_index(
     )
 
     table = f"ivfpq_inverted_{tag}"
-    base = f"/tmp/tp1_spark_ivfpq_{tag}"
+    base = artifact_path(f"ivfpq_{tag}")
     cpath, bpath, ipath = f"{base}/centroids", f"{base}/codebooks", f"{base}/inverted"
     with pathlock(base):
         return _ensure_ivf_pq_index_locked(

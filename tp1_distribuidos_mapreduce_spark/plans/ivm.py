@@ -10,13 +10,11 @@ cents convert to a 2dp double exactly once at the output edge.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.artifacts import build_once
-from ..sources.tables import fixture_cache_tag, load_table
+from ..sources.artifacts import fixture_artifact
+from ..sources.tables import load_table
 
 # Deterministic cutoff: orders strictly before it are the "already
 # aggregated" base state; orders on/after it are the incoming delta.
@@ -28,10 +26,8 @@ def _base_state_path(spark: SparkSession, sf_dir: str) -> str:
     /tmp parquet once (content-addressed), exactly as a production IVM
     pipeline persists it — the incremental query READS this table, it
     never recomputes history."""
-    tag = fixture_cache_tag(sf_dir, "orders", "ivm-base-v1", IVM_CUTOFF)
-    out = f"/tmp/tp1_spark_ivm_base_{tag}"
 
-    def _build() -> None:
+    def _build(out: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         (
             orders.where(F.col("o_orderdate") < F.lit(IVM_CUTOFF).cast("timestamp"))
@@ -46,8 +42,9 @@ def _base_state_path(spark: SparkSession, sf_dir: str) -> str:
             .parquet(out)
         )
 
-    build_once(out, _build)
-    return out
+    return fixture_artifact(
+        "ivm_base", sf_dir, "orders", "ivm-base-v1", IVM_CUTOFF, build=_build
+    )
 
 
 def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,19 @@ RFM_QUANTILES = 5
 BASKET_TOP_K = 25
 
 
+def part_baskets(lineitem: DataFrame) -> DataFrame:
+    """One row per order: (l_orderkey, parts), the sorted distinct part
+    keys it contains — the basket every co-purchase query starts from
+    (here and in operators/graph.py). ONE groupBy; order sizes are
+    bounded (TPC-H orders carry <= 7 lineitems), so the collect_set
+    state is bounded."""
+    return (
+        lineitem.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
+    )
+
+
 def rfm_segmentation(orders: DataFrame) -> DataFrame:
     """RFM grid: customers quintiled by Recency (days since last order,
     vs the corpus max date), Frequency (order count), and Monetary
@@ -119,21 +132,14 @@ ORDER BY r_quintile, f_quintile
 def market_basket_pairs(lineitem: DataFrame, top_k: int = BASKET_TOP_K) -> DataFrame:
     """Top co-purchased part pairs: how many orders contain both parts.
 
-    Plan: per-order distinct part sets built with ONE groupBy (order
-    sizes are bounded — TPC-H orders carry <= 7 lineitems — so the
-    collect_set state is bounded), then IN-ROW pair expansion via the
-    same `_pairs_within` expression the shared-span dedup uses, then a
-    pair-keyed count. The naive lineitem-self-join-on-orderkey shuffles
+    Plan: per-order distinct part sets (part_baskets), then IN-ROW pair
+    expansion via the same `_pairs_within` expression the shared-span
+    dedup uses, then a pair-keyed count. The naive lineitem-self-join-on-orderkey shuffles
     |lineitem| rows twice and fans out quadratically on hot orders;
     this shape shuffles each lineitem once and expands pairs inside the
     row, which is how you'd mine baskets at 100 TB.
     """
-    baskets = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        .where(F.size("parts") >= 2)
-    )
+    baskets = part_baskets(lineitem).where(F.size("parts") >= 2)
     pairs = baskets.select(F.explode(_pairs_within("parts")).alias("p"))
     return (
         pairs.groupBy(
@@ -526,16 +532,12 @@ def association_rules(lineitem: DataFrame, min_support: int = RULE_MIN_SUPPORT) 
     cross-engine; ordering is by exact integers (n_ab) with a pair
     tiebreak, never by a float.
     """
-    baskets = (
-        lineitem.select("l_orderkey", "l_partkey")
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
-        # NOT checkpointed (r21 A/B: 1.82→2.25s with a checkpoint) — the
-        # three consumers evaluate as parallel subtrees of one job at
-        # this scale, so the duplicate collect_set work hides in idle
-        # cores while an eager checkpoint serializes; see
-        # copurchase_edges for the same measured trade.
-    )
+    # NOT checkpointed (r21 A/B: 1.82→2.25s with a checkpoint) — the
+    # three consumers evaluate as parallel subtrees of one job at this
+    # scale, so the duplicate collect_set work hides in idle cores while
+    # an eager checkpoint serializes; see copurchase_edges for the same
+    # measured trade.
+    baskets = part_baskets(lineitem)
     n_baskets = baskets.agg(F.count("*").cast("long").alias("n_total"))
     pair_counts = (
         baskets.where(F.size("parts") >= 2)

@@ -10,7 +10,6 @@ value-hashing, so names must line up exactly.
 
 from __future__ import annotations
 
-import itertools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,10 +34,6 @@ from .functions.tokenize import TOKEN_SPLIT_REGEX as _TOK  # noqa: E402
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# Monotonic per-process generation counter for the streaming fold
-# queries' work dirs (_stream_fold_query).
-_STREAM_Q_SEQ = itertools.count()
-
 
 def _stream_fold_query(
     spark: SparkSession,
@@ -53,28 +48,22 @@ def _stream_fold_query(
     ``read(spark, state_path)``.
 
     The streaming file source needs a directory, so the table is landed
-    once as a 4-file dir (content-addressed, build_once) and drained two
-    files per micro-batch: every drain folds more than one batch. Each
-    call folds into its own ``…_{pid}_g{n}`` work dir: the returned frame
-    is lazy over that dir, so a later call must not wipe it (ADVICE r12),
-    and the pid keeps concurrent processes apart."""
-    import os
-    import shutil
+    once as a 4-file dir (content-addressed) and drained two files per
+    micro-batch: every drain folds more than one batch. Each call folds
+    into its own per-process scratch dir, removed at exit: the returned
+    frame is lazy over that dir, so a later call must not wipe it (ADVICE
+    r12), and the pid keeps concurrent processes apart."""
+    from .sources.artifacts import fixture_artifact, scratch_dir
+    from .sources.tables import stream_events, stream_parquet
 
-    from .sources.artifacts import build_once
-    from .sources.tables import fixture_cache_tag, stream_events, stream_parquet
-
-    tag = fixture_cache_tag(sf_dir, table, "stream-src-v1")
-    src = f"/tmp/tp1_spark_stream_{table}_{tag}"
-    build_once(
-        src,
-        lambda: load_table(spark, sf_dir, table)
+    src = fixture_artifact(
+        f"stream_{table}", sf_dir, table, "stream-src-v1",
+        build=lambda out: load_table(spark, sf_dir, table)
         .repartition(4)
         .write.mode("overwrite")
-        .parquet(src),
+        .parquet(out),
     )
-    work = f"/tmp/tp1_spark_fold_q_{tag}_{os.getpid()}_g{next(_STREAM_Q_SEQ)}"
-    shutil.rmtree(work, ignore_errors=True)  # a reused pid's stale checkpoint
+    work = scratch_dir(f"fold_q_{table}")
     stream = (stream_events if table == "events" else stream_parquet)(
         spark, src, max_files_per_trigger=2
     )

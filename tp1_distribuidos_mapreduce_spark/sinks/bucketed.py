@@ -68,20 +68,19 @@ def ensure_bucketed_fixture(
     """
     import os
 
-    from ..sources.tables import fixture_cache_tag, load_table
+    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
+    from ..sources.tables import load_table
 
     # Content-addressed on the source parquet AND the bucket spec: a
     # regenerated fixture or a changed (cols, buckets, sort) spec yields a
     # new tag → new path + table, so the metadata-only re-register below
     # can never declare a bucket layout the on-disk files don't have
     # (Spark would trust it, elide the Exchange, and silently drop rows).
-    from ..sources.artifacts import pathlock
-
     tag = fixture_cache_tag(
         sf_dir, source, list(bucket_cols), num_buckets, list(sort_cols or [])
     )
     table = f"{source}_bucketed_{tag}"
-    path = f"/tmp/tp1_spark_bucketed_{tag}/{source}"
+    path = os.path.join(artifact_path(f"bucketed_{tag}"), source)
     # The whole check-register-or-write sequence is a critical section:
     # concurrent queries sharing the layout must not double-register the
     # catalog table or double-write the bucket files.

@@ -138,16 +138,15 @@ def ensure_published_events(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent manifest-committed /tmp publish of the events fixture
     (content-addressed on the fixture bytes; the committed manifest is
     the build_once marker — write_published's own commit point)."""
-    from ..sources.artifacts import build_once
-    from ..sources.tables import fixture_cache_tag, load_table
+    from ..sources.artifacts import fixture_artifact
+    from ..sources.tables import load_table
 
-    tag = fixture_cache_tag(sf_dir, "events", "published-v1")
-    path = f"/tmp/tp1_spark_published_{tag}/events"
-
-    def _build() -> None:
-        write_published(load_table(spark, sf_dir, "events"), path)
-
-    return build_once(path, _build, marker=MANIFEST_NAME)
+    return fixture_artifact(
+        "published", sf_dir, "events", "published-v1",
+        build=lambda path: write_published(load_table(spark, sf_dir, "events"), path),
+        leaf="events",
+        marker=MANIFEST_NAME,
+    )
 
 
 def published_events_census(spark: SparkSession, sf_dir: str) -> DataFrame:

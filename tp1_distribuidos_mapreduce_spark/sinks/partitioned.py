@@ -15,8 +15,6 @@ untouched-partition files.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,19 +41,19 @@ def ensure_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """Idempotent /tmp copy of `events` partitioned by event_date
     (content-addressed on the fixture bytes, sinks/bucketed.py
     discipline)."""
-    from ..sources.artifacts import build_once
-    from ..sources.tables import fixture_cache_tag, load_table
+    from ..sources.artifacts import fixture_artifact
+    from ..sources.tables import load_table
 
-    tag = fixture_cache_tag(sf_dir, "events", ["event_date"], 0, 0)
-    path = f"/tmp/tp1_spark_partitioned_{tag}/events"
-
-    def _build() -> None:
+    def _build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts")
         )
         write_partitioned(ev, path, ["event_date"])
 
-    return build_once(path, _build)
+    return fixture_artifact(
+        "partitioned", sf_dir, "events", ["event_date"], 0, 0,
+        build=_build, leaf="events",
+    )
 
 
 PRUNE_DATE = "2024-01-15"  # mid-range; present at every fixture SF

@@ -117,18 +117,15 @@ def ensure_zordered_fixture(
     layout spec (sinks/bucketed.py discipline): a regenerated fixture or a
     changed (cols, files, bits) spec gets a fresh path, never a stale
     _SUCCESS-marker reuse."""
-    import os
+    from ..sources.artifacts import fixture_artifact
+    from ..sources.tables import load_table
 
-    from ..sources.artifacts import build_once
-    from ..sources.tables import fixture_cache_tag, load_table
-
-    tag = fixture_cache_tag(sf_dir, source, list(zcols), num_files, bits)
-    path = f"/tmp/tp1_spark_zorder_{tag}/{source}"
-    return build_once(
-        path,
-        lambda: write_zordered(
+    return fixture_artifact(
+        "zorder", sf_dir, source, list(zcols), num_files, bits,
+        build=lambda path: write_zordered(
             load_table(spark, sf_dir, source), path, zcols, num_files, bits
         ),
+        leaf=source,
     )
 
 

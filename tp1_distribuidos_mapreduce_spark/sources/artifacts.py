@@ -1,34 +1,97 @@
-"""Thread- and process-safe build-once discipline for derived /tmp
-artifacts (text corpora, format twins, persisted ANN indexes, layout
-materializations).
+"""Where fixture-derived state lives, what it is called, and how it is
+built once: text corpora, format twins, layout copies, persisted ANN
+indexes, the µs events copy, stream sources and per-process fold work
+dirs.
 
-Every derived artifact in the engine is content-addressed (see
-``fixture_cache_tag``) and gated on a ``_SUCCESS`` marker. The naive
-check-then-build is racy under CONCURRENT queries sharing an artifact —
-two callers both see the marker missing and both write (Spark's
-mode("overwrite") makes this corrupting, not just wasteful: interleaved
-delete/commit can leave a directory mixing both runs' part files under a
-_SUCCESS marker). ``build_once`` closes both races:
+Every artifact is a ``/tmp/tp1_spark_<name>`` path (``artifact_path``,
+the one owner of the root and the prefix). Derived artifacts are
+content-addressed (``fixture_cache_tag``) and gated on a marker file:
+a regenerated fixture or a changed derivation spec gets a fresh path,
+never a stale reuse. The naive check-then-build is racy under
+CONCURRENT queries sharing an artifact — two callers both see the marker
+missing and both write (Spark's mode("overwrite") makes this corrupting,
+not just wasteful: interleaved delete/commit can leave a directory
+mixing both runs' part files under a _SUCCESS marker). ``pathlock``
+closes both races:
 
-* within a process, a per-path lock table serializes builders and
-  re-checks the marker under the lock;
-* across processes, an advisory ``flock`` on a sibling ``.lock`` file
-  serializes builders machine-wide (the scope of /tmp artifacts). flock
-  is released automatically when the holder dies, so a crashed builder
-  never wedges the path — the next caller re-checks the marker and
-  rebuilds.
+* within a process, a per-key lock table serializes builders;
+* across processes, an advisory ``flock`` on ``/tmp/tp1_spark_lock_<md5>.lock``
+  serializes builders machine-wide (the scope of /tmp artifacts). The
+  lock file sits under the artifacts' own root, so every process locks
+  the same file whatever its TMPDIR. flock is released automatically
+  when the holder dies, so a crashed builder never wedges the path — the
+  next caller re-checks the marker and rebuilds.
+
+``build_once`` is the marker double-check inside that lock.
 """
 
 from __future__ import annotations
 
+import atexit
 import fcntl
+import hashlib
+import itertools
 import os
+import shutil
 import threading
 from collections.abc import Callable
 from contextlib import contextmanager
 
 _LOCKS: dict[str, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
+# Generation counter for this process's scratch dirs (scratch_dir).
+_SCRATCH_SEQ = itertools.count()
+
+
+def artifact_path(name: str) -> str:
+    """``/tmp/tp1_spark_<name>``: the root and prefix of every artifact."""
+    return f"/tmp/tp1_spark_{name}"
+
+
+def content_tag(path: str, *spec: object) -> str:
+    """Content-addressed tag: md5 over ``path``'s path, size and mtime_ns
+    plus the derivation ``spec``. A regenerated source (same path, new
+    bytes) or a changed spec produces a NEW tag — and therefore a fresh
+    artifact path — instead of a stale reuse: the failure mode this
+    prevents is a _SUCCESS-marker cache serving old data while the DuckDB
+    oracle reads the fresh parquet."""
+    st = os.stat(path)
+    key = "|".join([path, str(st.st_size), str(st.st_mtime_ns), *map(str, spec)])
+    return hashlib.md5(key.encode()).hexdigest()[:12]
+
+
+def fixture_cache_tag(sf_dir: str, name: str, *spec: object) -> str:
+    """``content_tag`` of fixture table ``name``'s parquet."""
+    return content_tag(os.path.join(sf_dir, f"{name}.parquet"), *spec)
+
+
+def fixture_artifact(
+    kind: str,
+    sf_dir: str,
+    table: str,
+    *spec: object,
+    build: Callable[[str], None],
+    leaf: str = "",
+    marker: str = "_SUCCESS",
+) -> str:
+    """Build the artifact derived from fixture ``table`` at most once and
+    return its path, ``/tmp/tp1_spark_<kind>_<tag>[/<leaf>]``, where the
+    tag is ``fixture_cache_tag(sf_dir, table, *spec)``. ``build(out)``
+    writes the artifact and its ``marker``."""
+    out = artifact_path(f"{kind}_{fixture_cache_tag(sf_dir, table, *spec)}")
+    if leaf:
+        out = os.path.join(out, leaf)
+    return build_once(out, lambda: build(out), marker)
+
+
+def scratch_dir(name: str) -> str:
+    """A fresh work dir for this process, ``/tmp/tp1_spark_<name>_<pid>_g<n>``,
+    removed when the interpreter exits. Frames read from it stay lazy over
+    it, so it lives as long as the process."""
+    path = artifact_path(f"{name}_{os.getpid()}_g{next(_SCRATCH_SEQ)}")
+    shutil.rmtree(path, ignore_errors=True)  # a reused pid's stale dir
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def _lock_for(key: str) -> threading.Lock:
@@ -36,25 +99,19 @@ def _lock_for(key: str) -> threading.Lock:
         return _LOCKS.setdefault(key, threading.Lock())
 
 
+def lock_path(key: str) -> str:
+    """The cross-process lock file ``pathlock(key)`` flocks."""
+    return artifact_path(f"lock_{hashlib.md5(key.encode()).hexdigest()}.lock")
+
+
 @contextmanager
 def pathlock(key: str):
-    """Per-key critical section for builders whose check-then-act spans
-    more than a marker file (e.g. catalog registration plus layout
-    write) — thread-safe within the process AND flock-serialized across
-    processes (same rationale as build_once: two processes running
-    mode('overwrite') to one /tmp layout path can interleave
-    delete/commit into a corrupt mixed directory). The lockfile lives in
-    the temp root so it works for keys whose directory does not exist
-    yet."""
-    import hashlib
-    import tempfile
-
+    """Per-key critical section, thread-safe within the process AND
+    flock-serialized across processes. Used directly by builders whose
+    check-then-act spans more than a marker file (e.g. catalog
+    registration plus layout write)."""
     with _lock_for(key):
-        lockpath = os.path.join(
-            tempfile.gettempdir(),
-            f"tp1_pathlock_{hashlib.md5(key.encode()).hexdigest()}.lock",
-        )
-        with open(lockpath, "w") as lf:
+        with open(lock_path(key), "w") as lf:
             fcntl.flock(lf, fcntl.LOCK_EX)
             try:
                 yield
@@ -65,23 +122,12 @@ def pathlock(key: str):
 def build_once(
     out: str, build: Callable[[], None], marker: str = "_SUCCESS"
 ) -> str:
-    """Run ``build()`` exactly once for ``out`` (double-checked on the
-    marker file under a per-path thread lock AND a cross-process flock)
-    and return ``out``."""
+    """Run ``build()`` exactly once for ``out`` (the marker file is
+    re-checked inside ``pathlock(out)``) and return ``out``."""
     mark = os.path.join(out, marker)
     if os.path.exists(mark):
         return out
-    with _lock_for(out):
-        if os.path.exists(mark):
-            return out
-        parent = os.path.dirname(out.rstrip("/")) or "."
-        os.makedirs(parent, exist_ok=True)
-        lockpath = out.rstrip("/") + ".build_lock"
-        with open(lockpath, "w") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            try:
-                if not os.path.exists(mark):
-                    build()
-            finally:
-                fcntl.flock(lf, fcntl.LOCK_UN)
+    with pathlock(out):
+        if not os.path.exists(mark):
+            build()
     return out

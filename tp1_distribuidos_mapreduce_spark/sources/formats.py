@@ -5,9 +5,9 @@ mergeSchema — what a long-lived 100 TB table actually looks like after
 a column was added mid-history).
 
 Same /tmp discipline as sources/text.py's raw-text corpus: artifacts
-are content-addressed via fixture_cache_tag (a regenerated fixture or a
-changed derivation spec gets a fresh path, never a stale-cache reuse),
-written once, idempotent via the _SUCCESS marker.
+are built through sources/artifacts.py fixture_artifact, content-addressed
+(a regenerated fixture or a changed derivation spec gets a fresh path,
+never a stale-cache reuse), written once, idempotent via the marker.
 """
 
 from __future__ import annotations
@@ -17,8 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .artifacts import build_once
-from .tables import fixture_cache_tag, load_table
+from .artifacts import fixture_artifact
+from .tables import load_table
 
 
 def lineitem_as_orc(spark: SparkSession, sf_dir: str) -> str:
@@ -27,11 +27,9 @@ def lineitem_as_orc(spark: SparkSession, sf_dir: str) -> str:
     engine's ORC scan path end-to-end under the driver's oracle gate —
     the oracle keeps reading the parquet twin, so any value or type
     drift between the two format paths fails the differential."""
-    tag = fixture_cache_tag(sf_dir, "lineitem", "orc-v1")
-    out = f"/tmp/tp1_spark_orc_lineitem_{tag}"
-    return build_once(
-        out,
-        lambda: load_table(spark, sf_dir, "lineitem")
+    return fixture_artifact(
+        "orc_lineitem", sf_dir, "lineitem", "orc-v1",
+        build=lambda out: load_table(spark, sf_dir, "lineitem")
         .write.mode("overwrite")
         .orc(out),
     )
@@ -56,17 +54,18 @@ def orders_evolved_batches(spark: SparkSession, sf_dir: str) -> str:
     surface the missing column as NULL); the census query quantifies
     exactly what a backfill would need to touch.
     """
-    tag = fixture_cache_tag(sf_dir, "orders", "evolved-v1")
-    out = f"/tmp/tp1_spark_evolved_orders_{tag}"
 
-    def _build() -> None:
+    def _build(out: str) -> None:
         orders = load_table(spark, sf_dir, "orders")
         v1 = orders.where(F.col("o_orderkey") % 2 == 0).drop("o_orderpriority")
         v2 = orders.where(F.col("o_orderkey") % 2 == 1)
         v1.write.mode("overwrite").parquet(os.path.join(out, "batch=v1"))
         v2.write.mode("overwrite").parquet(os.path.join(out, "batch=v2"))
 
-    return build_once(out, _build, marker=os.path.join("batch=v2", "_SUCCESS"))
+    return fixture_artifact(
+        "evolved_orders", sf_dir, "orders", "evolved-v1",
+        build=_build, marker=os.path.join("batch=v2", "_SUCCESS"),
+    )
 
 
 def schema_evolution_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,10 +120,8 @@ def orders_widened_batches(spark: SparkSession, sf_dir: str) -> str:
     values survive the widening bit-exactly against the all-BIGINT
     oracle.
     """
-    tag = fixture_cache_tag(sf_dir, "orders", "widened-v1")
-    out = f"/tmp/tp1_spark_widened_orders_{tag}"
 
-    def _build() -> None:
+    def _build(out: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice"
         )
@@ -135,7 +132,10 @@ def orders_widened_batches(spark: SparkSession, sf_dir: str) -> str:
         v1.write.mode("overwrite").parquet(os.path.join(out, "batch=v1"))
         v2.write.mode("overwrite").parquet(os.path.join(out, "batch=v2"))
 
-    return build_once(out, _build, marker=os.path.join("batch=v2", "_SUCCESS"))
+    return fixture_artifact(
+        "widened_orders", sf_dir, "orders", "widened-v1",
+        build=_build, marker=os.path.join("batch=v2", "_SUCCESS"),
+    )
 
 
 WIDENED_ORDERS_SCHEMA = (
@@ -199,9 +199,10 @@ def orders_as_csv(spark: SparkSession, sf_dir: str) -> str:
     end-to-end under the parquet oracle."""
     from .files import write_csv
 
-    tag = fixture_cache_tag(sf_dir, "orders", "csv-v3")
-    out = f"/tmp/tp1_spark_csv_orders_{tag}"
-    return build_once(out, lambda: write_csv(load_table(spark, sf_dir, "orders"), out))
+    return fixture_artifact(
+        "csv_orders", sf_dir, "orders", "csv-v3",
+        build=lambda out: write_csv(load_table(spark, sf_dir, "orders"), out),
+    )
 
 
 def read_orders_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -218,9 +219,10 @@ def events_as_jsonl(spark: SparkSession, sf_dir: str) -> str:
     round-trip per write_jsonl's contract)."""
     from .files import write_jsonl
 
-    tag = fixture_cache_tag(sf_dir, "events", "jsonl-v3")
-    out = f"/tmp/tp1_spark_jsonl_events_{tag}"
-    return build_once(out, lambda: write_jsonl(load_table(spark, sf_dir, "events"), out))
+    return fixture_artifact(
+        "jsonl_events", sf_dir, "events", "jsonl-v3",
+        build=lambda out: write_jsonl(load_table(spark, sf_dir, "events"), out),
+    )
 
 
 def read_events_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -710,20 +710,22 @@ def rowdir_roundtrip_priority_revenue(spark, sf_dir: str):
     discipline), divided once at the output edge."""
     from pyspark.sql import functions as F
 
-    from .artifacts import build_once
-    from .tables import fixture_cache_tag, load_table
+    from .artifacts import fixture_artifact
+    from .tables import load_table
 
     register_rowdir(spark)
-    out = f"/tmp/tp1_spark_rowdir_orders_{fixture_cache_tag(sf_dir, 'orders', 'rowdir-v1')}"
 
-    def build() -> None:
+    def build(out: str) -> None:
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderpriority",
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         ).write.format("rowdir").mode("overwrite").save(out)
 
-    build_once(out, build, marker=ROWDIR_MANIFEST)
+    out = fixture_artifact(
+        "rowdir_orders", sf_dir, "orders", "rowdir-v1",
+        build=build, marker=ROWDIR_MANIFEST,
+    )
     back = spark.read.format("rowdir").load(out)
     return (
         back.groupBy("o_orderpriority")
@@ -823,17 +825,13 @@ def rowdir_time_travel_census(spark, sf_dir: str):
     manifest design."""
     from pyspark.sql import functions as F
 
-    from .artifacts import build_once
-    from .tables import fixture_cache_tag, load_table
+    from .artifacts import fixture_artifact
+    from .tables import load_table
 
     register_rowdir(spark)
-    out = (
-        "/tmp/tp1_spark_rowdir_tt_orders_"
-        f"{fixture_cache_tag(sf_dir, 'orders', 'rowdir-tt-v2')}"
-    )
     cutoff = "1997-01-01"
 
-    def build() -> None:
+    def build(out: str) -> None:
         base = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.year("o_orderdate").alias("year"),
@@ -849,7 +847,10 @@ def rowdir_time_travel_census(spark, sf_dir: str):
         with open(os.path.join(out, "_BUILD_DONE"), "w") as f:
             f.write("ok")
 
-    build_once(out, build, marker="_BUILD_DONE")
+    out = fixture_artifact(
+        "rowdir_tt_orders", sf_dir, "orders", "rowdir-tt-v2",
+        build=build, marker="_BUILD_DONE",
+    )
 
     def census(df, snapshot: str):
         return df.groupBy("year").agg(
@@ -906,16 +907,12 @@ def rowdir_pruned_scan_census(spark, sf_dir: str):
     file-skip count is pinned in tests/test_sources_contract.py."""
     from pyspark.sql import functions as F
 
-    from .artifacts import build_once
-    from .tables import fixture_cache_tag, load_table
+    from .artifacts import fixture_artifact
+    from .tables import load_table
 
     register_rowdir(spark)
-    out = (
-        "/tmp/tp1_spark_rowdir_zm_orders_"
-        f"{fixture_cache_tag(sf_dir, 'orders', 'rowdir-zonemap-v1')}"
-    )
 
-    def build() -> None:
+    def build(out: str) -> None:
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             F.year("o_orderdate").alias("year"),
@@ -924,7 +921,10 @@ def rowdir_pruned_scan_census(spark, sf_dir: str):
             "overwrite"
         ).save(out)
 
-    build_once(out, build, marker=ROWDIR_MANIFEST)
+    out = fixture_artifact(
+        "rowdir_zm_orders", sf_dir, "orders", "rowdir-zonemap-v1",
+        build=build, marker=ROWDIR_MANIFEST,
+    )
     return (
         spark.read.format("rowdir")
         .load(out)

@@ -11,6 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .artifacts import artifact_path, build_once, content_tag, fixture_cache_tag
 
 TABLE_NAMES = (
     "region",
@@ -31,22 +34,6 @@ TABLE_NAMES = (
 ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
-def fixture_cache_tag(sf_dir: str, name: str, *extra: object) -> str:
-    """Content-addressed tag for /tmp artifacts derived from a fixture
-    table: md5 over the parquet's path, size, and mtime, plus any
-    derivation parameters. A regenerated fixture (same path, new bytes) or
-    a changed derivation spec produces a NEW tag — and therefore a fresh
-    cache path/table — instead of a stale-reuse: the failure mode this
-    prevents is a _SUCCESS-marker cache serving old data while the DuckDB
-    oracle reads the fresh parquet."""
-    import hashlib
-
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(p)
-    key = "|".join([p, str(st.st_size), str(st.st_mtime_ns), *map(str, extra)])
-    return hashlib.md5(key.encode()).hexdigest()[:12]
-
-
 # Per-process parquet SCHEMA cache keyed on (path, size, mtime_ns) — pure
 # metadata, the same class as Spark's own file-listing cache (filesource
 # PartitionFileCacheSize): footer-based schema inference costs ~110 ms per
@@ -55,20 +42,25 @@ def fixture_cache_tag(sf_dir: str, name: str, *extra: object) -> str:
 # per table per invocation. A regenerated fixture (same path, new bytes)
 # changes the key and re-infers — never a stale schema. No data and no
 # results are cached; the scan itself always reads the parquet.
-_SCHEMA_CACHE: dict[tuple[str, int, int], object] = {}
+_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The parquet's schema, inferred from its footer once per (path,
+    size, mtime_ns). Raises OSError when ``path`` does not exist."""
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
 
 
 def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     try:
-        st = os.stat(path)
-        key = (path, st.st_size, st.st_mtime_ns)
+        schema = parquet_schema(spark, path)
     except OSError:
         return spark.read.parquet(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
-        return df
     return spark.read.schema(schema).parquet(path)
 
 
@@ -132,47 +124,25 @@ def _usec_events_path(spark: SparkSession, path: str) -> str:
     conversion job and restored in a finally. The ns→µs truncate is an
     integer `div`, NOT double division: epoch-nanos (~1.7e18) exceeds
     double's 53-bit exact range. DuckDB also truncates ns→µs, so the
-    oracle sees identical values."""
-    import hashlib
-    import tempfile
+    oracle sees identical values.
 
+    The copy's marker answers "already converted" without a footer read,
+    and a deleted copy is rebuilt; a source that needs no conversion is
+    probed through the footer memo, so a warm call infers nothing."""
     from pyspark.sql import functions as F
 
-    # resolved-path cache keyed on the SOURCE file identity (r21): the
-    # NANOS probe is itself a footer read (~110 ms) paid on every events
-    # load; the conversion decision is a pure function of the source
-    # bytes, so a (path, size, mtime_ns) hit skips the probe entirely.
+    out = artifact_path(f"events_us_{content_tag(path, 'us-v1')}")
+    if os.path.exists(os.path.join(out, "_SUCCESS")):
+        return out
     try:
-        st = os.stat(path)
-        ckey = (path, st.st_size, st.st_mtime_ns)
-    except OSError:
-        ckey = None
-    if ckey is not None and ckey in _EVENTS_PATH_CACHE:
-        cached = _EVENTS_PATH_CACHE[ckey]
-        # ADVICE r21: the cached entry may name a DERIVED artifact that was
-        # deleted externally while the source stayed unchanged — returning
-        # it would hand callers a nonexistent path. Fall through to the
-        # probe/build path (build_once rebuilds) instead.
-        if os.path.exists(cached):
-            return cached
-        del _EVENTS_PATH_CACHE[ckey]
-
-    try:
-        if dict(spark.read.parquet(path).dtypes).get("ts") != "bigint":
-            if ckey is not None:
-                _EVENTS_PATH_CACHE[ckey] = path
+        fields = parquet_schema(spark, path).fields
+        if {f.name: f.dataType.simpleString() for f in fields}.get("ts") != "bigint":
             return path
         # ts reads as bigint only when some caller turned nanosAsLong on
         # globally — still convert so our output dtype stays timestamp.
     except Exception as ex:  # noqa: BLE001 — only the NANOS rejection
         if "NANOS" not in str(ex):
             raise
-
-    st = os.stat(path)
-    key = hashlib.md5(
-        f"{path}|{st.st_size}|{st.st_mtime_ns}|us-v1".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"spark_graft_events_us_{key}")
 
     def _build() -> None:
         prev = spark.conf.get(_NANOS_CONF, None)
@@ -188,16 +158,7 @@ def _usec_events_path(spark: SparkSession, path: str) -> str:
             else:
                 spark.conf.set(_NANOS_CONF, prev)
 
-    from .artifacts import build_once
-
-    build_once(out, _build)
-    if ckey is not None:
-        _EVENTS_PATH_CACHE[ckey] = out
-    return out
-
-
-# (source path, size, mtime_ns) → resolved read path; see _usec_events_path.
-_EVENTS_PATH_CACHE: dict[tuple[str, int, int], str] = {}
+    return build_once(out, _build)
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
@@ -236,8 +197,7 @@ def stream_events(
     splits a bounded replay into multiple micro-batches (used by tests to
     exercise watermarks and cross-batch state)."""
     src = _usec_events_path(spark, path)
-    schema = read_parquet_cached_schema(spark, src).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, src))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return _normalize_ts(reader.parquet(src))
@@ -253,8 +213,7 @@ def stream_parquet(
     the schema is read from the batch footer so batch and streaming plans
     see an identical shape. ``max_files_per_trigger`` splits a bounded
     replay into micro-batches (tests exercise the cross-batch fold)."""
-    schema = read_parquet_cached_schema(spark, path).schema
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(parquet_schema(spark, path))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)

@@ -65,16 +65,13 @@ def documents_as_text_files(spark: SparkSession, sf_dir: str) -> str:
     """
     import os
 
-    from .artifacts import build_once
-    from .tables import fixture_cache_tag
+    from .artifacts import fixture_artifact
 
     # Content-addressed: a regenerated documents.parquet gets a new tag, so
     # the cache can never serve text from a previous fixture generation.
-    tag = fixture_cache_tag(sf_dir, "documents")
-    out = f"/tmp/tp1_spark_text_corpus_{tag}"
-    build_once(
-        out,
-        lambda: (
+    out = fixture_artifact(
+        "text_corpus", sf_dir, "documents",
+        build=lambda out: (
             spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
             .select("text")
             .coalesce(8)

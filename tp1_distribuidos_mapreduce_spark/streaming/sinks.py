@@ -32,7 +32,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from ..functions.tokenize import words_from
 from ..plans.approx import (
@@ -152,8 +152,10 @@ def write_stream_restatement(
 #   keys are coalesce(k)/isnull(k), which the delta aggregate's hash
 #   partitioning does not satisfy, so the delta is shuffled again.
 # * **Atomic commit**: the merged state is written to a fresh ``v{batch_id}``
-#   dir, then ``CURRENT`` is replaced atomically (temp file + os.replace).
-#   Readers follow the pointer, so they always see a complete version.
+#   dir, then ``CURRENT`` (version dir, batch_id and the version's schema)
+#   is replaced atomically (temp file + os.replace). Readers follow the
+#   pointer, so they always see a complete version, and read it with the
+#   pointer's schema instead of inferring one from the parquet footers.
 # * **Retention**: the current and the previous version are kept (a reader
 #   that resolved the pointer before this commit holds a lazy plan over
 #   the previous dir); older versions are deleted.
@@ -251,10 +253,9 @@ def fold_batch(
         )
     new_dir = f"v{batch_id}"
     merged.write.mode("overwrite").parquet(os.path.join(state_path, new_dir))
-    _STATE_SCHEMA_CACHE[state_path] = StructType(
-        [StructField(f.name, f.dataType, True) for f in merged.schema.fields]
-    )
-    _commit_pointer(state_path, new_dir, batch_id)
+    # the schema as the parquet reader infers it (asNullable, nested too)
+    schema = json.loads(merged._jdf.schema().asNullable().json())
+    _commit_pointer(state_path, new_dir, batch_id, schema)
     keep = {new_dir} | ({committed["dir"]} if committed is not None else set())
     for v in os.listdir(state_path):
         if v.startswith("v") and v not in keep:
@@ -262,7 +263,8 @@ def fold_batch(
 
 
 def _read_pointer(state_path: str) -> dict | None:
-    """The CURRENT pointer: {"dir": "v3", "batch_id": 3}, or None."""
+    """The CURRENT pointer: {"dir": "v3", "batch_id": 3, "schema": <the
+    version's all-nullable schema as JSON>}, or None."""
     ptr = os.path.join(state_path, "CURRENT")
     if not os.path.exists(ptr):
         return None
@@ -270,40 +272,33 @@ def _read_pointer(state_path: str) -> dict | None:
         return json.load(f)
 
 
-def _commit_pointer(state_path: str, version_dir: str, batch_id: int) -> None:
+def _commit_pointer(
+    state_path: str, version_dir: str, batch_id: int, schema: dict
+) -> None:
     """Replace CURRENT atomically, so readers see the old or the new
-    complete pointer, never a partial one."""
+    complete pointer, never a partial one. The pointer carries the
+    version's schema (JSON), so reads skip footer inference (~110 ms
+    each)."""
     tmp = os.path.join(state_path, "CURRENT.tmp")
     with open(tmp, "w") as f:
-        json.dump({"dir": version_dir, "batch_id": batch_id}, f)
+        json.dump({"dir": version_dir, "batch_id": batch_id, "schema": schema}, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, os.path.join(state_path, "CURRENT"))
 
 
-# state_path → the state's schema, as the parquet reader would infer it
-# (all fields nullable). Recorded by the fold that wrote the state, so
-# reads skip footer inference (~110 ms each); the file bytes are still
-# read fresh every time. A process that never folded infers on its first
-# read and records the result.
-_STATE_SCHEMA_CACHE: dict[str, StructType] = {}
-
-
 def read_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """The committed state version CURRENT points to. The frame stays
-    readable across ONE later fold (the previous version is retained);
-    collect it before a second fold lands. Raises FileNotFoundError when
-    nothing has been committed under ``state_path``."""
+    """The committed state version CURRENT points to, read with the
+    schema the pointer carries. The frame stays readable across ONE later
+    fold (the previous version is retained); collect it before a second
+    fold lands. Raises FileNotFoundError when nothing has been committed
+    under ``state_path``."""
     committed = _read_pointer(state_path)
     if committed is None:
         raise FileNotFoundError(f"no committed state under {state_path}")
-    path = os.path.join(state_path, committed["dir"])
-    schema = _STATE_SCHEMA_CACHE.get(state_path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _STATE_SCHEMA_CACHE[state_path] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(StructType.fromJson(committed["schema"])).parquet(
+        os.path.join(state_path, committed["dir"])
+    )
 
 
 def read_ivm_state(spark: SparkSession, state_path: str) -> DataFrame:
