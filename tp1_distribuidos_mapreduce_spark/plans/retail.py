@@ -134,10 +134,11 @@ def market_basket_pairs(lineitem: DataFrame, top_k: int = BASKET_TOP_K) -> DataF
 
     Plan: per-order distinct part sets (part_baskets), then IN-ROW pair
     expansion via the same `_pairs_within` expression the shared-span
-    dedup uses, then a pair-keyed count. The naive lineitem-self-join-on-orderkey shuffles
-    |lineitem| rows twice and fans out quadratically on hot orders;
-    this shape shuffles each lineitem once and expands pairs inside the
-    row, which is how you'd mine baskets at 100 TB.
+    dedup uses, then a pair-keyed count. The naive
+    lineitem-self-join-on-orderkey shuffles |lineitem| rows twice and
+    fans out quadratically on hot orders; this shape shuffles each
+    lineitem once and expands pairs inside the row, which is how you'd
+    mine baskets at 100 TB.
     """
     baskets = part_baskets(lineitem).where(F.size("parts") >= 2)
     pairs = baskets.select(F.explode(_pairs_within("parts")).alias("p"))
