@@ -1,39 +1,31 @@
-"""Full-registry differential harness: every oracled query's Spark result
-hash-compared against its DuckDB oracle at a chosen scale factor, written
-as a committed per-round artifact (DIFFERENTIAL_r{N}.json — VERDICT r12
-"Next round" #2).
+"""The result contract, the rows-only references, and the full-registry
+differential that runs both at a chosen scale factor.
 
-Why this exists: tests/test_relational.py checks every oracled query
-against DuckDB on every pytest run, but only at sf0.001. This harness
-repeats the check at sf0.1 — the 32-partition scale where float
-partial-sum order actually varies — for EVERY oracled query, and
-records per-query rows/schema/hash matches as a committed artifact
-alongside BENCH_r{N}.json.
+``compare_rows`` is the one result contract: the Spark rows must equal
+the expected rows exactly, as a multiset of rows over name-sorted
+columns, and hold no NULL. "Exactly" is the driver gate's own rule:
+every row's ``repr`` must match, so 1 and 1.0, or two floats an ulp
+apart, differ. tests/conftest.py loads this module; the pytest oracle
+differential and the rows-only determinism check both call it.
+
+``REFERENCE_CHECKS`` holds one independent reference per rows-only query
+(no oracle by design: sketches, quantizers, media, graph floats):
+numpy/Python re-derivations, exact DuckDB answers with documented error
+envelopes, or exact-equality spec re-derivations. Each takes the
+collected rows (read by field name, in collected order) and the parquet
+dir. pytest runs every check at sf0.001 on the rows it already collects
+(tests/test_relational.py); ``main`` runs them at sf0.1.
 
 Usage:
     python differential.py [OUT.json]
       SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
       SPARK_GRAFT_DIFF_THREADS  collect parallelism (default 8)
 
-The comparison is the driver's own semantics (the verify-skill recipe):
-columns sorted by name, rows as tuples in sorted-column order, sha256
-over sorted row reprs. A query passes only on rows AND schema AND hash.
-
-Rows-only queries (no oracle by design: sketches, quantizers, media,
-graph floats) get the next-strongest machine check at the same scale:
-two independent executions must hash identically (the sf0.001
-determinism gate from tests/test_relational.py, re-proven at sf0.1
-where partition count and partial-order actually vary).
-
-For the iterative graph/clustering heavies (pagerank / k-core /
-k-means) the assurance is upgraded further (VERDICT r13 #3): the SAME
-independent numpy/Python references that pin them at sf0.001 in pytest
-(tests/test_graph.py, tests/test_vectors.py) are re-run here against
-the sf0.1 output — node/cluster frames are tiny even at sf0.1, so the
-reference cost is trivial while the check moves from two-run
-determinism to independent-reference agreement at the scale where
-partition order actually varies. Recorded as per-query
-``reference_match`` rows.
+``main`` compares every oracled query with its DuckDB oracle, and runs
+every rows-only query twice: the two runs must match under the same
+contract, and the first run must pass its reference check. sf0.1 is the
+32-partition scale where float partial-sum order actually varies. The
+per-query records go to OUT.json with the git commit.
 
 Exit code = number of failing queries (any kind).
 """
@@ -41,7 +33,6 @@ Exit code = number of failing queries (any kind).
 from __future__ import annotations
 
 import functools
-import hashlib
 import json
 import os
 import subprocess
@@ -57,22 +48,38 @@ TABLES = [
 ]
 
 
-def _vhash(rows: list[tuple]) -> str:
-    h = hashlib.sha256()
-    # key=repr gives a total order even when a column mixes NULL (None)
-    # with non-None values — plain sorted(rows) would raise TypeError on
-    # the None-vs-float comparison and record a false err for a
-    # legitimately-NULL-producing query (ADVICE r13).
-    for r in sorted(rows, key=repr):
-        h.update(repr(r).encode())
-    return h.hexdigest()[:16]
+def compare_rows(cols_a, rows_a, cols_b, rows_b) -> str | None:
+    """The first reason Spark's ``rows_a`` (tuples in ``cols_a`` order)
+    break the result contract against ``rows_b`` (in ``cols_b`` order),
+    or None: a NULL anywhere in ``rows_a`` (the driver may sort rows as
+    plain tuples, and None vs str/datetime raises there; coalesce to
+    sentinels in both engines), a different column set, a different row
+    count, or any row whose ``repr`` differs once both sides are sorted
+    by name and row."""
+    names = sorted(cols_a)
+
+    def canon(cols, rows):
+        idx = [list(cols).index(c) for c in names]
+        return [tuple(r[i] for i in idx) for r in rows]
+
+    a = canon(cols_a, rows_a)
+    for r in a:
+        if None in r:
+            return f"NULL in {names[r.index(None)]} (coalesce to sentinels): {r}"
+    if names != sorted(cols_b):
+        return f"columns differ: {names} vs {sorted(cols_b)}"
+    b = canon(cols_b, rows_b)
+    if len(a) != len(b):
+        return f"row counts differ: {len(a)} vs {len(b)}"
+    for x, y in zip(sorted(map(repr, a)), sorted(map(repr, b))):
+        if x != y:
+            return f"rows differ: {x} vs {y}"
+    return None
 
 
 # ---------------------------------------------------------------------------
-# Independent references for the iterative rows-only heavies. Each takes the
-# already-collected Spark rows plus the parquet dir and recomputes the answer
-# with the pytest suite's own numpy/Python formulations (same tolerances,
-# same rationale comments there).
+# Independent references for the iterative rows-only heavies: numpy/Python
+# re-derivations from the parquet dir, each with its tolerance's rationale.
 # ---------------------------------------------------------------------------
 
 _UND_EDGES_SQL = """
@@ -113,21 +120,24 @@ def _ref_pagerank(rows: list, sf_dir: str) -> dict:
     deg_ok = bool(
         (np.array([r["out_deg"] for r in rows]) == out_deg).all()
     ) if ids_ok else False
-    # 6dp output rounding dominates any partial-sum-order ulp (pytest pin)
+    # Spark's partial-sum order perturbs ranks at the last ulp; the 6dp
+    # output rounding dominates any engine difference
     max_dev = (
         float(np.abs(np.array([r["rank"] for r in rows]) - np.round(rank, 6)).max())
         if ids_ok
         else float("inf")
     )
     return {
-        "reference": "numpy power iteration (tests/test_graph.py)",
+        "reference": "numpy power iteration",
         "n_nodes": int(n),
         "max_rank_dev": max_dev,
         "reference_match": bool(ids_ok and deg_ok and max_dev <= 1.01e-6),
     }
 
 
-def _ref_kcore(rows: list, sf_dir: str) -> dict:
+def _ref_kcore(rows: list, sf_dir: str, k: int = 3) -> dict:
+    """Python peeling of the same edge list: every round drops all nodes
+    of degree < k at once, until none is left below k."""
     import duckdb
 
     con = duckdb.connect()
@@ -139,18 +149,18 @@ def _ref_kcore(rows: list, sf_dir: str) -> dict:
     for a, b in und:
         adj.setdefault(a, set()).add(b)
         adj.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for node in [x for x, ns in adj.items() if len(ns) < 3]:
+    rounds = 0
+    while peel := [x for x, ns in adj.items() if len(ns) < k]:
+        rounds += 1
+        for node in peel:
             for m in adj.pop(node):
                 adj[m].discard(node)
-            changed = True
     want = {(x, len(ns)) for x, ns in adj.items()}
     got = {(r["part_id"], r["core_degree"]) for r in rows}
     return {
-        "reference": "Python peeling (tests/test_graph.py)",
+        "reference": f"Python peeling, k = {k}",
         "n_core_members": len(want),
+        "peel_rounds": rounds,
         "reference_match": bool(got == want and want),
     }
 
@@ -186,7 +196,7 @@ def _ref_kmeans(rows: list, sf_dir: str) -> dict:
     got_sizes = {r["cluster_id"]: r["n_vecs"] for r in rows}
     # float partial-aggregation order can flip boundary points between
     # engines: >= 98% per-cluster size agreement, identical keys, exact
-    # corpus coverage (the pytest tolerance rationale)
+    # corpus coverage
     coverage_ok = sum(got_sizes.values()) == len(M)
     keys_ok = set(got_sizes) == set(ref_sizes)
     sizes_ok = keys_ok and all(
@@ -194,7 +204,7 @@ def _ref_kmeans(rows: list, sf_dir: str) -> dict:
         for c, n_ref in ref_sizes.items()
     )
     return {
-        "reference": "numpy Lloyd's (tests/test_vectors.py)",
+        "reference": "numpy Lloyd's",
         "n_vecs": len(M),
         "reference_match": bool(coverage_ok and keys_ok and sizes_ok),
     }
@@ -223,14 +233,14 @@ def _ref_pca(rows: list, sf_dir: str) -> dict:
     ids_ok = [r["vec_id"] for r in rows] == ids.tolist()
     got = np.array([[r["pc1"], r["pc2"]] for r in rows])
     # Gram partial-sum order perturbs the last ulp; 4dp output rounding
-    # dominates (pytest pin)
+    # dominates
     max_dev = (
         float(np.abs(got - np.round(expected, 4)).max())
         if ids_ok
         else float("inf")
     )
     return {
-        "reference": "numpy eigh PCA (tests/test_vectors.py)",
+        "reference": "numpy eigh PCA",
         "n_vecs": len(ids),
         "max_coord_dev": max_dev,
         "reference_match": bool(ids_ok and max_dev <= 1.01e-4),
@@ -238,8 +248,7 @@ def _ref_pca(rows: list, sf_dir: str) -> dict:
 
 
 # --- sketch-family envelope checks: the approximate members' documented
-# error contracts, asserted against EXACT DuckDB answers at sf0.1 (the
-# pytest bounds from tests/test_approx.py, re-run at the scale where the
+# error contracts, asserted against EXACT DuckDB answers (at sf0.1 the
 # sketches are saturated). ---------------------------------------------------
 
 _DD_EXACT_SQL = """
@@ -288,8 +297,8 @@ def _dd_exact(sf_dir: str, by_type: bool) -> dict:
 
 def _dd_envelope(pairs) -> tuple[bool, float]:
     """pairs: iterable of (approx_value, n_got, exact_value, n_exact).
-    The DDSketch contract: |approx − exact| ≤ 1.05·alpha·exact (the
-    pytest headroom for the float-log bucket-boundary ulp), n exact."""
+    The DDSketch contract: |approx − exact| ≤ 1.05·alpha·exact (headroom
+    for the float-log bucket-boundary ulp), n exact."""
     from tp1_distribuidos_mapreduce_spark.plans.approx import DD_ALPHA
 
     worst = 0.0
@@ -740,17 +749,15 @@ def _ref_dedup_ivf(rows: list, sf_dir: str) -> dict:
     }
 
 
-# --- text-kernel references: the pytest suite's own sequential Python
-# formulations (tests/test_lm.py, tests/test_dedup_similarity.py),
-# re-run at sf0.1 with EXACT-equality verdicts — these kernels are
-# deterministic specs, so the bound is ==, not an envelope. -----------------
+# --- text-kernel references: sequential Python formulations with
+# EXACT-equality verdicts — these kernels are deterministic specs, so the
+# bound is ==, not an envelope. -----------------------------------------------
 
 
 def _bpe_reference(sf_dir: str):
     """Sequential Sennrich-style BPE over DuckDB-derived word
-    frequencies (the tests/test_lm.py reference verbatim: argmax pair
-    with lexicographic tie-break, left-to-right non-overlapping
-    merge)."""
+    frequencies (same tokenizer regex as the query): argmax pair with
+    lexicographic tie-break, left-to-right non-overlapping merge."""
     import duckdb
 
     con = duckdb.connect()
@@ -800,7 +807,7 @@ def _ref_bpe_merges(rows: list, sf_dir: str) -> dict:
     ]
     expect = _bpe_reference(sf_dir)
     return {
-        "reference": "sequential Python BPE (tests/test_lm.py), exact equality",
+        "reference": "sequential Python BPE, exact equality",
         "n_rules": len(expect),
         "reference_match": bool(got == expect),
     }
@@ -879,10 +886,11 @@ def _ref_doc_fingerprint(rows: list, sf_dir: str) -> dict:
 
 
 def _ref_bpe_encode(rows: list, sf_dir: str) -> dict:
-    """Full train+encode re-derivation (tests/test_lm.py): train the
-    sequential BPE, encode every (source, word), and reproduce every
-    per-source row exactly — words, tokens, and the integer-half-up
-    chars_per_token ratio."""
+    """Full train+encode re-derivation: train the sequential BPE, encode
+    every (source, word), and reproduce every per-source row exactly —
+    words, tokens, and the integer-half-up chars_per_token ratio. The
+    tokenizer must also compress: fewer tokens than characters in every
+    source."""
     import duckdb
 
     rules = [(l, r) for _, l, r, _ in _bpe_reference(sf_dir)]
@@ -932,11 +940,11 @@ def _ref_bpe_encode(rows: list, sf_dir: str) -> dict:
         (r["source"], r["n_words"], r["n_tokens"], r["chars_per_token"])
         for r in rows
     ]
+    compresses = all(t < per_source[src][2] for src, _, t, _ in expect)
     return {
-        "reference": "sequential Python BPE train+encode "
-        "(tests/test_lm.py), exact equality",
+        "reference": "sequential Python BPE train+encode, exact equality",
         "n_sources": len(expect),
-        "reference_match": bool(got == expect),
+        "reference_match": bool(got == expect and compresses),
     }
 
 
@@ -1359,80 +1367,42 @@ def main() -> int:
             tls.con = c
         return tls.con
 
-    def one(name: str) -> tuple[str, dict]:
+    def timed(check, name: str) -> tuple[str, dict]:
         t0 = time.perf_counter()
         try:
-            sdf = qs[name](spark, sf_dir)
-            scols = sorted(sdf.columns)
-            srows = [tuple(row[c] for c in scols) for row in sdf.collect()]
-            rel = con().sql(oracles[name])
-            dcols = sorted(rel.columns)
-            idx = [rel.columns.index(c) for c in dcols]
-            drows = [tuple(r[i] for i in idx) for r in rel.fetchall()]
-            rec = {
-                "rows_spark": len(srows),
-                "rows_oracle": len(drows),
-                "rows_match": len(srows) == len(drows),
-                "schema_match": scols == dcols,
-                "hash_match": _vhash(srows) == _vhash(drows),
-                "sec": round(time.perf_counter() - t0, 2),
-            }
+            rec = check(name)
         except Exception as ex:  # record, never abort the sweep
-            rec = {"err": f"{type(ex).__name__}: {ex}"[:300],
-                   "sec": round(time.perf_counter() - t0, 2)}
+            rec = {"err": f"{type(ex).__name__}: {ex}"[:300]}
+        rec["sec"] = round(time.perf_counter() - t0, 2)
         return name, rec
 
-    rows_only = [n for n in qs if n not in oracles]
+    def oracled(name: str) -> dict:
+        sdf = qs[name](spark, sf_dir)
+        rows = sdf.collect()
+        rel = con().sql(oracles[name])
+        reason = compare_rows(sdf.columns, rows, rel.columns, rel.fetchall())
+        return {"rows": len(rows), "match": reason is None, "reason": reason}
 
-    def one_rows_only(name: str) -> tuple[str, dict]:
-        t0 = time.perf_counter()
+    def rows_only(name: str) -> dict:
+        first = qs[name](spark, sf_dir)
+        second = qs[name](spark, sf_dir)
+        rows = first.collect()
+        reason = compare_rows(first.columns, rows, second.columns, second.collect())
+        rec = {"rows": len(rows), "two_run_match": reason is None, "reason": reason}
+        rec.update(REFERENCE_CHECKS[name](rows, sf_dir))
+        return rec
 
-        def run() -> tuple[int, str]:
-            sdf = qs[name](spark, sf_dir)
-            cols = sorted(sdf.columns)
-            rows = [tuple(row[c] for c in cols) for row in sdf.collect()]
-            return len(rows), _vhash(rows)
-
-        try:
-            (n_a, h_a), (n_b, h_b) = run(), run()
-            rec = {
-                "rows": n_a,
-                "two_run_hash_match": (n_a, h_a) == (n_b, h_b),
-                "sec": round(time.perf_counter() - t0, 2),
-            }
-        except Exception as ex:
-            rec = {"err": f"{type(ex).__name__}: {ex}"[:300],
-                   "sec": round(time.perf_counter() - t0, 2)}
-        return name, rec
-
-    ref_names = [n for n in REFERENCE_CHECKS if n in qs]
-
-    def one_reference(name: str) -> tuple[str, dict]:
-        t0 = time.perf_counter()
-        try:
-            rows = qs[name](spark, sf_dir).collect()
-            rec = REFERENCE_CHECKS[name](rows, sf_dir)
-            rec["sec"] = round(time.perf_counter() - t0, 2)
-        except Exception as ex:
-            rec = {"err": f"{type(ex).__name__}: {ex}"[:300],
-                   "sec": round(time.perf_counter() - t0, 2)}
-        return name, rec
-
+    ro_names = [n for n in qs if n not in oracles]
     t0 = time.perf_counter()
     with ThreadPoolExecutor(max_workers=n_threads) as pool:
-        results = dict(pool.map(one, names))
-        ro_results = dict(pool.map(one_rows_only, rows_only))
-        ref_results = dict(pool.map(one_reference, ref_names))
+        results = dict(pool.map(functools.partial(timed, oracled), names))
+        ro_results = dict(pool.map(functools.partial(timed, rows_only), ro_names))
     wall = round(time.perf_counter() - t0, 1)
     spark.stop()
 
-    ok = [n for n, r in results.items()
-          if r.get("rows_match") and r.get("schema_match") and r.get("hash_match")]
-    bad = [n for n in names if n not in ok]
-    ro_ok = [n for n, r in ro_results.items() if r.get("two_run_hash_match")]
-    ro_bad = [n for n in rows_only if n not in ro_ok]
-    ref_ok = [n for n, r in ref_results.items() if r.get("reference_match")]
-    ref_bad = [n for n in ref_names if n not in ref_ok]
+    bad = [n for n in names if not results[n].get("match")]
+    ro_bad = [n for n in ro_names if not ro_results[n].get("two_run_match")]
+    ref_bad = [n for n in ro_names if not ro_results[n].get("reference_match")]
     # Honest commit stamp (VERDICT r15 #3): the r15 artifact recorded the
     # pre-fix HEAD while being generated on a post-fix dirty tree, so the
     # recorded commit predated the code it validated. Record HEAD plus an
@@ -1469,26 +1439,24 @@ def main() -> int:
         "generated_utc": datetime.now(timezone.utc).isoformat(timespec="seconds"),
         "git_commit": commit,
         "n_oracled": len(names),
-        "n_full_green": len(ok),
+        "n_full_green": len(names) - len(bad),
         "failing": bad,
-        "n_rows_only": len(rows_only),
-        "n_rows_only_deterministic": len(ro_ok),
+        "n_rows_only": len(ro_names),
+        "n_rows_only_deterministic": len(ro_names) - len(ro_bad),
         "rows_only_failing": ro_bad,
-        "n_reference_checked": len(ref_names),
-        "n_reference_match": len(ref_ok),
+        "n_reference_match": len(ro_names) - len(ref_bad),
         "reference_failing": ref_bad,
         "wall_sec": wall,
-        "queries": {n: results[n] for n in names},
-        "rows_only_queries": {n: ro_results[n] for n in rows_only},
-        "reference_queries": {n: ref_results[n] for n in ref_names},
+        "queries": results,
+        "rows_only_queries": ro_results,
     }
     with open(out_path, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=False)
         f.write("\n")
     print(
-        f"differential: {len(ok)}/{len(names)} oracled full-green, "
-        f"{len(ro_ok)}/{len(rows_only)} rows-only two-run-deterministic, "
-        f"{len(ref_ok)}/{len(ref_names)} independent-reference matches "
+        f"differential: {len(names) - len(bad)}/{len(names)} oracled matches, "
+        f"{len(ro_names) - len(ro_bad)}/{len(ro_names)} rows-only two-run matches, "
+        f"{len(ro_names) - len(ref_bad)}/{len(ro_names)} reference matches "
         f"at {sf_dir} in {wall}s -> {out_path}"
     )
     if bad:

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import importlib.util
 import os
+from pathlib import Path
 
 import duckdb
 import pytest
@@ -9,6 +11,14 @@ from tp1_distribuidos_mapreduce_spark.session import get_spark
 from tp1_distribuidos_mapreduce_spark.sources.tables import TABLE_NAMES
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+# differential.py, the one home of the result contract (compare_rows) and
+# of the rows-only references (REFERENCE_CHECKS), loaded once for the suite.
+_spec = importlib.util.spec_from_file_location(
+    "differential", Path(__file__).resolve().parent.parent / "differential.py"
+)
+differential = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(differential)
 
 
 @pytest.fixture(scope="session")
@@ -63,7 +73,7 @@ def _rows_only_names():
 # rows_only_results rows instead of re-collecting their queries (r15
 # suite-time consolidation): test name → the fixture keys it needs. A
 # targeted run of just these tests then collects only these queries,
-# not all 35 rows-only. EVERY non-parametrized consumer must be listed
+# not all 37 rows-only. EVERY non-parametrized consumer must be listed
 # here (ADVICE r15: an omission makes a targeted `-k` selection that
 # includes the test but not its keys fail with KeyError instead of its
 # real check; full-suite and solo runs fall back to collecting all).
@@ -90,14 +100,13 @@ FIXTURE_CONSUMERS = {
 def rows_only_results(spark, request):
     """Both evaluations of every SELECTED rows-only query, collected
     ONCE concurrently (r14 suite-time consolidation, VERDICT r13 #5):
-    the per-query no-NULL scans used to re-collect each query serially
-    on top of the determinism test's own two pooled runs — three
-    collects per query, ~20s of serial wall. One fixture now feeds the
-    no-NULL scan, the determinism compare, AND (r15) the merge-proof
-    pins in test_approx.py from the same two runs. Rows are sorted by
-    repr (total order even if a NULL sneaks into a mixed column — the
-    scan must REPORT that, not die sorting). Lives in conftest so
-    consumers outside test_relational.py resolve it."""
+    one fixture feeds the no-NULL scan, the reference checks, the
+    determinism compare, AND (r15) the merge-proof pins in
+    test_approx.py from the same two runs. Each run is its list of
+    ``Row``s in collected order: the PageRank and PCA references compare
+    order, and every reference reads fields by name; the determinism
+    compare sorts where it compares. Lives in conftest so consumers
+    outside test_relational.py resolve it."""
     from concurrent.futures import ThreadPoolExecutor
 
     from tp1_distribuidos_mapreduce_spark import registry
@@ -115,7 +124,11 @@ def rows_only_results(spark, request):
             item.callspec.params["name"]
             for item in request.session.items
             if getattr(item, "callspec", None) is not None
-            and item.function.__name__ == "test_rows_only_queries_emit_no_nulls"
+            and item.function.__name__
+            in (
+                "test_rows_only_queries_emit_no_nulls",
+                "test_rows_only_query_matches_reference",
+            )
         }
         for item in request.session.items:
             selected.update(FIXTURE_CONSUMERS.get(item.function.__name__, []))
@@ -123,9 +136,7 @@ def rows_only_results(spark, request):
 
     def run_once(name):
         try:
-            return name, sorted(
-                map(tuple, qs[name](spark, SF_SMOKE).collect()), key=repr
-            )
+            return name, qs[name](spark, SF_SMOKE).collect()
         except Exception as ex:
             return name, f"{type(ex).__name__}: {str(ex)[:120]}"
 
@@ -136,7 +147,7 @@ def rows_only_results(spark, request):
     jobs = [n for n in names for _ in (0, 1)]
     # 32 threads (r16 suite-time trim, was 16 then 24): the pool is
     # dominated by the streaming-drain queries' fixed per-query latency,
-    # not CPU, so threads scale to the job count (36 queries × 2 runs)
+    # not CPU, so threads scale to the job count (37 queries × 2 runs)
     with ThreadPoolExecutor(max_workers=32) as pool:
         results = list(pool.map(run_once, jobs))
     return {
@@ -145,59 +156,19 @@ def rows_only_results(spark, request):
     }
 
 
-def assert_df_matches_oracle(sdf, duck, sql, float_tol=1e-9):
-    """Order-insensitive comparison of a Spark DataFrame vs DuckDB SQL —
-    the same discipline as the driver's t2 gate (and the reference's
-    sequential-oracle comparison, tests/test_wc.py:30-39)."""
-    spark_cols = sorted(sdf.columns)
-    spark_rows = [tuple(row[c] for c in spark_cols) for row in sdf.collect()]
-    assert_rows_match_oracle(spark_cols, spark_rows, duck, sql, float_tol)
+def assert_df_matches_oracle(sdf, duck, sql):
+    """Spark DataFrame vs DuckDB SQL under the result contract — the
+    driver gate's own rule (and the reference's sequential-oracle
+    comparison, tests/test_wc.py:30-39)."""
+    assert_rows_match_oracle(sdf.columns, sdf.collect(), duck, sql)
 
 
-def assert_rows_match_oracle(spark_cols, spark_rows, duck, sql, float_tol=1e-9):
+def assert_rows_match_oracle(spark_cols, spark_rows, duck, sql):
     """Comparison half of assert_df_matches_oracle, over already-collected
     (cols, rows) — lets the oracle differential collect all queries
     CONCURRENTLY (Spark's scheduler is thread-safe) and compare serially."""
-    def row_key(row):
-        # None-safe, type-stable sort key; identical values get identical
-        # keys in both engines so rows pair up correctly. Numerics sort
-        # NUMERICALLY (a str() key would order "10.0" < "9.0" — harmless
-        # while both engines emit identical values, but a last-ulp
-        # divergence could then mispair rows whose string forms flip
-        # order; the numeric key keeps near-equal values adjacent so the
-        # float_tol comparison sees the intended pairing).
-        return tuple(
-            (v is None, "", float(v))
-            if isinstance(v, (int, float)) and not isinstance(v, bool)
-            else (v is None, str(type(v).__name__), str(v))
-            for v in row
-        )
-
-    spark_rows = sorted(spark_rows, key=row_key)
-    # Engine-wide output policy (verify notes): no NULLs in any query
-    # output — the driver may sort rows as plain tuples, and None vs
-    # str/datetime raises there. Enforced mechanically on every
-    # oracle-backed query; coalesce to sentinels in BOTH engines instead.
-    nulls = [
-        (spark_cols[i], r)
-        for r in spark_rows
-        for i, v in enumerate(r)
-        if v is None
-    ]
-    assert not nulls, f"NULLs in query output (policy: coalesce to sentinels): {nulls[:3]}"
     rel = duck.sql(sql)
-    duck_cols = sorted(rel.columns)
-    assert spark_cols == duck_cols, f"columns differ: {spark_cols} vs {duck_cols}"
-    idx = [rel.columns.index(c) for c in duck_cols]
-    duck_rows = sorted(
-        (tuple(r[i] for i in idx) for r in rel.fetchall()), key=row_key
+    reason = differential.compare_rows(
+        spark_cols, spark_rows, rel.columns, rel.fetchall()
     )
-    assert len(spark_rows) == len(duck_rows), (
-        f"row counts differ: {len(spark_rows)} vs {len(duck_rows)}"
-    )
-    for sr, dr in zip(spark_rows, duck_rows):
-        for sv, dv in zip(sr, dr):
-            if isinstance(sv, float) and isinstance(dv, float):
-                assert abs(sv - dv) <= float_tol * max(1.0, abs(sv), abs(dv)), (sr, dr)
-            else:
-                assert sv == dv, (sr, dr)
+    assert reason is None, reason

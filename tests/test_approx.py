@@ -238,33 +238,6 @@ def test_kmv_overlap_within_envelope_when_saturated(spark):
     assert abs(est - n_both) <= 4 * sigma * union, (est, n_both)
 
 
-def test_ddsketch_quantiles_within_alpha_of_exact(spark):
-    """The DDSketch guarantee, empirically: at every requested percent
-    the estimate is within DD_ALPHA (relative) of the exact
-    ceil-rank-selected element of the sorted cent multiset. 1.05×
-    headroom covers the float-log bucket-boundary ulp."""
-    from tp1_distribuidos_mapreduce_spark.plans import approx as AX
-    from tp1_distribuidos_mapreduce_spark.sources.tables import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    got = {r["percent"]: r for r in AX.ddsketch_event_quantiles(ev).collect()}
-    cents = sorted(
-        int(round(r["value"] * 100))
-        for r in ev.select("value").collect()
-        if round(r["value"] * 100) >= 1
-    )
-    n = len(cents)
-    assert set(got) == set(AX.DD_PERCENTS)
-    for p in AX.DD_PERCENTS:
-        rank = (p * n + 99) // 100
-        exact = cents[rank - 1] / 100.0
-        approx = got[p]["approx_value"]
-        assert got[p]["n_rows"] == n
-        assert abs(approx - exact) <= 1.05 * AX.DD_ALPHA * exact, (
-            p, approx, exact,
-        )
-
-
 def test_ddsketch_merge_is_exact(spark):
     """Mergeability, the property the streaming fold relies on: the
     bucket table built from a union of two halves (count sums) is
@@ -293,51 +266,6 @@ def test_ddsketch_merge_is_exact(spark):
         tuple(r) for r in AX.ddsketch_event_quantiles(ev).collect()
     )
     assert q_merged == q_one
-
-def test_ddsketch_by_type_within_alpha_of_exact_per_group(spark):
-    """The grouped sketch keeps the DDSketch guarantee PER GROUP: for
-    every event_type and every requested percent, the estimate is
-    within DD_ALPHA (relative) of that type's exact ceil-rank element
-    (r14, VERDICT r13 #7). Also pins group-count agreement with the
-    exact twin event_value_quartiles_by_type on the shared percents."""
-    from collections import defaultdict
-
-    from tp1_distribuidos_mapreduce_spark.plans import approx as AX
-    from tp1_distribuidos_mapreduce_spark.sources.tables import load_table
-
-    ev = load_table(spark, SF_SMOKE, "events")
-    got = {
-        (r["event_type"], r["percent"]): r
-        for r in AX.ddsketch_quantiles_by_type(ev).collect()
-    }
-    by_type = defaultdict(list)
-    for r in ev.select("event_type", "value").collect():
-        c = int(round(r["value"] * 100))
-        if c >= 1:
-            by_type[r["event_type"]].append(c)
-    assert {t for t, _ in got} == set(by_type)
-    for t, cents in by_type.items():
-        cents.sort()
-        n = len(cents)
-        for p in AX.DD_PERCENTS:
-            rank = (p * n + 99) // 100
-            exact = cents[rank - 1] / 100.0
-            rec = got[(t, p)]
-            assert rec["n_rows"] == n
-            assert abs(rec["approx_value"] - exact) <= 1.05 * AX.DD_ALPHA * exact, (
-                t, p, rec["approx_value"], exact,
-            )
-    # the exact twin answers the identical rank question on the shared
-    # percents — element equality, not an envelope
-    twin = {
-        (r["event_type"], r["percent"]): r
-        for r in AX.event_value_quartiles_by_type(ev).collect()
-    }
-    for (t, p), r in twin.items():
-        cents = by_type[t]
-        rank = (p * r["n_rows"] + 99) // 100
-        assert r["n_rows"] == len(cents)
-        assert r["exact_value"] == cents[rank - 1] / 100.0
 
 
 def test_ddsketch_merge_proof_all_flags_true_and_bit_identical(

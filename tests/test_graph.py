@@ -1,63 +1,15 @@
-"""Numpy power-iteration pin for the rows-only PageRank query
-(operators/graph.py)."""
+"""Graph operator pins (operators/graph.py): hand graphs, fallback
+paths, warm starts and a k-core that peels. The registry queries'
+references live in differential.py."""
 
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, differential
 
 from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import graph as GR
-
-
-def _reference_pagerank(sf_dir: str):
-    con = duckdb.connect()
-    edges = con.execute(
-        f"""
-        WITH items AS (
-          SELECT DISTINCT l_orderkey, l_partkey
-          FROM '{sf_dir}/lineitem.parquet'
-        ), und AS (
-          SELECT a.l_partkey AS a, b.l_partkey AS b
-          FROM items a JOIN items b
-            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-          GROUP BY 1, 2
-        )
-        SELECT a AS src, b AS dst FROM und
-        UNION ALL
-        SELECT b, a FROM und
-        """
-    ).fetchall()
-    con.close()
-    nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
-    idx = {n: i for i, n in enumerate(nodes)}
-    n = len(nodes)
-    out_deg = np.zeros(n)
-    for s, _ in edges:
-        out_deg[idx[s]] += 1
-    rank = np.full(n, 1.0 / n)
-    d = GR.PAGERANK_DAMPING
-    for _ in range(GR.PAGERANK_ITERS):
-        mass = np.zeros(n)
-        contrib = rank / out_deg
-        for s, t in edges:
-            mass[idx[t]] += contrib[idx[s]]
-        rank = (1.0 - d) / n + d * mass
-    return nodes, out_deg, rank
-
-
-def test_pagerank_matches_numpy(spark):
-    nodes, out_deg, rank = _reference_pagerank(SF_SMOKE)
-    rows = registry.queries()["pagerank_copurchase"](spark, SF_SMOKE).collect()
-    assert [r["part_id"] for r in rows] == nodes
-    got_deg = np.array([r["out_deg"] for r in rows])
-    np.testing.assert_array_equal(got_deg, out_deg)
-    got = np.array([r["rank"] for r in rows])
-    # Spark's partial-sum order perturbs ranks at the last ulp; the 6dp
-    # output rounding dominates any engine difference.
-    assert np.abs(got - np.round(rank, 6)).max() <= 1.01e-6
 
 
 def test_pagerank_is_a_distribution(spark):
@@ -230,38 +182,18 @@ def test_bfs_distances_hand_graph(spark):
     assert got == {1: 0, 2: 1, 3: 2, 4: 3, 5: -1, 6: -1}
 
 
-def test_kcore_matches_python_peeling(spark):
-    """k-core exactness: independent Python peeling of the same edge
-    list (derived via DuckDB from the fixture) must produce the same
-    member set and in-core degrees."""
+def test_kcore_peels_fixture_graph_like_python_reference(spark):
+    """The fixture graph is its own 3-core, so the registry's k = 3
+    never removes a node. At k = 68 it peels over several rounds to a
+    176-node core, which must equal the Python peeling of the same edge
+    list (differential.py's k-core reference, also run at k = 3)."""
     from tp1_distribuidos_mapreduce_spark.sources.tables import load_table
 
     li = load_table(spark, SF_SMOKE, "lineitem")
-    got = {(r["part_id"], r["core_degree"]) for r in GR.kcore_members(li, k=3).collect()}
-
-    con = duckdb.connect()
-    und = con.execute(
-        f"""
-        SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        FROM (SELECT DISTINCT l_orderkey, l_partkey FROM '{SF_SMOKE}/lineitem.parquet') a
-        JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM '{SF_SMOKE}/lineitem.parquet') b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        """
-    ).fetchall()
-    adj: dict[int, set[int]] = {}
-    for a, b in und:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    changed = True
-    while changed:
-        changed = False
-        for n in [n for n, ns in adj.items() if len(ns) < 3]:
-            for m in adj.pop(n):
-                adj[m].discard(n)
-            changed = True
-    want = {(n, len(ns)) for n, ns in adj.items()}
-    assert got == want
-    assert got  # the fixture graph really has a 3-core
+    rows = GR.kcore_members(li, k=68).collect()
+    rec = differential._ref_kcore(rows, SF_SMOKE, k=68)
+    assert rec["reference_match"], rec
+    assert rec["n_core_members"] == 176 and rec["peel_rounds"] > 1, rec
 
 
 def test_kcore_hand_graph_peels_tail(spark):

@@ -1,71 +1,14 @@
-"""Pins for operators/lm.py: the BPE trainer's full rule sequence vs an
-independent sequential Python implementation (word frequencies derived
-via DuckDB with the same tokenizer regex), and structural properties of
-the perplexity scorer that the sf0.001 differential can't see."""
+"""Pins for operators/lm.py: structural properties of the perplexity
+scorer that the sf0.001 differential can't see. The BPE trainer and
+encoder are checked against a sequential Python BPE in differential.py
+(bpe_train_merges, bpe_encode_stats)."""
 
 from __future__ import annotations
-
-import duckdb
 
 from conftest import SF_SMOKE
 
 from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import lm as LM
-
-
-def _word_freqs(sf_dir: str) -> dict[str, int]:
-    con = duckdb.connect()
-    rows = con.execute(
-        rf"""
-        SELECT w, count(*) FROM (
-          SELECT unnest(list_filter(
-                   regexp_split_to_array(lower(text), '[^\p{{L}}]+'),
-                   x -> x <> '')) AS w
-          FROM '{sf_dir}/documents.parquet'
-        ) GROUP BY w
-        """
-    ).fetchall()
-    con.close()
-    return dict(rows)
-
-
-def _reference_bpe(freqs: dict[str, int], n_merges: int):
-    """Sequential Sennrich-style BPE: argmax pair (lexicographic
-    tie-break), left-to-right non-overlapping merge."""
-    syms = {
-        w: [c if i < len(w) - 1 else c + "</w>" for i, c in enumerate(w)]
-        for w in freqs
-    }
-    rules = []
-    for rank in range(1, n_merges + 1):
-        counts: dict[tuple[str, str], int] = {}
-        for w, f in freqs.items():
-            s = syms[w]
-            for i in range(len(s) - 1):
-                counts[(s[i], s[i + 1])] = counts.get((s[i], s[i + 1]), 0) + f
-        if not counts:
-            break
-        (l, r), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        rules.append((rank, l, r, n))
-        for w in syms:
-            s = syms[w]
-            out: list[str] = []
-            for tok in s:
-                if out and out[-1] == l and tok == r:
-                    out[-1] = l + r
-                else:
-                    out.append(tok)
-            syms[w] = out
-    return rules
-
-
-def test_bpe_merges_match_python_reference(spark):
-    got = [
-        (r["merge_rank"], r["left"], r["right"], r["pair_count"])
-        for r in registry.queries()["bpe_train_merges"](spark, SF_SMOKE).collect()
-    ]
-    expect = _reference_bpe(_word_freqs(SF_SMOKE), LM.BPE_N_MERGES)
-    assert got == expect
 
 
 def test_perplexity_train_source_scores_lowest_quantile(spark):
@@ -78,66 +21,3 @@ def test_perplexity_train_source_scores_lowest_quantile(spark):
     assert LM.LM_TRAIN_SOURCE in scores
     ranked = sorted(scores, key=scores.get)
     assert ranked.index(LM.LM_TRAIN_SOURCE) < len(ranked) / 2, scores
-
-
-def _word_freqs_by_source(sf_dir: str) -> dict[tuple[str, str], int]:
-    con = duckdb.connect()
-    rows = con.execute(
-        rf"""
-        SELECT source, w, count(*) FROM (
-          SELECT source, unnest(list_filter(
-                   regexp_split_to_array(lower(text), '[^\p{{L}}]+'),
-                   x -> x <> '')) AS w
-          FROM '{sf_dir}/documents.parquet'
-        ) GROUP BY source, w
-        """
-    ).fetchall()
-    con.close()
-    return {(s, w): n for s, w, n in rows}
-
-
-def test_bpe_encode_stats_match_python_reference(spark):
-    """Full train+encode pin: an independent sequential Python BPE
-    (train on the corpus, encode every word under the learned rules)
-    must reproduce every per-source row — words, tokens, and the
-    integer-half-up chars_per_token ratio."""
-    got = [
-        (r["source"], r["n_words"], r["n_tokens"], r["chars_per_token"])
-        for r in registry.queries()["bpe_encode_stats"](spark, SF_SMOKE).collect()
-    ]
-
-    global_freqs = _word_freqs(SF_SMOKE)
-    rules = [(l, r) for _, l, r, _ in _reference_bpe(global_freqs, LM.BPE_N_MERGES)]
-
-    def encode_len(word: str) -> int:
-        syms = [c if i < len(word) - 1 else c + "</w>" for i, c in enumerate(word)]
-        for l, r in rules:
-            out: list[str] = []
-            for tok in syms:
-                if out and out[-1] == l and tok == r:
-                    out[-1] = l + r
-                else:
-                    out.append(tok)
-            syms = out
-        return len(syms)
-
-    per_source: dict[str, list[int]] = {}
-    for (src, w), f in _word_freqs_by_source(SF_SMOKE).items():
-        agg = per_source.setdefault(src, [0, 0, 0])
-        agg[0] += f
-        agg[1] += f * encode_len(w)
-        agg[2] += f * len(w)
-    expect = [
-        (
-            src,
-            n_words,
-            n_tokens,
-            ((n_chars * 100 + n_tokens // 2) // n_tokens) / 100.0,
-        )
-        for src, (n_words, n_tokens, n_chars) in sorted(per_source.items())
-    ]
-    assert got == expect
-    # the tokenizer must actually compress: fewer tokens than characters
-    assert all(t < c for (_, _, t, c) in (
-        (s, w, t, per_source[s][2]) for s, w, t, _ in got
-    ))

@@ -7,7 +7,7 @@ import pytest
 
 from tp1_distribuidos_mapreduce_spark import registry
 
-from conftest import SF_SMOKE, assert_rows_match_oracle
+from conftest import SF_SMOKE, assert_rows_match_oracle, differential
 
 ORACLE_NAMES = sorted(registry.oracle_sql().keys())
 
@@ -41,9 +41,7 @@ def oracle_results(spark, request):
     def run(name):
         try:
             sdf = qs[name](spark, SF_SMOKE)
-            cols = sorted(sdf.columns)
-            rows = [tuple(row[c] for c in cols) for row in sdf.collect()]
-            return (cols, rows, None)
+            return (sdf.columns, sdf.collect(), None)
         except Exception as ex:  # surfaced by the owning param test
             return (None, None, ex)
 
@@ -105,13 +103,24 @@ ROWS_ONLY_NAMES = _rows_only_names()
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
 def test_rows_only_queries_emit_no_nulls(rows_only_results, name):
-    """The oracle differential now enforces the no-NULL output policy
-    mechanically for oracle-backed queries (conftest); rows-only queries
-    get the same scan here so the whole registry is covered."""
+    """The result contract (differential.compare_rows) rejects NULLs in
+    oracle-backed output; rows-only queries get the same scan here so
+    the whole registry is covered."""
     a, _ = rows_only_results[name]
     assert not isinstance(a, str), f"{name} failed: {a}"
     nulls = [(i, v) for r in a for i, v in enumerate(r) if v is None]
     assert not nulls, f"{name} emitted NULLs: {nulls[:3]}"
+
+
+@pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
+def test_rows_only_query_matches_reference(rows_only_results, name):
+    """Every rows-only query passes its independent reference check
+    (differential.REFERENCE_CHECKS, the same check the sf0.1 sweep
+    runs) on the first run's rows."""
+    rows, _ = rows_only_results[name]
+    assert not isinstance(rows, str), f"{name} failed: {rows}"
+    rec = differential.REFERENCE_CHECKS[name](rows, SF_SMOKE)
+    assert rec["reference_match"], rec
 
 
 def test_minhash_lsh_emits_pairs_on_the_corpus_fixture(rows_only_results):
@@ -145,30 +154,25 @@ def test_rows_only_queries_are_deterministic(rows_only_results):
     for name, (a, b) in rows_only_results.items():
         if isinstance(a, str) or isinstance(b, str):
             problems.append(f"{name}: {a if isinstance(a, str) else b}")
-        elif a != b:
-            problems.append(f"{name}: two runs differ")
+            continue
+        cols = list(a[0].__fields__) if a else []
+        reason = differential.compare_rows(cols, a, cols, b)
+        if reason:
+            problems.append(f"{name}: {reason}")
     assert not problems, problems
 
 
 def test_rows_only_reference_tier_is_complete():
     """r14 closed the rows-only assurance gap: every query without a
-    DuckDB oracle carries an sf0.1 independent-reference check in
+    DuckDB oracle carries an independent-reference check in
     differential.py (numpy/Python re-derivations, exact DuckDB answers
     with documented error envelopes, or exact-equality spec
-    re-derivations). This pin keeps that invariant: registering a new
+    re-derivations), run at sf0.001 above and at sf0.1 by the sweep.
+    This pin keeps that invariant: registering a new
     rows-only query without adding its REFERENCE_CHECKS entry — or
     renaming one so its check silently stops running — fails here, not
     silently in the next round's artifact."""
-    import importlib.util
-    from pathlib import Path
-
-    spec = importlib.util.spec_from_file_location(
-        "differential",
-        Path(__file__).resolve().parent.parent / "differential.py",
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    checks = set(mod.REFERENCE_CHECKS)
+    checks = set(differential.REFERENCE_CHECKS)
     rows_only = set(registry.queries()) - set(registry.oracle_sql())
     assert checks == rows_only, (
         f"missing reference checks: {sorted(rows_only - checks)}; "

@@ -645,7 +645,8 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
     reader rejects it) loads and streams as ts: timestamp, truncated
     ns→µs, through the one-time converted copy; the legacy nanosAsLong
     conf is restored after the conversion; a deleted copy is rebuilt on
-    the next load; and the test leaves no package entry behind in /tmp."""
+    the next batch load in the same session and on the next stream; and
+    the test leaves no package entry behind in /tmp."""
     import os
 
     import pyarrow as pa
@@ -710,7 +711,9 @@ def test_nanos_events_convert_to_micros_and_rebuild(spark, tmp_path):
             os.path.basename(lock_path(copy)),
         }
         shutil.rmtree(copy)
-        assert streamed("b") == expected  # rebuilt on the next load
+        # rebuilt on the next load, batch and stream alike
+        assert micros(load_table(spark, str(tmp_path), "events")) == expected
+        assert streamed("b") == expected
         assert os.path.exists(os.path.join(copy, "_SUCCESS"))
         assert spark.conf.get(_NANOS_CONF, None) == prev_conf
     finally:

@@ -1,7 +1,8 @@
-"""Numpy-reference pins for the rows-only vector operators
-(operators/vectors.py): PCA projection and Lloyd's k-means. The
-oracle-backed label_centroid_cosine is covered by the registry-wide
-differential in test_relational.py."""
+"""Property pins for the rows-only vector operators
+(operators/vectors.py): PCA component order, k-means purity and label
+centroids. Their numpy references (PCA projection, Lloyd's k-means)
+live in differential.py; the oracle-backed label_centroid_cosine is
+covered by the registry-wide differential in test_relational.py."""
 
 from __future__ import annotations
 
@@ -28,27 +29,6 @@ def emb_np():
     return ids[order], labels[order], M[order]
 
 
-def test_pca_matches_numpy(spark, emb_np):
-    ids, _, M = emb_np
-    mu = M.mean(axis=0)
-    C = (M.T @ M) / len(M) - np.outer(mu, mu)
-    vals, vecs = np.linalg.eigh(C)
-    comp = vecs[:, np.argsort(vals)[::-1][:2]].T
-    for w in comp:
-        if w[np.argmax(np.abs(w))] < 0:
-            w *= -1.0
-    expected = (M - mu) @ comp.T
-
-    rows = registry.queries()["embedding_pca"](spark, SF_SMOKE).collect()
-    assert len(rows) == len(ids)
-    got = np.array([[r["pc1"], r["pc2"]] for r in rows])
-    got_ids = np.array([r["vec_id"] for r in rows])
-    assert (got_ids == ids).all()
-    # Spark's partial-sum order perturbs the Gram matrix at the last ulp;
-    # the projected coordinates agree far tighter than the 4dp rounding.
-    assert np.abs(got - np.round(expected, 4)).max() <= 1.01e-4
-
-
 def test_pca_explained_variance_ordered(spark, emb_np):
     """pc1 must carry at least as much variance as pc2 — the component
     ordering contract."""
@@ -56,41 +36,6 @@ def test_pca_explained_variance_ordered(spark, emb_np):
     pc1 = np.array([r["pc1"] for r in rows])
     pc2 = np.array([r["pc2"] for r in rows])
     assert pc1.var() >= pc2.var()
-
-
-def _numpy_kmeans(M, k, n_iter):
-    cents = M[:k].copy()
-    for _ in range(n_iter):
-        d = ((M[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for i in range(k):
-            members = M[assign == i]
-            if len(members):
-                cents[i] = members.mean(axis=0)
-    d = ((M[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-    return d.argmin(axis=1), cents
-
-
-def test_kmeans_matches_numpy_reference(spark, emb_np):
-    ids, labels, M = emb_np
-    assign, _ = _numpy_kmeans(M, VC.KMEANS_K, VC.KMEANS_ITERS)
-
-    e = load_table(spark, SF_SMOKE, "embeddings")
-    rows = registry.queries()["kmeans_clusters"](spark, SF_SMOKE).collect()
-    # Census totals must cover the corpus exactly once.
-    assert sum(r["n_vecs"] for r in rows) == len(ids)
-    got_sizes = {r["cluster_id"]: r["n_vecs"] for r in rows}
-    ref_sizes = {int(c): int((assign == c).sum()) for c in range(VC.KMEANS_K)}
-    ref_sizes = {c: n for c, n in ref_sizes.items() if n > 0}
-    # Float partial-aggregation order can flip boundary points between
-    # engines; demand ≥98% size agreement per cluster and identical keys.
-    assert set(got_sizes) == set(ref_sizes)
-    for c, n_ref in ref_sizes.items():
-        assert abs(got_sizes[c] - n_ref) <= max(2, int(0.02 * n_ref)), (
-            c,
-            got_sizes[c],
-            n_ref,
-        )
 
 
 def test_kmeans_purity_consistent(spark, emb_np):

@@ -627,10 +627,13 @@ def connected_components(
     )
     # Broadcast the node-cardinality label frame into the per-round edge
     # join while it fits executor memory (r21 — the PageRank/BFS/k-core
-    # broadcast-with-guard discipline, graph.py): checkpointed frames
-    # report no size estimate, so without the hint every round SORT-MERGE
-    # joins — shuffling the EDGE table per round. Past the limit both
-    # joins degrade gracefully to the shuffled equi-join.
+    # broadcast-with-guard discipline, graph.py). Checkpointed frames do
+    # report a size, but graph.py measured that such unhinted joins plan
+    # as sort-merge and AQE turns them into broadcasts only after both
+    # sides' shuffle map stages ran: without the hints this operator ran
+    # 33 Spark jobs per dedup_clusters call instead of 29 (sf0.01,
+    # identical rows). Past the limit both joins degrade gracefully to the
+    # shuffled equi-join.
     # Shared guard from graph.py (ADVICE r21): one threshold policy for
     # ALL four iterative-join users (PageRank/BFS/k-core/CC) — a local
     # copy of the 1M constant would silently diverge on a policy change.

@@ -25,7 +25,7 @@ the edge list:
   term vanishes and the per-round plan stays join + aggregate.
 
 Float partial-sum order perturbs ranks at the last ulp → rows-only
-driver check; tests/test_graph.py pins every node's rank against a
+driver check; differential.py pins every node's rank against a
 numpy power-iteration reference well inside the 6dp output rounding.
 """
 
@@ -360,9 +360,12 @@ def triangle_count(lineitem: DataFrame) -> DataFrame:
     )
     # node-cardinality frames (deg, adj) broadcast into the edge joins
     # under the shared PageRank/BFS/k-core 1M-node guard; past it they
-    # degrade to shuffled equi-joins (checkpointed frames report no size
-    # estimate, so the explicit hint is what keeps the edge table from
-    # shuffling — the auto-broadcast threshold cannot see them).
+    # degrade to shuffled equi-joins. The checkpointed deg frame does
+    # report a size, but unhinted the two adjacency joins plan as
+    # sort-merge and AQE turns them into broadcasts only after both
+    # sides' shuffle map stages ran: without the hints a call ran 21
+    # Spark jobs instead of 18 and wrote 3.2 MB of shuffle instead of
+    # 1.96 MB (sf0.01, identical rows).
     bcast = _maybe_broadcast(deg.count())
     # orient toward the higher-(degree, id) endpoint. The two aliased
     # deg projections LOOK like two broadcast builds, but AQE's runtime
@@ -521,10 +524,14 @@ def bfs_distances(lineitem: DataFrame) -> DataFrame:
             "graph diameter exceeds the bound; raise BFS_MAX_ROUNDS"
         )
     return (
-        # settled is node-cardinality and checkpointed (no size estimate):
-        # the same broadcast guard as the loop joins keeps the closing
-        # left join from planning sort-merge (r21 — this was the final
-        # plan's one SortMergeJoin).
+        # settled is node-cardinality: the same broadcast guard as the
+        # loop joins keeps the closing left join from planning sort-merge
+        # (r21 — this was the final plan's one SortMergeJoin). Checkpoints
+        # do report a size (the nodes frame: 95,858 bytes at sf0.01), but
+        # unhinted this join plans as sort-merge and AQE turns it into a
+        # broadcast only after both shuffle map stages ran; without any of
+        # the hints a call ran 34 Spark jobs instead of 28 (sf0.01,
+        # identical rows).
         nodes.join(bcast(settled), "part_id", "left")
         .select(
             "part_id",
@@ -592,7 +599,7 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     the core, the number a community-detection consumer ranks by.
     Rows-only by design (iterative peeling has no ANSI-SQL oracle —
     recursive CTEs cannot re-aggregate per round); exactness is pinned
-    in tests/test_graph.py against an independent Python peeling of the
+    in differential.py against an independent Python peeling of the
     same edge list.
     """
     edges = copurchase_edges(lineitem).localCheckpoint()

@@ -187,7 +187,7 @@ def bpe_train_merges(documents: DataFrame, n_merges: int = BPE_N_MERGES) -> Data
     — and (3) rewrites the symbol tables in-row with a left-to-right
     non-overlapping merge (aggregate-fold: 'aaa' + rule a+a merges the
     FIRST pair only, the reference semantics). The per-word symbol state
-    never leaves the executors; tests/test_lm.py pins the full rule
+    never leaves the executors; differential.py pins the full rule
     sequence against an independent sequential Python implementation.
 
     Rows-only by nature (iterative argmax is not ANSI-SQL-expressible —
@@ -300,7 +300,7 @@ def bpe_encode_stats(
     then one hash aggregate over freq-weighted token counts.
     chars_per_token is an integer half-up ratio at 2dp (no float
     surface). Rows-only by nature (inherits the trainer's iterative
-    argmax); tests/test_lm.py pins the full output against an
+    argmax); differential.py pins the full output against an
     independent sequential Python train+encode of the same corpus.
     """
     rules = [

@@ -26,7 +26,7 @@ Scale shapes:
 
 Determinism: PCA/k-means outputs depend on float partial-aggregation
 order at the last ulp → rows-only driver checks, with numpy-reference
-pins (tolerance / agreement-rate) in tests/test_vectors.py. The centroid
+pins (tolerance / agreement-rate) in differential.py. The centroid
 cosine query rounds at 4dp over continuous measures (the value_outliers
 determinism argument).
 """

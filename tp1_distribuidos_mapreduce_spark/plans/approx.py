@@ -936,7 +936,7 @@ def quantiles_from_dd_buckets(
     never the data), integer ceil-ranks (p·n + 99) div 100, and the
     log-space midpoint estimator 2·gamma^idx/(gamma + 1). Rows:
     (percent, n_rows, approx_value), rows-only — the error envelope vs
-    the exact element is pinned in tests/test_approx.py."""
+    the exact element is pinned in differential.py's reference checks."""
     spark = buckets.sparkSession
     # The cumulative AND the total both consume the sketch table; without
     # a checkpoint each consumer re-derives the whole build lineage — two
@@ -982,9 +982,9 @@ def ddsketch_event_quantiles(events: DataFrame) -> DataFrame:
     guarantee: build the log-domain sketch, then read the requested
     percentiles off it. |approx − exact| ≤ DD_ALPHA·exact at every
     requested rank, any data size — pinned against the exact sorted
-    element in tests/test_approx.py (exact twins with driver rows over
-    the same cent-cell machinery: winsorized_mean_price /
-    iqr_price_fences)."""
+    element in differential.py's reference checks (exact twins with
+    driver rows over the same cent-cell machinery:
+    winsorized_mean_price / iqr_price_fences)."""
     return quantiles_from_dd_buckets(dd_value_buckets(events))
 
 
@@ -1020,7 +1020,7 @@ def ddsketch_quantiles_by_type(
     the same midpoint estimator. Rows: (event_type, percent, n_rows,
     approx_value), rows-only — the per-group error envelope vs the
     exact per-group element (event_value_quartiles_by_type's oracle
-    machinery) is pinned in tests/test_approx.py."""
+    machinery) is pinned in differential.py's reference checks."""
     return quantiles_from_dd_buckets_by_type(
         dd_value_buckets_by_type(events), percents
     )

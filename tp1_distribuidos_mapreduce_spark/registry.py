@@ -1111,7 +1111,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-row basket pair expansion → edge list, then fixed-round
     join+aggregate power iteration with per-round localCheckpoint.
     Float-order sensitive at the last ulp → rows-only; every node's
-    rank numpy-pinned in tests/test_graph.py."""
+    rank numpy-pinned in differential.py."""
     return GR.pagerank_copurchase(load_table(spark, sf_dir, "lineitem"))
 
 
@@ -1133,7 +1133,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gram-partial pass (dim×dim per partition), dim²-bounded reduce +
     driver eigendecomposition, JVM-side projection. Float-order
     sensitive at the last ulp → rows-only; numpy-pinned in
-    tests/test_vectors.py."""
+    differential.py."""
     return VC.embedding_pca(load_table(spark, sf_dir, "embeddings"))
 
 
@@ -1142,7 +1142,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd's k-means census (operators/vectors.py): deterministic
     lowest-vec_id init, fixed rounds, map-side Catalyst argmin
     assignment, k×dim-bounded per-round collect. Rows-only; agreement-
-    pinned vs a numpy reference in tests/test_vectors.py."""
+    pinned vs a numpy reference in differential.py."""
     return VC.kmeans_clusters(load_table(spark, sf_dir, "embeddings"))
 
 
@@ -1495,7 +1495,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed pair-count aggregate + bounded argmax collect + in-row
     fold merge. Rows-only (iterative argmax is not ANSI-SQL); the full
     rule sequence is pinned against a sequential Python reference in
-    tests/test_lm.py."""
+    differential.py."""
     return LM.bpe_train_merges(load_table(spark, sf_dir, "documents"))
 
 
@@ -1506,7 +1506,7 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary cardinality with the bounded rule list broadcast into an
     Arrow-batched fold, then one freq-weighted aggregate. Rows-only
     (inherits the trainer's iterative argmax); full train+encode pinned
-    against a sequential Python reference in tests/test_lm.py."""
+    against a sequential Python reference in differential.py."""
     return LM.bpe_encode_stats(load_table(spark, sf_dir, "documents"))
 
 
@@ -2016,7 +2016,7 @@ def q_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge restriction with broadcast-guarded semi-joins, scalar-only
     convergence checks. Rows-only by design (recursive CTEs cannot
     re-aggregate per round); exact Python-peeling pin in
-    tests/test_graph.py."""
+    differential.py."""
     return GR.kcore_members(load_table(spark, sf_dir, "lineitem"))
 
 
@@ -2365,10 +2365,11 @@ def q_ddsketch_event_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/approx.py): log-domain bucket counts (one mergeable hash
     aggregate), cumulative selection over the ≤ ~800-row bucket frame,
     midpoint estimator within DD_ALPHA of the exact element at every
-    requested rank. Rows-only (sketch); error envelope + merge
-    bit-identity pinned in tests/test_approx.py; the exact element
-    machinery holding driver rows is winsorized_mean_price /
-    iqr_price_fences (same cent-cell selection discipline)."""
+    requested rank. Rows-only (sketch); error envelope pinned in
+    differential.py, merge bit-identity in tests/test_approx.py; the
+    exact element machinery holding driver rows is
+    winsorized_mean_price / iqr_price_fences (same cent-cell selection
+    discipline)."""
     return AX.ddsketch_event_quantiles(load_table(spark, sf_dir, "events"))
 
 
@@ -2416,7 +2417,7 @@ def q_ddsketch_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch build is ONE hash aggregate keyed (event_type, idx);
     selection windows run over each group's ≤ ~800-row log-bucket
     frame. Rows-only (sketch); per-group error envelope vs the exact
-    per-group element pinned in tests/test_approx.py; the exact twin
+    per-group element pinned in differential.py; the exact twin
     holding a driver row is event_value_quartiles_by_type (same
     population, same rank convention)."""
     return AX.ddsketch_quantiles_by_type(load_table(spark, sf_dir, "events"))

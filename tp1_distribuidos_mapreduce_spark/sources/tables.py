@@ -28,12 +28,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor (their
-# cardinality is fixed or near-fixed in TPC-H-style schemas: region=5,
-# nation=25). Join planners should broadcast these unconditionally.
-ALWAYS_BROADCAST = frozenset({"region", "nation"})
-
-
 # Per-process parquet SCHEMA cache keyed on (path, size, mtime_ns) — pure
 # metadata, the same class as Spark's own file-listing cache (filesource
 # PartitionFileCacheSize): footer-based schema inference costs ~110 ms per
@@ -68,6 +62,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    if name == "events":
+        # Resolved on every call (a stat and the footer memo): a derived
+        # µs copy is read directly, never behind a view, so a deleted
+        # copy is rebuilt here instead of scanned through a stale view.
+        src = _usec_events_path(spark, path)
+        if src != path:
+            return _normalize_ts(read_parquet_cached_schema(spark, src))
     # Per-session TEMP-VIEW reuse (r22, guide §6 — the catalog-view form
     # of the r21 schema cache): even with the cached schema, constructing
     # a fresh reader DataFrame costs ~11-28 ms per call (measured warm:
@@ -87,25 +88,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         tag = fixture_cache_tag(sf_dir, name)
     except OSError:
         tag = None
-    if tag is not None:
-        views = getattr(spark, "_graft_view_names", None)
-        if views is None:
-            views = {}
-            spark._graft_view_names = views
-        view = views.get(tag)
-        if view is None:
-            df = (
-                _load_events(spark, path)
-                if name == "events"
-                else read_parquet_cached_schema(spark, path)
-            )
-            view = f"graft_{name}_{tag}"
-            df.createOrReplaceTempView(view)
-            views[tag] = view
-        return spark.table(view)
-    if name == "events":
-        return _load_events(spark, path)
-    return read_parquet_cached_schema(spark, path)
+    if tag is None:
+        return read_parquet_cached_schema(spark, path)
+    views = getattr(spark, "_graft_view_names", None)
+    if views is None:
+        views = {}
+        spark._graft_view_names = views
+    view = views.get(tag)
+    if view is None:
+        df = read_parquet_cached_schema(spark, path)
+        if name == "events":
+            df = _normalize_ts(df)
+        view = f"graft_{name}_{tag}"
+        df.createOrReplaceTempView(view)
+        views[tag] = view
+    return spark.table(view)
 
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
@@ -159,16 +156,6 @@ def _usec_events_path(spark: SparkSession, path: str) -> str:
                 spark.conf.set(_NANOS_CONF, prev)
 
     return build_once(out, _build)
-
-
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects — read via the µs-converted artifact (see
-    _usec_events_path), with the r21 cached-schema read (the converted
-    artifact is immutable once its build_once marker lands)."""
-    return _normalize_ts(
-        read_parquet_cached_schema(spark, _usec_events_path(spark, path))
-    )
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
