@@ -3,8 +3,8 @@ differential that runs both at a chosen scale factor.
 
 ``compare_rows`` is the one result contract: the Spark rows must equal
 the expected rows exactly, as a multiset of rows over name-sorted
-columns, and hold no NULL. "Exactly" is the driver gate's own rule:
-every row's ``repr`` must match, so 1 and 1.0, or two floats an ulp
+columns, and hold no NULL. "Exactly" is the sf0.01 entry-point gate's
+rule (sorted row reprs): every row's ``repr`` must match, so 1 and 1.0, or two floats an ulp
 apart, differ. tests/conftest.py loads this module; the pytest oracle
 differential and the rows-only determinism check both call it.
 
@@ -51,7 +51,7 @@ TABLES = [
 def compare_rows(cols_a, rows_a, cols_b, rows_b) -> str | None:
     """The first reason Spark's ``rows_a`` (tuples in ``cols_a`` order)
     break the result contract against ``rows_b`` (in ``cols_b`` order),
-    or None: a NULL anywhere in ``rows_a`` (the driver may sort rows as
+    or None: a NULL anywhere in ``rows_a`` (a consumer may sort rows as
     plain tuples, and None vs str/datetime raises there; coalesce to
     sentinels in both engines), a different column set, a different row
     count, or any row whose ``repr`` differs once both sides are sorted

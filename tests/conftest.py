@@ -157,9 +157,9 @@ def rows_only_results(spark, request):
 
 
 def assert_df_matches_oracle(sdf, duck, sql):
-    """Spark DataFrame vs DuckDB SQL under the result contract — the
-    driver gate's own rule (and the reference's sequential-oracle
-    comparison, tests/test_wc.py:30-39)."""
+    """Spark DataFrame vs DuckDB SQL under the result contract,
+    differential.compare_rows (the reference's sequential-oracle
+    comparison is tests/test_wc.py:30-39)."""
     assert_rows_match_oracle(sdf.columns, sdf.collect(), duck, sql)
 
 

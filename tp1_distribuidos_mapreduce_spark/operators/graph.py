@@ -25,7 +25,7 @@ the edge list:
   term vanishes and the per-round plan stays join + aggregate.
 
 Float partial-sum order perturbs ranks at the last ulp → rows-only
-driver check; differential.py pins every node's rank against a
+check; differential.py pins every node's rank against a
 numpy power-iteration reference well inside the 6dp output rounding.
 """
 

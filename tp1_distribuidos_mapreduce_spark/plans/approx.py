@@ -982,9 +982,9 @@ def ddsketch_event_quantiles(events: DataFrame) -> DataFrame:
     guarantee: build the log-domain sketch, then read the requested
     percentiles off it. |approx − exact| ≤ DD_ALPHA·exact at every
     requested rank, any data size — pinned against the exact sorted
-    element in differential.py's reference checks (exact twins with
-    driver rows over the same cent-cell machinery:
-    winsorized_mean_price / iqr_price_fences)."""
+    element in differential.py's reference checks (oracled exact twins
+    over the same cent-cell machinery: winsorized_mean_price /
+    iqr_price_fences)."""
     return quantiles_from_dd_buckets(dd_value_buckets(events))
 
 

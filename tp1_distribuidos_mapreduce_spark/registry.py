@@ -2367,9 +2367,8 @@ def q_ddsketch_event_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint estimator within DD_ALPHA of the exact element at every
     requested rank. Rows-only (sketch); error envelope pinned in
     differential.py, merge bit-identity in tests/test_approx.py; the
-    exact element machinery holding driver rows is
-    winsorized_mean_price / iqr_price_fences (same cent-cell selection
-    discipline)."""
+    oracled exact element machinery is winsorized_mean_price /
+    iqr_price_fences (same cent-cell selection discipline)."""
     return AX.ddsketch_event_quantiles(load_table(spark, sf_dir, "events"))
 
 
