@@ -251,46 +251,19 @@ def _ref_pca(rows: list, sf_dir: str) -> dict:
 # error contracts, asserted against EXACT DuckDB answers (at sf0.1 the
 # sketches are saturated). ---------------------------------------------------
 
-_DD_EXACT_SQL = """
-WITH cells AS (
-  SELECT {grp} CAST(round(value * 100) AS BIGINT) AS c,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM '{sf_dir}/events.parquet'
-  WHERE CAST(round(value * 100) AS BIGINT) >= 1
-  GROUP BY {grpnum} c
-), cum AS (
-  SELECT {grp} c, cnt,
-         coalesce(sum(cnt) OVER ({part} ORDER BY c
-                                 ROWS BETWEEN UNBOUNDED PRECEDING
-                                          AND 1 PRECEDING), 0) AS prior,
-         sum(cnt) OVER ({part}) AS n
-  FROM cells
-), p AS (SELECT * FROM (VALUES (1), (25), (50), (75), (99)) AS t(percent))
-SELECT {grp} percent, CAST(n AS BIGINT) AS n, c
-FROM cum CROSS JOIN p
-WHERE prior < (percent * n + 99) // 100
-  AND (percent * n + 99) // 100 <= prior + cnt
-"""
-
-
 def _dd_exact(sf_dir: str, by_type: bool) -> dict:
     import duckdb
 
-    con = duckdb.connect()
-    sql = _DD_EXACT_SQL.format(
-        sf_dir=sf_dir,
-        grp="event_type," if by_type else "",
-        grpnum="1," if by_type else "",
-        part="PARTITION BY event_type" if by_type else "",
+    from tp1_distribuidos_mapreduce_spark.plans.approx import (
+        DD_PERCENTS,
+        exact_ceil_rank_sql,
     )
+
+    con = duckdb.connect()
+    sql = exact_ceil_rank_sql(f"'{sf_dir}/events.parquet'", DD_PERCENTS, by_type)
     out = {}
-    for row in con.execute(sql).fetchall():
-        if by_type:
-            t, p, n, c = row
-            out[(t, p)] = (n, c / 100.0)
-        else:
-            p, n, c = row
-            out[p] = (n, c / 100.0)
+    for *key, n, value in con.execute(sql).fetchall():
+        out[tuple(key) if by_type else key[0]] = (n, value)
     con.close()
     return out
 

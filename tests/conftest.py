@@ -93,6 +93,9 @@ FIXTURE_CONSUMERS = {
         "cms_merge_proof",
         "bloom_merge_proof",
     ],
+    "test_pagerank_is_a_distribution": ["pagerank_copurchase"],
+    "test_pca_explained_variance_ordered": ["embedding_pca"],
+    "test_kmeans_purity_consistent": ["kmeans_clusters"],
 }
 
 

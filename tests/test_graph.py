@@ -12,8 +12,8 @@ from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import graph as GR
 
 
-def test_pagerank_is_a_distribution(spark):
-    rows = registry.queries()["pagerank_copurchase"](spark, SF_SMOKE).collect()
+def test_pagerank_is_a_distribution(rows_only_results):
+    rows, _ = rows_only_results["pagerank_copurchase"]
     total = sum(r["rank"] for r in rows)
     # No dangling nodes in an undirected graph → ranks sum to 1 (up to
     # the 6dp rounding × node count).
@@ -196,18 +196,52 @@ def test_kcore_peels_fixture_graph_like_python_reference(spark):
     assert rec["n_core_members"] == 176 and rec["peel_rounds"] > 1, rec
 
 
-def test_kcore_hand_graph_peels_tail(spark):
+def test_kcore_hand_graph_peels_tail(spark, monkeypatch):
     """Hand graph: K4 on {1,2,3,4} plus a pendant path 4-5-6. The 3-core
-    is exactly the K4 (degrees 3); the path peels away over two rounds
-    (6 first, then 5)."""
-    rows = (
-        [(100, p) for p in (1, 2, 3, 4)]  # one basket → K4
-        + [(200, 4), (200, 5)]
-        + [(300, 5), (300, 6)]
+    is exactly the K4 (degrees 3): the first round peels 5 and 6
+    (degrees 2 and 1), the second finds no node below 3. The K4 alone is
+    already its own 3-core, so it takes one degree round and no semi-
+    join round: two localCheckpoints, the edges and the degrees."""
+    schema = "l_orderkey long, l_partkey long"
+    k4_rows = [(100, p) for p in (1, 2, 3, 4)]  # one basket → K4
+    k4 = spark.createDataFrame(k4_rows, schema)
+    pendant = spark.createDataFrame(
+        k4_rows + [(200, 4), (200, 5), (300, 5), (300, 6)], schema
     )
-    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
-    got = {(r["part_id"], r["core_degree"]) for r in GR.kcore_members(li, k=3).collect()}
-    assert got == {(1, 3), (2, 3), (3, 3), (4, 3)}
+    calls = []
+    original = type(k4).localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(k4), "localCheckpoint", counted)
+    core = [(1, 3), (2, 3), (3, 3), (4, 3)]
+    assert [tuple(r) for r in GR.kcore_members(pendant, k=3).collect()] == core
+    assert len(calls) > 2
+    calls.clear()
+    assert [tuple(r) for r in GR.kcore_members(k4, k=3).collect()] == core
+    assert len(calls) == 2
+
+
+def test_kcore_empty_results_keep_the_schema(spark):
+    """A k above the maximum degree peels every node, and a lineitem
+    with no order of two or more parts has no edges: both return an
+    empty (part_id bigint, core_degree bigint) frame, never an error."""
+    schema = "struct<part_id:bigint,core_degree:bigint>"
+    k4 = spark.createDataFrame(
+        [(100, p) for p in (1, 2, 3, 4)], "l_orderkey long, l_partkey long"
+    )
+    peeled = GR.kcore_members(k4, k=4)
+    assert peeled.schema.simpleString() == schema
+    assert peeled.collect() == []
+
+    singles = spark.createDataFrame(
+        [(100, 1), (200, 2), (300, 2)], "l_orderkey long, l_partkey long"
+    )
+    no_edges = GR.kcore_members(singles, k=3)
+    assert no_edges.schema.simpleString() == schema
+    assert no_edges.collect() == []
 
 
 def test_pagerank_warm_start_resumes_run(spark, tmp_path):

@@ -12,7 +12,6 @@ import pytest
 
 from conftest import SF_SMOKE
 
-from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import vectors as VC
 from tp1_distribuidos_mapreduce_spark.sources.tables import load_table
 
@@ -29,18 +28,18 @@ def emb_np():
     return ids[order], labels[order], M[order]
 
 
-def test_pca_explained_variance_ordered(spark, emb_np):
+def test_pca_explained_variance_ordered(rows_only_results):
     """pc1 must carry at least as much variance as pc2 — the component
     ordering contract."""
-    rows = registry.queries()["embedding_pca"](spark, SF_SMOKE).collect()
+    rows, _ = rows_only_results["embedding_pca"]
     pc1 = np.array([r["pc1"] for r in rows])
     pc2 = np.array([r["pc2"] for r in rows])
     assert pc1.var() >= pc2.var()
 
 
-def test_kmeans_purity_consistent(spark, emb_np):
+def test_kmeans_purity_consistent(rows_only_results, emb_np):
     ids, labels, M = emb_np
-    rows = registry.queries()["kmeans_clusters"](spark, SF_SMOKE).collect()
+    rows, _ = rows_only_results["kmeans_clusters"]
     for r in rows:
         assert 0.0 < r["purity"] <= 1.0
         assert 0 <= r["majority_label"] <= int(labels.max())

@@ -585,15 +585,17 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     shape in the graph family after PageRank's fixed-round power
     iteration and BFS's frontier relaxation.
 
-    Peeling loop: compute degrees over the surviving edge set, drop
-    nodes under k, restrict edges to surviving endpoints (two semi-
-    joins on the node frame), repeat until the node count is stable.
-    Convergence actions are SCALAR counts only; localCheckpoint per
-    round keeps lineage flat; rounds are capped loudly (peeling
-    terminates in ≤ |V| rounds, in practice a handful). The surviving
-    node frame is node-cardinality — broadcast into the edge
-    restriction under the same 1M-node guard as PageRank/BFS, shuffled
-    equi-join past it.
+    Peeling loop: each round aggregates the surviving edges into
+    per-node degrees once (localCheckpoint keeps lineage flat) and one
+    scalar aggregate counts the nodes below k and at or above it. A
+    round with no node below k stops the loop, and that round's degrees
+    are the result: every surviving node then has degree ≥ k within
+    the surviving edges, which is the core. Otherwise the edges are
+    restricted to the kept nodes (two semi-joins on the node frame,
+    broadcast under the same 1M-node guard as PageRank/BFS, shuffled
+    equi-join past it) and the next round runs. Rounds are capped
+    loudly (peeling terminates in ≤ |V| rounds, in practice a handful).
+    An empty graph, or a k that peels every node, returns no rows.
 
     Output: (part_id, core_degree) for k-core members — degree within
     the core, the number a community-detection consumer ranks by.
@@ -603,35 +605,32 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     same edge list.
     """
     edges = copurchase_edges(lineitem).localCheckpoint()
-    n_prev = -1
     for _ in range(KCORE_MAX_ROUNDS):
-        degrees = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        keep = degrees.where(F.col("deg") >= k).select("src").localCheckpoint()
-        n_now = keep.count()
-        if n_now == n_prev:
-            break
-        n_prev = n_now
-        if n_now == 0:
-            break
-        bcast = _maybe_broadcast(n_now)
+        degrees = (
+            edges.groupBy(F.col("src").alias("part_id"))
+            .agg(F.count("*").cast("long").alias("core_degree"))
+            .localCheckpoint()
+        )
+        low = F.col("core_degree") < k
+        n_low, n_keep = degrees.agg(
+            F.count(F.when(low, 1)), F.count(F.when(~low, 1))
+        ).first()
+        if n_low == 0:
+            return degrees.orderBy("part_id")
+        keep = degrees.where(~low)
+        bcast = _maybe_broadcast(n_keep)
         # the two keep broadcasts dedup at runtime (AQE stage
         # canonicalization strips the rename) — probed in r22, shared-
         # frame rewrite measured flat and was reverted; see triangle.
         edges = (
-            edges.join(bcast(keep), "src", "left_semi")
+            edges.join(
+                bcast(keep.select(F.col("part_id").alias("src"))), "src", "left_semi"
+            )
             .join(
-                bcast(keep.select(F.col("src").alias("dst"))), "dst", "left_semi"
+                bcast(keep.select(F.col("part_id").alias("dst"))), "dst", "left_semi"
             )
             .localCheckpoint()
         )
-    else:
-        raise RuntimeError(
-            f"k-core peeling did not stabilize within {KCORE_MAX_ROUNDS} rounds"
-        )
-    return (
-        edges.groupBy("src")
-        .agg(F.count("*").cast("long").alias("core_degree"))
-        .where(F.col("core_degree") >= k)
-        .select(F.col("src").alias("part_id"), "core_degree")
-        .orderBy("part_id")
+    raise RuntimeError(
+        f"k-core peeling did not stabilize within {KCORE_MAX_ROUNDS} rounds"
     )

@@ -1180,27 +1180,44 @@ def event_value_quartiles_by_type(events: DataFrame) -> DataFrame:
     )
 
 
-EVENT_VALUE_QUARTILES_BY_TYPE_ORACLE = """
+def exact_ceil_rank_sql(source: str, percents, by_type: bool) -> str:
+    """DuckDB SQL for the exact ceil-rank element of the positive-cents
+    value population — the sketches' own population and rank rule: cent
+    cells with c >= 1, a cumulative prior per cell, and the cell with
+    prior < ceil(p·n / 100) <= prior + cnt selected for each percent p.
+    ``source`` is what the FROM reads (a view name or a quoted parquet
+    path); ``by_type`` groups and partitions by event_type. Output:
+    ([event_type,] percent, n_rows, exact_value) ordered by the keys.
+    One text serves the by-type exact twin's oracle and differential.py's
+    DDSketch envelope references."""
+    grp = "event_type, " if by_type else ""
+    part = "PARTITION BY event_type" if by_type else ""
+    values = ", ".join(f"({p})" for p in percents)
+    return f"""
 WITH cells AS (
-  SELECT event_type,
-         CAST(round(value * 100) AS BIGINT) AS c,
+  SELECT {grp}CAST(round(value * 100) AS BIGINT) AS c,
          CAST(count(*) AS BIGINT) AS cnt
-  FROM events
+  FROM {source}
   WHERE CAST(round(value * 100) AS BIGINT) >= 1
-  GROUP BY 1, 2
+  GROUP BY {grp}c
 ), cum AS (
-  SELECT event_type, c, cnt,
-         CAST(coalesce(sum(cnt) OVER (PARTITION BY event_type ORDER BY c
+  SELECT {grp}c, cnt,
+         CAST(coalesce(sum(cnt) OVER ({part} ORDER BY c
                                       ROWS BETWEEN UNBOUNDED PRECEDING
                                                AND 1 PRECEDING), 0)
               AS BIGINT) AS prior,
-         CAST(sum(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS n_rows
+         CAST(sum(cnt) OVER ({part}) AS BIGINT) AS n_rows
   FROM cells
-), p AS (SELECT * FROM (VALUES (25), (50), (75)) AS t(percent))
-SELECT event_type, percent, n_rows,
+), p AS (SELECT * FROM (VALUES {values}) AS t(percent))
+SELECT {grp}percent, n_rows,
        CAST(c AS DOUBLE) / 100.0 AS exact_value
 FROM cum CROSS JOIN p
 WHERE prior < (percent * n_rows + 99) // 100
   AND (percent * n_rows + 99) // 100 <= prior + cnt
-ORDER BY event_type, percent
+ORDER BY {grp}percent
 """
+
+
+EVENT_VALUE_QUARTILES_BY_TYPE_ORACLE = exact_ceil_rank_sql(
+    "events", (25, 50, 75), by_type=True
+)

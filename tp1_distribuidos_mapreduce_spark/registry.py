@@ -2012,11 +2012,12 @@ def q_rowdir_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("kcore_members")
 def q_kcore_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core peeling (operators/graph.py): iterative degree-filtered
-    edge restriction with broadcast-guarded semi-joins, scalar-only
-    convergence checks. Rows-only by design (recursive CTEs cannot
-    re-aggregate per round); exact Python-peeling pin in
-    differential.py."""
+    """k-core peeling (operators/graph.py): each round builds the
+    surviving edges' degrees once and stops when no node is below k,
+    returning that round's degrees; otherwise broadcast-guarded semi-
+    joins restrict the edges to the kept nodes. Rows-only by design
+    (recursive CTEs cannot re-aggregate per round); exact Python-peeling
+    pin in differential.py."""
     return GR.kcore_members(load_table(spark, sf_dir, "lineitem"))
 
 
