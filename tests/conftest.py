@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import importlib.util
-import os
 from pathlib import Path
 
 import duckdb
@@ -22,32 +21,10 @@ _spec.loader.exec_module(differential)
 
 
 @pytest.fixture(scope="session")
-def spark(request):
-    # Cap parallelize/createDataFrame slice counts for the test session
-    # (r16 suite-time reclamation, VERDICT r15 #2): tiny literal fixtures
-    # otherwise schedule one task per core — 32 Python-worker round trips
-    # for a 3-row frame. sf-scaled reads and shuffles are unaffected
-    # (parquet splits and spark.sql.shuffle.partitions don't depend on
-    # it); see session.py for the measurement. The 10× scale drills are
-    # the exception and run UNCAPPED: at drill scale fewer slices means
-    # 4× fatter partitions (a capped run OOM'd the 8g heap in the 10×
-    # dedup shingle stage), and the slopes must stay comparable to the
-    # uncapped prior-round SCALING.md tables. The cap is all-or-nothing
-    # per session: a mixed `-k` selection that includes even one
-    # slow-marked test runs the WHOLE session uncapped — it loses the
-    # speedup, never correctness (VERDICT r16 watch item).
-    # Save/restore around the yield (ADVICE r16: setdefault with no
-    # teardown leaked the cap into any subprocess or later get_spark()
-    # call made from this test process — e.g. a test shelling out to
-    # bench.py would silently inherit the capped parallelism).
-    had_cap = "SPARK_GRAFT_DEFAULT_PARALLELISM" in os.environ
-    if not any(item.get_closest_marker("slow") for item in request.session.items):
-        os.environ.setdefault("SPARK_GRAFT_DEFAULT_PARALLELISM", "8")
+def spark():
     spark = get_spark("tp1-tests")
     yield spark
     spark.stop()
-    if not had_cap:
-        os.environ.pop("SPARK_GRAFT_DEFAULT_PARALLELISM", None)
 
 
 @pytest.fixture(scope="session")

@@ -4,19 +4,23 @@ output, compared against the native wc query on the same corpus."""
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
+import subprocess
 import sys
 import types
 
 import pytest
 
+import tp1_distribuidos_mapreduce_spark.__main__ as cli
 from tp1_distribuidos_mapreduce_spark.__main__ import main, resolve_job
 from tp1_distribuidos_mapreduce_spark.operators.mapreduce import MapReduceJob
 from tp1_distribuidos_mapreduce_spark.operators.wordcount import (
     inverted_index,
     word_count,
 )
+from tp1_distribuidos_mapreduce_spark.sources import artifacts
 from tp1_distribuidos_mapreduce_spark.sources.text import read_text_corpus
 
 DOCS = {
@@ -131,3 +135,60 @@ def test_cli_resolve_job_errors():
             resolve_job("not_a_plugin:NOT_A_JOB")
     finally:
         del sys.modules["not_a_plugin"]
+
+
+def _lock_files(root):
+    """One lock file of each kind ``clean`` removes, plus a file it keeps."""
+    names = [
+        "tp1_spark_lock_0123456789abcdef0123456789abcdef.lock",
+        "tp1_pathlock_0123456789abcdef0123456789abcdef.lock",
+        "tp1_spark_csv_orders_a1c4b79a8c29.build_lock",
+    ]
+    for name in names + ["tp1_spark_csv_orders_a1c4b79a8c29"]:
+        (root / name).write_text("")
+    return sorted(str(root / n) for n in names)
+
+
+@pytest.fixture
+def clean_in(tmp_path, monkeypatch):
+    """`main(["clean"])` run against ``tmp_path`` instead of /tmp."""
+    monkeypatch.setattr(
+        cli, "clean_locks", functools.partial(artifacts.clean_locks, tmp_path)
+    )
+    return tmp_path
+
+
+def test_cli_clean_deletes_lock_files_when_none_is_held(clean_in, capsys):
+    locks = _lock_files(clean_in)
+    main(["clean"])
+    assert "deleted 3 lock file(s)" in capsys.readouterr().err
+    assert sorted(os.listdir(clean_in)) == ["tp1_spark_csv_orders_a1c4b79a8c29"]
+    assert artifacts.clean_locks(clean_in) == ([], [])
+    assert not any(os.path.exists(p) for p in locks)
+
+
+def test_cli_clean_deletes_nothing_while_another_process_holds_a_lock(clean_in):
+    locks = _lock_files(clean_in)
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import fcntl, sys\n"
+            f"f = open({locks[1]!r})\n"
+            "fcntl.flock(f, fcntl.LOCK_EX)\n"
+            "print('held', flush=True)\n"
+            "sys.stdin.read()\n",
+        ],
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline() == "held\n"
+        with pytest.raises(SystemExit, match="1 lock file.s. held") as exit_info:
+            main(["clean"])
+        assert exit_info.value.code != 0
+        assert all(os.path.exists(p) for p in locks)
+    finally:
+        holder.communicate("", timeout=30)
+    assert artifacts.clean_locks(clean_in) == (locks, [])

@@ -18,6 +18,11 @@ probability, and the coordinator/worker split have no analogue: Spark's
 scheduler owns task placement, retries, and speculative re-issue
 (session.py).
 
+    python -m tp1_distribuidos_mapreduce_spark clean
+
+deletes the package's lock files in ``/tmp`` (sources/artifacts.py
+``clean_locks``), or none, with a non-zero exit, while any is held.
+
 User plugins: where the reference dlopens a ``.so`` exposing Map/Reduce
 (worker.go:256-282), this accepts ``module.path:ATTR`` naming either a
 ``MapReduceJob`` instance or a module exposing ``Map``/``Reduce`` (and
@@ -32,6 +37,7 @@ import sys
 
 from .operators.mapreduce import II_JOB, WC_JOB, MapReduceJob, run_mapreduce
 from .sinks.textkv import write_sorted_kv_text
+from .sources.artifacts import clean_locks
 from .sources.text import read_text_corpus
 
 BUILTIN_JOBS: dict[str, MapReduceJob] = {"wc": WC_JOB, "ii": II_JOB}
@@ -67,13 +73,31 @@ def resolve_job(spec: str) -> MapReduceJob:
     )
 
 
+def clean() -> None:
+    """Delete every package lock file, or none while one is held."""
+    deleted, held = clean_locks()
+    if held:
+        raise SystemExit(
+            f"{len(held)} lock file(s) held by a running process, deleted "
+            f"nothing: {', '.join(held)}"
+        )
+    print(f"deleted {len(deleted)} lock file(s)", file=sys.stderr)
+
+
 def main(argv: list[str] | None = None) -> None:
+    argv = sys.argv[1:] if argv is None else argv
+    if argv == ["clean"]:
+        return clean()
     ap = argparse.ArgumentParser(
         prog="python -m tp1_distribuidos_mapreduce_spark",
         description="Run a MapReduce plugin over text files (reference "
         "run_mr.sh / cmd/seq lifecycle, Spark-first).",
     )
-    ap.add_argument("plugin", help="wc | ii | module.path[:JOB_ATTR]")
+    ap.add_argument(
+        "plugin",
+        help="wc | ii | module.path[:JOB_ATTR]; or `clean` alone to delete "
+        "the package's lock files",
+    )
     ap.add_argument("input", help="text file, directory, or glob (one doc per file)")
     ap.add_argument("output", help="output directory for sorted KV text files")
     ap.add_argument(

@@ -5,6 +5,13 @@ match DuckDB's permissive casts) and for scale (AQE on, Arrow on, shuffle
 partitions sized to cores locally — on a real cluster AQE coalesces the
 post-shuffle partition count at runtime, so the static number only needs to
 be a sane upper bound).
+
+Spark's Python workers start through ``worker_daemon`` rather than
+``pyspark.daemon``: it takes Spark's own pyspark/py4j zips and spark-core
+jar off the worker's import path when the installed pyspark and py4j are
+importable without them, so the ``importlib.invalidate_caches()`` every
+Python task runs stops re-reading those archives (0.22 s → 47 µs per
+call on 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -50,6 +57,13 @@ def get_spark(app_name: str = "tp1-mapreduce-spark") -> SparkSession:
         # as a mismatch; flip to true when debugging suspected data bugs.
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers import the installed pyspark, not Spark's zips:
+        # each task's invalidate_caches() re-read every zip directory on
+        # the path, 0.22 s per task → 47 µs (worker_daemon.py).
+        .config(
+            "spark.python.daemon.module",
+            "tp1_distribuidos_mapreduce_spark.worker_daemon",
+        )
         # Python DataSource filter pushdown (rowdir zone-map file
         # pruning, sources/pydatasource.py) is gated off by default
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -72,18 +86,6 @@ def get_spark(app_name: str = "tp1-mapreduce-spark") -> SparkSession:
         .config("spark.speculation.quantile", "0.9")
         .config("spark.task.maxFailures", "4")
     )
-    # Opt-in cap on spark.default.parallelism (tests/conftest.py sets 8):
-    # local-mode defaultParallelism equals the core count, so
-    # createDataFrame/parallelize of a 3-row literal fixture schedules 32
-    # tasks — each a Python-worker round trip on the Arrow path. Measured
-    # on the tiny-fixture MapReduce suite: warm run_mapreduce collect
-    # 1.9s → 1.0s, word_count 3.7s → 1.9s at parallelism 8. Unset for
-    # bench/driver sessions: parquet-scan split counts and shuffle
-    # parallelism (the sf0.1 cost drivers) don't depend on it, but the
-    # perf envelope stays byte-identical to prior rounds by default.
-    dp = os.environ.get("SPARK_GRAFT_DEFAULT_PARALLELISM")
-    if dp:
-        builder = builder.config("spark.default.parallelism", dp)
     return builder.getOrCreate()
 
 

@@ -23,12 +23,18 @@ closes both races:
   next caller re-checks the marker and rebuilds.
 
 ``build_once`` is the marker double-check inside that lock.
+
+Lock files are never removed while the package runs: deleting a file
+someone holds or waits on lets two builders both "hold" the lock, one on
+the deleted file and one on a new one. ``clean_locks`` (the CLI's
+``clean``) removes them all when no process holds any, or none.
 """
 
 from __future__ import annotations
 
 import atexit
 import fcntl
+import glob
 import hashlib
 import itertools
 import os
@@ -41,11 +47,16 @@ _LOCKS: dict[str, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
 # Generation counter for this process's scratch dirs (scratch_dir).
 _SCRATCH_SEQ = itertools.count()
+# The directory every artifact and lock file lives in.
+ROOT = "/tmp"
+# Lock files of pathlock and of older builds of this package
+# (tp1_pathlock_<md5>.lock, <artifact>.build_lock), under ROOT.
+LOCK_GLOBS = ("tp1_spark_lock_*.lock", "tp1_pathlock_*", "*.build_lock")
 
 
 def artifact_path(name: str) -> str:
     """``/tmp/tp1_spark_<name>``: the root and prefix of every artifact."""
-    return f"/tmp/tp1_spark_{name}"
+    return f"{ROOT}/tp1_spark_{name}"
 
 
 def content_tag(path: str, *spec: object) -> str:
@@ -131,3 +142,34 @@ def build_once(
         if not os.path.exists(mark):
             build()
     return out
+
+
+def clean_locks(root: str = ROOT) -> tuple[list[str], list[str]]:
+    """Delete every package lock file under ``root`` unless one is held.
+
+    Takes a non-blocking ``flock`` on each file first and keeps them all
+    while deleting. Returns ``(deleted, held)``: the deleted files, or,
+    when any lock is held by another process or thread, ``([], held)``
+    and nothing is deleted. A process between opening a lock file and
+    locking it is not seen: run it when no package process runs."""
+    paths = sorted({p for g in LOCK_GLOBS for p in glob.glob(os.path.join(root, g))})
+    locked: dict[str, int] = {}
+    held = []
+    try:
+        for path in paths:
+            try:
+                locked[path] = fd = os.open(path, os.O_RDONLY)
+            except FileNotFoundError:
+                continue
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                held.append(path)
+        if held:
+            return [], held
+        for path in locked:
+            os.unlink(path)
+        return list(locked), []
+    finally:
+        for fd in locked.values():
+            os.close(fd)
