@@ -152,9 +152,10 @@ def _lock_files(root):
 @pytest.fixture
 def clean_in(tmp_path, monkeypatch):
     """`main(["clean"])` run against ``tmp_path`` instead of /tmp."""
-    monkeypatch.setattr(
-        cli, "clean_locks", functools.partial(artifacts.clean_locks, tmp_path)
-    )
+    for name in ("clean_locks", "clean_scratch"):
+        monkeypatch.setattr(
+            cli, name, functools.partial(getattr(artifacts, name), tmp_path)
+        )
     return tmp_path
 
 
@@ -192,3 +193,21 @@ def test_cli_clean_deletes_nothing_while_another_process_holds_a_lock(clean_in):
     finally:
         holder.communicate("", timeout=30)
     assert artifacts.clean_locks(clean_in) == (locks, [])
+
+
+def test_cli_clean_deletes_work_dirs_of_ended_processes(clean_in, capsys):
+    ended = subprocess.Popen([sys.executable, "-c", "pass"])
+    ended.wait()
+    dead = clean_in / f"tp1_spark_fold_q_events_{ended.pid}_g0"
+    live = clean_in / f"tp1_spark_fold_q_events_{os.getpid()}_g3"
+    tagged = clean_in / "tp1_spark_csv_orders_a1c4b79a8c29"
+    for d in (dead, live, tagged):
+        (d / "state").mkdir(parents=True)
+    # a file with a work-dir name is not a work dir
+    (clean_in / f"tp1_spark_fold_q_x_{ended.pid}_g1").write_text("")
+    main(["clean"])
+    assert "deleted 1 work dir(s) of ended processes" in capsys.readouterr().err
+    assert sorted(os.listdir(clean_in)) == sorted(
+        [live.name, tagged.name, f"tp1_spark_fold_q_x_{ended.pid}_g1"]
+    )
+    assert artifacts.clean_scratch(clean_in) == []

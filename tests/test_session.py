@@ -128,3 +128,10 @@ def test_python_workers_import_the_drivers_pyspark(spark):
     )
     assert row.file == pyspark.__file__
     assert row.paths == [] and row.cache_keys == []
+
+
+def test_get_spark_applies_the_oracle_parity_settings(spark):
+    conf = spark.conf
+    assert conf.get("spark.sql.session.timeZone") == "UTC"
+    assert conf.get("spark.sql.ansi.enabled") == "false"
+    assert conf.get("spark.sql.python.filterPushdown.enabled") == "true"

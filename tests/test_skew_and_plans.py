@@ -513,6 +513,12 @@ DOCUMENTED_SCAN_COUNTS = {
     "event_weekday_mutual_info": 0,
     "kaplan_meier_repurchase": 0,
     "q2_min_cost_supplier": 0,
+    # running_prior users with a checkpointed cent-cell collapse: the
+    # cut selection, its total and the closing aggregate all read the
+    # cells, so the final job scans no source
+    "winsorized_mean_price": 0,
+    "iqr_price_fences": 0,
+    "event_value_quartiles_by_type": 0,
 }
 
 

@@ -171,6 +171,38 @@ def test_autocorrelation_consecutive_days_only(spark):
     assert n < len(daily)
 
 
+def test_running_prior_matches_python_running_sums(spark):
+    """running_prior's two-phase bucketed prior equals a plain running
+    sum, across a bucket edge (2¹⁷−1, 2¹⁷, 2¹⁷+1 cents), over distant
+    buckets, for two weights, with and without a key — group "b" has a
+    single row."""
+    edge = 1 << 17
+    rows = [
+        ("a", 5, 3, 0),
+        ("a", edge - 1, 1, 7),
+        ("a", edge, 4, 2),
+        ("a", edge + 1, 1, 1),
+        ("a", 3 * edge + 7, 5, 9),
+        ("a", 40 * edge, 9, 6),
+        ("b", edge + 2, 2, 8),
+    ]
+    cells = spark.createDataFrame(rows, "g string, v long, w1 long, w2 long")
+
+    def reference(key):
+        prior, want = {}, {}
+        for g, v, w1, w2 in sorted(rows, key=lambda r: r[1]):
+            p1, p2 = prior.get(key(g), (0, 0))
+            want[(g, v)] = (v >> 17, p1, p2)
+            prior[key(g)] = (p1 + w1, p2 + w2)
+        return want
+
+    for keys, key in (((), lambda g: None), (("g",), lambda g: g)):
+        got = STT.running_prior(cells, "v", ["w1", "w2"], keys=keys).collect()
+        assert {
+            (r["g"], r["v"]): (r["bkt"], r["prior_w1"], r["prior_w2"]) for r in got
+        } == reference(key), keys
+
+
 def test_ks_statistic_bit_exact_vs_python(spark):
     lineitem = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
     row = STT.ks_returned_price(lineitem).collect()[0]

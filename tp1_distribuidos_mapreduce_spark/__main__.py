@@ -20,8 +20,9 @@ scheduler owns task placement, retries, and speculative re-issue
 
     python -m tp1_distribuidos_mapreduce_spark clean
 
-deletes the package's lock files in ``/tmp`` (sources/artifacts.py
-``clean_locks``), or none, with a non-zero exit, while any is held.
+deletes the work dirs of ended processes in ``/tmp``
+(sources/artifacts.py ``clean_scratch``), then the package's lock files
+(``clean_locks``), or none, with a non-zero exit, while any is held.
 
 User plugins: where the reference dlopens a ``.so`` exposing Map/Reduce
 (worker.go:256-282), this accepts ``module.path:ATTR`` naming either a
@@ -37,7 +38,7 @@ import sys
 
 from .operators.mapreduce import II_JOB, WC_JOB, MapReduceJob, run_mapreduce
 from .sinks.textkv import write_sorted_kv_text
-from .sources.artifacts import clean_locks
+from .sources.artifacts import clean_locks, clean_scratch
 from .sources.text import read_text_corpus
 
 BUILTIN_JOBS: dict[str, MapReduceJob] = {"wc": WC_JOB, "ii": II_JOB}
@@ -74,7 +75,10 @@ def resolve_job(spec: str) -> MapReduceJob:
 
 
 def clean() -> None:
-    """Delete every package lock file, or none while one is held."""
+    """Delete the work dirs of ended processes, then every package lock
+    file, or none while one is held."""
+    dirs = clean_scratch()
+    print(f"deleted {len(dirs)} work dir(s) of ended processes", file=sys.stderr)
     deleted, held = clean_locks()
     if held:
         raise SystemExit(
@@ -96,7 +100,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument(
         "plugin",
         help="wc | ii | module.path[:JOB_ATTR]; or `clean` alone to delete "
-        "the package's lock files",
+        "the package's lock files and dead processes' work dirs",
     )
     ap.add_argument("input", help="text file, directory, or glob (one doc per file)")
     ap.add_argument("output", help="output directory for sorted KV text files")

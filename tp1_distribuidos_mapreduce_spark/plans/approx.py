@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .stats import running_prior
+
 
 def approx_user_counts(events: DataFrame, rsd: float = 0.02) -> DataFrame:
     """Per-event-type approx distinct users (HyperLogLog++, target relative
@@ -1120,12 +1122,12 @@ def event_value_quartiles_by_type(events: DataFrame) -> DataFrame:
     div 100 so the anchor and the sketch answer the identical rank
     question.
 
-    Shape: ONE collapse to (event_type, cent) cells, then the
-    iqr_price_fences bucketed-cumulative selection with the group key
-    added — per-(type, bucket) priors broadcast, within-bucket windows
-    bounded by the cent domain, never the data; no global or per-type
-    full-frame sort. Exactness: ranks are pure integer arithmetic and
-    the emitted value is grid cents/100.0 — nothing can tie or drift.
+    Shape: ONE collapse to (event_type, cent) cells, then the ceil-rank
+    selection over ``running_prior`` keyed by event_type — per-(type,
+    bucket) priors broadcast, within-bucket windows bounded by the cent
+    domain, never the data; no global or per-type full-frame sort.
+    Exactness: ranks are pure integer arithmetic and the emitted value
+    is grid cents/100.0 — nothing can tie or drift.
     """
     cells = (
         events.select(
@@ -1135,31 +1137,10 @@ def event_value_quartiles_by_type(events: DataFrame) -> DataFrame:
         .where(F.col("c") >= 1)
         .groupBy("event_type", "c")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .withColumn("bkt", F.shiftright("c", 17))
         # (type × cent)-domain checkpoint — one fact scan total
         .localCheckpoint()
     )
-    per_bkt = cells.groupBy("event_type", "bkt").agg(
-        F.sum("cnt").alias("bd")
-    )
-    cum_b = (
-        Window.partitionBy("event_type")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    priors = per_bkt.select(
-        "event_type",
-        "bkt",
-        (F.sum("bd").over(cum_b) - F.col("bd")).alias("pb"),
-    )
-    cum_in = (
-        Window.partitionBy("event_type", "bkt")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.join(F.broadcast(priors), ["event_type", "bkt"]).withColumn(
-        "prior", F.col("pb") + F.sum("cnt").over(cum_in) - F.col("cnt")
-    )
+    cum = running_prior(cells, "c", ["cnt"], keys=("event_type",))
     tot = cells.groupBy("event_type").agg(F.sum("cnt").alias("n_rows"))
     spark = events.sparkSession
     pcts = spark.createDataFrame([(25,), (50,), (75,)], "percent int")
@@ -1168,7 +1149,8 @@ def event_value_quartiles_by_type(events: DataFrame) -> DataFrame:
         cum.join(F.broadcast(tot), "event_type")
         .crossJoin(F.broadcast(pcts))
         .where(
-            (F.col("prior") < rank) & (rank <= F.col("prior") + F.col("cnt"))
+            (F.col("prior_cnt") < rank)
+            & (rank <= F.col("prior_cnt") + F.col("cnt"))
         )
         .select(
             "event_type",

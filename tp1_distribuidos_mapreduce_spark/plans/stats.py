@@ -48,6 +48,67 @@ from ..session import default_parallelism
 # the sufficient statistics small.
 _X_EPOCH = "1995-01-01"
 
+# running_prior's bucket width: value >> 17 puts cents into ~$1.3k
+# ranges, so the bucket count is bounded by the price domain and no
+# window ever holds all rows in one partition.
+_BUCKET_SHIFT = 17
+
+
+def running_prior(cells: DataFrame, value: str, weights, keys=()) -> DataFrame:
+    """``cells`` plus ``bkt = value >> _BUCKET_SHIFT`` and, for each
+    weight column ``w``, ``prior_<w>``: the exclusive running total of
+    ``w`` in ``value`` order within ``keys`` (the sum over rows with the
+    same keys and a smaller value; ``value`` is unique within ``keys``).
+
+    Two phases, so no window spans the data: the per-(keys, bucket)
+    totals get a small ordered window whose priors join back as a
+    broadcast, and a window partitioned by (keys, bucket) adds the
+    in-bucket sum. Every sum is an exact integer, so the priors equal a
+    single global ordered window's."""
+    cells = cells.withColumn("bkt", F.shiftright(value, _BUCKET_SHIFT))
+    per_bkt = cells.groupBy(*keys, "bkt").agg(
+        *(F.sum(w).alias(f"bkt_{w}") for w in weights)
+    )
+    cum_b = (
+        Window.partitionBy(*keys)
+        .orderBy("bkt")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    priors = per_bkt.select(
+        *keys,
+        "bkt",
+        *(
+            (F.sum(f"bkt_{w}").over(cum_b) - F.col(f"bkt_{w}")).alias(f"pb_{w}")
+            for w in weights
+        ),
+    )
+    cum_in = (
+        Window.partitionBy(*keys, "bkt")
+        .orderBy(value)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return cells.join(F.broadcast(priors), [*keys, "bkt"]).select(
+        *cells.columns,
+        *(
+            (F.col(f"pb_{w}") + F.sum(w).over(cum_in) - F.col(w)).alias(f"prior_{w}")
+            for w in weights
+        ),
+    )
+
+
+def _ordered_sum(keys, term: str):
+    """Σ ``term`` over the group's rows as ONE left fold in ``keys``
+    order from 0.0: the canonical order that DuckDB's list_reduce over
+    ``list(... ORDER BY keys)`` with a prepended 0.0 also adds in, so
+    the non-associative double sum is bit-identical across engines.
+    The fold holds one struct per row, so the group must be bounded by
+    a domain (cells, margins, groups), never by the data."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(F.struct(*keys, term))),
+        F.lit(0.0),
+        lambda acc, x: acc + x[term],
+    )
+
 
 def nation_revenue_trend(
     orders: DataFrame, customer: DataFrame, nation: DataFrame
@@ -138,6 +199,37 @@ ORDER BY n_name
 """
 
 
+def _weekday_contingency(events: DataFrame):
+    """The (event_type, weekday) contingency table of chi² and mutual
+    information: ``(cells, row_tot, col_tot, n_total, joined)`` —
+    cells (event_type, dow, o), the margins r per type and c per dow,
+    the 1-row grand total N, and cells with r, c and N joined on as
+    broadcasts. Every frame is bounded by types × 7, not the data."""
+    cells = (
+        events.groupBy(
+            F.col("event_type"),
+            (F.dayofweek("ts") - 1).cast("int").alias("dow"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("o"))
+        # contingency-cell checkpoint (r21, the cent-domain discipline):
+        # the row/column/grand totals and the joined term fold all
+        # consume this types×7 frame — without it each consumer
+        # re-derived the fact scan (4-8 scans in the final plans of the
+        # chi²/MI pair; now the fact table is scanned exactly once, at
+        # build).
+        .localCheckpoint()
+    )
+    row_tot = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
+    col_tot = cells.groupBy("dow").agg(F.sum("o").alias("c"))
+    n_total = cells.agg(F.sum("o").alias("N"))
+    joined = (
+        cells.join(F.broadcast(row_tot), "event_type")
+        .join(F.broadcast(col_tot), "dow")
+        .crossJoin(F.broadcast(n_total))
+    )
+    return cells, row_tot, col_tot, n_total, joined
+
+
 def event_weekday_chi2(events: DataFrame) -> DataFrame:
     """Chi-square test of independence between event_type and weekday —
     "does activity mix actually shift across the week, or is the
@@ -174,28 +266,7 @@ def event_weekday_chi2(events: DataFrame) -> DataFrame:
     explicitly in BOTH plans, matching the sibling queries'
     zero-denominator discipline.
     """
-    cells = (
-        events.groupBy(
-            F.col("event_type"),
-            (F.dayofweek("ts") - 1).cast("int").alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        # contingency-cell checkpoint (r21, the cent-domain discipline):
-        # the row/column/grand totals and the joined term fold all
-        # consume this types×7 frame — without it each consumer
-        # re-derived the fact scan (4-8 scans in the final plans of the
-        # chi²/MI pair; now the fact table is scanned exactly once, at
-        # build).
-        .localCheckpoint()
-    )
-    row_tot = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
-    col_tot = cells.groupBy("dow").agg(F.sum("o").alias("c"))
-    n_total = cells.agg(F.sum("o").alias("N"))
-    joined = (
-        cells.join(F.broadcast(row_tot), "event_type")
-        .join(F.broadcast(col_tot), "dow")
-        .crossJoin(F.broadcast(n_total))
-    )
+    *_, joined = _weekday_contingency(events)
     d = (
         F.col("N").cast("decimal(20,0)") * F.col("o")
         - F.col("r").cast("decimal(20,0)") * F.col("c")
@@ -214,13 +285,7 @@ def event_weekday_chi2(events: DataFrame) -> DataFrame:
             F.countDistinct("event_type").cast("long").alias("n_types"),
             F.countDistinct("dow").cast("long").alias("n_dows"),
             F.first("N").alias("N"),
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(F.struct("event_type", "dow", "term"))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["term"],
-            ).alias("chi2"),
+            _ordered_sum(["event_type", "dow"], "term").alias("chi2"),
         )
     )
     dof = (F.col("n_types") - 1) * (F.col("n_dows") - 1)
@@ -457,14 +522,12 @@ def ks_returned_price(lineitem: DataFrame) -> DataFrame:
     against everything else — "did returns come from a different price
     population". One row: (n_returned, n_other, ks_stat).
 
-    Shape — the two-phase bucketed cumulative (the weighted-percentile
-    discipline, retail.py): a global ordered window over near-unique
-    prices would be one partition at 100 TB, so instead (1) one shuffle
-    collapses the fact table to per-price-cent counts, (2) per-BUCKET
-    (cents >> 17, ~$1.3k ranges — bounded by the price domain, not the
-    data) totals get the tiny ordered cumulative, (3) the in-bucket
-    cumulative window is PARTITIONED by bucket, and the bucket's prior
-    total joins back as a broadcast. D is then one max aggregate.
+    Shape: a global ordered window over near-unique prices would be one
+    partition at 100 TB, so instead one shuffle collapses the fact
+    table to per-price-cent counts and ``running_prior`` gives each
+    cent the two-phase bucketed running counts (per-bucket priors as a
+    broadcast, in-bucket windows partitioned by bucket). D is then one
+    max aggregate.
 
     Exactness: the ECDF difference at price v is |C₁(v)·n₂ − C₂(v)·n₁|
     / (n₁·n₂) — the numerator is exact integer arithmetic (BIGINT counts
@@ -490,40 +553,23 @@ def ks_returned_price(lineitem: DataFrame) -> DataFrame:
             F.sum("is_r").alias("c1"),
             F.sum(1 - F.col("is_r")).alias("c2"),
         )
-        .withColumn("bkt", F.shiftright("cents", 17))
         # cent-domain checkpoint (r21, the winsorized/iqr/spearman
-        # discipline): per_bkt, tot, and cum all consume this frame, and
-        # without it each lineage re-derived the collapse — the final
-        # plan scanned the FACT table 3×; now it is scanned exactly once,
-        # at build (the pass that dominates at 100 TB).
+        # discipline): the running prior and tot both consume this
+        # frame, and without it each lineage re-derived the collapse —
+        # the final plan scanned the FACT table 3×; now it is scanned
+        # exactly once, at build (the pass that dominates at 100 TB).
         .localCheckpoint()
-    )
-    per_bkt = per_v.groupBy("bkt").agg(
-        F.sum("c1").alias("b1"), F.sum("c2").alias("b2")
-    )
-    cum_b = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    priors = per_bkt.select(
-        "bkt",
-        (F.sum("b1").over(cum_b) - F.col("b1")).alias("p1"),
-        (F.sum("b2").over(cum_b) - F.col("b2")).alias("p2"),
-    )
-    cum_in = (
-        Window.partitionBy("bkt")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     tot = per_v.agg(
         F.sum("c1").cast("long").alias("n1"),
         F.sum("c2").cast("long").alias("n2"),
     )
     cum = (
-        per_v.join(F.broadcast(priors), "bkt")
+        running_prior(per_v, "cents", ["c1", "c2"])
         .select(
             "cents",
-            (F.col("p1") + F.sum("c1").over(cum_in)).alias("cum1"),
-            (F.col("p2") + F.sum("c2").over(cum_in)).alias("cum2"),
+            (F.col("prior_c1") + F.col("c1")).alias("cum1"),
+            (F.col("prior_c2") + F.col("c2")).alias("cum2"),
         )
         .crossJoin(F.broadcast(tot))
     )
@@ -872,7 +918,7 @@ def mannwhitney_quantity(lineitem: DataFrame) -> DataFrame:
     TPC-H), so everything after the first aggregate runs on ≤ domain
     rows. The strictly-less cumulative is an ordered window over that
     domain-bounded frame (same boundedness argument as
-    ks_returned_price's per-bucket cumulative; here the whole domain is
+    running_prior's per-bucket cumulative; here the whole domain is
     tiny), then one final aggregate folds U.
 
     Exactness: U is computed from VALUE counts, never per-row ranks:
@@ -1025,11 +1071,7 @@ def anova_price_by_priority(orders: DataFrame) -> DataFrame:
         F.sum("ng").alias("n"),
         F.sum("sg").alias("s"),
         F.sum("qg").alias("q"),
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("g", "r"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["r"],
-        ).alias("sum_r"),
+        _ordered_sum(["g"], "r").alias("sum_r"),
     )
     sd = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
     s2n = (F.col("s") * F.col("s")).cast("string").cast("double") / sd("n")
@@ -1254,7 +1296,7 @@ ORDER BY t_days
 def _selected_lower_median(vals: DataFrame, c: str, n_buckets: int = 8192) -> DataFrame:
     """Lower median (element ⌈n/2⌉ of the sorted multiset) of double
     column ``c``, SELECTED via value-range bucketing — the
-    ks_returned_price discipline generalized to an unknown value
+    running_prior discipline generalized to an unknown value
     domain: one min/max/count pass fixes the bucket grid (broadcast
     1-row frame), per-bucket counts give cumulative priors (a window
     over ≤ n_buckets rows — bounded by the GRID, never the data), and
@@ -1461,6 +1503,20 @@ FROM rranked WHERE rr = (n_days + 1) // 2
 """
 
 
+def _margin_entropy(
+    margin: DataFrame, key: str, count: str, n_total: DataFrame, name: str
+) -> DataFrame:
+    """1-row frame: column ``name`` = the entropy in nats of one margin
+    of the contingency table, −Σ p·ln p with p = count/N, folded in
+    ``key`` order (``_ordered_sum``)."""
+    p = F.col(count).cast("double") / F.col("N").cast("double")
+    return (
+        margin.crossJoin(F.broadcast(n_total))
+        .select(key, (-p * F.log(p)).alias("t"))
+        .agg(_ordered_sum([key], "t").alias(name))
+    )
+
+
 def event_weekday_mutual_info(events: DataFrame) -> DataFrame:
     """Mutual information between event type and weekday — "how many
     bits does knowing the weekday tell you about what users do",
@@ -1485,28 +1541,7 @@ def event_weekday_mutual_info(events: DataFrame) -> DataFrame:
     weekday) has min-entropy 0 and emits norm_mi = 0.0 explicitly in
     both engines (the chi² cramers_v discipline).
     """
-    cells = (
-        events.groupBy(
-            F.col("event_type"),
-            (F.dayofweek("ts") - 1).cast("int").alias("dow"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        # contingency-cell checkpoint (r21, the cent-domain discipline):
-        # the row/column/grand totals and the joined term fold all
-        # consume this types×7 frame — without it each consumer
-        # re-derived the fact scan (4-8 scans in the final plans of the
-        # chi²/MI pair; now the fact table is scanned exactly once, at
-        # build).
-        .localCheckpoint()
-    )
-    row_tot = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
-    col_tot = cells.groupBy("dow").agg(F.sum("o").alias("c"))
-    n_total = cells.agg(F.sum("o").alias("N"))
-    joined = (
-        cells.join(F.broadcast(row_tot), "event_type")
-        .join(F.broadcast(col_tot), "dow")
-        .crossJoin(F.broadcast(n_total))
-    )
+    _, row_tot, col_tot, n_total, joined = _weekday_contingency(events)
     p = F.col("o").cast("double") / F.col("N").cast("double")
     ratio = (
         (F.col("N").cast("decimal(20,0)") * F.col("o"))
@@ -1523,51 +1558,11 @@ def event_weekday_mutual_info(events: DataFrame) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_cells"),
             F.first("N").alias("n_events"),
-            F.aggregate(
-                F.sort_array(
-                    F.collect_list(F.struct("event_type", "dow", "term"))
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x["term"],
-            ).alias("mi_nats"),
+            _ordered_sum(["event_type", "dow"], "term").alias("mi_nats"),
         )
     )
-    # marginal entropies: attach N to each margin row first, then fold
-    # in canonical (key-sorted) order
-    hx = (
-        row_tot.crossJoin(F.broadcast(n_total))
-        .select(
-            "event_type",
-            (
-                -(F.col("r").cast("double") / F.col("N").cast("double"))
-                * F.log(F.col("r").cast("double") / F.col("N").cast("double"))
-            ).alias("t"),
-        )
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("event_type", "t"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["t"],
-            ).alias("h_type")
-        )
-    )
-    hy = (
-        col_tot.crossJoin(F.broadcast(n_total))
-        .select(
-            "dow",
-            (
-                -(F.col("c").cast("double") / F.col("N").cast("double"))
-                * F.log(F.col("c").cast("double") / F.col("N").cast("double"))
-            ).alias("t"),
-        )
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("dow", "t"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["t"],
-            ).alias("h_dow")
-        )
-    )
+    hx = _margin_entropy(row_tot, "event_type", "r", n_total, "h_type")
+    hy = _margin_entropy(col_tot, "dow", "c", n_total, "h_dow")
     hmin = F.least(F.col("h_type"), F.col("h_dow"))
     return (
         folded.crossJoin(F.broadcast(hx))
@@ -1841,15 +1836,15 @@ def quantity_price_spearman(lineitem: DataFrame) -> DataFrame:
 
     Shape: the fact table collapses ONCE to (quantity, price-cent)
     cells; midranks then come from VALUE-DOMAIN rank maps — the
-    quantity map is a ≤ ~50-row window, the price map reuses
-    ks_returned_price's bucketed cumulative (per-bucket windows +
-    broadcast bucket priors, bounded by the cent domain, never the
-    data) — and the weighted Pearson over cells needs one more hash
-    aggregate. No global row-level sort/rank anywhere: ranking N rows
-    at 100 TB is exactly the single-partition window this formulation
-    exists to avoid. The closing math lives in spearman_from_cells so
-    the scale pins can drive the arithmetic with synthetic cell counts
-    above the old 10⁹ ceiling without a billion physical rows.
+    quantity map is a ≤ ~50-row window, the price map is
+    ``running_prior`` (per-bucket windows + broadcast bucket priors,
+    bounded by the cent domain, never the data) — and the weighted
+    Pearson over cells needs one more hash aggregate. No global
+    row-level sort/rank anywhere: ranking N rows at 100 TB is exactly
+    the single-partition window this formulation exists to avoid. The
+    closing math lives in spearman_from_cells so the scale pins can
+    drive the arithmetic with synthetic cell counts above the old 10⁹
+    ceiling without a billion physical rows.
     """
     cells = (
         lineitem.select(
@@ -1909,37 +1904,14 @@ def spearman_from_cells(cells: DataFrame) -> DataFrame:
         .cast("decimal(20,0)")
         .alias("a"),
     )
-    # price rank map: bucketed cumulative over the cent domain (the
-    # ks_returned_price discipline — no global single-partition window)
-    ytot = (
-        cells.groupBy("y")
-        .agg(F.sum("n").alias("dy"))
-        .withColumn("bkt", F.shiftright("y", 17))
-    )
-    per_bkt = ytot.groupBy("bkt").agg(F.sum("dy").alias("bd"))
-    cum_b = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    priors = per_bkt.select(
-        "bkt", (F.sum("bd").over(cum_b) - F.col("bd")).alias("py")
-    )
-    cum_in = (
-        Window.partitionBy("bkt")
-        .orderBy("y")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ymap = (
-        ytot.join(F.broadcast(priors), "bkt")
-        .select(
-            "y",
-            (
-                2 * (F.col("py") + F.sum("dy").over(cum_in) - F.col("dy"))
-                + F.col("dy")
-                + 1
-            )
-            .cast("decimal(20,0)")
-            .alias("b"),
-        )
+    # price rank map: running_prior over the cent domain (no global
+    # single-partition window)
+    ytot = cells.groupBy("y").agg(F.sum("n").alias("dy"))
+    ymap = running_prior(ytot, "y", ["dy"]).select(
+        "y",
+        (2 * F.col("prior_dy") + F.col("dy") + 1)
+        .cast("decimal(20,0)")
+        .alias("b"),
     )
     # exact integer centering scalar: mean(2·midrank) = N+1 (1-row
     # broadcast fan-in, the allowlisted scalar pattern)
@@ -2315,6 +2287,44 @@ ORDER BY n_name
 """
 
 
+def _price_cent_cells(lineitem: DataFrame) -> DataFrame:
+    """(c, cnt): lineitem's extended price collapsed to integral cents
+    and their row counts, checkpointed — the cut selection, its total
+    and the caller's closing aggregate all reuse this frame, so the
+    FACT table is scanned exactly once, at build, instead of once per
+    consumer (the theil_sen r13 discipline)."""
+    return (
+        lineitem.select(
+            F.round(F.col("l_extendedprice") * 100).cast("long").alias("c")
+        )
+        .groupBy("c")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .localCheckpoint()
+    )
+
+
+def _rank_cuts(cells: DataFrame, **percents: int) -> DataFrame:
+    """Broadcast 1-row frame: for each ``name=p``, column ``name`` is
+    the ceil-rank element ⌈p·n/100⌉ = (p·n + 99) div 100 (pure integer
+    arithmetic, identical in both engines) of the (c, cnt) cells.
+
+    All cuts come from ONE conditional aggregate over ``running_prior``
+    (r21): exactly one cell satisfies prior < k <= prior + cnt, so
+    max(when(...)) IS that element, and the running prior is evaluated
+    once instead of once per cut."""
+    tot = cells.agg(F.sum("cnt").alias("n_rows"))
+    ranked = running_prior(cells, "c", ["cnt"]).crossJoin(F.broadcast(tot))
+    prior = F.col("prior_cnt")
+
+    def cut(p: int):
+        k = F.expr(f"({p} * n_rows + 99) div 100")
+        return F.max(F.when((prior < k) & (k <= prior + F.col("cnt")), F.col("c")))
+
+    return F.broadcast(
+        ranked.agg(*(cut(p).alias(name) for name, p in percents.items()))
+    )
+
+
 def winsorized_mean_price(lineitem: DataFrame) -> DataFrame:
     """5%/95%-winsorized mean of the extended price — the robust-mean
     companion to trimmed_mean_price (trimming DROPS the tails,
@@ -2323,9 +2333,9 @@ def winsorized_mean_price(lineitem: DataFrame) -> DataFrame:
     winsor_hi, winsorized_mean_cents).
 
     Shape: the fact table collapses ONCE to cent cells; both cut
-    elements are SELECTED from the ks_returned_price-style bucketed
-    cumulative (per-bucket priors + within-bucket windows, bounded by
-    the cent domain); the clamped sum is one more hash aggregate over
+    elements are SELECTED from ``running_prior`` (per-bucket priors +
+    within-bucket windows, bounded by the cent domain) in
+    ``_rank_cuts``; the clamped sum is one more hash aggregate over
     the cells with the two cuts as a 1-row broadcast. No global sort,
     no per-row rank.
 
@@ -2335,61 +2345,8 @@ def winsorized_mean_price(lineitem: DataFrame) -> DataFrame:
     DECIMAL(38,0)/HUGEINT; the mean is ONE string-routed division.
     The cut values themselves are grid cents (lo/100.0 exact).
     """
-    cells = (
-        lineitem.select(
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("c")
-        )
-        .groupBy("c")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .withColumn("bkt", F.shiftright("c", 17))
-        # checkpoint the cent-domain collapse (the theil_sen r13
-        # discipline): the two cut selections, the total, and the
-        # clamped sum all reuse this frame, and without the checkpoint
-        # each lineage re-derives it — the FACT table would be scanned
-        # once per consumer instead of exactly once.
-        .localCheckpoint()
-    )
-    per_bkt = cells.groupBy("bkt").agg(F.sum("cnt").alias("bd"))
-    cum_b = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    priors = per_bkt.select(
-        "bkt", (F.sum("bd").over(cum_b) - F.col("bd")).alias("pb")
-    )
-    cum_in = (
-        Window.partitionBy("bkt")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.join(F.broadcast(priors), "bkt").withColumn(
-        "prior", F.col("pb") + F.sum("cnt").over(cum_in) - F.col("cnt")
-    )
-    tot = cells.agg(F.sum("cnt").alias("n_rows"))
-    ranked = cum.crossJoin(F.broadcast(tot))
-    kl = F.expr("(5 * n_rows + 99) div 100")
-    kh = F.expr("(95 * n_rows + 99) div 100")
-    # Both cut elements selected in ONE conditional aggregate over the
-    # cumulative frame (r21): exactly one cell satisfies each rank
-    # predicate, so max(when(...)) IS that element — value-identical to
-    # the previous two-filter crossJoin, but the plan evaluates the
-    # priors/window cumulative once instead of once per cut (the
-    # formatted plan drops from 30 to ~half the Exchanges).
-    cuts = F.broadcast(
-        ranked.agg(
-            F.max(
-                F.when(
-                    (F.col("prior") < kl) & (kl <= F.col("prior") + F.col("cnt")),
-                    F.col("c"),
-                )
-            ).alias("lo"),
-            F.max(
-                F.when(
-                    (F.col("prior") < kh) & (kh <= F.col("prior") + F.col("cnt")),
-                    F.col("c"),
-                )
-            ).alias("hi"),
-        )
-    )
+    cells = _price_cent_cells(lineitem)
+    cuts = _rank_cuts(cells, lo=5, hi=95)
     clamped = F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("c")))
     s = (
         cells.crossJoin(cuts)
@@ -2533,11 +2490,11 @@ def iqr_price_fences(lineitem: DataFrame) -> DataFrame:
     convention). One row: (n_rows, q1_value, q3_value, iqr_value,
     n_below, n_above).
 
-    Shape: ONE collapse to cent cells, the ks-style bucketed cumulative
-    selects both quartile elements (per-bucket priors + within-bucket
-    windows — bounded by the cent domain), and the fence counts are one
-    more hash aggregate over the cells with the two cuts as a 1-row
-    broadcast. No global sort, no per-row rank.
+    Shape: ONE collapse to cent cells, ``_rank_cuts`` selects both
+    quartile elements from ``running_prior`` (per-bucket priors +
+    within-bucket windows — bounded by the cent domain), and the fence
+    counts are one more hash aggregate over the cells with the two cuts
+    as a 1-row broadcast. No global sort, no per-row rank.
 
     Exactness: quartile ranks are pure integer arithmetic (⌈n/4⌉ =
     (25n+99) div 100, ⌈3n/4⌉ = (75n+99) div 100); the 1.5·IQR fences
@@ -2545,56 +2502,8 @@ def iqr_price_fences(lineitem: DataFrame) -> DataFrame:
     halves), so the outlier counts are exact integer comparisons; the
     emitted values are grid cents/100.0. Nothing can tie or drift.
     """
-    cells = (
-        lineitem.select(
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("c")
-        )
-        .groupBy("c")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .withColumn("bkt", F.shiftright("c", 17))
-        # cent-domain checkpoint — one fact scan total (see
-        # winsorized_mean_price above).
-        .localCheckpoint()
-    )
-    per_bkt = cells.groupBy("bkt").agg(F.sum("cnt").alias("bd"))
-    cum_b = Window.orderBy("bkt").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    priors = per_bkt.select(
-        "bkt", (F.sum("bd").over(cum_b) - F.col("bd")).alias("pb")
-    )
-    cum_in = (
-        Window.partitionBy("bkt")
-        .orderBy("c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = cells.join(F.broadcast(priors), "bkt").withColumn(
-        "prior", F.col("pb") + F.sum("cnt").over(cum_in) - F.col("cnt")
-    )
-    tot = cells.agg(F.sum("cnt").alias("n_rows"))
-    ranked = cum.crossJoin(F.broadcast(tot))
-    k1 = F.expr("(25 * n_rows + 99) div 100")
-    k3 = F.expr("(75 * n_rows + 99) div 100")
-    # Both quartile elements selected in ONE conditional aggregate (the
-    # winsorized_mean_price r21 fusion — exactly one cell satisfies each
-    # rank predicate, so max(when(...)) IS that element): the cumulative
-    # subplan runs once instead of once per quartile.
-    cuts = F.broadcast(
-        ranked.agg(
-            F.max(
-                F.when(
-                    (F.col("prior") < k1) & (k1 <= F.col("prior") + F.col("cnt")),
-                    F.col("c"),
-                )
-            ).alias("q1"),
-            F.max(
-                F.when(
-                    (F.col("prior") < k3) & (k3 <= F.col("prior") + F.col("cnt")),
-                    F.col("c"),
-                )
-            ).alias("q3"),
-        )
-    )
+    cells = _price_cent_cells(lineitem)
+    cuts = _rank_cuts(cells, q1=25, q3=75)
     iqr = F.col("q3") - F.col("q1")
     f_lo = 2 * F.col("q1") - 3 * iqr  # doubled units: 2·(q1 − 1.5·iqr)
     f_hi = 2 * F.col("q3") + 3 * iqr

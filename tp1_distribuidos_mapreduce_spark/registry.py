@@ -2125,8 +2125,9 @@ def q_revenue_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("ks_returned_price", oracle=STT.KS_RETURNED_PRICE_ORACLE)
 def q_ks_returned_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample KS statistic (plans/stats.py): returned-vs-other
-    price distributions via the two-phase bucketed cumulative — no
-    global single-partition window; DECIMAL/HUGEINT cross-products."""
+    price distributions via running_prior's two-phase bucketed running
+    counts — no global single-partition window; DECIMAL/HUGEINT
+    cross-products."""
     return STT.ks_returned_price(load_table(spark, sf_dir, "lineitem"))
 
 
@@ -2335,7 +2336,7 @@ def q_median_order_value_by_nation(spark: SparkSession, sf_dir: str) -> DataFram
 @register("winsorized_mean_price", oracle=STT.WINSORIZED_MEAN_PRICE_ORACLE)
 def q_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5/95-winsorized mean price (plans/stats.py): both cut elements
-    selected from the bucketed cent-domain cumulative (ks discipline),
+    selected from the cent-domain running_prior (_rank_cuts),
     exact integer cut-rank arithmetic, clamped sum as exact decimal,
     one closing division."""
     return STT.winsorized_mean_price(load_table(spark, sf_dir, "lineitem"))
@@ -2355,7 +2356,7 @@ def q_geomean_price_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("iqr_price_fences", oracle=STT.IQR_PRICE_FENCES_ORACLE)
 def q_iqr_price_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tukey boxplot census of prices (plans/stats.py): element-selected
-    quartiles from the bucketed cent-domain cumulative, doubled-unit
+    quartiles from the cent-domain running_prior (_rank_cuts), doubled-unit
     integer fence comparisons — exact counts, grid values."""
     return STT.iqr_price_fences(load_table(spark, sf_dir, "lineitem"))
 
@@ -2405,9 +2406,9 @@ def q_event_value_quartiles_by_type(
     """EXACT per-event-type value quartiles (plans/approx.py) — the
     oracle-anchored exact twin of the grouped DDSketch, over the
     sketch's own positive-cents population and ceil-rank convention:
-    one (type, cent)-cell collapse, iqr_price_fences-style bucketed
-    cumulative selection with the group key added. Exact BIGINT ranks,
-    grid values."""
+    one (type, cent)-cell collapse, then the ceil-rank selection over
+    plans/stats.py running_prior keyed by event_type. Exact BIGINT
+    ranks, grid values."""
     return AX.event_value_quartiles_by_type(load_table(spark, sf_dir, "events"))
 
 

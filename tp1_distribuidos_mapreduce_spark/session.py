@@ -48,14 +48,6 @@ def get_spark(app_name: str = "tp1-mapreduce-spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # ANSI off is a deliberate engine-wide parity choice with DuckDB's
-        # permissive casts. Side effect to be aware of: integer overflow
-        # WRAPS silently and invalid arithmetic returns NULL instead of
-        # erroring — acceptable here because every query result is hash-
-        # checked against the oracle, which would surface a wrapped value
-        # as a mismatch; flip to true when debugging suspected data bugs.
-        .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python workers import the installed pyspark, not Spark's zips:
         # each task's invalidate_caches() re-read every zip directory on
@@ -64,9 +56,6 @@ def get_spark(app_name: str = "tp1-mapreduce-spark") -> SparkSession:
             "spark.python.daemon.module",
             "tp1_distribuidos_mapreduce_spark.worker_daemon",
         )
-        # Python DataSource filter pushdown (rowdir zone-map file
-        # pruning, sources/pydatasource.py) is gated off by default
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -86,18 +75,25 @@ def get_spark(app_name: str = "tp1-mapreduce-spark") -> SparkSession:
         .config("spark.speculation.quantile", "0.9")
         .config("spark.task.maxFailures", "4")
     )
-    return builder.getOrCreate()
+    return tune_for_oracle(builder.getOrCreate())
 
 
 def tune_for_oracle(spark: SparkSession) -> SparkSession:
-    """Settings any externally-provided session needs for oracle parity."""
+    """The oracle-parity settings, for this module's sessions and any
+    externally-provided one."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Oracle SQL relies on permissive casts (module docstring); Spark 4.x
-    # builds may default ANSI on, which errors instead of returning NULL.
+    # ANSI off is a deliberate engine-wide parity choice with DuckDB's
+    # permissive casts (Spark 4.x defaults it on, which errors instead of
+    # returning NULL). Side effect to be aware of: integer overflow WRAPS
+    # silently and invalid arithmetic returns NULL instead of erroring —
+    # acceptable here because every query result is hash-checked against
+    # the oracle, which would surface a wrapped value as a mismatch; flip
+    # to true when debugging suspected data bugs.
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    # The rowdir connector implements pushFilters(); planning REFUSES a
-    # pushdown-capable Python reader while this flag is false, so an
-    # externally-built session needs it too.
+    # The rowdir connector implements pushFilters() (zone-map file
+    # pruning, sources/pydatasource.py); planning REFUSES a
+    # pushdown-capable Python reader while this flag is false, its
+    # default.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     return spark
 

@@ -27,7 +27,9 @@ closes both races:
 Lock files are never removed while the package runs: deleting a file
 someone holds or waits on lets two builders both "hold" the lock, one on
 the deleted file and one on a new one. ``clean_locks`` (the CLI's
-``clean``) removes them all when no process holds any, or none.
+``clean``) removes them all when no process holds any, or none, and
+``clean_scratch`` removes the work dirs of processes that ended without
+running their ``atexit``.
 """
 
 from __future__ import annotations
@@ -38,6 +40,7 @@ import glob
 import hashlib
 import itertools
 import os
+import re
 import shutil
 import threading
 from collections.abc import Callable
@@ -52,6 +55,8 @@ ROOT = "/tmp"
 # Lock files of pathlock and of older builds of this package
 # (tp1_pathlock_<md5>.lock, <artifact>.build_lock), under ROOT.
 LOCK_GLOBS = ("tp1_spark_lock_*.lock", "tp1_pathlock_*", "*.build_lock")
+# scratch_dir names, tp1_spark_<name>_<pid>_g<n>; group 1 is the pid.
+_SCRATCH_NAME = re.compile(r"tp1_spark_.+_(\d+)_g\d+")
 
 
 def artifact_path(name: str) -> str:
@@ -103,6 +108,33 @@ def scratch_dir(name: str) -> str:
     shutil.rmtree(path, ignore_errors=True)  # a reused pid's stale dir
     atexit.register(shutil.rmtree, path, True)
     return path
+
+
+def _pid_running(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # running, as another user
+        pass
+    return True
+
+
+def clean_scratch(root: str = ROOT) -> list[str]:
+    """Delete the ``scratch_dir`` work dirs under ``root`` whose process
+    no longer runs (it was killed before its ``atexit`` ran) and return
+    them. A dir whose pid runs stays, also when the pid now belongs to
+    another process; content-tagged artifacts never match the name."""
+    gone = []
+    for name in os.listdir(root):
+        m = _SCRATCH_NAME.fullmatch(name)
+        if m and not _pid_running(int(m[1])):
+            path = os.path.join(root, name)
+            # rmtree removes only a real dir: a file or symlink stays
+            shutil.rmtree(path, ignore_errors=True)
+            if not os.path.lexists(path):
+                gone.append(path)
+    return sorted(gone)
 
 
 def _lock_for(key: str) -> threading.Lock:

@@ -693,7 +693,8 @@ def register_rowdir(spark) -> None:
     enable Python-DataSource filter pushdown — planning REFUSES a
     pushdown-capable reader (pushFilters present) while the flag is
     false, so any session running rowdir queries needs it (runtime-
-    settable; also set in session.py defaults and tune_for_oracle)."""
+    settable; also set by session.py tune_for_oracle, which get_spark
+    applies)."""
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     _register_once(spark, RowDirDataSource)
 
