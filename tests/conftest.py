@@ -136,6 +136,50 @@ def rows_only_results(spark, request):
     }
 
 
+@pytest.fixture(scope="session")
+def registry_first_calls(spark):
+    """Every registered query called once at SF_SMOKE, concurrently on a
+    shared pool, for the suite: name -> (executed-plan string, the paths
+    the call passed to ``sources/artifacts.build_once``, and, when there
+    are any, the call's columns and collected rows). The rows are taken
+    right after the build, before a later test deletes an artifact the
+    frame's file listing points at. The µs events copy is built before
+    recording, so no query records it (its rebuild has its own test in
+    test_sources_contract.py)."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tp1_distribuidos_mapreduce_spark import registry
+    from tp1_distribuidos_mapreduce_spark.sources import artifacts, tables
+
+    tables.load_table(spark, SF_SMOKE, "events")
+    local = threading.local()
+    real = artifacts.build_once
+
+    def recording(out, build, marker="_SUCCESS"):
+        local.paths.append(out)
+        return real(out, build, marker)
+
+    def first_call(item):
+        name, fn = item
+        local.paths = []
+        df = fn(spark, SF_SMOKE)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        paths = list(dict.fromkeys(local.paths))
+        rows = (df.columns, df.collect()) if paths else None
+        return name, (plan, paths, rows)
+
+    # Spark's scheduler is thread-safe, and the Python data sources pin
+    # their thread-local state in register_* (pydatasource). Plan
+    # construction is py4j/Catalyst-bound, so threads scale past the core
+    # count (r13 measured 22.9 s → ~12 s at 16 threads; 32 since r16).
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(artifacts, "build_once", recording)
+        mp.setattr(tables, "build_once", recording)
+        with ThreadPoolExecutor(max_workers=32) as pool:
+            return dict(pool.map(first_call, registry.queries().items()))
+
+
 def assert_df_matches_oracle(sdf, duck, sql):
     """Spark DataFrame vs DuckDB SQL under the result contract,
     differential.compare_rows (the reference's sequential-oracle

@@ -16,9 +16,12 @@ import glob
 import hashlib
 import os
 import pathlib
+import shutil
 import subprocess
 import sys
 import tempfile
+
+import pytest
 
 from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.plans.ivm import IVM_CUTOFF, _base_state_path
@@ -26,7 +29,7 @@ from tp1_distribuidos_mapreduce_spark.sinks.partitioned import ensure_partitione
 from tp1_distribuidos_mapreduce_spark.sources import artifacts
 from tp1_distribuidos_mapreduce_spark.streaming import sinks as SK
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, differential
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "tp1_distribuidos_mapreduce_spark"
@@ -189,3 +192,24 @@ print(os.getpid(), n, len(glob.glob(f"/tmp/tp1_spark_fold_q_*_{{os.getpid()}}_g*
     pid, rows, live_dirs = run.stdout.split()[-3:]
     assert int(rows) > 0 and int(live_dirs) == 1
     assert glob.glob(f"/tmp/tp1_spark_fold_q_*_{pid}_g*") == []
+
+
+@pytest.mark.parametrize("name", list(registry.queries()))
+def test_query_rebuilds_its_deleted_artifacts(spark, registry_first_calls, name):
+    """A query whose first call passed paths to build_once, called again
+    in the same session after those artifacts are deleted, rebuilds them
+    and returns the same rows. Per-process state that outlives an
+    artifact (a memo of its path, a cached file listing, a catalog entry)
+    shows here as an error or a row difference. The queries are the ones
+    whose first call (conftest registry_first_calls) recorded a path;
+    the others build no artifact and are skipped."""
+    _plan, paths, first = registry_first_calls[name]
+    if not paths:
+        pytest.skip("the first call passed no path to build_once")
+    for path in paths:
+        shutil.rmtree(path)
+    df = registry.queries()[name](spark, SF_SMOKE)
+    rows = df.collect()
+    assert all(os.path.isdir(path) for path in paths)
+    reason = differential.compare_rows(*first, df.columns, rows)
+    assert reason is None, reason

@@ -66,6 +66,63 @@ def test_every_query_has_callable_signature(spark):
         assert callable(fn), name
 
 
+def test_register_rejects_a_duplicate_name():
+    """A name registered twice raises and the first registration stays:
+    a copy-pasted one-line registration must not silently replace a
+    query or its oracle."""
+    wc, wc_sql = registry.queries()["wc"], registry.oracle_sql()["wc"]
+    with pytest.raises(ValueError, match="'wc'"):
+        registry.register("wc", "SELECT 1")(lambda spark, sf_dir: None)
+    assert registry.queries()["wc"] is wc
+    assert registry.oracle_sql()["wc"] == wc_sql
+
+
+def load_table_wrappers(source: str) -> list[str]:
+    """Names of the ``@register`` functions in ``source`` whose body,
+    past a docstring, is only ``return plan(load_table(...), ...)``: the
+    form ``register(name, oracle)(over(plan, *tables))`` replaces."""
+    import ast
+
+    def loads_table(arg: ast.expr) -> bool:
+        return (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Name)
+            and arg.func.id == "load_table"
+        )
+
+    out = []
+    for node in ast.parse(source).body:
+        if not isinstance(node, ast.FunctionDef) or not any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in node.decorator_list
+        ):
+            continue
+        body = node.body[1:] if ast.get_docstring(node) is not None else node.body
+        ret = body[0] if len(body) == 1 else None
+        if (
+            isinstance(ret, ast.Return)
+            and isinstance(ret.value, ast.Call)
+            and ret.value.args
+            and not ret.value.keywords
+            and all(loads_table(a) for a in ret.value.args)
+        ):
+            out.append(node.name)
+    return out
+
+
+def test_table_queries_are_registered_with_over():
+    from pathlib import Path
+
+    assert load_table_wrappers(Path(registry.__file__).read_text()) == []
+    src = (
+        '@register("a")\ndef q_a(spark, sf_dir):\n    """Doc."""\n'
+        '    return f(load_table(spark, sf_dir, "t"))\n\n'
+        '@register("b")\ndef q_b(spark, sf_dir):\n'
+        '    return f(load_table(spark, sf_dir, "t"), k=1)\n'
+    )
+    assert load_table_wrappers(src) == ["q_a"]
+
+
 def test_readme_query_counts_match_registry():
     """ADVICE r3: README's '<N> named queries … (<M>) carry a DuckDB
     oracle' counts went stale; derive them from the registry so they

@@ -390,25 +390,14 @@ NESTED_LOOP_ALLOWED = {
 
 
 @pytest.fixture(scope="session")
-def registry_plans(spark):
-    """Executed-plan strings for EVERY registered query at SF_SMOKE,
-    built once on a shared pool and consumed by both the registry-wide
-    audit and the documented scan-count pins — one construction pass,
-    zero per-test re-derivation. Iterative operators RUN (their
+def registry_plans(registry_first_calls):
+    """Executed-plan strings for EVERY registered query at SF_SMOKE, from
+    the suite's one concurrent construction pass (conftest
+    registry_first_calls), consumed by both the registry-wide audit and
+    the documented scan-count pins. Iterative operators RUN (their
     localCheckpoints) at plan-construction time, so building all 220+
-    plans serially dominated the suite (42s); Spark's scheduler is
-    thread-safe and the Python-datasource thread-local pin lives in
-    register_* (pydatasource). 32 threads (r16 suite-time trim, was 16 —
-    plan construction is py4j/Catalyst-bound, so threads scale past the
-    core count; r13 measured 22.9s → ~12s at 16)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def plan_of(item):
-        name, fn = item
-        return name, fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
-
-    with ThreadPoolExecutor(max_workers=32) as pool:
-        return dict(pool.map(plan_of, registry.queries().items()))
+    plans serially dominated the suite (42s)."""
+    return {name: first[0] for name, first in registry_first_calls.items()}
 
 
 def test_registry_wide_plan_audit(registry_plans):

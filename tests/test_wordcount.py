@@ -41,6 +41,18 @@ def test_wc_punctuation_no_empty_tokens(spark):
     assert "" not in got
 
 
+def test_tokenize_arrays_hold_no_empty_token(spark):
+    """tokenize drops the empty elements Spark's split leaves for leading
+    and trailing separators and for text without letters, so callers
+    count and slice its arrays directly; NULL text stays NULL."""
+    from tp1_distribuidos_mapreduce_spark.functions.tokenize import tokenize
+
+    rows = [("  Hola, don  ",), ("",), (None,), ("123 456",), ("¡Ñandú, ÉL!",)]
+    df = spark.createDataFrame(rows, "text string")
+    got = [r.t for r in df.select(tokenize("text").alias("t")).collect()]
+    assert got == [["hola", "don"], [], None, [], ["ñandú", "él"]]
+
+
 def test_wc_stress_golden(spark):
     # reference tests/test_wc.py:254-300 golden counts, scaled down 100×
     text1 = "hola " * 100 + "don " * 20 + "pepito " * 50

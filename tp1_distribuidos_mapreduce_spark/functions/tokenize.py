@@ -6,9 +6,11 @@ then lowercase each token (wc.go:18, ii.go:19).
 
 Java regex ``\\p{L}`` matches the same Unicode letter category as Go's
 ``unicode.IsLetter``, so ``split(lower(text), '[^\\p{L}]+')`` reproduces it.
-Trap (SURVEY.md §7.4): Spark's ``split`` yields empty leading/trailing
-elements where Go's ``FieldsFunc`` never does — every tokenize MUST pair
-with a ``word != ''`` filter or counts silently diverge.
+Spark's ``split`` also yields an empty element for leading or trailing
+separators (and for empty text), where Go's ``FieldsFunc`` yields none
+(SURVEY.md §7.4); ``tokenize`` removes them with ``array_remove``, so no
+caller filters them again. ``array_remove`` compiles inside whole-stage
+codegen, where a ``filter`` lambda would not.
 
 All of this stays JVM-side (whole-stage codegen) — no Python UDF.
 """
@@ -23,9 +25,9 @@ TOKEN_SPLIT_REGEX = r"[^\p{L}]+"
 
 
 def tokenize(text: Column | str) -> Column:
-    """Lowercased array<string> of letter-run tokens (may contain '' slots)."""
+    """Lowercased array<string> of letter-run tokens, never an empty one."""
     col = F.col(text) if isinstance(text, str) else text
-    return F.split(F.lower(col), TOKEN_SPLIT_REGEX)
+    return F.array_remove(F.split(F.lower(col), TOKEN_SPLIT_REGEX), "")
 
 
 def bind_once(col: Column, f) -> Column:
@@ -52,9 +54,6 @@ def words_from(df: DataFrame, text_col: str = "value", *carry: str) -> DataFrame
     """Explode ``text_col`` into one lowercase word per row (O5+O6+O14).
 
     ``carry`` columns are kept alongside each word (e.g. doc_id for the
-    inverted index). Empty tokens are dropped — see module docstring.
+    inverted index).
     """
-    return (
-        df.select(F.explode(tokenize(text_col)).alias("word"), *carry)
-        .where(F.col("word") != "")
-    )
+    return df.select(F.explode(tokenize(text_col)).alias("word"), *carry)

@@ -41,7 +41,7 @@ def _doc_spans(documents: DataFrame, k: int) -> DataFrame:
     binding, identical output)."""
     from ..functions.hashing import md5_span_hashes
 
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("doc_id", t.alias("t"))
     # Materialize the span array as a named column BEFORE size+explode:
     # Catalyst inlines (never CSEs) the expression into the Project above

@@ -39,10 +39,6 @@ from ..functions.tokenize import tokenize
 from ..functions.vectors import cosine_similarity
 
 
-def _tokens(text_col: str = "text") -> F.Column:
-    return F.filter(tokenize(text_col), lambda t: t != "")
-
-
 def _simhash_udf() -> F.Column:
     """64-bit SimHash per token array, Arrow-batched: blake2b(token) bits →
     ±1 votes summed with one numpy unpackbits/sum per doc. The pure-
@@ -144,7 +140,7 @@ def _shingled_with_sizes(
     """
     packed = F.get(
         F.transform(
-            F.array(F.array_distinct(ngram_shingles(_tokens(), n))),
+            F.array(F.array_distinct(ngram_shingles(tokenize("text"), n))),
             lambda shs: F.transform(
                 shs, lambda s: F.struct(s.alias("sh"), F.size(shs).alias("n_sh"))
             ),
@@ -318,7 +314,9 @@ def minhash_lsh_pairs(
     from ..session import widen_to_shuffle_parallelism
 
     documents = widen_to_shuffle_parallelism(documents)
-    toks = documents.select("doc_id", _tokens().alias("toks")).where(F.size("toks") > 0)
+    toks = documents.select("doc_id", tokenize("text").alias("toks")).where(
+        F.size("toks") > 0
+    )
     sigs = toks.select(
         "doc_id",
         minhash_signature_expr(
@@ -381,7 +379,7 @@ def simhash_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     verify with popcount(xor). Shuffle: 4 fixed-width rows per doc.
     """
     fp = documents.select(
-        "doc_id", _simhash_udf()(_tokens()).alias("fp")
+        "doc_id", _simhash_udf()(tokenize("text")).alias("fp")
     )
     chunked = fp.select(
         "doc_id",
@@ -867,7 +865,7 @@ def shared_span_pairs(
     # per row, not once per span position.
     from ..functions.hashing import md5_span_hashes
 
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("doc_id", t.alias("t"))
     doc_spans = d.select(
         "doc_id", F.explode(md5_span_hashes(F.col("t"), k)).alias("s")
@@ -929,7 +927,7 @@ def prefix_duplicates(documents: DataFrame, k: int = 8) -> DataFrame:
     16-byte key rows. This is exact dedup generalized from whole-text
     md5 (dedup_exact) to a prefix key.
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("doc_id", "source", t.alias("t")).where(F.size("t") >= k)
     h = F.md5(F.concat_ws(" ", F.slice("t", 1, k)).cast("binary"))
     return (
@@ -989,7 +987,7 @@ def cross_source_span_matrix(
     # Same bound span kernel as shared_span_pairs (r21 — see there).
     from ..functions.hashing import md5_span_hashes
 
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("doc_id", "source", t.alias("t"))
     span_docs = d.select(
         "source", F.explode(md5_span_hashes(F.col("t"), k)).alias("s")
@@ -1062,7 +1060,7 @@ def dedup_survivors(documents: DataFrame, k: int = 8) -> DataFrame:
     ceiling, no BIGINT overflow; pinned at 2³³ ids in
     test_dedup_similarity.py).
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select(
         "doc_id", F.col("n_chars").cast("long").alias("n_chars"), t.alias("t")
     ).where(F.size("t") >= k)

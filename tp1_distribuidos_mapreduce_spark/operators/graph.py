@@ -110,6 +110,8 @@ def pagerank_copurchase(
     Deterministic contract: fixed ``n_iter`` rounds from the uniform
     start, rank rounded at 6dp in the public output (partial-sum order
     wobbles the last ulp only). Returns every node, ordered by part_id.
+    That last-ulp sensitivity makes the query rows-only; every node's
+    rank is pinned against numpy in differential.py.
 
     ``initial_ranks`` (a (part_id, rank) frame, e.g. a persisted prior
     output) WARM-STARTS the iteration instead of the uniform vector —

@@ -60,7 +60,7 @@ def bigram_perplexity_by_source(
     """
     from ..functions.tokenize import bind_once
 
-    toks = F.filter(tokenize("text"), lambda x: x != "")
+    toks = tokenize("text")
     docs = documents.select("doc_id", "source", toks.alias("t"))
 
     # Token array bound as a lambda variable before the per-position

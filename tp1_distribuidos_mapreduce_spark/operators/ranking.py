@@ -28,7 +28,7 @@ from ..functions.tokenize import tokenize
 def _doc_terms(documents: DataFrame) -> DataFrame:
     """(doc_id, term, pos): one row per token occurrence, 1-based position
     over the letter-run tokenizer with empties dropped (SURVEY §7.4)."""
-    toks = F.filter(tokenize("text"), lambda t: t != "")
+    toks = tokenize("text")
     return documents.select(
         "doc_id", F.posexplode(toks).alias("pos0", "term")
     ).select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
@@ -286,7 +286,7 @@ def phrase_search(
     from ..functions.tokenize import bind_once
 
     L = len(phrase)
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
 
     # Token array bound as a lambda variable before the per-offset scan
     # (r21, bind_once rationale): the tokenize composite would otherwise

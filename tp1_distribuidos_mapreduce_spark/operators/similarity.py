@@ -584,7 +584,9 @@ def knn_ivf_pq(
     true cosines fetched by a join bounded by n_queries × rerank rows.
     Training (centroids + codebooks) runs on the same bounded
     deterministic sample as knn_ivf; everything downstream is
-    Arrow-batched, no data-sized driver transfer anywhere.
+    Arrow-batched, no data-sized driver transfer anywhere. Quantizer
+    internals are not SQL-expressible, so the query is rows-only; recall
+    is pinned against knn_bruteforce in tests/test_dedup_similarity.py.
     """
     e = _as_double(embeddings)
     sample = _collect_sample(e, sample_size)

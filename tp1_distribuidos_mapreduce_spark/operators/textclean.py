@@ -241,7 +241,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     scale. The oracle computes the same mode with a relational
     unnest→group→max, proving the fold correct.
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("doc_id", t.alias("t"))
     bigrams = _bigrams_expr()
     d = d.withColumn("bg", bigrams)
@@ -328,7 +328,7 @@ def source_quality_gates(documents: DataFrame) -> DataFrame:
     Every gate compares exact integer ratios (identical doubles on both
     engines), so the flags are deterministic.
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("source", t.alias("t"))
     n = F.size("t")
     sum_len = F.expr("aggregate(t, 0L, (acc, x) -> acc + length(x))")

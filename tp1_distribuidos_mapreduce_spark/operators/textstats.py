@@ -26,13 +26,9 @@ _LANG_PROFILES = {
 }
 
 
-def _toks() -> F.Column:
-    return F.filter(tokenize("text"), lambda t: t != "")
-
-
 def n_tokens_expr() -> F.Column:
     """Word-token count of `text` (letter-run tokenizer, empties dropped)."""
-    return F.size(_toks())
+    return F.size(tokenize("text"))
 
 
 def quality_score_expr() -> F.Column:
@@ -68,7 +64,7 @@ def quality_score_expr() -> F.Column:
 
 def pred_lang_expr() -> F.Column:
     """Predicted language of `text` — language_id's argmax expression."""
-    toks = _toks()
+    toks = tokenize("text")
 
     def profile_hits(words: tuple[str, ...]) -> F.Column:
         return F.size(F.filter(toks, lambda t: t.isin(*words)))
@@ -92,7 +88,7 @@ def text_quality(documents: DataFrame) -> DataFrame:
     Map-only (no shuffle): at 100 TB this runs at scan speed and the score
     is typically used as a pushed-down filter for downstream stages.
     """
-    toks = _toks()
+    toks = tokenize("text")
     n_chars = F.length("text")
     n_tokens = F.size(toks)
     n_punct = F.length(F.regexp_replace(F.col("text"), r"[\p{L}\s]", ""))
@@ -160,7 +156,7 @@ ORDER BY doc_id
 def language_id(documents: DataFrame) -> DataFrame:
     """Heuristic language-ID: stopword-profile hit counts, argmax with
     fixed priority (en > es > de > fr), 'und' when all scores are zero."""
-    toks = _toks()
+    toks = tokenize("text")
 
     def profile_hits(words: tuple[str, ...]) -> F.Column:
         # single-parameter lambda only: pyspark's filter() feeds the array
@@ -216,7 +212,7 @@ def token_stats(documents: DataFrame) -> DataFrame:
     word count. Map-only."""
     ws_tokens = F.split(F.trim(F.col("text")), r"\s+")
     bpe_tokens = F.regexp_extract_all(F.col("text"), F.lit(_BPE_REGEX), 0)
-    words = _toks()
+    words = tokenize("text")
     return documents.select(
         "doc_id",
         F.size(ws_tokens).alias("n_ws_tokens"),

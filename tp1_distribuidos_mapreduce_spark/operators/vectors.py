@@ -190,7 +190,11 @@ def embedding_pca(
     """Project every embedding onto the corpus's top principal
     components: (vec_id, label, pc1, pc2). The projection is a JVM-side
     dot against component literal arrays — the Python boundary is
-    crossed only by the bounded Gram partials."""
+    crossed only by the bounded Gram partials: one mapInPandas pass
+    emits a dim×dim partial per partition, and the dim²-bounded reduce
+    and the eigendecomposition run on the driver. Float-order sensitive
+    at the last ulp, so the query is rows-only; pinned against numpy in
+    differential.py."""
     comp, mu = pca_components(embeddings, n_components)
     e = _as_double(embeddings)
     cols = [F.col("vec_id"), F.col("label")]
@@ -213,6 +217,8 @@ def kmeans_clusters(
     Deterministic contract: init = the k lowest-vec_id vectors, fixed
     ``n_iter`` rounds (no convergence test → no extra actions), argmin
     ties → lowest cluster id (numpy argmin returns the first minimum).
+    Rows-only; agreement with a numpy reference is pinned in
+    differential.py.
 
     Each round is ONE vectorized Arrow pass: the k×dim centroid matrix
     closes over a ``mapInPandas`` kernel that computes the full distance

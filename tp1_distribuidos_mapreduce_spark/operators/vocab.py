@@ -36,7 +36,7 @@ def corpus_card(documents: DataFrame) -> DataFrame:
     exact: the ratio divides two BIGINTs identically in both engines and
     rounds at 4dp (deterministic — same ints → same IEEE quotient).
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     d = documents.select("source", "doc_id", t.alias("t"))
     per_source = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -98,7 +98,7 @@ def bpe_pair_counts(documents: DataFrame, top_k: int = BPE_TOP_K) -> DataFrame:
     shuffle |vocab| rows twice, never |corpus| — the same two-level
     rollup real BPE trainers (sentencepiece) use.
     """
-    t = F.filter(tokenize("text"), lambda x: x != "")
+    t = tokenize("text")
     words = (
         documents.select(F.explode(t).alias("w"))
         .groupBy("w")
@@ -272,7 +272,7 @@ def trigram_topk(documents: DataFrame, k: int = TRIGRAM_TOP_K) -> DataFrame:
     partial aggregation, bounded by distinct-trigram cardinality. The
     top-k cut is a deterministic (count DESC, trigram ASC) order.
     """
-    words = F.filter(tokenize("text"), lambda x: x != "")
+    words = tokenize("text")
     return (
         documents.select(words.alias("toks"))
         .where(F.size("toks") >= 3)
@@ -314,7 +314,7 @@ def source_vocab_overlap(documents: DataFrame) -> DataFrame:
     table for the union denominators (tiny, broadcast). Jaccard divides
     two BIGINTs → identical double in both engines, rounded 4dp.
     """
-    words = F.filter(tokenize("text"), lambda x: x != "")
+    words = tokenize("text")
     vocab = (
         documents.select("source", F.explode(words).alias("w")).distinct()
     )
@@ -413,7 +413,7 @@ def source_mix_weights(documents: DataFrame, alpha: float = 0.5) -> DataFrame:
     IEEE op) rather than ``pow`` (libm-dependent).
     """
     assert alpha == 0.5, "oracle parity requires sqrt (alpha = 0.5)"
-    toks = F.filter(tokenize("text"), lambda x: x != "")
+    toks = tokenize("text")
     per = documents.select("source", F.size(toks).alias("nt")).groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("nt").alias("n_tokens"),
@@ -488,7 +488,7 @@ def trigram_novelty(documents: DataFrame) -> DataFrame:
     aggregate with map-side combine. At 100 TB the only change is keying
     the shuffle on a fixed-width trigram hash instead of the string.
     """
-    toks = F.filter(tokenize("text"), lambda x: x != "")
+    toks = tokenize("text")
     tris = F.array_distinct(_trigrams_expr())
     g = (
         documents.select("doc_id", toks.alias("toks"))

@@ -565,7 +565,9 @@ def hll_merge_proof(events: DataFrame) -> DataFrame:
     (n_sketches_merged, approx_users, merge_matches_onebuild); the flag
     requires the register ARRAYS bit-identical, not just the estimates.
     At 100 TB this is exactly how the sketch deploys: per-slice builds
-    folded by max, one 256-int array per group crossing the wire."""
+    folded by max, one 256-int array per group crossing the wire.
+    Rows-only: tests/test_approx.py pins the flag, and differential.py
+    envelopes the estimate against the exact COUNT(DISTINCT)."""
     merged = hll_type_sketches(events).agg(
         F.count(F.lit(1)).cast("long").alias("n_sketches_merged"),
         F.aggregate(F.collect_list("regs"), _hll_zero(), _hll_zipmax).alias("regs"),
@@ -864,7 +866,9 @@ def kmv_merge_proof(events: DataFrame) -> DataFrame:
     flag requires the hash ARRAYS bit-identical, not just the
     estimates. This is the sketch's production shape at 100 TB:
     per-slice bottom-Ks folded by union-truncate, one ≤K-element array
-    per group crossing the wire."""
+    per group crossing the wire. Rows-only: tests/test_approx.py pins the
+    flag, and differential.py envelopes the estimate against the exact
+    COUNT(DISTINCT)."""
     merged = kmv_type_sketches(events).agg(
         F.count(F.lit(1)).cast("long").alias("n_sketches_merged"),
         F.slice(
