@@ -136,15 +136,32 @@ def rows_only_results(spark, request):
     }
 
 
+def _first_call_names(items, all_names):
+    """The registry names the selected tests read from
+    registry_first_calls: every name when the registry-wide plan audit is
+    selected or no selected test narrows the set."""
+    names = set()
+    for item in items:
+        fn = item.function.__name__
+        if fn == "test_registry_wide_plan_audit":
+            return list(all_names)
+        if fn == "test_documented_scan_counts_hold":
+            names.update(item.module.DOCUMENTED_SCAN_COUNTS)
+        elif fn == "test_query_rebuilds_its_deleted_artifacts":
+            names.add(item.callspec.params["name"])
+    return [n for n in all_names if n in names] or list(all_names)
+
+
 @pytest.fixture(scope="session")
-def registry_first_calls(spark):
-    """Every registered query called once at SF_SMOKE, concurrently on a
-    shared pool, for the suite: name -> (executed-plan string, the paths
-    the call passed to ``sources/artifacts.build_once``, and, when there
-    are any, the call's columns and collected rows). The rows are taken
-    right after the build, before a later test deletes an artifact the
-    frame's file listing points at. The µs events copy is built before
-    recording, so no query records it (its rebuild has its own test in
+def registry_first_calls(spark, request):
+    """Each registered query the selected tests need (_first_call_names)
+    called once at SF_SMOKE, concurrently on a shared pool, for the
+    suite: name -> (executed-plan string, the paths the call passed to
+    ``sources/artifacts.build_once``, and, when there are any, the call's
+    columns and collected rows). The rows are taken right after the
+    build, before a later test deletes an artifact the frame's file
+    listing points at. The µs events copy is built before recording, so
+    no query records it (its rebuild has its own test in
     test_sources_contract.py)."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
@@ -173,11 +190,13 @@ def registry_first_calls(spark):
     # their thread-local state in register_* (pydatasource). Plan
     # construction is py4j/Catalyst-bound, so threads scale past the core
     # count (r13 measured 22.9 s → ~12 s at 16 threads; 32 since r16).
+    qs = registry.queries()
+    names = _first_call_names(request.session.items, qs)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(artifacts, "build_once", recording)
         mp.setattr(tables, "build_once", recording)
         with ThreadPoolExecutor(max_workers=32) as pool:
-            return dict(pool.map(first_call, registry.queries().items()))
+            return dict(pool.map(first_call, ((n, qs[n]) for n in names)))
 
 
 def assert_df_matches_oracle(sdf, duck, sql):

@@ -4,9 +4,12 @@ computed, where their cross-process locks are taken, and when per-process
 work dirs are removed.
 
 The ast check below keeps it that way: no other package module may spell
-a ``/tmp`` path, compute an md5 tag in Python, or ask ``tempfile`` for a
+a ``/tmp`` path, compute an md5 tag in Python, ask ``tempfile`` for a
 root (a second root is how the events copy and the build locks once
-ended up outside ``/tmp`` for processes with a different TMPDIR).
+ended up outside ``/tmp`` for processes with a different TMPDIR), or
+take an artifact lock itself instead of building through ``build_once``
+(builders that did kept a catalog check ahead of the marker check and
+never rebuilt a deleted artifact).
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import tempfile
 import pytest
 
 from tp1_distribuidos_mapreduce_spark import registry
+from tp1_distribuidos_mapreduce_spark.operators import similarity as S
 from tp1_distribuidos_mapreduce_spark.plans.ivm import IVM_CUTOFF, _base_state_path
 from tp1_distribuidos_mapreduce_spark.sinks.partitioned import ensure_partitioned_events
 from tp1_distribuidos_mapreduce_spark.sources import artifacts
@@ -35,6 +39,7 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "tp1_distribuidos_mapreduce_spark"
 OWNER = PACKAGE / "sources" / "artifacts.py"
 FORBIDDEN = {("hashlib", "md5"), ("tempfile", "gettempdir")}
+LOCKS = {"pathlock", "_pathlock"}
 
 
 def _docstrings(tree: ast.AST) -> set[int]:
@@ -56,8 +61,9 @@ def _docstrings(tree: ast.AST) -> set[int]:
 
 def derived_state_uses(source: str) -> list[tuple[int, str]]:
     """(line, what) of each ``/tmp`` string constant or f-string head,
-    ``hashlib.md5`` use and ``tempfile.gettempdir`` use in ``source``.
-    Docstrings are prose and do not count."""
+    ``hashlib.md5`` use, ``tempfile.gettempdir`` use and reference to
+    ``pathlock`` or ``_pathlock`` in ``source``. Docstrings are prose and
+    do not count."""
     tree = ast.parse(source)
     docs = _docstrings(tree)
     in_fstring = {
@@ -84,10 +90,16 @@ def derived_state_uses(source: str) -> list[tuple[int, str]]:
             and (node.value.id, node.attr) in FORBIDDEN
         ):
             found.append((node.lineno, f"{node.value.id}.{node.attr}"))
-        elif isinstance(node, ast.ImportFrom) and node.module in ("hashlib", "tempfile"):
+        elif isinstance(node, ast.Attribute) and node.attr in LOCKS:
+            found.append((node.lineno, node.attr))
+        elif isinstance(node, ast.Name) and node.id in LOCKS:
+            found.append((node.lineno, node.id))
+        elif isinstance(node, ast.ImportFrom):
             for alias in node.names:
                 if (node.module, alias.name) in FORBIDDEN:
                     found.append((node.lineno, f"{node.module}.{alias.name}"))
+                elif alias.name in LOCKS:
+                    found.append((node.lineno, alias.name))
     return sorted(found)
 
 
@@ -116,6 +128,14 @@ def f(tag):
     d = hashlib.md5(b"k")
     e = tempfile.gettempdir()
     return a, b, c, d, e
+
+
+from .sources.artifacts import pathlock
+
+
+def g(key):
+    with pathlock(key), artifacts._pathlock(key):
+        return key
 '''
     assert derived_state_uses(src) == [
         (5, "hashlib.md5"),
@@ -123,6 +143,9 @@ def f(tag):
         (11, "/tmp f-string"),
         (13, "hashlib.md5"),
         (14, "tempfile.gettempdir"),
+        (18, "pathlock"),
+        (22, "_pathlock"),
+        (22, "pathlock"),
     ]
 
 
@@ -138,13 +161,18 @@ def test_lock_path_does_not_depend_on_tempdir(monkeypatch):
 def test_artifact_paths_are_unchanged(spark, monkeypatch):
     """Warm /tmp artifacts stay reusable: paths are the earlier inline
     formula ``f"/tmp/tp1_spark_<kind>_{tag}"`` with the md5 tag over
-    path|size|mtime_ns|spec, computed here independently."""
+    path|size|mtime_ns|spec, computed here independently, and catalog
+    table names are ``<name>_{tag}``."""
 
     def tag(table, *spec):
         p = os.path.join(SF_SMOKE, f"{table}.parquet")
         st = os.stat(p)
         key = "|".join([p, str(st.st_size), str(st.st_mtime_ns), *map(str, spec)])
         return hashlib.md5(key.encode()).hexdigest()[:12]
+
+    def location(table):
+        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+        return next(r.data_type for r in rows if r.col_name == "Location")
 
     assert _base_state_path(spark, SF_SMOKE) == (
         f"/tmp/tp1_spark_ivm_base_{tag('orders', 'ivm-base-v1', IVM_CUTOFF)}"
@@ -161,6 +189,27 @@ def test_artifact_paths_are_unchanged(spark, monkeypatch):
         return real(out, build, marker)
 
     monkeypatch.setattr(artifacts, "build_once", recording)
+    registry.queries()["bucketed_colocated_join"](spark, SF_SMOKE)
+    sides = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
+    tags = {source: tag(source, [k], 8, [k]) for source, k in sides.items()}
+    assert built == [f"/tmp/tp1_spark_bucketed_{t}" for t in tags.values()]
+    for source, t in tags.items():
+        assert location(f"{source}_bucketed_{t}") == (
+            f"file:/tmp/tp1_spark_bucketed_{t}/{source}"
+        )
+
+    t = tag("embeddings", "ivf", S.IVF_INDEX_VERSION, 16, 2048, 8)
+    assert S.ensure_ivf_index(spark, SF_SMOKE) == (
+        f"ivf_inverted_{t}", f"/tmp/tp1_spark_ivf_{t}/centroids"
+    )
+    assert location(f"ivf_inverted_{t}") == f"file:/tmp/tp1_spark_ivf_{t}/inverted"
+    t = tag("embeddings", "ivfpq", S.IVF_PQ_INDEX_VERSION, 16, 8, 16, 2048, 8)
+    assert S.ensure_ivf_pq_index(spark, SF_SMOKE) == (
+        f"ivfpq_inverted_{t}", f"/tmp/tp1_spark_ivfpq_{t}"
+    )
+    assert location(f"ivfpq_inverted_{t}") == f"file:/tmp/tp1_spark_ivfpq_{t}/inverted"
+
+    built.clear()
     monkeypatch.setattr(SK, "write_stream_fold", lambda *args: None)
     registry._stream_fold_query(
         spark, SF_SMOKE, "events", SK.IVM, read=lambda spark, path: None

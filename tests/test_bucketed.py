@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from tp1_distribuidos_mapreduce_spark.sinks.bucketed import read_bucketed, write_bucketed
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, differential
 
 
 @pytest.fixture(scope="module")
@@ -152,3 +152,51 @@ def test_registered_bucketed_query_joins_without_exchange(spark):
     assert "SortMergeJoin" in plan
     join_part = plan.split("SortMergeJoin", 1)[1]
     assert "Exchange" not in join_part, join_part[:2000]
+
+
+def test_bucketed_fixture_under_concurrent_callers(spark, monkeypatch):
+    """Eight threads of a new session ask for the orders bucketed fixture.
+    The session has its own relation cache, but persistent tables live in
+    the catalog every session of the SparkContext shares, so the entry is
+    dropped first (the table is external: its files stay) and all eight
+    register it: each gets the same name and none raises. Then the
+    artifact dir is deleted while the catalog still names the table: the
+    files are written exactly once and the query returns the first call's
+    rows."""
+    import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from tp1_distribuidos_mapreduce_spark.sinks import bucketed as BK
+    from tp1_distribuidos_mapreduce_spark.sources import artifacts
+
+    session = spark.newSession()
+
+    def ask(_):
+        return BK.ensure_bucketed_fixture(
+            session, SF_SMOKE, "orders", ["o_orderkey"], 8, ["o_orderkey"]
+        )
+
+    def query():
+        df = BK.bucketed_revenue_by_priority(session, SF_SMOKE)
+        return df.columns, df.collect()
+
+    table = ask(0)
+    first = query()
+    session.sql(f"DROP TABLE {table}")
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        assert set(pool.map(ask, range(8))) == {table}
+
+    writes = []
+    real = BK.write_bucketed
+
+    def counting(df, name, path, *args):
+        writes.append(path)
+        real(df, name, path, *args)
+
+    monkeypatch.setattr(BK, "write_bucketed", counting)
+    shutil.rmtree(artifacts.artifact_path(f"bucketed_{table.rsplit('_', 1)[1]}"))
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        assert set(pool.map(ask, range(8))) == {table}
+    assert len(writes) == 1
+    reason = differential.compare_rows(*first, *query())
+    assert reason is None, reason

@@ -77,10 +77,12 @@ def test_register_rejects_a_duplicate_name():
     assert registry.oracle_sql()["wc"] == wc_sql
 
 
-def load_table_wrappers(source: str) -> list[str]:
+def pass_through_wrappers(source: str) -> list[str]:
     """Names of the ``@register`` functions in ``source`` whose body,
-    past a docstring, is only ``return plan(load_table(...), ...)``: the
-    form ``register(name, oracle)(over(plan, *tables))`` replaces."""
+    past a docstring, is only ``return plan(load_table(...), ...)``, the
+    form ``register(name, oracle)(over(plan, *tables))`` replaces, or
+    only ``return plan(spark, sf_dir)``, which ``register(name,
+    oracle)(plan)`` replaces."""
     import ast
 
     def loads_table(arg: ast.expr) -> bool:
@@ -99,13 +101,16 @@ def load_table_wrappers(source: str) -> list[str]:
             continue
         body = node.body[1:] if ast.get_docstring(node) is not None else node.body
         ret = body[0] if len(body) == 1 else None
-        if (
+        if not (
             isinstance(ret, ast.Return)
             and isinstance(ret.value, ast.Call)
             and ret.value.args
             and not ret.value.keywords
-            and all(loads_table(a) for a in ret.value.args)
         ):
+            continue
+        params = [a.arg for a in node.args.args]
+        forwards = [getattr(a, "id", None) for a in ret.value.args] == params
+        if forwards or all(loads_table(a) for a in ret.value.args):
             out.append(node.name)
     return out
 
@@ -113,14 +118,20 @@ def load_table_wrappers(source: str) -> list[str]:
 def test_table_queries_are_registered_with_over():
     from pathlib import Path
 
-    assert load_table_wrappers(Path(registry.__file__).read_text()) == []
+    assert pass_through_wrappers(Path(registry.__file__).read_text()) == []
     src = (
         '@register("a")\ndef q_a(spark, sf_dir):\n    """Doc."""\n'
         '    return f(load_table(spark, sf_dir, "t"))\n\n'
         '@register("b")\ndef q_b(spark, sf_dir):\n'
-        '    return f(load_table(spark, sf_dir, "t"), k=1)\n'
+        '    return f(load_table(spark, sf_dir, "t"), k=1)\n\n'
+        '@register("c", oracle=C)\ndef q_c(spark, sf_dir):\n    """Doc."""\n'
+        '    return M.plan(spark, sf_dir)\n\n'
+        '@register("d")\ndef q_d(spark, sf_dir):\n'
+        '    return M.plan(spark)\n\n'
+        '@register("e")\ndef q_e(spark, sf_dir):\n'
+        '    return M.plan(sf_dir, spark)\n'
     )
-    assert load_table_wrappers(src) == ["q_a"]
+    assert pass_through_wrappers(src) == ["q_a", "q_c"]
 
 
 def test_readme_query_counts_match_registry():

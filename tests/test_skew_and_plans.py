@@ -391,10 +391,10 @@ NESTED_LOOP_ALLOWED = {
 
 @pytest.fixture(scope="session")
 def registry_plans(registry_first_calls):
-    """Executed-plan strings for EVERY registered query at SF_SMOKE, from
-    the suite's one concurrent construction pass (conftest
-    registry_first_calls), consumed by both the registry-wide audit and
-    the documented scan-count pins. Iterative operators RUN (their
+    """Executed-plan strings at SF_SMOKE, from the suite's one concurrent
+    construction pass (conftest registry_first_calls: every registered
+    query when the registry-wide audit is selected), consumed by both the
+    audit and the documented scan-count pins. Iterative operators RUN (their
     localCheckpoints) at plan-construction time, so building all 220+
     plans serially dominated the suite (42s)."""
     return {name: first[0] for name, first in registry_first_calls.items()}

@@ -377,6 +377,14 @@ def knn_ivf(
 IVF_INDEX_VERSION = 1
 
 
+def _write_centroids(spark, C: np.ndarray, path: str) -> None:
+    """The centroids as the (list_id, centroid) rows _load_centroids reads."""
+    spark.createDataFrame(
+        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
+        "list_id int, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+
+
 def ensure_ivf_index(
     spark,
     sf_dir: str,
@@ -389,57 +397,26 @@ def ensure_ivf_index(
     promises at 100 TB, where repeated searches must skip both centroid
     training and corpus assignment.
 
-    Content-addressed on the embeddings parquet and the index spec (same
-    discipline as every /tmp cache here); same three-tier fast path as
-    ensure_bucketed_fixture: catalog hit → metadata-only re-register →
-    full build. Returns (inverted_table_name, centroids_path).
+    Content-addressed on the embeddings parquet and the index spec, and
+    built once by sinks/bucketed.py bucketed_artifact. Returns
+    (inverted_table_name, centroids_path).
     """
-    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
-
-    tag = fixture_cache_tag(
-        sf_dir, "embeddings", "ivf", IVF_INDEX_VERSION, n_lists, sample_size, num_buckets
-    )
-
-    table = f"ivf_inverted_{tag}"
-    base = artifact_path(f"ivf_{tag}")
-    cpath = f"{base}/centroids"
-    ipath = f"{base}/inverted"
-    with pathlock(base):
-        return _ensure_ivf_index_locked(
-            spark, sf_dir, table, cpath, ipath, n_lists, sample_size, num_buckets
-        )
-
-
-def _ensure_ivf_index_locked(
-    spark, sf_dir, table, cpath, ipath, n_lists, sample_size, num_buckets
-):
-    import os
-
-    from ..sinks.bucketed import register_existing_bucketed, write_bucketed
+    from ..sinks.bucketed import bucketed_artifact
     from ..sources.tables import load_table
 
-    if spark.catalog.tableExists(table):
-        return table, cpath
-    e = _as_double(load_table(spark, sf_dir, "embeddings"))
-    if os.path.exists(os.path.join(ipath, "_SUCCESS")):
-        from pyspark.sql.types import IntegerType, StructField, StructType
+    def build(base: str) -> DataFrame:
+        e = _as_double(load_table(spark, sf_dir, "embeddings"))
+        C = _train_centroids(e, n_lists, sample_size)
+        _write_centroids(spark, C, f"{base}/centroids")
+        return _assign_lists(e, C)
 
-        # copy before extending — StructType.add MUTATES the DataFrame's
-        # cached schema (SKILL.md gotcha)
-        idx_schema = StructType(
-            list(e.schema.fields) + [StructField("list_id", IntegerType())]
-        )
-        register_existing_bucketed(
-            spark, table, ipath, idx_schema, ["list_id"], num_buckets
-        )
-        return table, cpath
-    C = _train_centroids(e, n_lists, sample_size)
-    spark.createDataFrame(
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(cpath)
-    write_bucketed(_assign_lists(e, C), table, ipath, ["list_id"], num_buckets)
-    return table, cpath
+    table, base = bucketed_artifact(
+        spark, "ivf", sf_dir, "embeddings",
+        "ivf", IVF_INDEX_VERSION, n_lists, sample_size, num_buckets,
+        name="ivf_inverted", leaf="inverted",
+        bucket_cols=["list_id"], num_buckets=num_buckets, build=build,
+    )
+    return table, f"{base}/centroids"
 
 
 def knn_ivf_persisted(
@@ -622,74 +599,37 @@ def ensure_ivf_pq_index(
     raw), bucket files prune by probed list, and raw vectors are touched
     only by the bounded exact-rerank join against the source table.
 
-    Content-addressed and three-tier cached like ensure_ivf_index.
+    Content-addressed and built once like ensure_ivf_index.
     Returns (inverted_table_name, index_base_path).
     """
-    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
-
-    tag = fixture_cache_tag(
-        sf_dir, "embeddings", "ivfpq", IVF_PQ_INDEX_VERSION,
-        n_lists, m_subq, n_codes, sample_size, num_buckets,
-    )
-
-    table = f"ivfpq_inverted_{tag}"
-    base = artifact_path(f"ivfpq_{tag}")
-    cpath, bpath, ipath = f"{base}/centroids", f"{base}/codebooks", f"{base}/inverted"
-    with pathlock(base):
-        return _ensure_ivf_pq_index_locked(
-            spark, sf_dir, table, base, cpath, bpath, ipath,
-            n_lists, m_subq, n_codes, sample_size, num_buckets,
-        )
-
-
-def _ensure_ivf_pq_index_locked(
-    spark, sf_dir, table, base, cpath, bpath, ipath,
-    n_lists, m_subq, n_codes, sample_size, num_buckets,
-):
-    import os
-
-    from ..sinks.bucketed import register_existing_bucketed, write_bucketed
+    from ..sinks.bucketed import bucketed_artifact
     from ..sources.tables import load_table
 
-    if spark.catalog.tableExists(table):
-        return table, base
-    if os.path.exists(os.path.join(ipath, "_SUCCESS")):
-        from pyspark.sql.types import (
-            ArrayType, IntegerType, LongType, StructField, StructType,
+    def build(base: str) -> DataFrame:
+        e = _as_double(load_table(spark, sf_dir, "embeddings"))
+        sample = _collect_sample(e, sample_size)
+        C = _lloyd_centroids(sample, n_lists)
+        books = _train_pq_codebooks(sample, m_subq, n_codes)
+        _write_centroids(spark, C, f"{base}/centroids")
+        spark.createDataFrame(
+            [
+                (j, c, [float(x) for x in books[j, c]])
+                for j in range(books.shape[0])
+                for c in range(books.shape[1])
+            ],
+            "subspace int, code int, vec array<double>",
+        ).coalesce(1).write.mode("overwrite").parquet(f"{base}/codebooks")
+        return _assign_lists(e, C).select(
+            "vec_id", "list_id", _pq_encode_udf(books)(F.col("v")).alias("codes")
         )
 
-        idx_schema = StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("list_id", IntegerType()),
-                StructField("codes", ArrayType(IntegerType())),
-            ]
-        )
-        register_existing_bucketed(
-            spark, table, ipath, idx_schema, ["list_id"], num_buckets
-        )
-        return table, base
-    e = _as_double(load_table(spark, sf_dir, "embeddings"))
-    sample = _collect_sample(e, sample_size)
-    C = _lloyd_centroids(sample, n_lists)
-    books = _train_pq_codebooks(sample, m_subq, n_codes)
-    spark.createDataFrame(
-        [(i, [float(x) for x in C[i]]) for i in range(len(C))],
-        "list_id int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(cpath)
-    spark.createDataFrame(
-        [
-            (j, c, [float(x) for x in books[j, c]])
-            for j in range(books.shape[0])
-            for c in range(books.shape[1])
-        ],
-        "subspace int, code int, vec array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(bpath)
-    idx = _assign_lists(e, C).select(
-        "vec_id", "list_id", _pq_encode_udf(books)(F.col("v")).alias("codes")
+    return bucketed_artifact(
+        spark, "ivfpq", sf_dir, "embeddings",
+        "ivfpq", IVF_PQ_INDEX_VERSION,
+        n_lists, m_subq, n_codes, sample_size, num_buckets,
+        name="ivfpq_inverted", leaf="inverted",
+        bucket_cols=["list_id"], num_buckets=num_buckets, build=build,
     )
-    write_bucketed(idx, table, ipath, ["list_id"], num_buckets)
-    return table, base
 
 
 def knn_ivf_pq_persisted(

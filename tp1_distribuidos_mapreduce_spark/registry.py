@@ -359,30 +359,15 @@ register("top_event_paths", BH.TOP_EVENT_PATHS_ORACLE)(
 register("merge_upsert_orders", MG.MERGE_UPSERT_ORDERS_ORACLE)(
     over(MG.merge_upsert_orders, "orders")
 )
-
-
-@register("partitioned_pruned_daily", oracle=PT.PARTITIONED_DAILY_ACTIVITY_ORACLE)
-def q_partitioned_pruned_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-day activity read partition-pruned from a date-partitioned
-    copy of events (sinks/partitioned.py): the literal date predicate
-    resolves against directory names at plan time, so the scan lists a
-    single partition directory; the oracle aggregates the flat table."""
-    return PT.partitioned_daily_activity(spark, sf_dir)
-
-
-@register("bucketed_colocated_join", oracle=BK.BUCKETED_REVENUE_ORACLE)
-def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return BK.bucketed_revenue_by_priority(spark, sf_dir)
-
-
-@register("published_events_census", oracle=MF.PUBLISHED_EVENTS_CENSUS_ORACLE)
-def q_published_events_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type census read through the manifest-committed publish path
-    (sinks/manifest.py: snapshot dir + commit-last manifest +
-    footer-count validation); the oracle aggregates the raw fixture, so
-    any row the publish loses, duplicates, or mixes in from a stray
-    writer breaks the hash — the snapshot layout is physical only."""
-    return MF.published_events_census(spark, sf_dir)
+register("partitioned_pruned_daily", PT.PARTITIONED_DAILY_ACTIVITY_ORACLE)(
+    PT.partitioned_daily_activity
+)
+register("bucketed_colocated_join", BK.BUCKETED_REVENUE_ORACLE)(
+    BK.bucketed_revenue_by_priority
+)
+register("published_events_census", MF.PUBLISHED_EVENTS_CENSUS_ORACLE)(
+    MF.published_events_census
+)
 
 
 _ZORDER_PRUNED_ORACLE = """
@@ -598,26 +583,9 @@ register("knn_bruteforce", S.KNN_BRUTEFORCE_ORACLE)(
     over(S.knn_bruteforce, "embeddings")
 )
 register("knn_lsh")(over(S.knn_lsh, "embeddings"))
-
-
-@register("knn_ivf_persisted")
-def q_knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return S.knn_ivf_persisted(spark, sf_dir)
-
-
+register("knn_ivf_persisted")(S.knn_ivf_persisted)
 register("knn_ivf")(over(S.knn_ivf, "embeddings"))
-
-
-@register("knn_ivf_pq_persisted")
-def q_knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ search over the PERSISTED code index (operators/
-    similarity.py): bucket-pruned scan of probed lists' m-byte code rows,
-    ADC on codes, bounded exact rerank against the source table — the
-    100 TB serving shape. Bit-identical to knn_ivf_pq's rebuild path
-    (pinned in pytest); rows-only driver check."""
-    return S.knn_ivf_pq_persisted(spark, sf_dir)
-
-
+register("knn_ivf_pq_persisted")(S.knn_ivf_pq_persisted)
 register("knn_ivf_pq")(over(S.knn_ivf_pq, "embeddings"))
 register("dedup_clusters", D.NEAR_DUP_CLUSTERS_ORACLE)(
     over(D.near_dup_clusters, "documents")
@@ -925,37 +893,14 @@ def q_q1_from_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.q1_pricing_summary(FM.read_lineitem_orc(spark, sf_dir))
 
 
-@register("schema_evolution_census", oracle=FM.SCHEMA_EVOLUTION_ORACLE)
-def q_schema_evolution_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mergeSchema read over heterogeneous parquet batches (sources/
-    formats.py): footer reconciliation + partition discovery, per-batch
-    late-column census — the long-lived-table ingestion reality."""
-    return FM.schema_evolution_census(spark, sf_dir)
-
-
-@register("type_widening_census", oracle=FM.TYPE_WIDENING_ORACLE)
-def q_type_widening_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mergeSchema read over parquet batches whose o_custkey physical
-    type differs (INT32 batch vs INT64 batch, sources/formats.py): the
-    type-WIDENING half of table evolution — merged field asserted
-    BIGINT engine-side, values proven exact against the all-BIGINT
-    oracle."""
-    return FM.type_widening_census(spark, sf_dir)
-
-
+register("schema_evolution_census", FM.SCHEMA_EVOLUTION_ORACLE)(
+    FM.schema_evolution_census
+)
+register("type_widening_census", FM.TYPE_WIDENING_ORACLE)(FM.type_widening_census)
 register("association_rules", RT.ASSOCIATION_RULES_ORACLE)(
     over(RT.association_rules, "lineitem")
 )
-
-
-@register("incremental_agg_merge", oracle=IV.INCREMENTAL_AGG_ORACLE)
-def q_incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance (plans/ivm.py): persisted base
-    state + delta-only aggregation + full-outer combine, proven equal
-    to the full recompute in exact integer cents."""
-    return IV.incremental_agg_merge(spark, sf_dir)
-
-
+register("incremental_agg_merge", IV.INCREMENTAL_AGG_ORACLE)(IV.incremental_agg_merge)
 register("table_diff", IV.TABLE_DIFF_ORACLE)(over(IV.table_diff, "orders"))
 
 
@@ -1109,41 +1054,15 @@ def q_detgen_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return PDS.detgen_bucket_stats(spark)
 
 
-@register("rowdir_roundtrip", oracle=PDS.ROWDIR_ROUNDTRIP_ORACLE)
-def q_rowdir_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Write-side custom DataSource (sources/pydatasource.py): orders
-    flow through the rowdir OUTPUT-COMMIT PROTOCOL (per-task Arrow IPC
-    temp files → driver commit → atomic manifest publish) and back
-    through its manifest-scoped reader into a Catalyst aggregate; the
-    oracle aggregates the orders table directly, so any lost, duplicate
-    or partial file breaks the hash. The Spark-4 analogue of the
-    reference's output-commit step (coordinator.go:241-273)."""
-    return PDS.rowdir_roundtrip_priority_revenue(spark, sf_dir)
-
-
-@register("rowdir_time_travel", oracle=PDS.ROWDIR_TIME_TRAVEL_ORACLE)
-def q_rowdir_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot TIME TRAVEL over the rowdir connector's versioned
-    manifests (sources/pydatasource.py): version 1 (pre-1997 overwrite
-    commit) and the current pointer (post-append) of the same table
-    path are read side-by-side and aggregated by year; the oracle
-    replays both snapshots as filtered aggregates — Iceberg/Delta
-    time-travel semantics carried natively by the commit protocol."""
-    return PDS.rowdir_time_travel_census(spark, sf_dir)
-
-
-@register("rowdir_pruned_scan", oracle=PDS.ROWDIR_PRUNED_SCAN_ORACLE)
-def q_rowdir_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map file pruning through the Spark-4 pushFilters contract
-    (sources/pydatasource.py): the rowdir artifact is range-partitioned
-    by year at write time, per-file min/max stats land in the manifest,
-    and the year predicate prunes whole files at planning time — the
-    Iceberg/Delta data-skipping shape. Mechanical skip count pinned in
-    tests/test_sources_contract.py; this row proves cross-engine
-    equality of the pruned read."""
-    return PDS.rowdir_pruned_scan_census(spark, sf_dir)
-
-
+register("rowdir_roundtrip", PDS.ROWDIR_ROUNDTRIP_ORACLE)(
+    PDS.rowdir_roundtrip_priority_revenue
+)
+register("rowdir_time_travel", PDS.ROWDIR_TIME_TRAVEL_ORACLE)(
+    PDS.rowdir_time_travel_census
+)
+register("rowdir_pruned_scan", PDS.ROWDIR_PRUNED_SCAN_ORACLE)(
+    PDS.rowdir_pruned_scan_census
+)
 register("kcore_members")(over(GR.kcore_members, "lineitem"))
 register("props_variant_census", RX.PROPS_VARIANT_ORACLE)(
     over(RX.props_variant_census, "events")

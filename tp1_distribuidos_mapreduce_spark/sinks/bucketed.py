@@ -14,9 +14,14 @@ transient per-job shuffle; bucketing persists that property into storage.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import os
+from collections.abc import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.artifacts import fixture_artifact, fixture_cache_tag
+from ..sources.tables import load_table, parquet_schema
 
 
 def write_bucketed(
@@ -47,6 +52,66 @@ def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
     return spark.table(table)
 
 
+def bucketed_artifact(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    source: str,
+    *spec: object,
+    name: str,
+    leaf: str,
+    bucket_cols: Sequence[str],
+    num_buckets: int,
+    sort_cols: Sequence[str] | None = None,
+    build: Callable[[str], DataFrame],
+) -> tuple[str, str]:
+    """The bucketed table ``<name>_<tag>`` over the artifact that
+    ``fixture_artifact(kind, sf_dir, source, *spec)`` names, registered
+    in this session's catalog; returns ``(table, artifact dir)``.
+
+    ``build(dir)`` writes the rest of the artifact and returns the frame
+    whose bucket files go to ``<dir>/<leaf>``. It runs when their
+    ``_SUCCESS`` is missing, also while the catalog still names the table.
+    One bucket spec serves the write and the catalog entry, so the layout
+    Spark trusts to elide the Exchange is the one on disk; ``spec`` must
+    cover that bucket spec, so files written under another get another
+    dir."""
+    table = f"{name}_{fixture_cache_tag(sf_dir, source, *spec)}"
+
+    def write(out: str) -> None:
+        # saveAsTable, Spark's only bucketed writer, writes _SUCCESS before it
+        # registers its table. Under the final name a reader that saw
+        # _SUCCESS could register the table first and fail this write, so
+        # the files are written under a build-only name that is dropped
+        # (the files stay: the table is external), and every caller
+        # registers the final name below.
+        staged, files = f"{table}_build", os.path.join(out, leaf)
+        write_bucketed(build(out), staged, files, bucket_cols, num_buckets, sort_cols)
+        spark.sql(f"DROP TABLE {staged}")
+
+    out = fixture_artifact(
+        kind, sf_dir, source, *spec, build=write, marker=os.path.join(leaf, "_SUCCESS")
+    )
+    path = os.path.join(out, leaf)
+    schema = parquet_schema(spark, path)
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)
+    sort = f"SORTED BY ({', '.join(sort_cols)}) " if sort_cols else ""
+    try:
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {table} ({cols}) USING PARQUET "
+            f"CLUSTERED BY ({', '.join(bucket_cols)}) {sort}"
+            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
+        )
+    except AnalysisException:
+        # fine when another caller registered it between check and create
+        if not spark.catalog.tableExists(table):
+            raise
+    # The session caches a table's file listing; files rebuilt since then
+    # (here or by another session or process) have new names.
+    spark.catalog.refreshTable(table)
+    return table, out
+
+
 def ensure_bucketed_fixture(
     spark: SparkSession,
     sf_dir: str,
@@ -55,78 +120,16 @@ def ensure_bucketed_fixture(
     num_buckets: int = 8,
     sort_cols: Sequence[str] | None = None,
 ) -> str:
-    """Idempotent bucketed copy of a fixture table, registered in THIS
-    session's catalog; returns the table name.
-
-    Three-tier fast path mirroring production bucketed-layout operations:
-    catalog hit (same session) → metadata-only CREATE TABLE over existing
-    bucket files (new session, layout already on disk — the default
-    in-memory catalog dies with the session, the files don't) → full
-    bucketBy write (first ever touch). The one-time layout cost is the
-    whole point: every later co-located join reads pre-partitioned files
-    and pays zero Exchange.
-    """
-    import os
-
-    from ..sources.artifacts import artifact_path, fixture_cache_tag, pathlock
-    from ..sources.tables import load_table
-
-    # Content-addressed on the source parquet AND the bucket spec: a
-    # regenerated fixture or a changed (cols, buckets, sort) spec yields a
-    # new tag → new path + table, so the metadata-only re-register below
-    # can never declare a bucket layout the on-disk files don't have
-    # (Spark would trust it, elide the Exchange, and silently drop rows).
-    tag = fixture_cache_tag(
-        sf_dir, source, list(bucket_cols), num_buckets, list(sort_cols or [])
+    """Bucketed copy of fixture table ``source``, registered in this
+    session's catalog; returns the table name."""
+    table, _ = bucketed_artifact(
+        spark, "bucketed", sf_dir, source,
+        list(bucket_cols), num_buckets, list(sort_cols or []),
+        name=f"{source}_bucketed", leaf=source,
+        bucket_cols=bucket_cols, num_buckets=num_buckets, sort_cols=sort_cols,
+        build=lambda out: load_table(spark, sf_dir, source),
     )
-    table = f"{source}_bucketed_{tag}"
-    path = os.path.join(artifact_path(f"bucketed_{tag}"), source)
-    # The whole check-register-or-write sequence is a critical section:
-    # concurrent queries sharing the layout must not double-register the
-    # catalog table or double-write the bucket files.
-    with pathlock(path):
-        if spark.catalog.tableExists(table):
-            return table
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            register_existing_bucketed(
-                spark,
-                table,
-                path,
-                load_table(spark, sf_dir, source).schema,
-                bucket_cols,
-                num_buckets,
-                sort_cols,
-            )
-            return table
-        write_bucketed(
-            load_table(spark, sf_dir, source), table, path, bucket_cols, num_buckets, sort_cols
-        )
-        return table
-
-
-def register_existing_bucketed(
-    spark: SparkSession,
-    table: str,
-    path: str,
-    schema,
-    bucket_cols: Sequence[str],
-    num_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Metadata-only CREATE TABLE over bucket files already on disk — the
-    new-session fast path (the default in-memory catalog dies with the
-    session, the files don't). Callers must guarantee the declared spec
-    matches how the files were written; the content-addressed tags used by
-    every caller in this repo make a mismatch unreachable."""
-    schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
-    )
-    sort_clause = f"SORTED BY ({', '.join(sort_cols)}) " if sort_cols else ""
-    spark.sql(
-        f"CREATE TABLE {table} ({schema_ddl}) USING PARQUET "
-        f"CLUSTERED BY ({', '.join(bucket_cols)}) {sort_clause}"
-        f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-    )
+    return table
 
 
 def bucketed_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:

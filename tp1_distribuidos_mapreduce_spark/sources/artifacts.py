@@ -7,12 +7,14 @@ Every artifact is a ``/tmp/tp1_spark_<name>`` path (``artifact_path``,
 the one owner of the root and the prefix). Derived artifacts are
 content-addressed (``fixture_cache_tag``) and gated on a marker file:
 a regenerated fixture or a changed derivation spec gets a fresh path,
-never a stale reuse. The naive check-then-build is racy under
-CONCURRENT queries sharing an artifact — two callers both see the marker
-missing and both write (Spark's mode("overwrite") makes this corrupting,
-not just wasteful: interleaved delete/commit can leave a directory
-mixing both runs' part files under a _SUCCESS marker). ``pathlock``
-closes both races:
+never a stale reuse. ``build_once`` is the one build path: the marker
+is checked first, so a deleted artifact is rebuilt. The naive
+check-then-build is racy under CONCURRENT queries sharing an artifact —
+two callers both see the marker missing and both write (Spark's
+mode("overwrite") makes this corrupting, not just wasteful: interleaved
+delete/commit can leave a directory mixing both runs' part files under a
+_SUCCESS marker). ``build_once`` re-checks the marker inside a lock
+that closes both races:
 
 * within a process, a per-key lock table serializes builders;
 * across processes, an advisory ``flock`` on ``/tmp/tp1_spark_lock_<md5>.lock``
@@ -21,8 +23,6 @@ closes both races:
   the same file whatever its TMPDIR. flock is released automatically
   when the holder dies, so a crashed builder never wedges the path — the
   next caller re-checks the marker and rebuilds.
-
-``build_once`` is the marker double-check inside that lock.
 
 Lock files are never removed while the package runs: deleting a file
 someone holds or waits on lets two builders both "hold" the lock, one on
@@ -44,7 +44,6 @@ import re
 import shutil
 import threading
 from collections.abc import Callable
-from contextlib import contextmanager
 
 _LOCKS: dict[str, threading.Lock] = {}
 _LOCKS_GUARD = threading.Lock()
@@ -52,7 +51,7 @@ _LOCKS_GUARD = threading.Lock()
 _SCRATCH_SEQ = itertools.count()
 # The directory every artifact and lock file lives in.
 ROOT = "/tmp"
-# Lock files of pathlock and of older builds of this package
+# Lock files of build_once and of older builds of this package
 # (tp1_pathlock_<md5>.lock, <artifact>.build_lock), under ROOT.
 LOCK_GLOBS = ("tp1_spark_lock_*.lock", "tp1_pathlock_*", "*.build_lock")
 # scratch_dir names, tp1_spark_<name>_<pid>_g<n>; group 1 is the pid.
@@ -143,34 +142,21 @@ def _lock_for(key: str) -> threading.Lock:
 
 
 def lock_path(key: str) -> str:
-    """The cross-process lock file ``pathlock(key)`` flocks."""
+    """The cross-process lock file ``build_once(key, ...)`` flocks."""
     return artifact_path(f"lock_{hashlib.md5(key.encode()).hexdigest()}.lock")
-
-
-@contextmanager
-def pathlock(key: str):
-    """Per-key critical section, thread-safe within the process AND
-    flock-serialized across processes. Used directly by builders whose
-    check-then-act spans more than a marker file (e.g. catalog
-    registration plus layout write)."""
-    with _lock_for(key):
-        with open(lock_path(key), "w") as lf:
-            fcntl.flock(lf, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(lf, fcntl.LOCK_UN)
 
 
 def build_once(
     out: str, build: Callable[[], None], marker: str = "_SUCCESS"
 ) -> str:
-    """Run ``build()`` exactly once for ``out`` (the marker file is
-    re-checked inside ``pathlock(out)``) and return ``out``."""
+    """Run ``build()`` exactly once for ``out`` and return ``out``. The
+    marker file is re-checked under a per-key thread lock and a ``flock``
+    on ``lock_path(out)`` (closing the file releases it)."""
     mark = os.path.join(out, marker)
     if os.path.exists(mark):
         return out
-    with pathlock(out):
+    with _lock_for(out), open(lock_path(out), "w") as lf:
+        fcntl.flock(lf, fcntl.LOCK_EX)
         if not os.path.exists(mark):
             build()
     return out

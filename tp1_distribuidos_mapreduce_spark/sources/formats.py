@@ -71,7 +71,8 @@ def orders_evolved_batches(spark: SparkSession, sf_dir: str) -> str:
 def schema_evolution_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-batch schema-evolution census over the heterogeneous orders
     directory: row count and how many rows carry the late-added
-    o_orderpriority column — the "what would a backfill touch" report.
+    o_orderpriority column — the "what would a backfill touch" report,
+    the ingestion reality of a long-lived table.
 
     The read uses mergeSchema=true (footer reconciliation across
     batches; v1 rows surface o_orderpriority as NULL) and the batch

@@ -708,7 +708,8 @@ def rowdir_roundtrip_priority_revenue(spark, sf_dir: str):
     directly, so any lost/duplicated/partial file breaks the hash.
 
     Money is integral cents at write time (the engine's exact-sum
-    discipline), divided once at the output edge."""
+    discipline), divided once at the output edge. The Spark-4 analogue of
+    the reference's output-commit step (coordinator.go:241-273)."""
     from pyspark.sql import functions as F
 
     from .artifacts import fixture_artifact
