@@ -1,12 +1,17 @@
 from __future__ import annotations
 
 import importlib.util
+import threading
+from collections import namedtuple
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 import duckdb
 import pytest
 
+from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.session import get_spark
+from tp1_distribuidos_mapreduce_spark.sources import artifacts, tables
 from tp1_distribuidos_mapreduce_spark.sources.tables import TABLE_NAMES
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -40,135 +45,43 @@ def duck():
     con.close()
 
 
-def _rows_only_names():
-    from tp1_distribuidos_mapreduce_spark import registry
-
-    return sorted(set(registry.queries()) - set(registry.oracle_sql()))
-
-
-# Non-parametrized tests (anywhere in the suite) that consume
-# rows_only_results rows instead of re-collecting their queries (r15
-# suite-time consolidation): test name → the fixture keys it needs. A
-# targeted run of just these tests then collects only these queries,
-# not all 37 rows-only. EVERY non-parametrized consumer must be listed
-# here (ADVICE r15: an omission makes a targeted `-k` selection that
-# includes the test but not its keys fail with KeyError instead of its
-# real check; full-suite and solo runs fall back to collecting all).
-FIXTURE_CONSUMERS = {
-    "test_minhash_lsh_emits_pairs_on_the_corpus_fixture": [
-        "dedup_minhash_lsh",
-    ],
-    "test_ddsketch_merge_proof_all_flags_true_and_bit_identical": [
-        "ddsketch_merge_proof",
-        "ddsketch_event_quantiles",
-    ],
-    "test_hll_and_kmv_merge_proofs_on_fixture": [
-        "hll_merge_proof",
-        "kmv_merge_proof",
-    ],
-    "test_cms_and_bloom_merge_proofs_on_fixture": [
-        "cms_merge_proof",
-        "bloom_merge_proof",
-    ],
-    "test_pagerank_is_a_distribution": ["pagerank_copurchase"],
-    "test_pca_explained_variance_ordered": ["embedding_pca"],
-    "test_kmeans_purity_consistent": ["kmeans_clusters"],
-}
+# One call of a registry query at SF_SMOKE: its executed-plan string,
+# taken before execution; the paths it passed to build_once; its columns
+# and collected rows; and, for a rows-only query, the rows of a second,
+# independent call (the determinism check's other run).
+Call = namedtuple("Call", "plan paths columns rows rerun")
 
 
-@pytest.fixture(scope="session")
-def rows_only_results(spark, request):
-    """Both evaluations of every SELECTED rows-only query, collected
-    ONCE concurrently (r14 suite-time consolidation, VERDICT r13 #5):
-    one fixture feeds the no-NULL scan, the reference checks, the
-    determinism compare, AND (r15) the merge-proof pins in
-    test_approx.py from the same two runs. Each run is its list of
-    ``Row``s in collected order: the PageRank and PCA references compare
-    order, and every reference reads fields by name; the determinism
-    compare sorts where it compares. Lives in conftest so consumers
-    outside test_relational.py resolve it."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tp1_distribuidos_mapreduce_spark import registry
-
-    qs = registry.queries()
-    all_names = _rows_only_names()
-    det_selected = any(
-        item.function.__name__ == "test_rows_only_queries_are_deterministic"
-        for item in request.session.items
-    )
-    if det_selected:
-        names = list(all_names)  # determinism always checks ALL
-    else:
-        selected = {
-            item.callspec.params["name"]
-            for item in request.session.items
-            if getattr(item, "callspec", None) is not None
-            and item.function.__name__
-            in (
-                "test_rows_only_queries_emit_no_nulls",
-                "test_rows_only_query_matches_reference",
-            )
-        }
-        for item in request.session.items:
-            selected.update(FIXTURE_CONSUMERS.get(item.function.__name__, []))
-        names = [n for n in all_names if n in selected] or list(all_names)
-
-    def run_once(name):
-        try:
-            return name, qs[name](spark, SF_SMOKE).collect()
-        except Exception as ex:
-            return name, f"{type(ex).__name__}: {str(ex)[:120]}"
-
-    # both evaluations of every query are INDEPENDENT pool tasks (r13:
-    # one task per query ran its two evaluations serially, making the
-    # wall 2× the slowest iterative query; /tmp artifacts are
-    # build_once-locked so concurrent first-builds are safe)
-    jobs = [n for n in names for _ in (0, 1)]
-    # 32 threads (r16 suite-time trim, was 16 then 24): the pool is
-    # dominated by the streaming-drain queries' fixed per-query latency,
-    # not CPU, so threads scale to the job count (37 queries × 2 runs)
-    with ThreadPoolExecutor(max_workers=32) as pool:
-        results = list(pool.map(run_once, jobs))
-    return {
-        results[i][0]: (results[i][1], results[i + 1][1])
-        for i in range(0, len(results), 2)
-    }
+def declared_queries(item) -> set[str]:
+    """The registry queries a test declares it reads from ``calls``: its
+    ``name`` parameter when that names a query, and the names its
+    ``queries`` marker lists."""
+    names = {n for mark in item.iter_markers("queries") for n in mark.args}
+    callspec = getattr(item, "callspec", None)
+    if callspec is not None and callspec.params.get("name") in registry.queries():
+        names.add(callspec.params["name"])
+    return names
 
 
-def _first_call_names(items, all_names):
-    """The registry names the selected tests read from
-    registry_first_calls: every name when the registry-wide plan audit is
-    selected or no selected test narrows the set."""
-    names = set()
+def selected_queries(items) -> list[str]:
+    """Every query a selected test that reads the registry pass declares,
+    in registration order."""
+    wanted = set()
     for item in items:
-        fn = item.function.__name__
-        if fn == "test_registry_wide_plan_audit":
-            return list(all_names)
-        if fn == "test_documented_scan_counts_hold":
-            names.update(item.module.DOCUMENTED_SCAN_COUNTS)
-        elif fn == "test_query_rebuilds_its_deleted_artifacts":
-            names.add(item.callspec.params["name"])
-    return [n for n in all_names if n in names] or list(all_names)
+        if "registry_pass" in item.fixturenames:
+            wanted |= declared_queries(item)
+    return [n for n in registry.queries() if n in wanted]
 
 
 @pytest.fixture(scope="session")
-def registry_first_calls(spark, request):
-    """Each registered query the selected tests need (_first_call_names)
-    called once at SF_SMOKE, concurrently on a shared pool, for the
-    suite: name -> (executed-plan string, the paths the call passed to
-    ``sources/artifacts.build_once``, and, when there are any, the call's
-    columns and collected rows). The rows are taken right after the
-    build, before a later test deletes an artifact the frame's file
-    listing points at. The µs events copy is built before recording, so
-    no query records it (its rebuild has its own test in
-    test_sources_contract.py)."""
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tp1_distribuidos_mapreduce_spark import registry
-    from tp1_distribuidos_mapreduce_spark.sources import artifacts, tables
-
+def registry_pass(spark, request):
+    """One concurrent pass over the selected queries at SF_SMOKE: name ->
+    its ``Call``, or the exception the call raised. Each query is called
+    once, and a rows-only query once more, independently. The rows are
+    collected right after the build, so a later test that deletes an
+    artifact cannot break them. The µs events copy is built before
+    recording starts, so no query records it (its rebuild has its own
+    test in test_sources_contract.py)."""
     tables.load_table(spark, SF_SMOKE, "events")
     local = threading.local()
     real = artifacts.build_once
@@ -177,26 +90,62 @@ def registry_first_calls(spark, request):
         local.paths.append(out)
         return real(out, build, marker)
 
-    def first_call(item):
-        name, fn = item
+    def run(job):
+        name, first = job
         local.paths = []
-        df = fn(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        paths = list(dict.fromkeys(local.paths))
-        rows = (df.columns, df.collect()) if paths else None
-        return name, (plan, paths, rows)
+        try:
+            df = qs[name](spark, SF_SMOKE)
+            if not first:
+                return df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            return Call(plan, list(local.paths), df.columns, df.collect(), None)
+        except Exception as ex:
+            return ex
 
-    # Spark's scheduler is thread-safe, and the Python data sources pin
-    # their thread-local state in register_* (pydatasource). Plan
-    # construction is py4j/Catalyst-bound, so threads scale past the core
-    # count (r13 measured 22.9 s → ~12 s at 16 threads; 32 since r16).
     qs = registry.queries()
-    names = _first_call_names(request.session.items, qs)
+    names = selected_queries(request.session.items)
+    rows_only = set(qs) - set(registry.oracle_sql())
+    jobs = [(n, True) for n in names] + [(n, False) for n in names if n in rows_only]
+    # Spark's scheduler is thread-safe, the Python data sources pin their
+    # thread-local state in register_* (pydatasource), and build_once
+    # locks each artifact. Building and collecting is py4j-, planning-
+    # and streaming-latency-bound, so threads scale past the core count.
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(artifacts, "build_once", recording)
         mp.setattr(tables, "build_once", recording)
         with ThreadPoolExecutor(max_workers=32) as pool:
-            return dict(pool.map(first_call, ((n, qs[n]) for n in names)))
+            results = dict(zip(jobs, pool.map(run, jobs)))
+    out = {}
+    for name in names:
+        call, rerun = results[(name, True)], results.get((name, False))
+        raised = [r for r in (call, rerun) if isinstance(r, Exception)]
+        out[name] = raised[0] if raised else call._replace(rerun=rerun)
+    return out
+
+
+class Calls:
+    """The registry pass as one test may read it: only the queries the
+    test declares, and a query that raised re-raises."""
+
+    def __init__(self, test: str, declared: set[str], results: dict):
+        self.test, self.declared, self.results = test, declared, results
+
+    def __getitem__(self, name: str) -> Call:
+        if name not in self.declared:
+            pytest.fail(
+                f"{self.test} reads registry query {name!r} without declaring "
+                "it: add it to the test's `name` parameter or its "
+                "@pytest.mark.queries(...) marker"
+            )
+        result = self.results[name]
+        if isinstance(result, Exception):
+            raise result
+        return result
+
+
+@pytest.fixture
+def calls(registry_pass, request):
+    return Calls(request.node.nodeid, declared_queries(request.node), registry_pass)
 
 
 def assert_df_matches_oracle(sdf, duck, sql):

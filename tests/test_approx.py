@@ -3,6 +3,7 @@ the sketches' error bounds of the exact aggregates."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tp1_distribuidos_mapreduce_spark.plans.approx import (
@@ -268,21 +269,18 @@ def test_ddsketch_merge_is_exact(spark):
     assert q_merged == q_one
 
 
-def test_ddsketch_merge_proof_all_flags_true_and_bit_identical(
-    rows_only_results,
-):
+@pytest.mark.queries("ddsketch_merge_proof", "ddsketch_event_quantiles")
+def test_ddsketch_merge_proof_all_flags_true_and_bit_identical(calls):
     """The merge-proof query's own contract: every per-percent flag is
     true, and its (percent, n_rows, approx_value) triples equal the
     one-shot global build's EXACTLY — per-type builds folded by count
-    addition reproduce the global sketch bit-identically. Consumes the
-    pooled rows_only_results collections (r15 suite-time consolidation);
-    tuple positions are the queries' declared column orders."""
+    addition reproduce the global sketch bit-identically. Reads the
+    registry pass; tuple positions are the queries' declared column
+    orders."""
     from tp1_distribuidos_mapreduce_spark.plans import approx as AX
 
-    proof, _ = rows_only_results["ddsketch_merge_proof"]
-    one_rows, _ = rows_only_results["ddsketch_event_quantiles"]
-    assert not isinstance(proof, str), proof
-    assert not isinstance(one_rows, str), one_rows
+    proof = calls["ddsketch_merge_proof"].rows
+    one_rows = calls["ddsketch_event_quantiles"].rows
     # columns: (percent, n_rows, approx_value, merge_matches_onebuild)
     assert len(proof) == len(AX.DD_PERCENTS)
     assert all(r[3] for r in proof)
@@ -292,7 +290,8 @@ def test_ddsketch_merge_proof_all_flags_true_and_bit_identical(
         assert approx == one[pct][2]
 
 
-def test_hll_and_kmv_merge_proofs_on_fixture(rows_only_results, duck):
+@pytest.mark.queries("hll_merge_proof", "kmv_merge_proof")
+def test_hll_and_kmv_merge_proofs_on_fixture(calls, duck):
     """The r15 merge proofs' own contracts on the fixture: ONE row each,
     the bit-identity flag true (per-type sketches folded by max / by
     union-truncate reproduce the independent one-build exactly),
@@ -300,7 +299,7 @@ def test_hll_and_kmv_merge_proofs_on_fixture(rows_only_results, duck):
     the sketch's 4σ envelope of the exact global distinct-user count
     (HLL m=256 → σ≈6.5%; KMV K=256 → σ≈6.3% — at fixture cardinality
     KMV is unsaturated, so its estimate must be EXACT). Exact counts
-    come from DuckDB; Spark rows from the pooled fixture."""
+    come from DuckDB; Spark rows from the registry pass."""
     from tp1_distribuidos_mapreduce_spark.plans import approx as AX
 
     n_types, n_users = duck.execute(
@@ -312,18 +311,18 @@ def test_hll_and_kmv_merge_proofs_on_fixture(rows_only_results, duck):
         ("hll_merge_proof", 1.04 / 16),
         ("kmv_merge_proof", 1 / 255 ** 0.5),
     ):
-        got, _ = rows_only_results[name]
-        assert not isinstance(got, str), got
+        got = calls[name].rows
         assert len(got) == 1
         n_merged, approx_users, flag = got[0]
         assert flag
         assert n_merged == n_types
         assert abs(approx_users - n_users) <= 4 * sigma * n_users
-    kmv, _ = rows_only_results["kmv_merge_proof"]
+    kmv = calls["kmv_merge_proof"].rows
     assert n_users < AX.KMV_K and kmv[0][1] == n_users
 
 
-def test_cms_and_bloom_merge_proofs_on_fixture(rows_only_results, duck):
+@pytest.mark.queries("cms_merge_proof", "bloom_merge_proof")
+def test_cms_and_bloom_merge_proofs_on_fixture(calls, duck):
     """The additive (CMS) and OR (Bloom) merge proofs on the fixture:
     ONE row each, flag true, and the exact structural identities —
     CMS total_count == depth × the corpus token count (each occurrence
@@ -331,7 +330,7 @@ def test_cms_and_bloom_merge_proofs_on_fixture(rows_only_results, duck):
     N_HASHES × distinct keys with equality exactly when no two (key,
     seed) draws collide (true at fixture cardinality: 15 users × 5
     hashes into 2^18 bits). Exact counts from DuckDB (the wc oracle's
-    own tokenizer); Spark rows from the pooled fixture."""
+    own tokenizer); Spark rows from the registry pass."""
     from tp1_distribuidos_mapreduce_spark.plans import approx as AX
     from tp1_distribuidos_mapreduce_spark.plans import bloom as BL
 
@@ -348,16 +347,14 @@ def test_cms_and_bloom_merge_proofs_on_fixture(rows_only_results, duck):
         " FROM events"
     ).fetchone()
 
-    cms, _ = rows_only_results["cms_merge_proof"]
-    assert not isinstance(cms, str), cms
+    cms = calls["cms_merge_proof"].rows
     # columns: (n_sketches_merged, n_cells, total_count, merge_matches_onebuild)
     assert len(cms) == 1 and cms[0][3]
     assert cms[0][0] == n_sources
     assert cms[0][2] == AX.CMS_DEPTH * n_tokens
     assert cms[0][1] <= AX.CMS_DEPTH * AX.CMS_WIDTH
 
-    blm, _ = rows_only_results["bloom_merge_proof"]
-    assert not isinstance(blm, str), blm
+    blm = calls["bloom_merge_proof"].rows
     # columns: (n_sketches_merged, n_words, n_set_bits, merge_matches_onebuild)
     assert len(blm) == 1 and blm[0][3]
     assert blm[0][0] == n_types

@@ -31,7 +31,6 @@ from tp1_distribuidos_mapreduce_spark.operators import similarity as S
 from tp1_distribuidos_mapreduce_spark.plans.ivm import IVM_CUTOFF, _base_state_path
 from tp1_distribuidos_mapreduce_spark.sinks.partitioned import ensure_partitioned_events
 from tp1_distribuidos_mapreduce_spark.sources import artifacts
-from tp1_distribuidos_mapreduce_spark.streaming import sinks as SK
 
 from conftest import SF_SMOKE, differential
 
@@ -158,11 +157,13 @@ def test_lock_path_does_not_depend_on_tempdir(monkeypatch):
     assert default.startswith("/tmp/tp1_spark_lock_") and default.endswith(".lock")
 
 
-def test_artifact_paths_are_unchanged(spark, monkeypatch):
+@pytest.mark.queries("bucketed_colocated_join", "stream_ivm_user_totals")
+def test_artifact_paths_are_unchanged(spark, calls):
     """Warm /tmp artifacts stay reusable: paths are the earlier inline
     formula ``f"/tmp/tp1_spark_<kind>_{tag}"`` with the md5 tag over
     path|size|mtime_ns|spec, computed here independently, and catalog
-    table names are ``<name>_{tag}``."""
+    table names are ``<name>_{tag}``. The registry queries' paths are
+    the ones their call in the registry pass passed to build_once."""
 
     def tag(table, *spec):
         p = os.path.join(SF_SMOKE, f"{table}.parquet")
@@ -181,18 +182,11 @@ def test_artifact_paths_are_unchanged(spark, monkeypatch):
         f"/tmp/tp1_spark_partitioned_{tag('events', ['event_date'], 0, 0)}/events"
     )
 
-    built = []
-    real = artifacts.build_once
-
-    def recording(out, build, marker="_SUCCESS"):
-        built.append(out)
-        return real(out, build, marker)
-
-    monkeypatch.setattr(artifacts, "build_once", recording)
-    registry.queries()["bucketed_colocated_join"](spark, SF_SMOKE)
     sides = {"orders": "o_orderkey", "lineitem": "l_orderkey"}
     tags = {source: tag(source, [k], 8, [k]) for source, k in sides.items()}
-    assert built == [f"/tmp/tp1_spark_bucketed_{t}" for t in tags.values()]
+    assert calls["bucketed_colocated_join"].paths == [
+        f"/tmp/tp1_spark_bucketed_{t}" for t in tags.values()
+    ]
     for source, t in tags.items():
         assert location(f"{source}_bucketed_{t}") == (
             f"file:/tmp/tp1_spark_bucketed_{t}/{source}"
@@ -208,13 +202,9 @@ def test_artifact_paths_are_unchanged(spark, monkeypatch):
         f"ivfpq_inverted_{t}", f"/tmp/tp1_spark_ivfpq_{t}"
     )
     assert location(f"ivfpq_inverted_{t}") == f"file:/tmp/tp1_spark_ivfpq_{t}/inverted"
-
-    built.clear()
-    monkeypatch.setattr(SK, "write_stream_fold", lambda *args: None)
-    registry._stream_fold_query(
-        spark, SF_SMOKE, "events", SK.IVM, read=lambda spark, path: None
-    )
-    assert built == [f"/tmp/tp1_spark_stream_events_{tag('events', 'stream-src-v1')}"]
+    assert calls["stream_ivm_user_totals"].paths == [
+        f"/tmp/tp1_spark_stream_events_{tag('events', 'stream-src-v1')}"
+    ]
 
 
 def test_fold_work_dirs_are_removed_at_exit():
@@ -244,21 +234,21 @@ print(os.getpid(), n, len(glob.glob(f"/tmp/tp1_spark_fold_q_*_{{os.getpid()}}_g*
 
 
 @pytest.mark.parametrize("name", list(registry.queries()))
-def test_query_rebuilds_its_deleted_artifacts(spark, registry_first_calls, name):
+def test_query_rebuilds_its_deleted_artifacts(spark, calls, name):
     """A query whose first call passed paths to build_once, called again
     in the same session after those artifacts are deleted, rebuilds them
     and returns the same rows. Per-process state that outlives an
     artifact (a memo of its path, a cached file listing, a catalog entry)
     shows here as an error or a row difference. The queries are the ones
-    whose first call (conftest registry_first_calls) recorded a path;
-    the others build no artifact and are skipped."""
-    _plan, paths, first = registry_first_calls[name]
-    if not paths:
+    whose call in the registry pass recorded a path; the others build
+    no artifact and are skipped."""
+    first = calls[name]
+    if not first.paths:
         pytest.skip("the first call passed no path to build_once")
-    for path in paths:
+    for path in set(first.paths):
         shutil.rmtree(path)
     df = registry.queries()[name](spark, SF_SMOKE)
     rows = df.collect()
-    assert all(os.path.isdir(path) for path in paths)
-    reason = differential.compare_rows(*first, df.columns, rows)
+    assert all(os.path.isdir(path) for path in first.paths)
+    reason = differential.compare_rows(first.columns, first.rows, df.columns, rows)
     assert reason is None, reason

@@ -5,15 +5,16 @@ references live in differential.py."""
 from __future__ import annotations
 
 import duckdb
+import pytest
 
 from conftest import SF_SMOKE, differential
 
-from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import graph as GR
 
 
-def test_pagerank_is_a_distribution(rows_only_results):
-    rows, _ = rows_only_results["pagerank_copurchase"]
+@pytest.mark.queries("pagerank_copurchase")
+def test_pagerank_is_a_distribution(calls):
+    rows = calls["pagerank_copurchase"].rows
     total = sum(r["rank"] for r in rows)
     # No dangling nodes in an undirected graph → ranks sum to 1 (up to
     # the 6dp rounding × node count).
@@ -139,15 +140,16 @@ def test_degree_distribution_hand_graph(spark):
     assert got == {2: 2, 3: 2}
 
 
-def test_weighted_sample_hits_token_budget(spark):
+@pytest.mark.queries("weighted_token_sample")
+def test_weighted_sample_hits_token_budget(calls):
     """Systematic-sample invariants on the fixture: (a) per source the
     sample has at most k + (docs wider than one stride) rows and at
     least 1, (b) every selected doc's span really crosses a grid line
     (re-derived independently in Python), (c) selection is reproducible."""
     from tp1_distribuidos_mapreduce_spark.operators import pipeline as P
 
-    docs = registry.queries()["weighted_token_sample"](spark, SF_SMOKE)
-    got = [(r["source"], r["doc_id"], r["n_chars"]) for r in docs.collect()]
+    rows = calls["weighted_token_sample"].rows
+    got = [(r["source"], r["doc_id"], r["n_chars"]) for r in rows]
     con = duckdb.connect()
     all_rows = con.execute(
         f"SELECT source, doc_id, n_chars FROM '{SF_SMOKE}/documents.parquet'"

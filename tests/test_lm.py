@@ -5,19 +5,18 @@ encoder are checked against a sequential Python BPE in differential.py
 
 from __future__ import annotations
 
-from conftest import SF_SMOKE
+import pytest
 
-from tp1_distribuidos_mapreduce_spark import registry
 from tp1_distribuidos_mapreduce_spark.operators import lm as LM
 
 
-def test_perplexity_train_source_scores_lowest_quantile(spark):
+@pytest.mark.queries("bigram_perplexity")
+def test_perplexity_train_source_scores_lowest_quantile(calls):
     """The training source must be among the best-scoring (lowest mean
     NLL) sources — the signal the filter exists to produce. Fixture
     sources share a topical vocabulary, so demand top-half rather than
     strict argmin."""
-    rows = registry.queries()["bigram_perplexity"](spark, SF_SMOKE).collect()
-    scores = {r["source"]: r["mean_nll"] for r in rows}
+    scores = {r["source"]: r["mean_nll"] for r in calls["bigram_perplexity"].rows}
     assert LM.LM_TRAIN_SOURCE in scores
     ranked = sorted(scores, key=scores.get)
     assert ranked.index(LM.LM_TRAIN_SOURCE) < len(ranked) / 2, scores

@@ -3,60 +3,62 @@ against DuckDB at sf0.001 — the same gate the driver runs at sf0.01."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from tp1_distribuidos_mapreduce_spark import registry
 
-from conftest import SF_SMOKE, assert_rows_match_oracle, differential
+from conftest import SF_SMOKE, Call, Calls, differential, selected_queries
+from conftest import assert_rows_match_oracle
 
 ORACLE_NAMES = sorted(registry.oracle_sql().keys())
-
-
-@pytest.fixture(scope="session")
-def oracle_results(spark, request):
-    """Collect the SELECTED oracle-backed queries' results ONCE,
-    concurrently.
-
-    The per-query differential below then only compares precomputed rows
-    — per-query failure granularity is unchanged, but the ~150 Spark
-    executions overlap instead of running serially (Spark's scheduler is
-    thread-safe; shared /tmp artifacts are race-free via
-    sources/artifacts.build_once). Measured: the serial parameterized
-    version was the suite's dominant cost. Only names actually selected
-    for this session are computed, so `-k one_query` stays a one-query
-    dev loop instead of a full sweep.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    qs = registry.queries()
-    selected = {
-        item.callspec.params["name"]
-        for item in request.session.items
-        if getattr(item, "callspec", None) is not None
-        and item.callspec.params.get("name") in qs
-        and item.function.__name__ == "test_query_matches_oracle"
-    }
-    names = [n for n in ORACLE_NAMES if n in selected] or ORACLE_NAMES
-
-    def run(name):
-        try:
-            sdf = qs[name](spark, SF_SMOKE)
-            return (sdf.columns, sdf.collect(), None)
-        except Exception as ex:  # surfaced by the owning param test
-            return (None, None, ex)
-
-    # 32 threads (r16, was 24): the collects are executor-bound on 32
-    # cores but each has py4j/planning dead time a deeper pool overlaps.
-    with ThreadPoolExecutor(max_workers=32) as pool:
-        return dict(zip(names, pool.map(run, names)))
+ROWS_ONLY_NAMES = sorted(set(registry.queries()) - set(ORACLE_NAMES))
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)
-def test_query_matches_oracle(duck, oracle_results, name):
-    cols, rows, err = oracle_results[name]
-    if err is not None:
-        raise err
-    assert_rows_match_oracle(cols, rows, duck, registry.oracle_sql()[name])
+def test_query_matches_oracle(duck, calls, name):
+    call = calls[name]
+    assert_rows_match_oracle(
+        call.columns, call.rows, duck, registry.oracle_sql()[name]
+    )
+
+
+def test_pass_builds_what_the_selected_tests_declare():
+    """The registry pass calls exactly the queries that the selected
+    tests reading it declare, in registration order: a `name` parameter
+    that names a query, or a `queries` marker (all queries, for a
+    registry-wide test). A test with neither, or one that does not read
+    the pass, adds nothing."""
+
+    def item(name=None, marked=(), reads=True):
+        marks = [pytest.mark.queries(*marked).mark] if marked else []
+        return SimpleNamespace(
+            fixturenames=["registry_pass"] if reads else ["spark"],
+            iter_markers=lambda _: marks,
+            **({} if name is None else {"callspec": SimpleNamespace(params={"name": name})}),
+        )
+
+    everything = list(registry.queries())
+    items = [item("ii"), item(marked=("q1_pricing_summary", "wc")), item(),
+             item("orders"), item("q6_forecast_revenue", reads=False)]
+    assert selected_queries(items) == ["wc", "ii", "q1_pricing_summary"]
+    assert selected_queries([item(), item(marked=everything)]) == everything
+    assert selected_queries([item()]) == []
+
+
+def test_calls_reject_an_undeclared_query_and_reraise_errors():
+    """A test reads only the queries it declares, and a query whose call
+    raised re-raises in every test that reads it."""
+    call = Call("plan", [], ["word"], [("a",)], None)
+    view = Calls("t.py::test_x", {"wc", "ii"}, {"wc": call, "ii": RuntimeError("boom")})
+    assert view["wc"] is call
+    with pytest.raises(RuntimeError, match="boom"):
+        view["ii"]
+    with pytest.raises(pytest.fail.Exception, match=(
+        "t.py::test_x reads registry query 'q1_pricing_summary' without declaring it"
+    )):
+        view["q1_pricing_summary"]
 
 
 def test_every_query_has_callable_signature(spark):
@@ -162,53 +164,41 @@ def test_driver_order_starts_with_parity_queries_then_oracled():
     assert not rows_only, f"rows-only queries in the first 50: {rows_only}"
 
 
-# The rows_only_results fixture lives in conftest.py (r15: shared with
-# the merge-proof pins in test_approx.py).
-from conftest import _rows_only_names  # noqa: E402
-
-ROWS_ONLY_NAMES = _rows_only_names()
-
-
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_queries_emit_no_nulls(rows_only_results, name):
+def test_rows_only_queries_emit_no_nulls(calls, name):
     """The result contract (differential.compare_rows) rejects NULLs in
     oracle-backed output; rows-only queries get the same scan here so
     the whole registry is covered."""
-    a, _ = rows_only_results[name]
-    assert not isinstance(a, str), f"{name} failed: {a}"
-    nulls = [(i, v) for r in a for i, v in enumerate(r) if v is None]
+    nulls = [(i, v) for r in calls[name].rows for i, v in enumerate(r) if v is None]
     assert not nulls, f"{name} emitted NULLs: {nulls[:3]}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY_NAMES)
-def test_rows_only_query_matches_reference(rows_only_results, name):
+def test_rows_only_query_matches_reference(calls, name):
     """Every rows-only query passes its independent reference check
     (differential.REFERENCE_CHECKS, the same check the sf0.1 sweep
     runs) on the first run's rows."""
-    rows, _ = rows_only_results[name]
-    assert not isinstance(rows, str), f"{name} failed: {rows}"
-    rec = differential.REFERENCE_CHECKS[name](rows, SF_SMOKE)
+    rec = differential.REFERENCE_CHECKS[name](calls[name].rows, SF_SMOKE)
     assert rec["reference_match"], rec
 
 
-def test_minhash_lsh_emits_pairs_on_the_corpus_fixture(rows_only_results):
+@pytest.mark.queries("dedup_minhash_lsh")
+def test_minhash_lsh_emits_pairs_on_the_corpus_fixture(calls):
     """Non-emptiness guard for the LSH pipeline on the REAL corpus (not
     just constructed near-dups): the sf0.001 fixture is known to emit
     candidate pairs (28 as generated; sf0.1 emits 256), so a banding/
     bucketing regression that collapses the candidate set reads as a
     failure HERE — the differential's envelope check deliberately
     treats zero pairs as vacuous rather than failing (ADVICE r14), so
-    this pin is the compensating signal. Zero extra collects: consumes
-    the pooled fixture rows."""
-    rows, _ = rows_only_results["dedup_minhash_lsh"]
-    assert not isinstance(rows, str), rows
-    assert len(rows) > 0, (
+    this pin is the compensating signal."""
+    assert len(calls["dedup_minhash_lsh"].rows) > 0, (
         "dedup_minhash_lsh emitted no candidate pairs on the corpus "
         "fixture — banding/bucketing regression?"
     )
 
 
-def test_rows_only_queries_are_deterministic(rows_only_results):
+@pytest.mark.queries(*ROWS_ONLY_NAMES)
+def test_rows_only_queries_are_deterministic(calls):
     """The rows-only queries — the set with NO oracle differential —
     must return identical rows when run twice in the same session.
     Catches the nondeterminism classes a single-run gate passes:
@@ -219,12 +209,11 @@ def test_rows_only_queries_are_deterministic(rows_only_results):
     differential, the driver gate, and bench every round — their
     nondeterminism would surface as a hash mismatch there.)"""
     problems = []
-    for name, (a, b) in rows_only_results.items():
-        if isinstance(a, str) or isinstance(b, str):
-            problems.append(f"{name}: {a if isinstance(a, str) else b}")
-            continue
-        cols = list(a[0].__fields__) if a else []
-        reason = differential.compare_rows(cols, a, cols, b)
+    for name in ROWS_ONLY_NAMES:
+        call = calls[name]
+        reason = differential.compare_rows(
+            call.columns, call.rows, call.columns, call.rerun
+        )
         if reason:
             problems.append(f"{name}: {reason}")
     assert not problems, problems

@@ -88,16 +88,20 @@ def test_salted_collect_set_matches_direct(spark):
 # --------------------------------------------------------------------------- #
 
 
-def plan_of(spark, name: str) -> str:
-    df = registry.queries()[name](spark, SF_SMOKE)
-    return df._jdf.queryExecution().executedPlan().toString()
+# Every plan below is the executed-plan string of the query's call in
+# the registry pass (conftest `calls`), taken before execution.
+
+PY_MARKERS = (
+    "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    "FlatMapGroupsInPandas", "PythonUDTF",
+)
 
 
 @pytest.mark.parametrize(
     "name", ["q3_shipping_priority", "q5_revenue_by_nation", "top_parts_by_revenue"]
 )
-def test_dim_joins_broadcast_and_scans_prune(spark, name):
-    plan = plan_of(spark, name)
+def test_dim_joins_broadcast_and_scans_prune(calls, name):
+    plan = calls[name].plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "PushedFilters: [" in plan
@@ -107,8 +111,9 @@ def test_dim_joins_broadcast_and_scans_prune(spark, name):
             assert "l_tax" not in line  # never referenced by these queries
 
 
-def test_wc_has_partial_aggregation(spark):
-    plan = plan_of(spark, "wc")
+@pytest.mark.queries("wc")
+def test_wc_has_partial_aggregation(calls):
+    plan = calls["wc"].plan
     # partial + final HashAggregate pair around the exchange — the combiner
     # the reference lacks (SURVEY.md §4.2 'No combiner').
     assert plan.count("HashAggregate") >= 2
@@ -129,10 +134,11 @@ def test_wc_has_partial_aggregation(spark):
         "text_quality",
     ],
 )
-def test_relational_hot_paths_have_no_python_udf(spark, name):
-    plan = plan_of(spark, name)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
-        assert marker not in plan, f"{name} fell off the JVM fast path: {marker}"
+def test_relational_hot_paths_have_no_python_udf(calls, name):
+    """The hot paths stay JVM-side whatever PYTHON_ALLOWED says: the
+    registry-wide audit exempts the allow-listed names, these never."""
+    assert name not in PYTHON_ALLOWED
+    assert not [m for m in PY_MARKERS if m in calls[name].plan]
 
 
 @pytest.mark.parametrize(
@@ -145,13 +151,11 @@ def test_relational_hot_paths_have_no_python_udf(spark, name):
         "disjunctive_brand_revenue",
     ],
 )
-def test_new_relational_queries_broadcast_and_push(spark, name):
-    plan = plan_of(spark, name)
+def test_new_relational_queries_broadcast_and_push(calls, name):
+    plan = calls[name].plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "PushedFilters: [" in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython"):
-        assert marker not in plan, f"{name} fell off the JVM fast path"
 
 
 @pytest.mark.parametrize(
@@ -164,26 +168,25 @@ def test_new_relational_queries_broadcast_and_push(spark, name):
         "q19_discounted_revenue",
     ],
 )
-def test_round9_tpch_broadcast_and_push(spark, name):
+def test_round9_tpch_broadcast_and_push(calls, name):
     """The round-9 TPC-H classics must keep their stated plan shape:
     broadcast dimension joins (q19's OR-of-ANDs must NOT degrade to a
-    nested loop — the planner trap the query exists to pin), pushed
-    scan filters, JVM-only expressions."""
-    plan = plan_of(spark, name)
+    nested loop — the planner trap the query exists to pin) and pushed
+    scan filters. JVM-only expressions are the registry-wide audit's."""
+    plan = calls[name].plan
     assert "BroadcastHashJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "PushedFilters: [" in plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython"):
-        assert marker not in plan, f"{name} fell off the JVM fast path"
 
 
-def test_q6_predicates_reach_scan_and_no_row_exchange(spark):
+@pytest.mark.queries("q6_forecast_revenue")
+def test_q6_predicates_reach_scan_and_no_row_exchange(calls):
     """Q6 is the plan-quality canary: every predicate must land in the
     parquet scan's PushedFilters, the scan must read only the four
     referenced columns, and the only Exchange is the one-row partial
     aggregate hand-off — an Exchange of lineitem rows is a planner
     bug."""
-    plan = plan_of(spark, "q6_forecast_revenue")
+    plan = calls["q6_forecast_revenue"].plan
     scan = [l for l in plan.splitlines() if "PushedFilters" in l]
     assert scan, "no pushed filters on the q6 scan"
     pushed = scan[0]
@@ -198,11 +201,12 @@ def test_q6_predicates_reach_scan_and_no_row_exchange(spark):
     assert plan.count("HashAggregate") >= 2  # partial + final
 
 
-def test_disjunctive_predicate_reaches_both_scans(spark):
+@pytest.mark.queries("disjunctive_brand_revenue")
+def test_disjunctive_predicate_reaches_both_scans(calls):
     """Q19 shape: Catalyst must derive per-table residuals of the
     OR-of-conjunctions (quantity bounds -> lineitem scan, brand/size ->
     part scan) instead of filtering only after the join."""
-    plan = plan_of(spark, "disjunctive_brand_revenue")
+    plan = calls["disjunctive_brand_revenue"].plan
     lineitem_scan = [l for l in plan.splitlines() if "FileScan" in l and "l_quantity" in l]
     part_scan = [l for l in plan.splitlines() if "FileScan" in l and "p_brand" in l]
 
@@ -218,11 +222,11 @@ def test_disjunctive_predicate_reaches_both_scans(spark):
     assert any("Brand#" in l for l in part_scan)
 
 
-def test_large_orders_preaggregates_before_join(spark):
+@pytest.mark.queries("large_quantity_orders")
+def test_large_orders_preaggregates_before_join(calls):
     """The HAVING aggregate must run on lineitem BEFORE the orders join —
     join input is per-order partials, not raw line items."""
-    df = registry.queries()["large_quantity_orders"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = calls["large_quantity_orders"].plan
     agg_pos = plan.find("HashAggregate")
     join_pos = plan.find("Join")
     assert agg_pos != -1 and join_pos != -1
@@ -245,17 +249,12 @@ def test_large_orders_preaggregates_before_join(spark):
         "promo_revenue_by_month",
     ],
 )
-def test_pipeline_queries_stay_jvm_side(spark, name):
+def test_pipeline_queries_stay_jvm_side(calls, name):
     """The corpus-pipeline and time-series queries are pure Catalyst
-    expressions — any Python eval node means an accidental fallback."""
-    plan = plan_of(spark, name)
-    for marker in (
-        "BatchEvalPython",
-        "ArrowEvalPython",
-        "MapInPandas",
-        "FlatMapGroupsInPandas",
-    ):
-        assert marker not in plan, f"{name} fell off the JVM fast path: {marker}"
+    expressions — any Python eval node means an accidental fallback,
+    and none of them may be allow-listed in PYTHON_ALLOWED."""
+    assert name not in PYTHON_ALLOWED
+    assert not [m for m in PY_MARKERS if m in calls[name].plan]
 
 
 # --------------------------------------------------------------------------- #
@@ -389,22 +388,8 @@ NESTED_LOOP_ALLOWED = {
 }
 
 
-@pytest.fixture(scope="session")
-def registry_plans(registry_first_calls):
-    """Executed-plan strings at SF_SMOKE, from the suite's one concurrent
-    construction pass (conftest registry_first_calls: every registered
-    query when the registry-wide audit is selected), consumed by both the
-    audit and the documented scan-count pins. Iterative operators RUN (their
-    localCheckpoints) at plan-construction time, so building all 220+
-    plans serially dominated the suite (42s)."""
-    return {name: first[0] for name, first in registry_first_calls.items()}
-
-
-def test_registry_wide_plan_audit(registry_plans):
-    py_markers = (
-        "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-        "FlatMapGroupsInPandas", "PythonUDTF",
-    )
+@pytest.mark.queries(*registry.queries())
+def test_registry_wide_plan_audit(calls):
     triage = (
         "Newly registered queries must be triaged here: a Python/Arrow-kernel "
         "operator belongs in PYTHON_ALLOWED, an intentionally all-pairs or "
@@ -413,8 +398,9 @@ def test_registry_wide_plan_audit(registry_plans):
         "Anything else is a genuine plan regression: fix the query."
     )
     violations = []
-    for name, plan in registry_plans.items():
-        if any(m in plan for m in py_markers) and name not in PYTHON_ALLOWED:
+    for name in registry.queries():
+        plan = calls[name].plan
+        if any(m in plan for m in PY_MARKERS) and name not in PYTHON_ALLOWED:
             violations.append(f"{name}: unexpected Python eval node")
         if "BroadcastNestedLoopJoin" in plan and name not in NESTED_LOOP_ALLOWED:
             violations.append(f"{name}: unexpected nested-loop join")
@@ -511,10 +497,11 @@ DOCUMENTED_SCAN_COUNTS = {
 }
 
 
-def test_documented_scan_counts_hold(registry_plans):
+@pytest.mark.queries(*DOCUMENTED_SCAN_COUNTS)
+def test_documented_scan_counts_hold(calls):
     bad = []
     for name, want in sorted(DOCUMENTED_SCAN_COUNTS.items()):
-        got = registry_plans[name].count("FileScan")
+        got = calls[name].plan.count("FileScan")
         if got != want:
             bad.append(f"{name}: {got} FileScans in final plan, documented {want}")
     assert not bad, (
@@ -526,7 +513,21 @@ def test_documented_scan_counts_hold(registry_plans):
     )
 
 
-def test_tokenize_never_inside_per_position_lambda(spark):
+SPAN_FAMILY = (
+    "benchmark_contamination",
+    "shared_span_pairs",
+    "cross_source_span_matrix",
+    "dedup_ngram_jaccard",
+    "dedup_jaccard_prefix",
+    "trigram_topk",
+    "phrase_search",
+    "bigram_perplexity",
+    "repetition_stats",
+)
+
+
+@pytest.mark.queries(*SPAN_FAMILY)
+def test_tokenize_never_inside_per_position_lambda(calls):
     """r21 regression pin for the bind_once barrier (functions/tokenize.py):
     a tokenize composite referenced from inside a higher-order-function
     lambda is INLINED by Catalyst and re-runs once per span/bigram/shingle
@@ -536,18 +537,8 @@ def test_tokenize_never_inside_per_position_lambda(spark):
     The pin: in every plan line of the span/ngram family, no `split(`
     (the tokenizer) may appear after a `lambdafunction(` opens — bound
     lambda variables are attribute lookups and never print the composite."""
-    for name in (
-        "benchmark_contamination",
-        "shared_span_pairs",
-        "cross_source_span_matrix",
-        "dedup_ngram_jaccard",
-        "dedup_jaccard_prefix",
-        "trigram_topk",
-        "phrase_search",
-        "bigram_perplexity",
-        "repetition_stats",
-    ):
-        plan = plan_of(spark, name)
+    for name in SPAN_FAMILY:
+        plan = calls[name].plan
         bad = []
         for line in plan.splitlines():
             # scope-aware scan: flag a split( whose ENCLOSING parenthesis
@@ -575,19 +566,20 @@ def test_tokenize_never_inside_per_position_lambda(spark):
         )
 
 
-def test_stats_single_pass_scans_prune_columns(spark):
+@pytest.mark.queries("welch_price_ttest", "mannwhitney_quantity")
+def test_stats_single_pass_scans_prune_columns(calls):
     """The round-12 two-sample members must collapse in ONE pruned pass:
     welch reads exactly (returnflag, extendedprice), mannwhitney exactly
     (returnflag, quantity) — a scan that drags the full 16-column
     lineitem row through a 100 TB aggregate would dominate the query."""
-    plan = plan_of(spark, "welch_price_ttest")
+    plan = calls["welch_price_ttest"].plan
     scans = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert scans and all(
         "l_extendedprice" in l and "l_returnflag" in l and "l_quantity" not in l
         and "l_orderkey" not in l
         for l in scans
     ), scans
-    plan2 = plan_of(spark, "mannwhitney_quantity")
+    plan2 = calls["mannwhitney_quantity"].plan
     scans2 = [l for l in plan2.splitlines() if "ReadSchema" in l]
     assert scans2 and all(
         "l_quantity" in l and "l_returnflag" in l and "l_extendedprice" not in l
@@ -645,10 +637,11 @@ R7_REFRESH_SCAN_PINS = {
 }
 
 
-def test_r7_refresh_scans_prune_columns(spark):
+@pytest.mark.queries(*R7_REFRESH_SCAN_PINS)
+def test_r7_refresh_scans_prune_columns(calls):
     bad = []
     for name, (need, forbid) in R7_REFRESH_SCAN_PINS.items():
-        plan = plan_of(spark, name)
+        plan = calls[name].plan
         scans = [l for l in plan.splitlines() if "ReadSchema" in l]
         if not scans:
             bad.append(f"{name}: no FileScan in plan")
@@ -662,12 +655,13 @@ def test_r7_refresh_scans_prune_columns(spark):
     assert not bad, bad
 
 
-def test_chunk_documents_pushes_empty_doc_filter(spark):
+@pytest.mark.queries("chunk_documents")
+def test_chunk_documents_pushes_empty_doc_filter(calls):
     """The r7 boundary-geometry review, plan side: the empty-document
     guard (size(split(trim(text))) > 0) must reach the scan as a data
     filter — at 100 TB the blank-doc drop belongs in the reader, not a
     post-scan filter stage."""
-    plan = plan_of(spark, "chunk_documents")
+    plan = calls["chunk_documents"].plan
     scan = [l for l in plan.splitlines() if "DataFilters" in l]
     assert scan and any("size(split" in l for l in scan), scan
 
@@ -729,8 +723,8 @@ def test_widen_probe_matches_public_partition_count(spark):
     JVM-side InternalRow RDD count must equal the public df.rdd count
     (df.rdd is a partition-preserving map over it) — on a raw scan, a
     derived projection, and an explicitly repartitioned frame. If the
-    private queryExecution().toRdd() API ever drifts, the helper falls
-    back to df.rdd, but this pin is what notices the drift."""
+    private queryExecution().toRdd() API ever drifts, the helper raises
+    and this pin fails with it."""
     docs = load_table(spark, SF_SMOKE, "documents")
     frames = [
         docs,

@@ -28,19 +28,20 @@ def emb_np():
     return ids[order], labels[order], M[order]
 
 
-def test_pca_explained_variance_ordered(rows_only_results):
+@pytest.mark.queries("embedding_pca")
+def test_pca_explained_variance_ordered(calls):
     """pc1 must carry at least as much variance as pc2 — the component
     ordering contract."""
-    rows, _ = rows_only_results["embedding_pca"]
+    rows = calls["embedding_pca"].rows
     pc1 = np.array([r["pc1"] for r in rows])
     pc2 = np.array([r["pc2"] for r in rows])
     assert pc1.var() >= pc2.var()
 
 
-def test_kmeans_purity_consistent(rows_only_results, emb_np):
+@pytest.mark.queries("kmeans_clusters")
+def test_kmeans_purity_consistent(calls, emb_np):
     ids, labels, M = emb_np
-    rows, _ = rows_only_results["kmeans_clusters"]
-    for r in rows:
+    for r in calls["kmeans_clusters"].rows:
         assert 0.0 < r["purity"] <= 1.0
         assert 0 <= r["majority_label"] <= int(labels.max())
 

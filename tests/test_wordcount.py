@@ -4,15 +4,10 @@ punctuation, stress/skew, multi-doc distinctness (FIXTURES.md §A)."""
 
 from __future__ import annotations
 
-import pytest
-
 from tp1_distribuidos_mapreduce_spark.operators.wordcount import (
     inverted_index,
     word_count,
 )
-from tp1_distribuidos_mapreduce_spark import registry
-
-from conftest import SF_SMOKE, assert_df_matches_oracle
 
 
 def corpus(spark, rows):
@@ -78,9 +73,3 @@ def test_wc_output_sorted_by_word(spark):
     df = corpus(spark, [("pg-1", "zeta alfa mika")])
     words = [r.word for r in word_count(df).collect()]
     assert words == sorted(words)
-
-
-@pytest.mark.parametrize("name", ["wc", "ii"])
-def test_registry_matches_duckdb_oracle(spark, duck, name):
-    sdf = registry.queries()[name](spark, SF_SMOKE)
-    assert_df_matches_oracle(sdf, duck, registry.oracle_sql()[name])

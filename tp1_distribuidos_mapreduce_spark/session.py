@@ -119,12 +119,8 @@ def widen_to_shuffle_parallelism(df):
     # count itself is then memoized, but every bench/driver invocation
     # builds fresh frames). The JVM-side InternalRow RDD reports the
     # IDENTICAL count (df.rdd is a map over it, partition-preserving)
-    # in ~0.4 ms. Equivalence is pinned in tests/test_skew_and_plans.py;
-    # fall back to the public probe if the private API ever moves.
-    try:
-        n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
-    except Exception:
-        n_parts = df.rdd.getNumPartitions()
-    if n_parts < target:
+    # in ~0.4 ms. Equivalence is pinned in tests/test_skew_and_plans.py,
+    # which fails loudly if the private API ever moves.
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < target:
         df = df.repartition(target)
     return df

@@ -206,10 +206,6 @@ def stream_parquet(
     return reader.parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, only: tuple[str, ...] | None = None
 ) -> dict[str, DataFrame]:
