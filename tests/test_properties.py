@@ -218,3 +218,39 @@ def test_shared_span_pairs_matches_python_reference(spark, texts):
             for a, b in combinations(sorted(ds), 2):
                 want[(a, b)] += 1
     assert got == dict(want), (got, dict(want))
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    docs=st.lists(
+        st.lists(st.text("abcxyzñλ日", min_size=1, max_size=4), max_size=12),
+        min_size=1,
+        max_size=12,
+    ),
+    n=st.integers(1, 8),
+)
+def test_ngrams_match_python_windows(spark, docs, n):
+    """``ngrams`` (functions/tokenize.py) is every run of n consecutive
+    tokens joined by one space, in order, and empty below n tokens;
+    ``ngram_shingles`` is the same except that a document with
+    0 < len < n tokens is one shingle of its whole text."""
+    from pyspark.sql import functions as F
+
+    from tp1_distribuidos_mapreduce_spark.functions.hashing import ngram_shingles
+    from tp1_distribuidos_mapreduce_spark.functions.tokenize import ngrams
+
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(docs)], "i int, t array<string>")
+    got = {
+        r["i"]: (r["g"], r["s"])
+        for r in df.select(
+            "i", ngrams(F.col("t"), n).alias("g"), ngram_shingles(F.col("t"), n).alias("s")
+        ).collect()
+    }
+    for i, t in enumerate(docs):
+        want = [" ".join(t[j : j + n]) for j in range(len(t) - n + 1)]
+        assert got[i][0] == want, (t, n)
+        assert got[i][1] == ([" ".join(t)] if 0 < len(t) < n else want), (t, n)

@@ -123,27 +123,6 @@ def test_wc_has_partial_aggregation(calls):
 @pytest.mark.parametrize(
     "name",
     [
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_revenue_by_nation",
-        "rollup_lineitem_flags",
-        "supplier_activity",
-        "daily_revenue_moving_avg",
-        "wc",
-        "ii",
-        "text_quality",
-    ],
-)
-def test_relational_hot_paths_have_no_python_udf(calls, name):
-    """The hot paths stay JVM-side whatever PYTHON_ALLOWED says: the
-    registry-wide audit exempts the allow-listed names, these never."""
-    assert name not in PYTHON_ALLOWED
-    assert not [m for m in PY_MARKERS if m in calls[name].plan]
-
-
-@pytest.mark.parametrize(
-    "name",
-    [
         "returned_item_revenue",
         "promo_revenue_by_month",
         "supplier_part_variety",
@@ -238,25 +217,6 @@ def test_large_orders_preaggregates_before_join(calls):
     assert "sum_qty" in plan[:join_pos]
 
 
-@pytest.mark.parametrize(
-    "name",
-    [
-        "train_val_test_split",
-        "chunk_documents",
-        "latest_event_per_user",
-        "hourly_event_gapfill",
-        "stream_dedup_counts",
-        "promo_revenue_by_month",
-    ],
-)
-def test_pipeline_queries_stay_jvm_side(calls, name):
-    """The corpus-pipeline and time-series queries are pure Catalyst
-    expressions — any Python eval node means an accidental fallback,
-    and none of them may be allow-listed in PYTHON_ALLOWED."""
-    assert name not in PYTHON_ALLOWED
-    assert not [m for m in PY_MARKERS if m in calls[name].plan]
-
-
 # --------------------------------------------------------------------------- #
 # registry-wide plan audit: every query, one policy
 # --------------------------------------------------------------------------- #
@@ -283,6 +243,17 @@ PYTHON_ALLOWED = {
                                            # over the distinct-word table
     "hll_merge_proof",                     # the same Arrow-batched register
                                            # build, keyed by type + constant
+}
+
+# The hot relational/text paths and the corpus-pipeline and time-series
+# queries are pure Catalyst expressions: a Python eval node there is an
+# accidental fallback, so none of them may ever be allow-listed above.
+JVM_ONLY = {
+    "q1_pricing_summary", "q3_shipping_priority", "q5_revenue_by_nation",
+    "rollup_lineitem_flags", "supplier_activity", "daily_revenue_moving_avg",
+    "wc", "ii", "text_quality",
+    "train_val_test_split", "chunk_documents", "latest_event_per_user",
+    "hourly_event_gapfill", "stream_dedup_counts", "promo_revenue_by_month",
 }
 
 # Non-equi / cross joins allowed ONLY where the semantics are all-pairs by
@@ -397,6 +368,8 @@ def test_registry_wide_plan_audit(calls):
         "tests/test_skew_and_plans.py) — with a justification comment. "
         "Anything else is a genuine plan regression: fix the query."
     )
+    assert JVM_ONLY <= set(registry.queries())
+    assert not JVM_ONLY & PYTHON_ALLOWED, JVM_ONLY & PYTHON_ALLOWED
     violations = []
     for name in registry.queries():
         plan = calls[name].plan
@@ -434,7 +407,7 @@ DOCUMENTED_SCAN_COUNTS = {
     "hll_merge_proof": 2,
     "kmv_merge_proof": 2,
     # DD readers: the bucket frame is checkpointed inside
-    # quantiles_from_dd_buckets*, so the cumulative/total/estimator
+    # quantiles_from_dd_buckets, so the cumulative/total/estimator
     # consumers all ride the pin and the final job scans NO source
     "ddsketch_merge_proof": 0,
     "ddsketch_event_quantiles": 0,

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .tokenize import bind_once
+from .tokenize import bind_once, ngrams
 
 
 def md5_span_hashes(tokens: Column, k: int) -> Column:
@@ -20,49 +20,26 @@ def md5_span_hashes(tokens: Column, k: int) -> Column:
     kernel of the verbatim-overlap family (shared_span_pairs,
     cross_source_span_matrix, benchmark_contamination). md5 is
     bit-identical in DuckDB, so every oracle groups on the very same
-    keys. ``tokens`` is bound as a lambda variable before the
-    per-position fan-out (bind_once — without it the tokenize composite
-    re-runs once per span position; measured 4.2s → 1.2s on the sf0.1
-    span build, identical output hash)."""
-
-    def spans_of(toks: Column) -> Column:
-        return F.when(
-            F.size(toks) < k, F.array().cast("array<string>")
-        ).otherwise(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(toks) - (k - 1)),
-                    lambda i: F.md5(
-                        F.array_join(F.slice(toks, i, k), " ").cast("binary")
-                    ),
-                )
-            )
-        )
-
-    return bind_once(tokens, spans_of)
+    keys. The spans are ``ngrams``, which binds ``tokens`` once before
+    the per-position fan-out."""
+    return F.array_distinct(
+        F.transform(ngrams(tokens, k), lambda g: F.md5(g.cast("binary")))
+    )
 
 
 def ngram_shingles(tokens: Column, n: int = 3) -> Column:
     """Word n-gram shingles from a token array (array<string> → array<string>).
 
     Documents shorter than ``n`` tokens yield their whole text as one
-    shingle so they still participate in similarity.
-
-    ``tokens`` is bound as a lambda variable before the per-position
-    fan-out (r21): callers pass a composite tokenize expression, and
-    referencing it from the slice lambda would re-run the regex split
-    once per shingle position (the bind_once barrier rationale — the
-    same O(m×tokenize) trap minhash_signature_expr already guards its
-    OUTER fan-out against; this closes it for the inner one).
+    shingle so they still participate in similarity; the windows of
+    longer ones are ``ngrams``.
     """
 
     def grams_of(toks: Column) -> Column:
         k = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(k - (n - 1), F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-        return F.when(k > 0, grams).otherwise(F.array().cast("array<string>"))
+        return F.when(
+            (k > 0) & (k < n), F.array(F.array_join(toks, " "))
+        ).otherwise(ngrams(toks, n))
 
     return bind_once(tokens, grams_of)
 

@@ -50,6 +50,27 @@ def bind_once(col: Column, f) -> Column:
     return F.get(F.transform(F.array(col), f), 0)
 
 
+def ngrams(tokens: Column, n: int) -> Column:
+    """array<string> of the space-joined windows of ``n`` consecutive
+    ``tokens``, in order; empty when there are fewer than ``n`` tokens.
+
+    ``tokens`` is bound once (``bind_once``), and each window is one
+    ``concat_ws`` over ``element_at`` lookups, so no per-window array is
+    allocated. The ``size < n`` arm is what keeps short rows empty:
+    Spark's ``sequence(1, size - n + 1)`` counts down when the end is
+    below the start."""
+
+    def windows(t: Column) -> Column:
+        return F.when(F.size(t) < n, F.array().cast("array<string>")).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - (n - 1)),
+                lambda i: F.concat_ws(" ", *(F.element_at(t, i + j) for j in range(n))),
+            )
+        )
+
+    return bind_once(tokens, windows)
+
+
 def words_from(df: DataFrame, text_col: str = "value", *carry: str) -> DataFrame:
     """Explode ``text_col`` into one lowercase word per row (O5+O6+O14).
 

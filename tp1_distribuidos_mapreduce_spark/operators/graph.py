@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.retail import part_baskets
+from ..plans.retail import basket_item_counts, basket_pair_counts, part_baskets
 from .dedup import _pairs_within
 
 PAGERANK_DAMPING = 0.85
@@ -214,18 +214,8 @@ def copurchase_jaccard(lineitem: DataFrame, top_k: int = 50) -> DataFrame:
     # evaluate as parallel subtrees of one job at this scale; see
     # copurchase_edges.
     baskets = part_baskets(lineitem)
-    pair_counts = (
-        baskets.where(F.size("parts") >= 2)
-        .select(F.explode(_pairs_within("parts")).alias("p"))
-        .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_ab"))
-    )
-    part_counts = (
-        baskets.select(F.explode("parts").alias("part"))
-        .groupBy("part")
-        .agg(F.count("*").alias("n_part"))
-    )
+    pair_counts = basket_pair_counts(baskets)
+    part_counts = basket_item_counts(baskets)
     na = part_counts.select(F.col("part").alias("a"), F.col("n_part").alias("n_a"))
     nb = part_counts.select(F.col("part").alias("b"), F.col("n_part").alias("n_b"))
     return (

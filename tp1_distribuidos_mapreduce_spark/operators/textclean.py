@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize
+from ..functions.tokenize import ngrams, tokenize
 
 # Identical meaning in Java regex and RE2 (both sides of the oracle diff).
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -183,35 +183,6 @@ ORDER BY source
 """
 
 
-def _bigrams_expr() -> F.Column:
-    """In-row bigram array over a ``t`` token-array column — the single
-    bigram definition shared by repetition_stats and source_quality_gates
-    (and both hard-coded oracles); a drift between copies would silently
-    desynchronize the two registered queries.
-
-    The array is bound as a lambda variable before the per-position
-    fan-out (r21, bind_once rationale): callers project ``t`` from a
-    tokenize composite, which Catalyst would inline into the element
-    lambda — re-running the regex split once per bigram position."""
-    from ..functions.tokenize import bind_once
-
-    def bi_of(tk: F.Column) -> F.Column:
-        return F.when(
-            F.size(tk) < 2, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(tk) - 2),
-                lambda i: F.concat(
-                    F.element_at(tk, i + 1),
-                    F.lit(" "),
-                    F.element_at(tk, i + 2),
-                ),
-            )
-        )
-
-    return bind_once(F.col("t"), bi_of)
-
-
 def _top_run_expr() -> F.Column:
     """Count of the modal element of a ``bg`` array column: longest run of
     the sorted array via a null-safe (<=>) fold — shared by
@@ -243,8 +214,7 @@ def repetition_stats(documents: DataFrame) -> DataFrame:
     """
     t = tokenize("text")
     d = documents.select("doc_id", t.alias("t"))
-    bigrams = _bigrams_expr()
-    d = d.withColumn("bg", bigrams)
+    d = d.withColumn("bg", ngrams(F.col("t"), 2))
     top_run = _top_run_expr()
     n_tokens = F.size("t")
     n_bigrams = F.size("bg")
@@ -334,7 +304,7 @@ def source_quality_gates(documents: DataFrame) -> DataFrame:
     sum_len = F.expr("aggregate(t, 0L, (acc, x) -> acc + length(x))")
     mean_len = sum_len / F.greatest(n, F.lit(1))
     dup_frac = F.lit(1) - F.size(F.array_distinct("t")) / F.greatest(n, F.lit(1))
-    bg = _bigrams_expr()
+    bg = ngrams(F.col("t"), 2)
     d = d.withColumn("n", n).withColumn("mean_len", mean_len).withColumn(
         "dup_frac", dup_frac
     ).withColumn("bg", bg)

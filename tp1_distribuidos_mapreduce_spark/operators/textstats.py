@@ -62,15 +62,22 @@ def quality_score_expr() -> F.Column:
     )
 
 
-def pred_lang_expr() -> F.Column:
-    """Predicted language of `text` — language_id's argmax expression."""
+def _lang_scores() -> dict[str, F.Column]:
+    """Language -> profile score of `text`: how many of its tokens are
+    in that language's stopword profile (en, es, de, fr, in order)."""
     toks = tokenize("text")
 
     def profile_hits(words: tuple[str, ...]) -> F.Column:
+        # single-parameter lambda only: pyspark's filter() feeds the array
+        # index to a second lambda parameter, clobbering defaults.
         return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
-    scores = {lang: profile_hits(words) for lang, words in _LANG_PROFILES.items()}
-    s_en, s_es, s_de, s_fr = (scores[k] for k in ("en", "es", "de", "fr"))
+    return {lang: profile_hits(words) for lang, words in _LANG_PROFILES.items()}
+
+
+def pred_lang_expr() -> F.Column:
+    """Predicted language of `text` — language_id's argmax expression."""
+    s_en, s_es, s_de, s_fr = _lang_scores().values()
     best = F.greatest(s_en, s_es, s_de, s_fr)
     return (
         F.when(best == 0, "und")
@@ -156,22 +163,9 @@ ORDER BY doc_id
 def language_id(documents: DataFrame) -> DataFrame:
     """Heuristic language-ID: stopword-profile hit counts, argmax with
     fixed priority (en > es > de > fr), 'und' when all scores are zero."""
-    toks = tokenize("text")
-
-    def profile_hits(words: tuple[str, ...]) -> F.Column:
-        # single-parameter lambda only: pyspark's filter() feeds the array
-        # index to a second lambda parameter, clobbering defaults.
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    scores = {lang: profile_hits(words) for lang, words in _LANG_PROFILES.items()}
-    s_en, s_es, s_de, s_fr = (scores[k] for k in ("en", "es", "de", "fr"))
+    scores = (s.alias(f"s_{lang}") for lang, s in _lang_scores().items())
     return documents.select(
-        "doc_id",
-        pred_lang_expr().alias("pred_lang"),
-        s_en.alias("s_en"),
-        s_es.alias("s_es"),
-        s_de.alias("s_de"),
-        s_fr.alias("s_fr"),
+        "doc_id", pred_lang_expr().alias("pred_lang"), *scores
     ).orderBy("doc_id")
 
 

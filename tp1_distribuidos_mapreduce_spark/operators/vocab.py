@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.tokenize import tokenize
+from ..functions.tokenize import ngrams, tokenize
 
 BPE_TOP_K = 30
 
@@ -232,35 +232,6 @@ ORDER BY bucket, seq_id
 """
 
 
-def _trigrams_expr() -> F.Column:
-    """In-row word trigrams over a ``toks`` array column — the single
-    trigram definition shared by trigram_topk and trigram_novelty (and
-    both hard-coded oracles); a drift between the two copies would
-    silently desynchronize two registered queries.
-
-    The array is bound as a lambda variable before the per-position
-    fan-out (r21, bind_once rationale): both callers project ``toks``
-    from a tokenize composite, which Catalyst would inline into the
-    element lambda — re-running the regex split once per trigram.
-    element_at is 1-based where the previous toks[i] was 0-based; the
-    i+1..i+3 offsets over sequence(0, size-3) address the same windows.
-    """
-    from ..functions.tokenize import bind_once
-
-    def tri_of(tk: F.Column) -> F.Column:
-        return F.transform(
-            F.sequence(F.lit(0), F.size(tk) - 3),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(tk, i + 1),
-                F.element_at(tk, i + 2),
-                F.element_at(tk, i + 3),
-            ),
-        )
-
-    return bind_once(F.col("toks"), tri_of)
-
-
 def trigram_topk(documents: DataFrame, k: int = TRIGRAM_TOP_K) -> DataFrame:
     """Top-k word trigrams across the corpus — the n-gram LM / boilerplate
     detection primitive (a C4-style pipeline uses exactly this table to
@@ -276,7 +247,7 @@ def trigram_topk(documents: DataFrame, k: int = TRIGRAM_TOP_K) -> DataFrame:
     return (
         documents.select(words.alias("toks"))
         .where(F.size("toks") >= 3)
-        .select(F.explode(_trigrams_expr()).alias("trigram"))
+        .select(F.explode(ngrams(F.col("toks"), 3)).alias("trigram"))
         .groupBy("trigram")
         .agg(F.count("*").alias("n"))
         .orderBy(F.desc("n"), F.asc("trigram"))
@@ -489,7 +460,7 @@ def trigram_novelty(documents: DataFrame) -> DataFrame:
     the shuffle on a fixed-width trigram hash instead of the string.
     """
     toks = tokenize("text")
-    tris = F.array_distinct(_trigrams_expr())
+    tris = F.array_distinct(ngrams(F.col("toks"), 3))
     g = (
         documents.select("doc_id", toks.alias("toks"))
         .where(F.size("toks") >= 3)

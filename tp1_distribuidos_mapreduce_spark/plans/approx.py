@@ -908,59 +908,72 @@ _DD_LN_GAMMA = __import__("math").log(DD_GAMMA)
 DD_PERCENTS = (1, 25, 50, 75, 99)
 
 
-def dd_value_buckets(events: DataFrame) -> DataFrame:
+def dd_value_buckets(events: DataFrame, *keys: str) -> DataFrame:
     """The DDSketch build: log-domain bucket counts of the event value
-    in integral cents. idx = ceil(ln(cents)/ln(gamma)) puts every value
-    in a bucket whose bounds differ by a factor of gamma, so the bucket
-    midpoint (in log space) is within alpha of every member. One hash
-    aggregate — map-side partials make the build mergeable by
-    construction; the sketch TABLE (idx, cnt) is what the streaming
-    sink folds. Values are a strictly positive domain (event values and
-    prices are > 0; the cents floor is 1 — ln is total); a real
-    mixed-sign deployment would carry a mirrored negative store and a
-    zero counter, which this fixture never exercises."""
+    in integral cents, per ``keys`` (none: one global sketch).
+    idx = ceil(ln(cents)/ln(gamma)) puts every value in a bucket whose
+    bounds differ by a factor of gamma, so the bucket midpoint (in log
+    space) is within alpha of every member. One hash aggregate —
+    map-side partials make the build mergeable by construction; the
+    sketch TABLE (*keys, idx, cnt) is what the streaming sink folds.
+    Because bucket counts are ADDITIVE, rolling a keyed table up over
+    its keys reproduces the global sketch bit-identically — the merge
+    property ddsketch_merge_proof pins end-to-end. Values are a
+    strictly positive domain (event values and prices are > 0; the
+    cents floor is 1 — ln is total); a real mixed-sign deployment would
+    carry a mirrored negative store and a zero counter, which this
+    fixture never exercises."""
     cents = F.round(F.col("value") * 100).cast("long")
     return (
-        events.select(cents.alias("c"))
+        events.select(*keys, cents.alias("c"))
         .where(F.col("c") >= 1)
         .select(
+            *keys,
             F.ceil(F.log(F.col("c").cast("double")) / F.lit(_DD_LN_GAMMA))
             .cast("long")
-            .alias("idx")
+            .alias("idx"),
         )
-        .groupBy("idx")
+        .groupBy(*keys, "idx")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
 
 
 def quantiles_from_dd_buckets(
-    buckets: DataFrame, percents: tuple[int, ...] = DD_PERCENTS
+    buckets: DataFrame, *keys: str, percents: tuple[int, ...] = DD_PERCENTS
 ) -> DataFrame:
-    """Quantile estimates from a prebuilt (idx, cnt) sketch table:
-    cumulative priors over the LOG-DOMAIN-bounded bucket frame (≤ ~800
-    rows at alpha = 0.01 — bounded by the value range's logarithm,
-    never the data), integer ceil-ranks (p·n + 99) div 100, and the
-    log-space midpoint estimator 2·gamma^idx/(gamma + 1). Rows:
-    (percent, n_rows, approx_value), rows-only — the error envelope vs
-    the exact element is pinned in differential.py's reference checks."""
+    """Quantile estimates per ``keys`` from a prebuilt (*keys, idx, cnt)
+    sketch table: cumulative priors within each key over the
+    LOG-DOMAIN-bounded bucket frame (≤ ~800 rows per key at alpha =
+    0.01 — bounded by the value range's logarithm, never the data),
+    integer ceil-ranks (p·n + 99) div 100, and the log-space midpoint
+    estimator 2·gamma^idx/(gamma + 1). Rows: (*keys, percent, n_rows,
+    approx_value), rows-only — the error envelope vs the exact element
+    is pinned in differential.py's reference checks. Shared by the
+    batch builds and the persisted streaming state readers
+    (streaming/sinks.py read_dd_quantiles*)."""
     spark = buckets.sparkSession
     # The cumulative AND the total both consume the sketch table; without
     # a checkpoint each consumer re-derives the whole build lineage — two
     # full scans of the underlying source (r14 plan audit: 4 parquet
     # scans on the r13 shape). The frame is log-domain-bounded (≤ ~800
-    # rows), so pinning it is ~free and the source scan happens ONCE.
+    # rows per key), so pinning it is ~free and the source scan happens
+    # ONCE.
     # NOTE this makes the reader EAGER at construction time (ADVICE r14):
     # building the DataFrame runs the sketch-build job immediately and
-    # pins the ≤800-row frame's blocks for the session. Deliberate — the
+    # pins the bucket frame's blocks for the session. Deliberate — the
     # reader's callers always materialize, and the pinned frame is tiny;
     # a plan-inspection path that must stay lazy should call
-    # dd_value_buckets* directly.
+    # dd_value_buckets directly.
     buckets = buckets.localCheckpoint()
-    cum = Window.orderBy("idx").rowsBetween(Window.unboundedPreceding, -1)
+    cum = (
+        Window.partitionBy(*keys)
+        .orderBy("idx")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     ranked = buckets.withColumn(
         "prior", F.coalesce(F.sum("cnt").over(cum), F.lit(0))
     )
-    tot = buckets.agg(F.sum("cnt").alias("n_rows"))
+    tot = F.broadcast(buckets.groupBy(*keys).agg(F.sum("cnt").alias("n_rows")))
     pcts = spark.createDataFrame([(p,) for p in percents], "percent int")
     rank = F.expr("(percent * n_rows + 99) div 100")
     est_cents = (
@@ -969,17 +982,18 @@ def quantiles_from_dd_buckets(
         / F.lit(DD_GAMMA + 1.0)
     )
     return (
-        ranked.crossJoin(F.broadcast(tot))
+        (ranked.join(tot, list(keys)) if keys else ranked.crossJoin(tot))
         .crossJoin(F.broadcast(pcts))
         .where(
             (F.col("prior") < rank) & (rank <= F.col("prior") + F.col("cnt"))
         )
         .select(
+            *keys,
             "percent",
             "n_rows",
             F.round(est_cents / F.lit(100.0), 6).alias("approx_value"),
         )
-        .orderBy("percent")
+        .orderBy(*keys, "percent")
     )
 
 
@@ -994,28 +1008,6 @@ def ddsketch_event_quantiles(events: DataFrame) -> DataFrame:
     return quantiles_from_dd_buckets(dd_value_buckets(events))
 
 
-def dd_value_buckets_by_type(events: DataFrame) -> DataFrame:
-    """Per-group DDSketch build: log-domain bucket counts of the event
-    value keyed by (event_type, idx) — ONE hash aggregate, exactly the
-    global build with the group key added. Because bucket counts are
-    ADDITIVE, rolling this frame up over event_type reproduces the
-    global sketch bit-identically — the merge property
-    ddsketch_merge_proof pins end-to-end (r14, VERDICT r13 #7)."""
-    cents = F.round(F.col("value") * 100).cast("long")
-    return (
-        events.select("event_type", cents.alias("c"))
-        .where(F.col("c") >= 1)
-        .select(
-            "event_type",
-            F.ceil(F.log(F.col("c").cast("double")) / F.lit(_DD_LN_GAMMA))
-            .cast("long")
-            .alias("idx"),
-        )
-        .groupBy("event_type", "idx")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-
-
 def ddsketch_quantiles_by_type(
     events: DataFrame, percents: tuple[int, ...] = DD_PERCENTS
 ) -> DataFrame:
@@ -1027,53 +1019,8 @@ def ddsketch_quantiles_by_type(
     approx_value), rows-only — the per-group error envelope vs the
     exact per-group element (event_value_quartiles_by_type's oracle
     machinery) is pinned in differential.py's reference checks."""
-    return quantiles_from_dd_buckets_by_type(
-        dd_value_buckets_by_type(events), percents
-    )
-
-
-def quantiles_from_dd_buckets_by_type(
-    buckets: DataFrame, percents: tuple[int, ...] = DD_PERCENTS
-) -> DataFrame:
-    """Per-group quantile read off a prebuilt (event_type, idx, cnt)
-    sketch table — shared by the batch build above and the persisted
-    streaming state reader (streaming/sinks.py
-    read_dd_quantiles_by_type, r14)."""
-    spark = buckets.sparkSession
-    # (type × log-bucket)-domain checkpoint — one scan of the
-    # underlying source total for the cumulative + total consumers
-    # (same rationale as the global reader's pin in
-    # quantiles_from_dd_buckets)
-    buckets = buckets.localCheckpoint()
-    cum = (
-        Window.partitionBy("event_type")
-        .orderBy("idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = buckets.withColumn(
-        "prior", F.coalesce(F.sum("cnt").over(cum), F.lit(0))
-    )
-    tot = buckets.groupBy("event_type").agg(F.sum("cnt").alias("n_rows"))
-    pcts = spark.createDataFrame([(p,) for p in percents], "percent int")
-    rank = F.expr("(percent * n_rows + 99) div 100")
-    est_cents = (
-        F.lit(2.0)
-        * F.pow(F.lit(DD_GAMMA), F.col("idx").cast("double"))
-        / F.lit(DD_GAMMA + 1.0)
-    )
-    return (
-        ranked.join(F.broadcast(tot), "event_type")
-        .crossJoin(F.broadcast(pcts))
-        .where(
-            (F.col("prior") < rank) & (rank <= F.col("prior") + F.col("cnt"))
-        )
-        .select(
-            "event_type",
-            "percent",
-            "n_rows",
-            F.round(est_cents / F.lit(100.0), 6).alias("approx_value"),
-        )
-        .orderBy("event_type", "percent")
+    return quantiles_from_dd_buckets(
+        dd_value_buckets(events, "event_type"), "event_type", percents=percents
     )
 
 
@@ -1092,7 +1039,7 @@ def ddsketch_merge_proof(events: DataFrame) -> DataFrame:
     sketch deploys: per-partition/per-day builds folded by addition,
     one ≤ ~800-row frame per group crossing the wire."""
     merged = (
-        dd_value_buckets_by_type(events)
+        dd_value_buckets(events, "event_type")
         .groupBy("idx")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )

@@ -21,8 +21,27 @@ Scale notes (100 TB discipline):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def revenue_units() -> Column:
+    """A lineitem's discounted revenue in exact BIGINT units of 1e-4
+    dollars: price cents × (100 − discount percent). Price and discount
+    both carry exactly 2 decimals, so every row is exact and a sum of
+    units does not depend on the order of partial aggregates, where a
+    float revenue sum can land on either side of a half-cent."""
+    return F.round(F.col("l_extendedprice") * 100).cast("long") * (
+        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
+    )
+
+
+def units_to_revenue(units: str) -> Column:
+    """Dollars at 2dp from the unit sum in column ``units``, by half-up
+    INTEGER division ((u + 50) div 100): Spark's round() re-decimalizes
+    a double via its shortest repr while DuckDB rounds the raw double,
+    so a float round() splits the engines on a genuine half-cent tie."""
+    return F.expr(f"({units} + 50) div 100") / 100.0
 
 
 def q1_pricing_summary(lineitem: DataFrame) -> DataFrame:
@@ -58,7 +77,7 @@ def q1_pricing_summary(lineitem: DataFrame) -> DataFrame:
             "l_linestatus",
             "sum_qty",
             (F.col("c") / 100.0).alias("sum_base_price"),
-            (F.expr("(u4 + 50) div 100") / 100.0).alias("sum_disc_price"),
+            units_to_revenue("u4").alias("sum_disc_price"),
             (F.expr("(u6 + 5000) div 10000") / 100.0).alias("sum_charge"),
             # half-up integer division at 4dp: round(10^4·S/n) for the
             # integral-quantity sum, round(10^2·S/n) for cent-scaled sums.
@@ -126,19 +145,14 @@ def q3_shipping_priority(customer: DataFrame, orders: DataFrame, lineitem: DataF
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
         # exact-units revenue (nation_trade_flows discipline): the top-k
         # cut ranks on the BIGINT so a half-cent float tie can't reorder.
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
+        .agg(F.sum(revenue_units()).alias("u"))
         .orderBy(F.desc("u"), F.asc("o_orderkey"))
         .limit(10)
         .select(
             "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"),
             "o_orderpriority",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
     )
 
@@ -191,13 +205,8 @@ def q5_revenue_by_nation(
         )
         .groupBy("n_name")
         # exact-units revenue sum (nation_trade_flows discipline).
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
-        .select("n_name", (F.expr("(u + 50) div 100") / 100.0).alias("revenue"))
+        .agg(F.sum(revenue_units()).alias("u"))
+        .select("n_name", units_to_revenue("u").alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
 
@@ -411,12 +420,7 @@ def top_parts_by_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
         lineitem.groupBy("l_partkey")
         # exact-units revenue; the top-20 ranks on the BIGINT so float
         # half-cent ties can't reorder the cut boundary.
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
+        .agg(F.sum(revenue_units()).alias("u"))
         .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .orderBy(F.desc("u"), F.asc("p_partkey"))
         .limit(20)
@@ -424,7 +428,7 @@ def top_parts_by_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
             "p_partkey",
             "p_name",
             "p_brand",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
     )
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .relational import revenue_units, units_to_revenue
+
 
 def rollup_lineitem_flags(lineitem: DataFrame) -> DataFrame:
     """ROLLUP over (returnflag, linestatus): per-group, per-flag subtotal,
@@ -167,9 +169,7 @@ def daily_revenue_moving_avg(lineitem: DataFrame) -> DataFrame:
     4dp rounding near 5th-decimal boundaries."""
     from pyspark.sql import Window
 
-    u = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
+    u = revenue_units()
     daily = lineitem.groupBy(F.to_date("l_shipdate").alias("ship_date")).agg(
         F.sum(u).alias("u")
     )
@@ -308,9 +308,7 @@ def returned_item_revenue(
     sum near a half-cent boundary could flip both the rounding AND the
     ranking of the boundary customer; integer arithmetic can't."""
     returned = lineitem.where(F.col("l_returnflag") == "R")
-    u = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
+    u = revenue_units()
     return (
         returned.join(orders, returned.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)
@@ -323,7 +321,7 @@ def returned_item_revenue(
             "c_custkey",
             "c_name",
             "n_name",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
     )
 
@@ -453,9 +451,7 @@ def promo_revenue_by_month(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     20000·promo_u term stays in BIGINT range while a month's revenue is
     below ~$46B (4.6e14 u); past that, cast the ratio to decimal(38,0).
     """
-    u = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
+    u = revenue_units()
     return (
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("month"))
@@ -470,7 +466,7 @@ def promo_revenue_by_month(lineitem: DataFrame, part: DataFrame) -> DataFrame:
             (
                 F.expr("(20000 * promo_u + total_u) div (2 * total_u)") / 100.0
             ).alias("promo_pct"),
-            (F.expr("(total_u + 50) div 100") / 100.0).alias("total_revenue"),
+            units_to_revenue("total_u").alias("total_revenue"),
         )
         .orderBy("month")
     )
@@ -597,9 +593,7 @@ def disjunctive_brand_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame
             & F.col("l_quantity").between(20, 50)
         )
     )
-    u = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
+    u = revenue_units()
     return (
         lineitem.join(F.broadcast(part), lineitem.l_partkey == part.p_partkey)
         .where(cond)
@@ -610,7 +604,7 @@ def disjunctive_brand_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame
         .select(
             "p_brand",
             "n_lines",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
         .orderBy("p_brand")
     )
@@ -1270,17 +1264,12 @@ def nation_trade_flows(
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
+        .agg(F.sum(revenue_units()).alias("u"))
         .select(
             "supp_nation",
             "cust_nation",
             "l_year",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )

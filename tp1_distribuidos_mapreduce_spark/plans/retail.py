@@ -34,6 +34,28 @@ def part_baskets(lineitem: DataFrame) -> DataFrame:
     )
 
 
+def basket_pair_counts(baskets: DataFrame) -> DataFrame:
+    """(a, b, n_ab): for each part pair a < b, how many of ``baskets``
+    (part_baskets rows) hold both. Pairs are expanded IN-ROW with the
+    shared-span ``_pairs_within`` expression, so the fan-out is bounded
+    by basket size and never a part×part cross."""
+    return (
+        baskets.where(F.size("parts") >= 2)
+        .select(F.explode(_pairs_within("parts")).alias("p"))
+        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .agg(F.count("*").alias("n_ab"))
+    )
+
+
+def basket_item_counts(baskets: DataFrame) -> DataFrame:
+    """(part, n_part): how many of ``baskets`` hold each part."""
+    return (
+        baskets.select(F.explode("parts").alias("part"))
+        .groupBy("part")
+        .agg(F.count("*").alias("n_part"))
+    )
+
+
 def rfm_segmentation(orders: DataFrame) -> DataFrame:
     """RFM grid: customers quintiled by Recency (days since last order,
     vs the corpus max date), Frequency (order count), and Monetary
@@ -140,13 +162,13 @@ def market_basket_pairs(lineitem: DataFrame, top_k: int = BASKET_TOP_K) -> DataF
     lineitem once and expands pairs inside the row, which is how you'd
     mine baskets at 100 TB.
     """
-    baskets = part_baskets(lineitem).where(F.size("parts") >= 2)
-    pairs = baskets.select(F.explode(_pairs_within("parts")).alias("p"))
     return (
-        pairs.groupBy(
-            F.col("p.a").alias("part_a"), F.col("p.b").alias("part_b")
+        basket_pair_counts(part_baskets(lineitem))
+        .select(
+            F.col("a").alias("part_a"),
+            F.col("b").alias("part_b"),
+            F.col("n_ab").alias("n_orders"),
         )
-        .agg(F.count("*").alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("part_a"), F.asc("part_b"))
         .limit(top_k)
     )
@@ -540,18 +562,8 @@ def association_rules(lineitem: DataFrame, min_support: int = RULE_MIN_SUPPORT) 
     # measured trade.
     baskets = part_baskets(lineitem)
     n_baskets = baskets.agg(F.count("*").cast("long").alias("n_total"))
-    pair_counts = (
-        baskets.where(F.size("parts") >= 2)
-        .select(F.explode(_pairs_within("parts")).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count("*").cast("long").alias("n_ab"))
-        .where(F.col("n_ab") >= min_support)
-    )
-    item_counts = (
-        baskets.select(F.explode("parts").alias("part"))
-        .groupBy("part")
-        .agg(F.count("*").cast("long").alias("n_part"))
-    )
+    pair_counts = basket_pair_counts(baskets).where(F.col("n_ab") >= min_support)
+    item_counts = basket_item_counts(baskets)
     directed = pair_counts.select("a", "b", "n_ab").unionByName(
         pair_counts.select(
             F.col("b").alias("a"), F.col("a").alias("b"), "n_ab"

@@ -796,28 +796,25 @@ ORDER BY digit
 """
 
 
-def welch_price_ttest(lineitem: DataFrame) -> DataFrame:
-    """Welch's unequal-variance two-sample t-test comparing the
-    extended-price MEANS of returned lines (l_returnflag = 'R') against
-    everything else — the parametric companion to ks_returned_price
-    (KS asks "same distribution?", Welch asks "same mean?"). One row:
-    (n_returned, n_other, mean_diff_cents, welch_t, welch_df).
+def _returned_price_moments(lineitem: DataFrame):
+    """The two-sample moments of returned (l_returnflag = 'R') against
+    kept extended prices, shared by welch_price_ttest and
+    cohens_d_returned_price: ``(s, n1d, n2d, var1, var2, mean_diff)``.
+    ``s`` is the one-row conditional aggregate (n_returned, n_other and
+    each group's n, Σy, Σy² over integral DECIMAL(18,0) cents); the
+    rest are double columns over ``s``: the two group sizes, the two
+    sample variances and the difference of the means.
 
     Shape: ONE conditional hash aggregate over the fact table builds
-    both groups' sufficient statistics (n, Σy, Σy²) in a single pass —
-    map-side partials, no second scan, no join, scale-free.
+    both groups' sufficient statistics in a single pass — map-side
+    partials, no second scan, no join, scale-free.
 
     Exactness: y = integral cents as DECIMAL(18,0), so n, Σy, Σy² are
     exact decimal integers (Σy² ≤ ~10²⁶ at 100 TB, far under 10³⁸) and
     each variance numerator n·Σy² − (Σy)² is exact DECIMAL(38,0)
     (oracle: HUGEINT). Every float is then a single correctly-rounded
     op over identical exact inputs — conversions go through the
-    DECIMAL STRING (module docstring 2⁵³ trap) — and the t / dof
-    chains are evaluated as the SAME expression tree in both engines,
-    so the output is bit-identical. Degenerate inputs (a group with
-    n < 2, or zero pooled standard error) are excluded rather than
-    emitted NULL/inf.
-    """
+    DECIMAL STRING (module docstring 2⁵³ trap)."""
     y = F.round(F.col("l_extendedprice") * 100).cast("decimal(18,0)")
     ret = F.col("l_returnflag") == "R"
     zero = F.lit(0).cast("decimal(18,0)")
@@ -842,12 +839,28 @@ def welch_price_ttest(lineitem: DataFrame) -> DataFrame:
     d1 = (F.col("n1") * (F.col("n1") - 1)).cast("string").cast("double")
     d2 = (F.col("n2") * (F.col("n2") - 1)).cast("string").cast("double")
     n1d, n2d = sd("n1"), sd("n2")
-    var1 = va1 / d1
-    var2 = va2 / d2
+    mean_diff = sd("s1") / n1d - sd("s2") / n2d
+    return s, n1d, n2d, va1 / d1, va2 / d2, mean_diff
+
+
+def welch_price_ttest(lineitem: DataFrame) -> DataFrame:
+    """Welch's unequal-variance two-sample t-test comparing the
+    extended-price MEANS of returned lines (l_returnflag = 'R') against
+    everything else — the parametric companion to ks_returned_price
+    (KS asks "same distribution?", Welch asks "same mean?"). One row:
+    (n_returned, n_other, mean_diff_cents, welch_t, welch_df).
+
+    The moments come from ``_returned_price_moments`` (one conditional
+    aggregate, exact decimal numerators, string-routed conversions), and
+    the t / dof chains are evaluated as the SAME expression tree in both
+    engines, so the output is bit-identical. Degenerate inputs (a group
+    with n < 2, or zero pooled standard error) are excluded rather than
+    emitted NULL/inf.
+    """
+    s, n1d, n2d, var1, var2, mean_diff = _returned_price_moments(lineitem)
     se1 = var1 / n1d
     se2 = var2 / n2d
     se_sq = se1 + se2
-    mean_diff = sd("s1") / n1d - sd("s2") / n2d
     t_stat = mean_diff / F.sqrt(se_sq)
     dof = (se_sq * se_sq) / (
         (se1 * se1) / (n1d - F.lit(1.0)) + (se2 * se2) / (n2d - F.lit(1.0))
@@ -2092,44 +2105,13 @@ def cohens_d_returned_price(lineitem: DataFrame) -> DataFrame:
     "is it big?"). One row: (n_returned, n_other, mean_diff_cents,
     cohens_d) with the pooled-SD denominator.
 
-    Shape: identical to Welch — ONE conditional hash aggregate builds
-    both groups' (n, Σy, Σy²) in a single pruned pass; map-side
-    partials; the closing math runs on one row.
-
-    Exactness: the welch_price_ttest discipline verbatim — integral
-    cents as DECIMAL(18,0), exact DECIMAL(38,0)/HUGEINT variance
-    numerators n·Σy² − (Σy)², string-routed double conversions, and
-    the pooled-variance chain evaluated as the SAME expression tree in
+    The moments are Welch's (``_returned_price_moments``), and the
+    pooled-variance chain is evaluated as the SAME expression tree in
     both engines: bit-identical, no rounding step. Degenerate inputs
     (a group with n < 2, zero pooled variance) are excluded rather
     than emitted NULL/inf.
     """
-    y = F.round(F.col("l_extendedprice") * 100).cast("decimal(18,0)")
-    ret = F.col("l_returnflag") == "R"
-    zero = F.lit(0).cast("decimal(18,0)")
-    s = lineitem.select(ret.alias("ret"), y.alias("y")).agg(
-        F.sum(F.when(F.col("ret"), 1).otherwise(0)).cast("long").alias("n_returned"),
-        F.sum(F.when(~F.col("ret"), 1).otherwise(0)).cast("long").alias("n_other"),
-        F.sum(F.when(F.col("ret"), 1).otherwise(0)).cast("decimal(18,0)").alias("n1"),
-        F.sum(F.when(~F.col("ret"), 1).otherwise(0)).cast("decimal(18,0)").alias("n2"),
-        F.sum(F.when(F.col("ret"), F.col("y")).otherwise(zero)).alias("s1"),
-        F.sum(F.when(~F.col("ret"), F.col("y")).otherwise(zero)).alias("s2"),
-        F.sum(F.when(F.col("ret"), F.col("y") * F.col("y")).otherwise(zero)).alias("q1"),
-        F.sum(F.when(~F.col("ret"), F.col("y") * F.col("y")).otherwise(zero)).alias("q2"),
-    )
-    sd = lambda c: F.col(c).cast("string").cast("double")  # noqa: E731
-    va1 = (F.col("n1") * F.col("q1") - F.col("s1") * F.col("s1")).cast(
-        "string"
-    ).cast("double")
-    va2 = (F.col("n2") * F.col("q2") - F.col("s2") * F.col("s2")).cast(
-        "string"
-    ).cast("double")
-    d1 = (F.col("n1") * (F.col("n1") - 1)).cast("string").cast("double")
-    d2 = (F.col("n2") * (F.col("n2") - 1)).cast("string").cast("double")
-    n1d, n2d = sd("n1"), sd("n2")
-    var1 = va1 / d1
-    var2 = va2 / d2
-    mean_diff = sd("s1") / n1d - sd("s2") / n2d
+    s, n1d, n2d, var1, var2, mean_diff = _returned_price_moments(lineitem)
     pooled = (
         (n1d - F.lit(1.0)) * var1 + (n2d - F.lit(1.0)) * var2
     ) / (n1d + n2d - F.lit(2.0))

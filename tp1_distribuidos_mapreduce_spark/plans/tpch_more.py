@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .relational import revenue_units, units_to_revenue
+
 
 # --------------------------------------------------------------------------
 # Q4: order-priority check — EXISTS with a correlated date inequality
@@ -244,12 +246,7 @@ def q8_market_share(
         # exact-units nation revenue: the share then divides two exact
         # BIGINTs, identical on both engines (a float sum's partial-order
         # wobble would shift the ratio across a 5th-decimal boundary).
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("nation_u")
-        )
+        .agg(F.sum(revenue_units()).alias("nation_u"))
     )
     total = Window.partitionBy("o_year")
     return (
@@ -473,9 +470,7 @@ def q6_forecast_revenue(lineitem: DataFrame) -> DataFrame:
             ).alias("u")
         )
         .select(
-            F.coalesce(F.expr("(u + 50) div 100") / 100.0, F.lit(0.0)).alias(
-                "revenue"
-            )
+            F.coalesce(units_to_revenue("u"), F.lit(0.0)).alias("revenue")
         )
     )
 
@@ -533,17 +528,12 @@ def q7_volume_shipping(
         .where(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         # exact-units revenue sum (nation_trade_flows discipline).
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
+        .agg(F.sum(revenue_units()).alias("u"))
         .select(
             "supp_nation",
             "cust_nation",
             "l_year",
-            (F.expr("(u + 50) div 100") / 100.0).alias("revenue"),
+            units_to_revenue("u").alias("revenue"),
         )
         .orderBy("supp_nation", "cust_nation", "l_year")
     )
@@ -600,9 +590,7 @@ def q14_promo_effect(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     # exact-units sums feed the pct; round(10^4·100·pv/tv) by half-up
     # integer division. BIGINT headroom: 1e6·pv_u overflows past ~$920B
     # in the month window; past that, cast the ratio to decimal(38,0).
-    vol = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    )
+    vol = revenue_units()
     return (
         month.join(F.broadcast(promo), month["l_partkey"] == F.col("p_partkey"))
         .agg(
@@ -797,16 +785,9 @@ def q19_discounted_revenue(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     # exact-units revenue sum (nation_trade_flows discipline).
     return (
         j.where(leg)
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-                * (F.lit(100) - F.round(F.col("l_discount") * 100).cast("long"))
-            ).alias("u")
-        )
+        .agg(F.sum(revenue_units()).alias("u"))
         .select(
-            F.coalesce(F.expr("(u + 50) div 100") / 100.0, F.lit(0.0)).alias(
-                "revenue"
-            )
+            F.coalesce(units_to_revenue("u"), F.lit(0.0)).alias("revenue")
         )
     )
 
@@ -875,9 +856,9 @@ def q9_product_type_profit(
     sc_cents = (
         _hash4(F.concat_ws(":", F.col("l_partkey"), F.col("l_suppkey"))) + 100
     )
-    amount_u = F.round(F.col("l_extendedprice") * 100).cast("long") * (
-        F.lit(100) - F.round(F.col("l_discount") * 100).cast("long")
-    ) - sc_cents * F.round(F.col("l_quantity")).cast("long") * 100
+    amount_u = (
+        revenue_units() - sc_cents * F.round(F.col("l_quantity")).cast("long") * 100
+    )
     return (
         lineitem.join(
             F.broadcast(red_parts), F.col("l_partkey") == F.col("p_partkey")

@@ -47,11 +47,9 @@ from ..plans.approx import (
     _hll_zipmax,
     daily_hll_sketches,
     dd_value_buckets,
-    dd_value_buckets_by_type,
     kmv_type_sketches,
     overlap_from_kmv_sketches,
     quantiles_from_dd_buckets,
-    quantiles_from_dd_buckets_by_type,
     rolling_estimates_from_sketches,
 )
 from ..plans.bloom import M_BITS, _bloom_words, bloom_prune, urgent_pruned_revenue
@@ -194,7 +192,11 @@ IVM = Fold(_ivm_delta, ("user_id",), {"n_events": F.sum, "cents": F.sum})
 HLL = Fold(daily_hll_sketches, ("day",), {"regs": _hll_max})
 KMV = Fold(kmv_type_sketches, ("event_type",), {"sk": _bottom_k})
 DD = Fold(dd_value_buckets, ("idx",), {"cnt": F.sum})
-DD_BY_TYPE = Fold(dd_value_buckets_by_type, ("event_type", "idx"), {"cnt": F.sum})
+DD_BY_TYPE = Fold(
+    lambda batch_df: dd_value_buckets(batch_df, "event_type"),
+    ("event_type", "idx"),
+    {"cnt": F.sum},
+)
 CMS = Fold(
     lambda batch_df: _cms_cell_counts(
         words_from(batch_df, "text"), ["word"], CMS_DEPTH, CMS_WIDTH
@@ -336,7 +338,7 @@ def read_dd_quantiles(spark: SparkSession, state_path: str) -> DataFrame:
 
 def read_dd_quantiles_by_type(spark: SparkSession, state_path: str) -> DataFrame:
     """Per-type quantile estimates from the persisted grouped buckets."""
-    return quantiles_from_dd_buckets_by_type(read_state(spark, state_path))
+    return quantiles_from_dd_buckets(read_state(spark, state_path), "event_type")
 
 
 def read_bloom_pruned_revenue(
