@@ -269,6 +269,22 @@ def test_ddsketch_merge_is_exact(spark):
     assert q_merged == q_one
 
 
+def test_ddsketch_by_type_keeps_a_null_key(spark):
+    """The keyed sketch keeps a NULL event_type as one group, and the
+    quantile reader must too: two NULL-type and two 'a' events give a
+    full set of percent rows for both keys, each with n_rows = 2."""
+    from tp1_distribuidos_mapreduce_spark.plans import approx as AX
+
+    ev = spark.createDataFrame(
+        [(None, 1.5), (None, 2.5), ("a", 3.0), ("a", 4.0)],
+        "event_type string, value double",
+    )
+    rows = AX.ddsketch_quantiles_by_type(ev).collect()
+    for key in (None, "a"):
+        got = [(r["percent"], r["n_rows"]) for r in rows if r["event_type"] == key]
+        assert got == [(p, 2) for p in AX.DD_PERCENTS], (key, rows)
+
+
 @pytest.mark.queries("ddsketch_merge_proof", "ddsketch_event_quantiles")
 def test_ddsketch_merge_proof_all_flags_true_and_bit_identical(calls):
     """The merge-proof query's own contract: every per-percent flag is

@@ -51,13 +51,8 @@ def test_triangle_orientation_bounds_hub_adjacency(spark):
     # construction the operator uses (degree-ordered, tie-break id)
     from pyspark.sql import functions as F
 
-    edges = GR.copurchase_edges(li).where(F.col("src") < F.col("dst"))
-    deg = (
-        edges.select(F.col("src").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
+    edges = GR.undirected_copurchase_edges(li)
+    deg = GR.node_degrees(edges).toDF("v", "deg")
     wd = edges.join(
         deg.select(F.col("v").alias("src"), F.col("deg").alias("sdeg")), "src"
     ).join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("ddeg")), "dst")

@@ -254,3 +254,56 @@ def test_ngrams_match_python_windows(spark, docs, n):
         want = [" ".join(t[j : j + n]) for j in range(len(t) - n + 1)]
         assert got[i][0] == want, (t, n)
         assert got[i][1] == ([" ".join(t)] if 0 < len(t) < n else want), (t, n)
+
+
+_PART = st.one_of(st.none(), st.integers(1, 9))
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
+)
+@given(
+    orders=st.lists(st.tuples(st.integers(1, 6), _PART), min_size=1, max_size=30),
+    null_basket=st.lists(_PART, min_size=2, max_size=6),
+)
+def test_basket_pairs_match_python_double_loop(spark, orders, null_basket):
+    """The co-purchase self-join (plans/retail.py basket_pairs) against a
+    double loop over each order's distinct non-NULL part set. Every frame
+    holds a NULL order key (one basket, as a groupBy makes it), a part
+    repeated within an order and a NULL part key."""
+    from tp1_distribuidos_mapreduce_spark.operators.graph import (
+        undirected_copurchase_edges,
+    )
+    from tp1_distribuidos_mapreduce_spark.plans.retail import (
+        basket_item_counts,
+        basket_items,
+        basket_pair_counts,
+    )
+
+    rows = (
+        orders
+        + orders[:1]
+        + [(orders[0][0], None)]
+        + [(None, p) for p in null_basket]
+    )
+    li = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    baskets: dict = {}
+    for o, p in rows:
+        if p is not None:
+            baskets.setdefault(o, set()).add(p)
+    pairs = Counter(
+        (a, b) for parts in baskets.values() for a in parts for b in parts if a < b
+    )
+    parts = Counter(p for ps in baskets.values() for p in ps)
+
+    items = basket_items(li)
+    edge_rows = [tuple(r) for r in undirected_copurchase_edges(li).collect()]
+    edges = set(edge_rows)
+    assert len(edge_rows) == len(edges), edge_rows
+    counts = {(r["a"], r["b"]): r["n_ab"] for r in basket_pair_counts(items).collect()}
+    n_part = {r["part"]: r["n_part"] for r in basket_item_counts(items).collect()}
+    assert edges == set(pairs), (rows, edges)
+    assert counts == dict(pairs), (rows, counts)
+    assert n_part == dict(parts), (rows, n_part)

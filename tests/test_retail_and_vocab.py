@@ -44,7 +44,7 @@ def test_weighted_median_matches_python_reference(spark):
 
 
 def test_market_basket_matches_naive_self_join(spark):
-    """The in-row pair expansion must produce exactly the pairs a naive
+    """The basket pair self-join must produce exactly the pairs a naive
     per-order double loop produces (co-occurrence counts included)."""
     li = load_table(spark, SF_SMOKE, "lineitem")
     orders: dict[int, set[int]] = {}

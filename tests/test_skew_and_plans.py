@@ -539,6 +539,45 @@ def test_tokenize_never_inside_per_position_lambda(calls):
         )
 
 
+COPURCHASE_CONSUMERS = (
+    "market_basket_pairs",
+    "association_rules",
+    "copurchase_jaccard",
+    "degree_distribution",
+)
+
+
+@pytest.mark.queries(*COPURCHASE_CONSUMERS)
+def test_copurchase_pairs_build_without_lambdas(spark, calls):
+    """The co-purchase pairs are a self-join on the order key
+    (plans/retail.py basket_pairs), evaluated in whole-stage codegen. An
+    in-row expansion of per-order part arrays (transform/slice/flatten)
+    prints `lambdafunction(` in the plan and runs interpreted: it cost
+    the k-core edge build about twice the executor CPU at sf0.01. No
+    plan of the two builders, nor of a lazy registry query over them,
+    may carry one."""
+    from tp1_distribuidos_mapreduce_spark.operators.graph import (
+        undirected_copurchase_edges,
+    )
+    from tp1_distribuidos_mapreduce_spark.plans.retail import (
+        basket_items,
+        basket_pair_counts,
+    )
+
+    li = load_table(spark, SF_SMOKE, "lineitem")
+    builders = {
+        "undirected_copurchase_edges": undirected_copurchase_edges(li),
+        "basket_pair_counts": basket_pair_counts(basket_items(li)),
+    }
+    plans = {
+        name: df._jdf.queryExecution().executedPlan().toString()
+        for name, df in builders.items()
+    }
+    plans.update({name: calls[name].plan for name in COPURCHASE_CONSUMERS})
+    bad = sorted(name for name, plan in plans.items() if "lambdafunction(" in plan)
+    assert not bad, bad
+
+
 @pytest.mark.queries("welch_price_ttest", "mannwhitney_quantity")
 def test_stats_single_pass_scans_prune_columns(calls):
     """The round-12 two-sample members must collapse in ONE pruned pass:

@@ -37,6 +37,7 @@ from ..functions.hashing import (
 )
 from ..functions.tokenize import tokenize
 from ..functions.vectors import cosine_similarity
+from .graph import _maybe_broadcast
 
 
 def _simhash_udf() -> F.Column:
@@ -635,10 +636,6 @@ def connected_components(
     # Shared guard from graph.py (ADVICE r21): one threshold policy for
     # ALL four iterative-join users (PageRank/BFS/k-core/CC) — a local
     # copy of the 1M constant would silently diverge on a policy change.
-    # Import at call time: graph.py imports _pairs_within from this
-    # module, so a module-level import here would be circular.
-    from .graph import _maybe_broadcast
-
     _bcast_labels = _maybe_broadcast(labels.count())
 
     def step(labels: DataFrame, jump: bool) -> DataFrame:

@@ -2,10 +2,13 @@
 PageRank over the part co-purchase graph — the influence/centrality
 measure a recommender or curation pipeline runs over an item graph.
 
-Graph construction reuses the market-basket shape (plans/retail.py
-part_baskets): per-order distinct part sets built with ONE groupBy
-(basket sizes are bounded), pairs expanded IN-ROW, deduplicated to an
-undirected edge list. PageRank then iterates rank ← (1−d)/N + d·Σ rank/out_degree over
+Graph construction reuses the market-basket pairs (plans/retail.py
+basket_pairs): a codegen'd self-join of (order, part) rows on the order
+key keeping a < b, deduplicated to an undirected edge list. Against the
+interpreted in-row expansion of per-order part arrays it replaced, the
+k-core op at sf0.01 (perfbench iterative, C1-only JVM, 4 vCPUs) went
+from 1.16 to 0.56 executor CPU s and from 19.9 to 10.2 MB input per
+op. PageRank then iterates rank ← (1−d)/N + d·Σ rank/out_degree over
 the edge list:
 
 - Each round is one edge⨝ranks join (ranks are node-cardinality; edges
@@ -34,8 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.retail import basket_item_counts, basket_pair_counts, part_baskets
-from .dedup import _pairs_within
+from ..plans.retail import (
+    basket_item_counts,
+    basket_items,
+    basket_pair_counts,
+    basket_pairs,
+)
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 10
@@ -60,33 +67,44 @@ def _maybe_broadcast(n_nodes: int):
 
 def undirected_copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Distinct undirected co-purchase edges with src < dst (one row per
-    edge): the basket build → in-row pair expansion → distinct pipeline.
-    Lazy — callers decide whether to checkpoint."""
-    baskets = part_baskets(lineitem).where(F.size("parts") >= 2)
+    edge): the basket_pairs self-join over the raw (order, part)
+    projection, then one distinct (a part repeated within an order only
+    repeats pairs the distinct folds). Lazy — callers decide whether to
+    checkpoint."""
     return (
-        baskets.select(F.explode(_pairs_within("parts")).alias("p"))
-        .select(F.col("p.a").alias("src"), F.col("p.b").alias("dst"))
+        basket_pairs(lineitem)
+        .select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .distinct()
+    )
+
+
+def node_degrees(edges: DataFrame) -> DataFrame:
+    """(part_id, degree): how many edges of an undirected (src, dst) edge
+    list touch each node — each edge counts once at either endpoint, in
+    one pass over the list (an in-row explode, no union of two scans)."""
+    return (
+        edges.select(F.explode(F.array("src", "dst")).alias("part_id"))
+        .groupBy("part_id")
+        .agg(F.count("*").cast("long").alias("degree"))
     )
 
 
 def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Undirected co-purchase edge list as directed rows (a→b and b→a),
-    deduplicated: (src, dst).
+    deduplicated: (src, dst) — the adjacency PageRank and BFS walk.
 
     r22: the directed rows come from an IN-ROW explode of each undirected
     edge into its two orientations — not a union of two re-derivations of
-    the basket pipeline. The union shape evaluated the whole baskets →
-    pairs → distinct subtree once per branch and pushed BOTH copies
-    through the distinct's exchange; the explode shape runs the subtree
-    once, shuffles HALF the rows, and mirrors in-row after the distinct
-    (guide §2.3 — shuffle fewer bytes). Checkpointing the undirected half
-    instead was tried and REVERTED in r21 (pagerank 6.5→7.7s, bfs
-    4.1→4.7s, kcore 3.1→4.6s): the eager materialization serialized what
-    parallel subtrees hid; the explode shares the subtree WITHOUT a
-    checkpoint. Measured adjacent interleaved A/B at sf0.1 (edge set
-    verified identical, 2.392M rows; pagerank 6dp output identical):
-    pagerank 6.54→5.58s, bfs 5.07→3.96s, kcore 4.04→3.33s medians."""
+    the edge build. The union shape evaluated the whole edge subtree once
+    per branch and pushed BOTH copies through the distinct's exchange;
+    the explode shape runs the subtree once, shuffles HALF the rows, and
+    mirrors in-row after the distinct (guide §2.3 — shuffle fewer bytes).
+    Checkpointing the undirected half instead was tried and REVERTED in
+    r21 (pagerank 6.5→7.7s, bfs 4.1→4.7s, kcore 3.1→4.6s): the eager
+    materialization serialized what parallel subtrees hid. Measured
+    adjacent interleaved A/B at sf0.1 (edge set verified identical,
+    2.392M rows; pagerank 6dp output identical): pagerank 6.54→5.58s,
+    bfs 5.07→3.96s, kcore 4.04→3.33s medians."""
     undirected = undirected_copurchase_edges(lineitem)
     return undirected.select(
         F.explode(
@@ -211,11 +229,11 @@ def copurchase_jaccard(lineitem: DataFrame, top_k: int = 50) -> DataFrame:
     both engines, so ordering and rounding are deterministic.
     """
     # NOT checkpointed (r21 A/B: 1.83→2.15s) — the two consumers
-    # evaluate as parallel subtrees of one job at this scale; see
-    # copurchase_edges.
-    baskets = part_baskets(lineitem)
-    pair_counts = basket_pair_counts(baskets)
-    part_counts = basket_item_counts(baskets)
+    # evaluate as parallel subtrees of one job at this scale and share
+    # the basket_items exchange.
+    items = basket_items(lineitem)
+    pair_counts = basket_pair_counts(items)
+    part_counts = basket_item_counts(items)
     na = part_counts.select(F.col("part").alias("a"), F.col("n_part").alias("n_a"))
     nb = part_counts.select(F.col("part").alias("b"), F.col("n_part").alias("n_b"))
     return (
@@ -271,14 +289,8 @@ LIMIT 50
 
 def copurchase_degrees(lineitem: DataFrame) -> DataFrame:
     """Per-node degree of the undirected co-purchase graph: (part_id,
-    degree). One count over the directed edge rows (each undirected edge
-    appears once per endpoint in copurchase_edges' output)."""
-    return (
-        copurchase_edges(lineitem)
-        .groupBy(F.col("src").alias("part_id"))
-        .agg(F.count("*").cast("long").alias("degree"))
-        .orderBy("part_id")
-    )
+    degree), node_degrees over the undirected edge list."""
+    return node_degrees(undirected_copurchase_edges(lineitem)).orderBy("part_id")
 
 
 def degree_distribution(lineitem: DataFrame) -> DataFrame:
@@ -343,13 +355,7 @@ def triangle_count(lineitem: DataFrame) -> DataFrame:
     # (r21): the orientation join consumes it twice and n_nodes counts
     # it, so without the checkpoint the degree aggregate re-runs three
     # times; its count also drives the broadcast guard below.
-    deg = (
-        undirected.select(F.col("src").alias("v"))
-        .unionByName(undirected.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
+    deg = node_degrees(undirected).toDF("v", "deg").localCheckpoint()
     # node-cardinality frames (deg, adj) broadcast into the edge joins
     # under the shared PageRank/BFS/k-core 1M-node guard; past it they
     # degrade to shuffled equi-joins. The checkpointed deg frame does
@@ -577,17 +583,20 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     shape in the graph family after PageRank's fixed-round power
     iteration and BFS's frontier relaxation.
 
-    Peeling loop: each round aggregates the surviving edges into
-    per-node degrees once (localCheckpoint keeps lineage flat) and one
+    Peeling loop over the undirected edge list (one row per edge, half
+    the rows of the mirrored list): each round aggregates the surviving
+    edges into per-node degrees once (node_degrees counts an edge at
+    both endpoints; localCheckpoint keeps lineage flat) and one
     scalar aggregate counts the nodes below k and at or above it. A
     round with no node below k stops the loop, and that round's degrees
     are the result: every surviving node then has degree ≥ k within
     the surviving edges, which is the core. Otherwise the edges are
-    restricted to the kept nodes (two semi-joins on the node frame,
-    broadcast under the same 1M-node guard as PageRank/BFS, shuffled
-    equi-join past it) and the next round runs. Rounds are capped
-    loudly (peeling terminates in ≤ |V| rounds, in practice a handful).
-    An empty graph, or a k that peels every node, returns no rows.
+    restricted to the kept nodes (semi-joins of src and of dst on the
+    node frame, broadcast under the same 1M-node guard as PageRank/BFS,
+    shuffled equi-join past it) and the next round runs. Rounds are
+    capped loudly (peeling terminates in ≤ |V| rounds, in practice a
+    handful). An empty graph, or a k that peels every node, returns no
+    rows.
 
     Output: (part_id, core_degree) for k-core members — degree within
     the core, the number a community-detection consumer ranks by.
@@ -596,11 +605,11 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     in differential.py against an independent Python peeling of the
     same edge list.
     """
-    edges = copurchase_edges(lineitem).localCheckpoint()
+    edges = undirected_copurchase_edges(lineitem).localCheckpoint()
     for _ in range(KCORE_MAX_ROUNDS):
         degrees = (
-            edges.groupBy(F.col("src").alias("part_id"))
-            .agg(F.count("*").cast("long").alias("core_degree"))
+            node_degrees(edges)
+            .select("part_id", F.col("degree").alias("core_degree"))
             .localCheckpoint()
         )
         low = F.col("core_degree") < k

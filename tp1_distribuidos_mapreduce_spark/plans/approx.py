@@ -11,6 +11,9 @@ aggregates instead.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -973,7 +976,15 @@ def quantiles_from_dd_buckets(
     ranked = buckets.withColumn(
         "prior", F.coalesce(F.sum("cnt").over(cum), F.lit(0))
     )
-    tot = F.broadcast(buckets.groupBy(*keys).agg(F.sum("cnt").alias("n_rows")))
+    # With keys the totals join back null-safe: dd_value_buckets keeps
+    # a NULL key as one group, and a plain equi-join would drop its rows.
+    tot_keys = [f"{k}_tot" for k in keys]
+    tot = F.broadcast(
+        buckets.groupBy(*keys)
+        .agg(F.sum("cnt").alias("n_rows"))
+        .toDF(*tot_keys, "n_rows")
+    )
+    same_key = [F.col(k).eqNullSafe(F.col(t)) for k, t in zip(keys, tot_keys)]
     pcts = spark.createDataFrame([(p,) for p in percents], "percent int")
     rank = F.expr("(percent * n_rows + 99) div 100")
     est_cents = (
@@ -982,7 +993,11 @@ def quantiles_from_dd_buckets(
         / F.lit(DD_GAMMA + 1.0)
     )
     return (
-        (ranked.join(tot, list(keys)) if keys else ranked.crossJoin(tot))
+        (
+            ranked.join(tot, reduce(and_, same_key)).drop(*tot_keys)
+            if keys
+            else ranked.crossJoin(tot)
+        )
         .crossJoin(F.broadcast(pcts))
         .where(
             (F.col("prior") < rank) & (rank <= F.col("prior") + F.col("cnt"))
