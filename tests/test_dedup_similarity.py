@@ -3,6 +3,8 @@ without SQL oracles) + sanity for exact variants on constructed corpora."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 
 from tp1_distribuidos_mapreduce_spark.operators import dedup as D
@@ -211,13 +213,27 @@ def test_connected_components_on_constructed_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_connected_components_converges_on_long_chain(spark):
-    # a 30-edge path needs ~diameter rounds; must still converge under max_iter
+@pytest.mark.parametrize("n_edges", [30, 100])
+def test_connected_components_closes_long_chains(spark, monkeypatch, n_edges):
+    """A path of n_edges edges has diameter n_edges; neighbor-min alone
+    needs that many rounds. With pointer jumping every node must carry
+    the component minimum within ⌈log₂ n⌉ + 1 rounds for n nodes, the
+    last round being the one that sees no label change. Rounds are the
+    localCheckpoint calls after the edge and label builds."""
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(n_edges)], "doc_a long, doc_b long"
     )
-    got = {r.doc_id: r.cluster_id for r in D.connected_components(pairs, max_iter=40).collect()}
-    assert set(got.values()) == {0} and len(got) == 31
+    calls = []
+    original = type(pairs).localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", counted)
+    out = [tuple(r) for r in D.connected_components(pairs).collect()]
+    assert out == [(i, 0) for i in range(n_edges + 1)]
+    assert len(calls) - 2 <= math.ceil(math.log2(n_edges + 1)) + 1, len(calls)
 
 
 def test_near_dup_clusters_label_is_component_min(spark):
@@ -262,21 +278,6 @@ def test_knn_ivf_probe_monotonicity(spark):
         for r in S.knn_ivf(emb, 5, 3, n_lists=8, n_probe=8).collect()
     ]
     assert full == exact
-
-
-def test_connected_components_pointer_jumping_closes_long_chains(spark):
-    """A 100-node path graph has diameter 100 — far beyond max_iter=3
-    plain min-label rounds — so this exercises the O(log D)
-    pointer-jumping fallback (VERDICT r7 #6) end to end: the chain must
-    converge, every node labeled with the component minimum, instead of
-    raising as the pre-fallback implementation did."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(100)], "doc_a long, doc_b long"
-    )
-    out = D.connected_components(pairs, max_iter=3).collect()
-    assert len(out) == 101
-    assert all(r.cluster_id == 0 for r in out)
-    assert sorted(r.doc_id for r in out) == list(range(101))
 
 
 @pytest.mark.parametrize("max_df", [1, 2, 3])

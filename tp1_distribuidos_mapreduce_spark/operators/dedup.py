@@ -587,8 +587,13 @@ def embedding_near_dup_pairs_ivf(
     )
 
 
+# Pointer jumping closes a diameter-D chain in O(log D) rounds, so 64
+# rounds cover any graph of up to 2^64 vertices.
+CC_MAX_ROUNDS = 64
+
+
 def connected_components(
-    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iter: int = 20
+    pairs: DataFrame, src: str = "doc_a", dst: str = "doc_b"
 ) -> DataFrame:
     """Group near-duplicate pairs into clusters: min-label propagation
     connected components. Returns (doc_id, cluster_id) for every doc that
@@ -597,20 +602,21 @@ def connected_components(
     This is the step that turns pairwise dedup output into an actionable
     keep/drop list (keep doc_id == cluster_id, drop the rest). Pure
     DataFrame iteration: each round every vertex takes the min of its own
-    label and its neighbors' labels — one shuffle per round, converging in
-    O(component diameter) rounds. Near-dup graphs are dense blobs with
-    tiny diameters, so 3-4 rounds typically suffice; if ``max_iter`` plain
-    rounds don't converge (adversarial long-chain graphs), the loop falls
-    back to neighbor-min + pointer-jumping rounds, which close ANY
-    diameter in O(log D). Each round is localCheckpoint()ed: without it the
-    unioned-join lineage doubles per iteration and the planner, not the
-    data, becomes the bottleneck. The convergence check is a single
-    sum(label) aggregate (labels only ever decrease, so an unchanged sum
-    ⇔ a fixed point).
+    label and its neighbors' labels (one shuffle), then pointer-jumps —
+    label(v) <- min(label(v), label(label(v))) — which squares the
+    propagation distance, so a diameter-D component closes in O(log D)
+    rounds: paths of 30, 100 and 1,000 edges take 5, 7 and 10, the last
+    one finding no label changed. Each round is localCheckpoint()ed:
+    without it the unioned-join lineage doubles per iteration and the
+    planner, not the data, becomes the bottleneck. The convergence check
+    is a single sum(label) aggregate per round (labels only ever
+    decrease, so an unchanged sum ⇔ a fixed point); the first sum comes
+    with the node count the broadcast guard reads, in one aggregate. A
+    loop that reaches CC_MAX_ROUNDS raises.
 
     At 100 TB scale this is the standard alternating-contraction shape
     (cf. the large-star/small-star algorithm); min-propagation keeps it
-    oracle-checkable and is optimal for small-diameter dedup graphs.
+    oracle-checkable.
     """
     edges = (
         pairs.select(F.col(src).alias("s"), F.col(dst).alias("d"))
@@ -624,78 +630,48 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    # Broadcast the node-cardinality label frame into the per-round edge
-    # join while it fits executor memory (r21 — the PageRank/BFS/k-core
-    # broadcast-with-guard discipline, graph.py). Checkpointed frames do
-    # report a size, but graph.py measured that such unhinted joins plan
-    # as sort-merge and AQE turns them into broadcasts only after both
-    # sides' shuffle map stages ran: without the hints this operator ran
-    # 33 Spark jobs per dedup_clusters call instead of 29 (sf0.01,
+    n_nodes, prev_sum = labels.agg(F.count("*"), F.sum("label")).first()
+    # Broadcast the node-cardinality label frame into the per-round joins
+    # while it fits executor memory (the shared graph.py guard). Checkpointed
+    # frames do report a size, but graph.py measured that such unhinted
+    # joins plan as sort-merge and AQE turns them into broadcasts only after
+    # both sides' shuffle map stages ran: without the hints this operator
+    # ran 33 Spark jobs per dedup_clusters call instead of 29 (sf0.01,
     # identical rows). Past the limit both joins degrade gracefully to the
     # shuffled equi-join.
-    # Shared guard from graph.py (ADVICE r21): one threshold policy for
-    # ALL four iterative-join users (PageRank/BFS/k-core/CC) — a local
-    # copy of the 1M constant would silently diverge on a policy change.
-    _bcast_labels = _maybe_broadcast(labels.count())
-
-    def step(labels: DataFrame, jump: bool) -> DataFrame:
-        lb = _bcast_labels(labels)
-        msgs = edges.join(lb, edges.s == lb.id).select(
-            F.col("d").alias("id"), "label"
-        )
+    bcast = _maybe_broadcast(n_nodes)
+    for _ in range(CC_MAX_ROUNDS):
+        lb = bcast(labels)
+        msgs = edges.join(lb, edges.s == lb.id).select(F.col("d").alias("id"), "label")
         stepped = labels.unionAll(msgs).groupBy("id").agg(F.min("label").alias("label"))
-        if jump:
-            # Pointer jumping: label(v) <- min(label(v), label(label(v))).
-            # Every label value is itself a vertex id present in `stepped`,
-            # so the self-join resolves each label's own label; chasing it
-            # squares propagation distance, closing a diameter-D chain in
-            # O(log D) rounds where plain neighbor-min needs O(D).
-            lol = _bcast_labels(
-                stepped.select(
-                    F.col("id").alias("lid"), F.col("label").alias("label2")
-                )
-            )
-            stepped = stepped.join(lol, stepped.label == lol.lid, "left").select(
+        # Every label value is itself a vertex id present in `stepped`,
+        # so the self-join resolves each label's own label.
+        lol = bcast(
+            stepped.select(F.col("id").alias("lid"), F.col("label").alias("label2"))
+        )
+        labels = (
+            stepped.join(lol, stepped.label == lol.lid, "left")
+            .select(
                 "id",
                 F.least(
                     F.col("label"), F.coalesce(F.col("label2"), F.col("label"))
                 ).alias("label"),
             )
-        return stepped.localCheckpoint(eager=True)
-
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(max_iter):
-        labels = step(labels, jump=False)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # Adversarial-diameter fallback: switch to neighbor-min + pointer
-        # jumping, which converges in O(log D) rounds for ANY diameter D
-        # (64 rounds covers 2^64-vertex chains). Dedup graphs are dense
-        # blobs in practice, so the plain loop above almost always exits
-        # first and the fallback costs nothing.
-        for _ in range(64):
-            labels = step(labels, jump=True)
-            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-    if not converged:
-        # silently returning a half-propagated labeling would split
-        # components and let near-duplicates survive the keep/drop step
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} min-label "
-            "rounds + 64 pointer-jumping rounds (theoretically impossible "
-            "for <= 2^64 vertices — investigate the edge set)"
+            .localCheckpoint(eager=True)
         )
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
-    ).orderBy("doc_id")
+        cur_sum = labels.agg(F.sum("label")).first()[0]
+        if cur_sum == prev_sum:
+            return labels.select(
+                F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+            ).orderBy("doc_id")
+        prev_sum = cur_sum
+    # silently returning a half-propagated labeling would split
+    # components and let near-duplicates survive the keep/drop step
+    raise RuntimeError(
+        f"connected_components did not converge in {CC_MAX_ROUNDS} "
+        "pointer-jumping rounds (theoretically impossible for <= 2^64 "
+        "vertices — investigate the edge set)"
+    )
 
 
 def near_dup_clusters(

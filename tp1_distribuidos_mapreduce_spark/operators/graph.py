@@ -42,6 +42,7 @@ from ..plans.retail import (
     basket_items,
     basket_pair_counts,
     basket_pairs,
+    mirrored,
 )
 
 PAGERANK_DAMPING = 0.85
@@ -58,8 +59,9 @@ def _maybe_broadcast(n_nodes: int):
     """The shared conditional broadcast guard for node-cardinality frames
     inside iterative joins: broadcast while the node table fits, degrade
     gracefully to the shuffled equi-join past the limit. One definition
-    for all three users (PageRank / BFS / k-core) so a threshold-policy
-    change cannot silently diverge between them."""
+    for all five users (PageRank, BFS, triangle count, k-core and
+    dedup.connected_components) so a threshold-policy change cannot
+    silently diverge between them."""
     if n_nodes <= PAGERANK_BROADCAST_NODE_LIMIT:
         return lambda df: F.broadcast(df)
     return lambda df: df
@@ -105,15 +107,7 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     adjacent interleaved A/B at sf0.1 (edge set verified identical,
     2.392M rows; pagerank 6dp output identical): pagerank 6.54→5.58s,
     bfs 5.07→3.96s, kcore 4.04→3.33s medians."""
-    undirected = undirected_copurchase_edges(lineitem)
-    return undirected.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("e")
-    ).select("e.src", "e.dst")
+    return mirrored(undirected_copurchase_edges(lineitem), "src", "dst")
 
 
 def pagerank_copurchase(
@@ -175,9 +169,9 @@ def pagerank_copurchase(
             .localCheckpoint()
         )
     else:
-        ranks = degrees.select(
-            "src", F.lit(1.0 / n_nodes).alias("rank"), "out_deg"
-        ).localCheckpoint()
+        # a literal projection of the checkpointed degrees: nothing to
+        # materialize
+        ranks = degrees.select("src", F.lit(1.0 / n_nodes).alias("rank"), "out_deg")
     bcast = _maybe_broadcast(n_nodes)
     for i in range(n_iter):
         contribs = (
@@ -352,19 +346,20 @@ def triangle_count(lineitem: DataFrame) -> DataFrame:
     # filtered one direction back out).
     undirected = undirected_copurchase_edges(lineitem).localCheckpoint()
     # full degree per node over the undirected edge set — checkpointed
-    # (r21): the orientation join consumes it twice and n_nodes counts
-    # it, so without the checkpoint the degree aggregate re-runs three
-    # times; its count also drives the broadcast guard below.
+    # (r21): the orientation join consumes it twice, so without the
+    # checkpoint the degree aggregate re-runs per consumer.
     deg = node_degrees(undirected).toDF("v", "deg").localCheckpoint()
-    # node-cardinality frames (deg, adj) broadcast into the edge joins
-    # under the shared PageRank/BFS/k-core 1M-node guard; past it they
-    # degrade to shuffled equi-joins. The checkpointed deg frame does
-    # report a size, but unhinted the two adjacency joins plan as
-    # sort-merge and AQE turns them into broadcasts only after both
-    # sides' shuffle map stages ran: without the hints a call ran 21
-    # Spark jobs instead of 18 and wrote 3.2 MB of shuffle instead of
-    # 1.96 MB (sf0.01, identical rows).
-    bcast = _maybe_broadcast(deg.count())
+    # One row per node, so this one count is both the n_nodes output
+    # column (a literal) and the size the shared 1M-node guard reads:
+    # node-cardinality frames (deg, adj) broadcast into the edge joins,
+    # and past the limit they degrade to shuffled equi-joins. The
+    # checkpointed deg frame does report a size, but unhinted the two
+    # adjacency joins plan as sort-merge and AQE turns them into
+    # broadcasts only after both sides' shuffle map stages ran: without
+    # the hints a call ran 3 more Spark jobs (21, not 18) and wrote
+    # 3.2 MB of shuffle instead of 1.96 MB (sf0.01, identical rows).
+    n_nodes = deg.count()
+    bcast = _maybe_broadcast(n_nodes)
     # orient toward the higher-(degree, id) endpoint. The two aliased
     # deg projections LOOK like two broadcast builds, but AQE's runtime
     # stage canonicalization already dedups them — the executed plan
@@ -413,12 +408,10 @@ def triangle_count(lineitem: DataFrame) -> DataFrame:
     )
     n_tri = common.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n")).select("n")
     n_edges = undirected.agg(F.count("*").alias("n")).select("n")
-    n_nodes = deg.agg(F.count("*").alias("n")).select("n")
-    return (
-        n_nodes.select(F.col("n").cast("long").alias("n_nodes"))
-        .crossJoin(n_edges.select(F.col("n").cast("long").alias("n_edges")))
-        .crossJoin(n_tri.select(F.col("n").cast("long").alias("n_triangles")))
-    )
+    return n_edges.select(
+        F.lit(n_nodes).cast("long").alias("n_nodes"),
+        F.col("n").cast("long").alias("n_edges"),
+    ).crossJoin(n_tri.select(F.col("n").cast("long").alias("n_triangles")))
 
 
 TRIANGLE_COUNT_ORACLE = """
@@ -460,8 +453,9 @@ def bfs_distances(lineitem: DataFrame) -> DataFrame:
     Per round that is one |frontier|⨝edges equi-join — the textbook
     distributed BFS whose total work is O(|edges|) summed over rounds.
     localCheckpoint every round keeps lineage flat; the only driver
-    actions are the root scalar and one bounded frontier-empty check per
-    round (a count — never node data). Rounds are capped at
+    actions are one scalar aggregate over the nodes (the root and the
+    node count the broadcast guard reads) and one frontier-empty check
+    per round — never node data. Rounds are capped at
     BFS_MAX_ROUNDS (= graph diameter bound a co-occurrence graph never
     approaches); hitting the cap raises loudly rather than returning a
     silently truncated answer.
@@ -471,7 +465,7 @@ def bfs_distances(lineitem: DataFrame) -> DataFrame:
     """
     edges = copurchase_edges(lineitem).localCheckpoint()
     nodes = edges.select(F.col("src").alias("part_id")).distinct().localCheckpoint()
-    root = nodes.agg(F.min("part_id").alias("r")).collect()[0]["r"]
+    root, n_nodes = nodes.agg(F.min("part_id"), F.count("*")).first()
     if root is None:
         raise ValueError(
             "bfs_distances: empty co-purchase graph (no order has >= 2 "
@@ -489,7 +483,7 @@ def bfs_distances(lineitem: DataFrame) -> DataFrame:
     # adjacent A/B at sf0.1 (20k nodes, 1.2M directed edges, identical
     # distance tables): 11.7/9.0s shuffled → 4.0/3.5s broadcast. Past the
     # limit both joins degrade gracefully to the shuffled equi-join.
-    bcast = _maybe_broadcast(nodes.count())
+    bcast = _maybe_broadcast(n_nodes)
     # + 1: completion is certified only by OBSERVING an empty frontier,
     # which takes one round beyond the last settling round — without it,
     # a graph whose eccentricity equals the bound exactly would raise
@@ -605,7 +599,11 @@ def kcore_members(lineitem: DataFrame, k: int = 3) -> DataFrame:
     in differential.py against an independent Python peeling of the
     same edge list.
     """
-    edges = undirected_copurchase_edges(lineitem).localCheckpoint()
+    # Lazy: the first degree round reads the edge build directly, and the
+    # first semi-join round (a graph that peels) checkpoints the kept
+    # edges. The registry's k = 3 never peels at sf0.001-sf0.1, so a
+    # checkpoint here would be written and read once.
+    edges = undirected_copurchase_edges(lineitem)
     for _ in range(KCORE_MAX_ROUNDS):
         degrees = (
             node_degrees(edges)

@@ -64,6 +64,22 @@ def basket_pair_counts(items: DataFrame) -> DataFrame:
     return basket_pairs(items).groupBy("a", "b").agg(F.count("*").alias("n_ab"))
 
 
+def mirrored(pairs: DataFrame, a: str, b: str, *carry: str) -> DataFrame:
+    """Both orientations of every (a, b) row, as (a, b, *carry) rows: an
+    in-row explode of the row and its swap, so each input row is read
+    once (a union of the two projections reads the input once per
+    branch)."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(a), F.col(b).alias(b)),
+                F.struct(F.col(b).alias(a), F.col(a).alias(b)),
+            )
+        ).alias("e"),
+        *carry,
+    ).select(f"e.{a}", f"e.{b}", *carry)
+
+
 def basket_item_counts(items: DataFrame) -> DataFrame:
     """(part, n_part): how many orders of ``items`` (basket_items rows)
     hold each part."""
@@ -584,11 +600,7 @@ def association_rules(lineitem: DataFrame, min_support: int = RULE_MIN_SUPPORT) 
     )
     pair_counts = basket_pair_counts(items).where(F.col("n_ab") >= min_support)
     item_counts = basket_item_counts(items)
-    directed = pair_counts.select("a", "b", "n_ab").unionByName(
-        pair_counts.select(
-            F.col("b").alias("a"), F.col("a").alias("b"), "n_ab"
-        )
-    )
+    directed = mirrored(pair_counts, "a", "b", "n_ab")
     na = item_counts.select(F.col("part").alias("a"), F.col("n_part").alias("n_a"))
     nb = item_counts.select(F.col("part").alias("b"), F.col("n_part").alias("n_b"))
     return (
